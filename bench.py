@@ -434,18 +434,21 @@ def main() -> None:
     # additions-only: the printed one-line contract is unchanged.
     # Full-inventory runs only — a BENCH_QUERIES subset (tests, A/Bs)
     # must not clobber the last full map.
+    # Written atomically (temp file in the same directory, then
+    # os.replace): a run killed mid-write leaves the previous map whole.
+    # open() creates the temp file with the usual umask-derived mode.
     if not selected:
+        out = os.path.join(
+            os.path.dirname(os.path.abspath(__file__)), "BENCH_LAST.json"
+        )
+        tmp = f"{out}.{os.getpid()}.tmp"
         try:
-            with open(
-                os.path.join(
-                    os.path.dirname(os.path.abspath(__file__)),
-                    "BENCH_LAST.json",
-                ),
-                "w",
-            ) as fh:
+            with open(tmp, "w") as fh:
                 json.dump(payload, fh)
+            os.replace(tmp, out)
         except Exception:  # noqa: BLE001
-            pass
+            if os.path.exists(tmp):
+                os.remove(tmp)
     print(json.dumps(payload))
 
 

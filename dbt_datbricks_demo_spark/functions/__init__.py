@@ -62,13 +62,26 @@ def literal_df(spark, rows, schema: str):
     types, their commas would split wrong); ``rows`` is a list of tuples
     of plain Python scalars (int/float/str/bool — the types Column
     literals accept). An empty ``rows`` falls back to createDataFrame
-    (one empty relation, nothing to unpickle).
+    (one empty relation, nothing to unpickle). A schema field that is
+    not ``name type``, or a row whose arity differs from the schema's,
+    raises ValueError.
     """
     from pyspark.sql import functions as _F
 
+    fields = [f.strip().rsplit(None, 1) for f in schema.split(",")]
+    for f in fields:
+        if len(f) != 2:
+            raise ValueError(
+                f"literal_df schema field {' '.join(f)!r} is not 'name type'"
+            )
+    for row in rows:
+        if len(row) != len(fields):
+            raise ValueError(
+                f"literal_df row {row!r} has {len(row)} values, schema "
+                f"{schema!r} has {len(fields)} fields"
+            )
     if not rows:
         return spark.createDataFrame([], schema)
-    fields = [f.strip().rsplit(None, 1) for f in schema.split(",")]
     structs = [
         _F.struct(*[
             _F.lit(v).cast(t).alias(n)

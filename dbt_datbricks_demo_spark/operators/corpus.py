@@ -35,7 +35,26 @@ from pyspark.sql import functions as F
 from dbt_datbricks_demo_spark.operators import dedup, text
 
 
-def clean_corpus(
+# gate columns clean_corpus_staged keeps on its output: the language
+# and whitespace-token count the quality/language gate computed
+GATE_LANG_COL = "_gate_lang"
+GATE_TOKENS_COL = "_gate_n_tokens"
+
+
+def clean_corpus(docs: DataFrame, /, **kwargs) -> DataFrame:
+    """Return the cleaned corpus (original columns preserved).
+
+    kwargs are clean_corpus_staged's keyword parameters (id_col,
+    text_col, min_tokens, max_punct_ratio, allowed_langs, shingle_k,
+    num_hashes, bands, jaccard_threshold, persist_gated,
+    broadcast_pair_limit, corpus_rows); see its docstring. This is
+    clean_corpus_staged without the gate columns."""
+    return clean_corpus_staged(docs, **kwargs).drop(
+        GATE_LANG_COL, GATE_TOKENS_COL
+    )
+
+
+def clean_corpus_staged(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -50,44 +69,62 @@ def clean_corpus(
     broadcast_pair_limit: int = dedup.BROADCAST_PAIR_LIMIT,
     corpus_rows: int | None = None,
 ) -> DataFrame:
-    """Return the cleaned corpus (original columns preserved).
+    """Return the cleaned corpus (original columns preserved) plus the
+    gate's predicted language (GATE_LANG_COL) and whitespace-token
+    count (GATE_TOKENS_COL). The gate computes both anyway, so a
+    consumer that reports per language or counts tokens
+    (corpus_stats_staged) reads them instead of re-running the
+    tokenizer and the 5-language regex score over every surviving
+    document.
 
-    persist_gated materializes the post-gate corpus once (localCheckpoint;
-    on a real pipeline: write it to storage) — the near-dup stage reads it
-    from 4 plan branches, and without materialization each branch re-runs
-    the regex-heavy language/quality gates over the full corpus.
+    persist_gated materializes the gate's input with the two columns
+    staged (lazy localCheckpoint; on a real pipeline: write it to
+    storage) and the gate filters the materialized columns — the
+    near-dup stage reads the gated corpus from 4 plan branches, and
+    without materialization each branch re-runs the regex-heavy
+    language/quality gates. (A filter over computed columns placed
+    above their projection is pushed below it with the expressions
+    substituted, which would score the language twice per row.) The
+    language is only scored for rows that pass the quality gate (NULL
+    otherwise, which the allowlist drops).
 
     corpus_rows: caller-known upper bound on |docs| (parquet footer /
     metastore stats). Both loser sets (exact-dup losers, near-dup
     losers) are bounded by it, so a bound under broadcast_pair_limit
     skips their materialize+count guard jobs entirely (4 jobs + ~1.3 s
-    warm driver time at sf0.1)."""
+    warm driver time at sf0.1).
+
+    Eager jobs: the candidate pairs are checkpointed and counted in ONE
+    job (dedup.counted_pairs) whose count feeds both broadcast guards
+    of the near-dup verification; the candidate hash arrays are the
+    one other eager checkpoint. Without a corpus_rows bound the two
+    loser sets add their materialize+count guards."""
     # 1. exact dedup
     deduped = dedup.exact_dedup(docs, [text_col], id_col, row_bound=corpus_rows)
 
     # 2 + 3. quality and language gates — one narrow pass
-    toks = text.tokens(text_col)
-    n_tokens = F.size(toks)
+    n_tokens = F.size(text.tokens(text_col))
     n_punct = F.regexp_count(F.col(text_col), F.lit(r"[^\w\s]"))
     quality_ok = (n_tokens >= min_tokens) & (
         (n_punct * 1.0 / F.nullif(F.length(text_col), F.lit(0)))
         <= max_punct_ratio
     )
-    # Examined, left alone (round 13): Catalyst pushes this
-    # deterministic gate below the caller's parallelizing repartition
-    # to the scan, so on the single-row-group testdata file the whole
-    # regex gate runs inside the ONE scan task (~0.37 s serial at
-    # sf0.1). A nondeterministic rand()-disjunct pushdown barrier was
-    # tried and is FOLDED AWAY by Spark 4's interval simplification
-    # (rand() < -1 is provably false), and on a real multi-file table
-    # the pushdown is the RIGHT behavior (_spread is a no-op there and
-    # filtering at the scan is optimal) — so this is a local testdata
-    # artifact, not a scale defect.
-    gated = deduped.filter(quality_ok).filter(
-        text.predict_lang(text_col).isin(*allowed_langs)
+    # Examined, left alone (round 13): without persist_gated Catalyst
+    # pushes this deterministic gate below the caller's parallelizing
+    # repartition to the scan, so on a single-row-group file the whole
+    # regex gate runs inside the ONE scan task. A nondeterministic
+    # rand()-disjunct pushdown barrier was tried and is FOLDED AWAY by
+    # Spark 4's interval simplification (rand() < -1 is provably
+    # false), and on a real multi-file table the pushdown is the RIGHT
+    # behavior (filtering at the scan is optimal).
+    staged = deduped.select(
+        "*",
+        F.when(quality_ok, text.predict_lang(text_col)).alias(GATE_LANG_COL),
+        n_tokens.alias(GATE_TOKENS_COL),
     )
     if persist_gated:
-        gated = gated.localCheckpoint(eager=False)
+        staged = staged.localCheckpoint(eager=False)
+    gated = staged.filter(F.col(GATE_LANG_COL).isin(*allowed_langs))
 
     # 4. near-dup removal among the survivors: the corpus-wide pass is
     # the row-level codegen shingle path (explode → md5 per row →
@@ -95,18 +132,20 @@ def clean_corpus(
     # candidate subset (see dedup.shingle_hash_rows docstring)
     rows = dedup.shingle_hash_rows(gated, id_col, text_col, k=shingle_k)
     sigs = dedup.minhash_sigs_from_rows(rows, id_col, num_hashes=num_hashes)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, id_col, num_hashes=num_hashes, bands=bands
-    ).localCheckpoint(eager=True)
+    pairs, n_pairs = dedup.counted_pairs(
+        dedup.candidate_pairs_from_sigs(
+            sigs, id_col, num_hashes=num_hashes, bands=bands
+        )
+    )
     hashed_small = dedup.candidate_hash_arrays(
-        gated, pairs, id_col, text_col, k=shingle_k
+        gated, pairs, id_col, text_col, k=shingle_k, n_pairs=n_pairs
     )
     confirmed = dedup.jaccard_pairs_from_hashes(
         hashed_small,
         pairs,
         id_col,
         broadcast_pair_limit=broadcast_pair_limit,
-        pairs_prepared=True,
+        n_pairs=n_pairs,
     )
     # losers is O(confirmed duplicate pairs) but DISTINCT ids, so it is
     # also bounded by |docs|: a caller-supplied corpus_rows bound under
@@ -233,7 +272,19 @@ def corpus_stats(
     """Training-readiness report: per predicted language, document count,
     total/mean whitespace tokens and total BPE-ish tokens."""
     lang = lang_col_expr if lang_col_expr is not None else text.predict_lang(text_col)
-    n_tokens = F.size(text.tokens(text_col))
+    return _stats_by_lang(cleaned, lang, F.size(text.tokens(text_col)), text_col)
+
+
+def corpus_stats_staged(staged: DataFrame, text_col: str = "text") -> DataFrame:
+    """corpus_stats over clean_corpus_staged output: the language and
+    whitespace-token count come from the gate columns, so neither the
+    tokenizer nor the language score runs again."""
+    return _stats_by_lang(
+        staged, F.col(GATE_LANG_COL), F.col(GATE_TOKENS_COL), text_col
+    )
+
+
+def _stats_by_lang(cleaned: DataFrame, lang, n_tokens, text_col: str) -> DataFrame:
     return (
         cleaned.select(
             lang.alias("lang"),

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_datbricks_demo_spark.functions import literal_df
 from dbt_datbricks_demo_spark.operators.text import tokens
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, the minhash permutation field
@@ -387,6 +388,20 @@ def candidate_pairs_from_hashes(
     )
 
 
+def counted_pairs(pairs: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize candidate `pairs` and count them in ONE action.
+
+    Lazy localCheckpoint + count: the count job computes the pairs once
+    and writes the checkpoint blocks as it goes (the connected-
+    components setup pattern), instead of an eager checkpoint job
+    followed by a separate count per consumer. Returns the checkpointed
+    pairs and |pairs|; candidate_hash_arrays and
+    jaccard_pairs_from_hashes take that count for their broadcast
+    guards, so neither counts again."""
+    pairs = pairs.localCheckpoint(eager=False)
+    return pairs, pairs.count()
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -435,8 +450,13 @@ def jaccard_pairs(
     stages the shingle hashes itself; pipelines share a
     shingle_hash_table and call jaccard_pairs_from_hashes)."""
     hashed = shingle_hash_table(df, id_col, text_col, k)
+    pairs, n_pairs = counted_pairs(pairs)
     return jaccard_pairs_from_hashes(
-        hashed, pairs, id_col, broadcast_pair_limit=broadcast_pair_limit
+        hashed,
+        pairs,
+        id_col,
+        broadcast_pair_limit=broadcast_pair_limit,
+        n_pairs=n_pairs,
     )
 
 
@@ -445,15 +465,17 @@ def jaccard_pairs_from_hashes(
     pairs: DataFrame,
     id_col: str,
     broadcast_pair_limit: int = BROADCAST_PAIR_LIMIT,
-    pairs_prepared: bool = False,
+    *,
+    n_pairs: int,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs: attach each side's
     staged hash array with a join, intersect JVM-side
     (``array_intersect``), |A∪B| = |A| + |B| − |A∩B|. Integer-only
     until the final division.
 
-    The candidate set is materialized (localCheckpoint) and COUNTED
-    before planning — the standard watermark-scalar pattern. Under
+    `pairs` comes from counted_pairs: materialized and COUNTED once
+    before planning (the watermark-scalar pattern), and `n_pairs` is
+    that count — this function fires no job of its own. Under
     `broadcast_pair_limit` the pairs (and the pairs-with-one-side
     intermediate, which is at most pairs-sized) broadcast, so the
     signature table streams through two broadcast hash joins and
@@ -462,14 +484,8 @@ def jaccard_pairs_from_hashes(
     verify a handful of candidates. Above the limit — a dirty 100-TB
     corpus where candidates are O(duplicate pairs) and would blow the
     broadcast ceiling — both joins fall back to hash-partitioned
-    shuffles on doc id, moving each side's array exactly once.
-
-    pairs_prepared=True: the caller already eagerly checkpointed
-    `pairs` (because other consumers read it too) — skip the
-    re-checkpoint, just count for the guard."""
-    if not pairs_prepared:
-        pairs = pairs.localCheckpoint(eager=True)
-    use_broadcast = pairs.count() <= broadcast_pair_limit
+    shuffles on doc id, moving each side's array exactly once."""
+    use_broadcast = n_pairs <= broadcast_pair_limit
     pairs_hinted = F.broadcast(pairs) if use_broadcast else pairs
 
     ha = hashed.select(
@@ -650,14 +666,17 @@ def candidate_hash_arrays(
     id_col: str,
     text_col: str = "text",
     k: int = 5,
+    *,
+    n_pairs: int,
 ) -> DataFrame:
     """(id, _hs) distinct-shingle hash ARRAYS for exactly the documents
     appearing in candidate `pairs` — the array form (with its exact
     distinct-shingle set semantics for Jaccard sizes) computed only on
     the O(candidate) subset, so the HOF array lambdas run over thousands
-    of docs, not the corpus. `pairs` should already be materialized
-    (checkpointed) by the caller. The candidate-id relation is tiny —
-    AQE broadcasts the semi-join side.
+    of docs, not the corpus. `pairs` and `n_pairs` come from
+    counted_pairs (materialized and counted once by the caller); the
+    candidate ids, 2·n_pairs rows, broadcast into the semi-join when
+    that is under BROADCAST_PAIR_LIMIT.
 
     The result is EAGERLY checkpointed here: every consumer joins it
     twice (the id_a and id_b sides of the pair verification), and
@@ -666,10 +685,10 @@ def candidate_hash_arrays(
     clean_corpus composition. O(candidates) rows, so the
     materialization is small by construction (the same reasoning that
     lets the caller count it)."""
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    # no distinct: the semi-join ignores duplicate build keys, and
+    # deduplicating would cost an exchange (one more job) for nothing
+    cand_ids = pairs.select(F.col("id_a").alias(id_col)).unionByName(
+        pairs.select(F.col("id_b").alias(id_col))
     )
     # EXPLICIT size-guarded broadcast (optimization round 13). Leaving
     # the broadcast decision to AQE plans a sort-merge semi-join first,
@@ -681,11 +700,11 @@ def candidate_hash_arrays(
     # exchange once hash(id) satisfies every grouping) ran in a single
     # measured ~2 s task (guide §2.5: compute-heavy rows defeat
     # byte-based coalescing; §3.1: broadcast decisions off estimates
-    # are wrong after checkpoints — hint explicitly). `pairs` is
-    # checkpointed by contract, so the count is a metadata-cheap job;
-    # cand_ids ≤ 2·|pairs| rows of one bigint.
+    # are wrong after checkpoints — hint explicitly). cand_ids holds
+    # exactly 2·n_pairs rows of one bigint, so guarding on that bound
+    # keeps the broadcast within the documented limit.
     cand = cand_ids
-    if pairs.count() <= BROADCAST_PAIR_LIMIT:
+    if 2 * n_pairs <= BROADCAST_PAIR_LIMIT:
         cand = F.broadcast(cand_ids)
     subset = df.join(cand, on=id_col, how="left_semi")
     # Row-level codegen form (round 12): the previous with_shingle_hashes
@@ -756,12 +775,14 @@ def neardup_clusters(
     the candidate subset (candidate_hash_arrays)."""
     rows = shingle_hash_rows(df, id_col, text_col, k)
     sigs = minhash_sigs_from_rows(rows, id_col, num_hashes)
-    pairs = candidate_pairs_from_sigs(
-        sigs, id_col, num_hashes, bands
-    ).localCheckpoint(eager=True)
-    hashed_small = candidate_hash_arrays(df, pairs, id_col, text_col, k)
+    pairs, n_pairs = counted_pairs(
+        candidate_pairs_from_sigs(sigs, id_col, num_hashes, bands)
+    )
+    hashed_small = candidate_hash_arrays(
+        df, pairs, id_col, text_col, k, n_pairs=n_pairs
+    )
     confirmed = jaccard_pairs_from_hashes(
-        hashed_small, pairs, id_col, pairs_prepared=True
+        hashed_small, pairs, id_col, n_pairs=n_pairs
     ).filter(F.col("jaccard") >= jaccard_threshold)
     comp = connected_components(df, confirmed.select("id_a", "id_b"), id_col)
     return comp.select(F.col("id").alias(id_col), "component")
@@ -1238,26 +1259,6 @@ def adaptive_minhash_geometry(
     return top or ADAPTIVE_GEOMETRY_TOP
 
 
-def adaptive_candidate_pairs(
-    df: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-) -> tuple[DataFrame, tuple[int, int, int]]:
-    """LSH candidate pairs under the adaptive_minhash_geometry tier for
-    the counted corpus size n. Returns (pairs, (num_hashes, bands,
-    rows_per_band)); the caller certifies recall with
-    planted_recall_cert under the SAME geometry."""
-    nh, b, _ = adaptive_minhash_geometry(n)
-    rows = shingle_hash_rows(df, id_col, text_col, k)
-    sigs = minhash_sigs_from_rows(rows, id_col, nh)
-    return (
-        candidate_pairs_from_sigs(sigs, id_col, nh, b),
-        adaptive_minhash_geometry(n),
-    )
-
-
 # certified planted perturbation: appended to a doc's raw text, it adds
 # ~len(suffix) novel char-5 shingles while keeping every original one,
 # so the planted twin's Jaccard is |S|/(|S|+~8) — far above the 0.841
@@ -1338,19 +1339,12 @@ def planted_recall_cert(
     # over a Python list plans a PythonRDD whose parallelize partitions
     # each spin a Python worker — a measured ~0.3 s/task × 32-task
     # stage with zero input in EVERY cert-attaching query (guide §4:
-    # don't cross the Python boundary for constants). inline() of a
-    # literal struct array stays in whole-stage codegen.
-    params = rows.sparkSession.range(1).select(
-        F.inline(
-            F.array(*[
-                F.struct(
-                    F.lit(i).cast("int").alias("_i"),
-                    F.lit(a).cast("long").alias("_a"),
-                    F.lit(b).cast("long").alias("_b"),
-                )
-                for i, (a, b) in enumerate(_affine_params(num_hashes))
-            ])
-        )
+    # don't cross the Python boundary for constants). literal_df keeps
+    # it in whole-stage codegen on ONE task.
+    params = literal_df(
+        rows.sparkSession,
+        [(i, a, b) for i, (a, b) in enumerate(_affine_params(num_hashes))],
+        "_i int, _a long, _b long",
     )
     mins = (
         rows.join(F.broadcast(params))

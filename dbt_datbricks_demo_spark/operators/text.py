@@ -35,10 +35,6 @@ def tokens(col: Column | str) -> Column:
     return F.split(F.trim(F.lower(c)), TOKEN_SPLIT_RE)
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokens(col))
-
-
 def bpe_token_count(col: Column | str) -> Column:
     """Token count under the BPE-ish lexer (letters/digits/punct marks)."""
     c = F.col(col) if isinstance(col, str) else col
@@ -311,17 +307,6 @@ def split_assignment(
 # Reference scope note: the reference has no LM scoring — this extends
 # its quality-test surface (SURVEY §2 F-family filters) with the
 # standard curation operator.
-
-
-def unigram_term_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """(term, cnt) over the whole corpus: one explode feeding a hash
-    aggregation — map-side partial agg absorbs the token explosion, so
-    the shuffle carries |vocab| rows, not |corpus tokens|."""
-    return (
-        df.select(F.explode(tokens(text_col)).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
 
 
 def unigram_doc_nll(

@@ -32,26 +32,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def bucket_spine(
-    observed: DataFrame, key: str, bucket: str, step_seconds: int = 3600
-) -> DataFrame:
-    """One row per (key, bucket) from each key's min to max observed
-    bucket, generated in-plan."""
-    bounds = observed.groupBy(key).agg(
-        F.min(bucket).alias("_lo"), F.max(bucket).alias("_hi")
-    )
-    return bounds.select(
-        key,
-        F.explode(
-            F.sequence(
-                F.col("_lo"),
-                F.col("_hi"),
-                F.expr(f"interval {step_seconds} seconds"),
-            )
-        ).alias(bucket),
-    )
-
-
 def gap_fill(
     observed: DataFrame,
     key: str,

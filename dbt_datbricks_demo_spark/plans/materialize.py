@@ -35,12 +35,6 @@ except ImportError:
     _HAVE_DELTA = False
 
 
-def _align_columns(new: DataFrame, existing_cols: list[str]) -> DataFrame:
-    """append_new_columns semantics: target keeps its columns and gains any
-    new ones (nulls for old rows handled by unionByName allowMissing)."""
-    return new
-
-
 class Materializer:
     """Writes/reads relations under ``warehouse_dir`` with medallion
     schema routing ``<target>_<suffix>.<name>`` (reference

@@ -548,12 +548,14 @@ def containment_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_t(spark, sf_dir, "documents"))
     rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
     sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=nh)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, "doc_id", num_hashes=nh, bands=nb
-    ).localCheckpoint(eager=True)
-    hashed_small = dedup.candidate_hash_arrays(docs, pairs, "doc_id", "text", k=5)
+    pairs, n_pairs = dedup.counted_pairs(
+        dedup.candidate_pairs_from_sigs(sigs, "doc_id", num_hashes=nh, bands=nb)
+    )
+    hashed_small = dedup.candidate_hash_arrays(
+        docs, pairs, "doc_id", "text", k=5, n_pairs=n_pairs
+    )
     verified = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", pairs_prepared=True
+        hashed_small, pairs, "doc_id", n_pairs=n_pairs
     )
     return (
         verified.select(

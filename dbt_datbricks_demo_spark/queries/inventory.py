@@ -8,8 +8,11 @@ Determinism rules (the driver hashes values):
   * SUMs of fixed-decimal data (money/metric columns are exact 2-decimal)
     accumulate as DECIMAL — exact, order-independent, engine-portable —
     then cast to double for the output schema. This is also what frees
-    the scan to be repartitioned across cores (see _spread): a double
-    sum's low bits depend on accumulation order; a decimal sum's don't.
+    _spread to pick a scan's partitioning from its row count and the
+    core count (width = min(cores, ceil(rows / rows_per_task)), so the
+    same query runs on 1 to `cores` partitions depending on the input
+    and the machine): a double sum's low bits depend on that
+    accumulation order; a decimal sum's don't.
   * stddev is derived from exact decimal sums (n·Σx² − (Σx)²) / n(n−1)
     instead of the engines' order-dependent Welford merges; the single
     double division + sqrt at the end is IEEE-identical everywhere.
@@ -35,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dbt_datbricks_demo_spark.functions import surrogate_key, surrogate_key_sql
-from dbt_datbricks_demo_spark.sources.testdata import load_table
+from dbt_datbricks_demo_spark.sources.testdata import footer_row_count, load_table
 
 
 @dataclass(frozen=True)
@@ -69,16 +72,7 @@ def _t_rowcount(sf_dir: str, name: str) -> int:
     guards) take this instead of paying a count() scan per query."""
     import os
 
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.read_metadata(os.path.join(path, f)).num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return pq.read_metadata(path).num_rows
+    return footer_row_count(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _cache_root() -> str:
@@ -110,24 +104,58 @@ def _cache_root() -> str:
         return tempfile.gettempdir()
 
 
+# Rows that make one task's worth of work, per cost class. A spread
+# adds a shuffle whose map side (scan + serialize) still runs in the
+# one scan task, so it pays only when the per-row work above it is
+# large against that. Set from single-task per-row costs (local[1],
+# best of 5 warm runs, slope between testdata sf0.01 and sf0.1) and
+# interleaved A/B runs of the width (4-core VM, local[4], 6-12 warm
+# repeats, medians):
+#   numeric scan, 0.7-1.5 µs/row: 100k events ran 0.83 s unspread and
+#     1.01 s 2-wide; 600k lineitem ran 1.17 s 4-wide, 1.25 s 3-wide,
+#     1.34 s 2-wide and 1.34 s unspread.
+#   text (documents), 1.2-1.6 ms/doc: 250 documents ran 1.54 s
+#     unspread and 1.48 s 4-wide at 22% more CPU; over 500 documents
+#     corpus_pipeline, neardup_components, training_set_report,
+#     leakage_safe_split and repetition_report all ran 6-20% slower
+#     unspread than 2-wide.
+#   vector (embeddings): over 500 vectors semdedup_report,
+#     ann_pq_adc_topk, ann_cosine_topk, random_projection_report and
+#     hard_negative_mining used 7-25% less CPU unspread than 2- or
+#     4-wide, with summed wall time 3.78 s unspread, 3.82 s 2-wide and
+#     3.74 s 4-wide; over 2000 vectors 4-wide was the fastest (4.50 s
+#     summed wall vs 4.64 s 2-wide and 4.87 s unspread).
+_ROWS_PER_TASK_NUMERIC = 150_000
+_ROWS_PER_TASK_TEXT = 400
+_ROWS_PER_TASK_VECTOR = 500
+# tables outside the numeric class
+_ROWS_PER_TASK = {
+    "documents": _ROWS_PER_TASK_TEXT,
+    "embeddings": _ROWS_PER_TASK_VECTOR,
+}
+
+
 def _spread(df: DataFrame) -> DataFrame:
-    """Repartition a narrow input up to the cluster's parallelism. The
+    """Repartition a load_table scan to a width sized to its work:
+
+        width = min(defaultParallelism, ceil(rows / rows_per_task))
+
+    rows is the footer row count load_table attaches; rows_per_task
+    comes from the table's cost class (numeric scans, text documents or
+    embedding vectors, see the constants above). The
     testdata tables are single-row-group parquet files → one scan
-    partition → one core doing all the per-row work; the repartition
-    shuffles only megabytes and unlocks every core. Only sound because
-    every aggregate here is order-independent (decimal/integer exact —
-    see the module docstring). On a real multi-file table the input
-    partitioning already exceeds the target and this is a no-op."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    # load_table attaches a file-size-based scan estimate; the .rdd
-    # partition probe is the fallback for derived inputs only — the
-    # probe converts the whole plan to an RDD on the driver (~36 ms
-    # per call, measured), pure overhead the estimate avoids.
-    n = getattr(df, "_graft_scan_partitions", None)
-    if n is None:
-        n = df.rdd.getNumPartitions()
-    if n < target:
-        return df.repartition(target)
+    partition → one core doing all the per-row work; when the width
+    exceeds the scan's partitions the repartition shuffles only
+    megabytes and spreads that work. A table with one task's worth of
+    work (width 1) is left alone, and so is a multi-file table whose
+    scan already has the width. Only sound because every aggregate
+    here is order-independent (decimal/integer exact — see the module
+    docstring)."""
+    per_task = _ROWS_PER_TASK.get(df._graft_table, _ROWS_PER_TASK_NUMERIC)
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    width = min(cores, -(-df._graft_rows // per_task))
+    if df._graft_scan_partitions < width:
+        return df.repartition(width)
     return df
 
 

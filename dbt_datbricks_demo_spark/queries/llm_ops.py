@@ -421,12 +421,14 @@ def minhash_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_t(spark, sf_dir, "documents"))
     rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
     sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=nh)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, "doc_id", num_hashes=nh, bands=b
-    ).localCheckpoint(eager=True)
-    hashed_small = dedup.candidate_hash_arrays(docs, pairs, "doc_id", "text", k=5)
+    pairs, n_pairs = dedup.counted_pairs(
+        dedup.candidate_pairs_from_sigs(sigs, "doc_id", num_hashes=nh, bands=b)
+    )
+    hashed_small = dedup.candidate_hash_arrays(
+        docs, pairs, "doc_id", "text", k=5, n_pairs=n_pairs
+    )
     jac = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", pairs_prepared=True
+        hashed_small, pairs, "doc_id", n_pairs=n_pairs
     )
     return jac.crossJoin(F.broadcast(_amh_geom_cert(docs, nh, b)))
 
@@ -579,12 +581,14 @@ def _amh_knee_report(
     docs = _spread(_t(spark, sf_dir, "documents"))
     rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
     sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=nh)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, "doc_id", num_hashes=nh, bands=b
-    ).localCheckpoint(eager=True)
-    hashed_small = dedup.candidate_hash_arrays(docs, pairs, "doc_id", "text", k=5)
+    pairs, n_pairs = dedup.counted_pairs(
+        dedup.candidate_pairs_from_sigs(sigs, "doc_id", num_hashes=nh, bands=b)
+    )
+    hashed_small = dedup.candidate_hash_arrays(
+        docs, pairs, "doc_id", "text", k=5, n_pairs=n_pairs
+    )
     jac = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", pairs_prepared=True
+        hashed_small, pairs, "doc_id", n_pairs=n_pairs
     )
     # integer-only aggregate report: float jaccard SUMS are order-
     # sensitive across engines, so the report carries (sum_common,
@@ -1438,7 +1442,10 @@ _SQL_PUNCT_RATIO = (
     """,
 )
 def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dbt_datbricks_demo_spark.operators.corpus import clean_corpus, corpus_stats
+    from dbt_datbricks_demo_spark.operators.corpus import (
+        clean_corpus_staged,
+        corpus_stats_staged,
+    )
     from dbt_datbricks_demo_spark.queries.inventory import _t_rowcount
 
     # tier keyed off the INGEST rowcount (parquet footer, no scan):
@@ -1448,10 +1455,12 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t_rowcount(sf_dir, "documents")
     nh, nb, _r = dedup.adaptive_minhash_geometry(n)
     docs = _spread(_t(spark, sf_dir, "documents"))
-    cleaned = clean_corpus(
+    # the staged gate columns carry language and token count into
+    # corpus_stats_staged — the tokenizer and the language score run once
+    cleaned = clean_corpus_staged(
         docs, persist_gated=True, num_hashes=nh, bands=nb, corpus_rows=n
     )
-    return corpus_stats(cleaned)
+    return corpus_stats_staged(cleaned)
 
 
 # ---------------------------------------------------------------------------

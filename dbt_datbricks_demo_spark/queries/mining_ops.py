@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dbt_datbricks_demo_spark.functions import literal_df
 from dbt_datbricks_demo_spark.operators import dedup, similarity, text
 from dbt_datbricks_demo_spark.queries.inventory import (
     _cache_root,
@@ -2017,27 +2018,26 @@ def adaptive_band_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_t(spark, sf_dir, "documents"))
     rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
     sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=_AB_HASHES)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, "doc_id", num_hashes=_AB_HASHES, bands=bands
-    ).localCheckpoint(eager=True)
-    hashed_small = dedup.candidate_hash_arrays(docs, pairs, "doc_id", "text", k=5)
-    ver = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", pairs_prepared=True
+    pairs, n_pairs = dedup.counted_pairs(
+        dedup.candidate_pairs_from_sigs(
+            sigs, "doc_id", num_hashes=_AB_HASHES, bands=bands
+        )
     )
-    n_cand = pairs.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_candidates")
+    hashed_small = dedup.candidate_hash_arrays(
+        docs, pairs, "doc_id", "text", k=5, n_pairs=n_pairs
+    )
+    ver = dedup.jaccard_pairs_from_hashes(
+        hashed_small, pairs, "doc_id", n_pairs=n_pairs
     )
     n_ver = ver.filter(F.col("jaccard") >= _AB_JACCARD).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_verified")
     )
-    return (
-        spark.range(1)
-        .select(
-            F.lit(n).cast("bigint").alias("n_docs"),
-            F.lit(_AB_HASHES).cast("int").alias("n_hashes"),
-            F.lit(r).cast("int").alias("rows_per_band"),
-            F.lit(bands).cast("int").alias("n_bands"),
-        )
-        .crossJoin(F.broadcast(n_cand))
-        .crossJoin(F.broadcast(n_ver))
+    # the candidate count is the counted_pairs watermark — no second
+    # aggregate over the pairs
+    head = literal_df(
+        spark,
+        [(n, _AB_HASHES, r, bands, n_pairs)],
+        "n_docs bigint, n_hashes int, rows_per_band int, n_bands int, "
+        "n_candidates bigint",
     )
+    return head.crossJoin(F.broadcast(n_ver))

@@ -456,12 +456,14 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_t(spark, sf_dir, "documents"))
     rows = dedup.shingle_hash_rows(docs, "doc_id", "text", 5)
     sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", nh)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, "doc_id", nh, nb
-    ).localCheckpoint(eager=True)
-    hashed_small = dedup.candidate_hash_arrays(docs, pairs, "doc_id", "text", 5)
+    pairs, n_pairs = dedup.counted_pairs(
+        dedup.candidate_pairs_from_sigs(sigs, "doc_id", nh, nb)
+    )
+    hashed_small = dedup.candidate_hash_arrays(
+        docs, pairs, "doc_id", "text", 5, n_pairs=n_pairs
+    )
     confirmed = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", pairs_prepared=True
+        hashed_small, pairs, "doc_id", n_pairs=n_pairs
     ).filter(F.col("jaccard") >= 0.9)
     # the edge set is read twice (components + the certification count):
     # one eager checkpoint, both branches read it — O(duplicate pairs)

@@ -28,8 +28,8 @@ TABLES = (
 
 # Session-level TABLE METADATA cache — the local stand-in for what a
 # production engine reads from the metastore/catalog instead of
-# re-inferring per query: the parquet schema and the scan-partition
-# estimate, keyed by (path, mtime, size) so a data swap invalidates.
+# re-inferring per query: the parquet schema and the footer row count,
+# keyed by (path, mtime, size) so a data swap invalidates.
 # This caches METADATA only, never rows or results: every query still
 # computes from the parquet inputs. Before this cache each of the ~250
 # load_table calls in a bench sweep paid ~70 ms of driver-side footer
@@ -53,6 +53,24 @@ def _path_stamp(path: str) -> tuple:
     return (st.st_mtime_ns, st.st_size)
 
 
+def _parquet_files(path: str) -> list[str]:
+    if os.path.isdir(path):
+        return [
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        ]
+    return [path]
+
+
+def footer_row_count(path: str) -> int:
+    """Exact row count of a parquet file or directory from its footers
+    (pyarrow metadata) — no Spark job."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for f in _parquet_files(path))
+
+
 def _est_scan_partitions(path: str) -> int:
     """Scan-task estimate from file sizes alone (no Spark job, no RDD
     conversion): one split per ~128 MB per file — the same shape
@@ -60,16 +78,8 @@ def _est_scan_partitions(path: str) -> int:
     packed together, so this can only OVER-estimate, making _spread
     skip a repartition it would otherwise add (safe: on a real
     multi-file table the input already exceeds the target)."""
-    if os.path.isdir(path):
-        files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-    else:
-        files = [path]
     est = 0
-    for f in files:
+    for f in _parquet_files(path):
         size = os.stat(f).st_size
         est += max(1, -(-size // _SPREAD_TARGET_SPLIT_BYTES))
     return max(1, est)
@@ -90,9 +100,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = _SCHEMA_CACHE.get(key)
     if cached is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[key] = df.schema
+        rows = footer_row_count(path)
+        _SCHEMA_CACHE[key] = (df.schema, rows)
     else:
-        df = spark.read.schema(cached).parquet(path)
+        schema, rows = cached
+        df = spark.read.schema(schema).parquet(path)
     scan_est = _est_scan_partitions(path)
     if name == "events":
         ts_type = df.schema["ts"].dataType
@@ -106,8 +118,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # session timezone is pinned UTC (session.py), so the cast is
             # value-preserving.
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    # scan-partition estimate for _spread's repartition decision —
-    # a Python-side attribute, invisible to the plan
+    # table name, footer row count and scan-partition estimate for
+    # _spread's width rule — Python-side attributes, invisible to the
+    # plan
+    df._graft_table = name
+    df._graft_rows = rows
     df._graft_scan_partitions = scan_est
     return df
 

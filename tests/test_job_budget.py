@@ -1,0 +1,227 @@
+"""Contracts on the Spark jobs and exchanges a query pays for: the
+work-sized _spread width, the single counted stage for candidate
+pairs, the jobs one clean_corpus build fires, and literal_df's input
+checks."""
+
+from __future__ import annotations
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from dbt_datbricks_demo_spark.functions import literal_df
+from dbt_datbricks_demo_spark.operators import corpus, dedup
+from dbt_datbricks_demo_spark.queries import inventory
+
+
+def _plan(df) -> str:
+    spark = df.sparkSession
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+        "formatted"
+    )
+    return df._jdf.queryExecution().explainString(mode)
+
+
+def _jobs_fired(spark, fn):
+    """Run fn() inside a fresh job group; return (result, #jobs)."""
+    sc = spark.sparkContext
+    group = f"job-budget-{id(fn)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_docs(dirpath, n: int) -> str:
+    dirpath.mkdir(parents=True, exist_ok=True)
+    pq.write_table(
+        pa.table({
+            "doc_id": list(range(n)),
+            "text": [f"document number {i} with a few words" for i in range(n)],
+        }),
+        str(dirpath / "documents.parquet"),
+    )
+    return str(dirpath)
+
+
+# ---------------------------------------------------------------------------
+# (a) _spread width = min(cores, ceil(rows / rows_per_task))
+# ---------------------------------------------------------------------------
+def test_spread_leaves_one_task_table_alone(spark, tmp_path):
+    sf = _write_docs(tmp_path, inventory._ROWS_PER_TASK_TEXT)
+    df = inventory._spread(inventory._t(spark, sf, "documents"))
+    assert "RoundRobinPartitioning" not in _plan(df)
+
+
+def test_spread_width_is_capped_by_cores(spark, tmp_path):
+    cores = spark.sparkContext.defaultParallelism
+    per_task = inventory._ROWS_PER_TASK_TEXT
+    # two tasks' worth plus one row → width 3 (when the cores allow it)
+    small = _write_docs(tmp_path / "small", 2 * per_task + 1)
+    width = min(cores, 3)
+    plan = _plan(inventory._spread(inventory._t(spark, small, "documents")))
+    assert f"RoundRobinPartitioning({width})" in plan
+    # far more work than cores → exactly the core count
+    big = _write_docs(tmp_path / "big", (cores + 5) * per_task)
+    plan = _plan(inventory._spread(inventory._t(spark, big, "documents")))
+    assert f"RoundRobinPartitioning({cores})" in plan
+
+
+def test_spread_numeric_class_needs_more_rows_than_text(spark, tmp_path):
+    # the same row count is one task's worth of a numeric scan
+    n = 4 * inventory._ROWS_PER_TASK_TEXT
+    pq.write_table(
+        pa.table({"l_orderkey": list(range(n))}),
+        str(tmp_path / "lineitem.parquet"),
+    )
+    df = inventory._spread(inventory._t(spark, str(tmp_path), "lineitem"))
+    assert "RoundRobinPartitioning" not in _plan(df)
+
+
+def test_spread_vector_class_needs_more_rows_than_text(spark, tmp_path):
+    # one task's worth of vectors is more than one task's worth of text
+    n = inventory._ROWS_PER_TASK_VECTOR
+    assert n > inventory._ROWS_PER_TASK_TEXT
+    pq.write_table(
+        pa.table({"vec_id": list(range(n))}),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    sf = _write_docs(tmp_path, n)
+    emb = inventory._spread(inventory._t(spark, sf, "embeddings"))
+    docs = inventory._spread(inventory._t(spark, sf, "documents"))
+    assert "RoundRobinPartitioning" not in _plan(emb)
+    cores = spark.sparkContext.defaultParallelism
+    assert ("RoundRobinPartitioning" in _plan(docs)) == (cores > 1)
+
+
+# ---------------------------------------------------------------------------
+# (b) one counted stage for candidate pairs
+# ---------------------------------------------------------------------------
+@pytest.fixture()
+def no_auto_broadcast(spark):
+    """Only explicit hints broadcast while the test runs."""
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    for k in keys:
+        spark.conf.set(k, "-1")
+    yield
+    for k in keys:
+        spark.conf.unset(k)
+
+
+def test_counted_pairs_returns_the_pair_count(spark):
+    raw = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (4, 5)], "id_a long, id_b long"
+    )
+    pairs, n = dedup.counted_pairs(raw)
+    assert n == raw.count() == pairs.count() == 4
+    assert sorted(map(tuple, pairs.collect())) == sorted(map(tuple, raw.collect()))
+
+
+def test_pair_consumers_broadcast_on_the_passed_count(
+    spark, monkeypatch, no_auto_broadcast
+):
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta!"),
+         (3, "something else entirely")],
+        "doc_id long, text string",
+    )
+    pairs, n_pairs = dedup.counted_pairs(
+        spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    )
+    assert n_pairs == 1
+    limit = dedup.BROADCAST_PAIR_LIMIT
+
+    # candidate_hash_arrays checkpoints its result; keep it lazy here so
+    # its plan stays inspectable and building it fires no job
+    monkeypatch.setattr(
+        type(docs), "localCheckpoint", lambda self, eager=True, storageLevel=None: self
+    )
+    # cand_ids holds 2·n_pairs rows: the guard is on that bound
+    for n, want in ((limit // 2, True), (limit // 2 + 1, False)):
+        hashed, jobs = _jobs_fired(
+            spark,
+            lambda: dedup.candidate_hash_arrays(docs, pairs, "doc_id", n_pairs=n),
+        )
+        assert jobs == 0
+        assert ("BroadcastExchange" in _plan(hashed)) is want
+
+    hashed = dedup.shingle_hash_table(docs, "doc_id")
+    for n, want in ((limit, True), (limit + 1, False)):
+        jac, jobs = _jobs_fired(
+            spark,
+            lambda: dedup.jaccard_pairs_from_hashes(
+                hashed, pairs, "doc_id", n_pairs=n
+            ),
+        )
+        assert jobs == 0
+        assert ("BroadcastExchange" in _plan(jac)) is want
+
+
+# ---------------------------------------------------------------------------
+# (c) the eager jobs one clean_corpus build fires
+# ---------------------------------------------------------------------------
+_BASE = (
+    "the quick brown fox jumps over the lazy dog again and again today " * 3
+).strip()
+_CORPUS_ROWS = [
+    (0, _BASE),
+    (1, _BASE),
+    (2, _BASE.replace("quick", "quack", 1)),
+    (3, "der schnelle braune fuchs und der faule hund laufen heute sehr weit"),
+    (4, "short text"),
+    (5, "!!! ??? ;;; " + _BASE),
+    (6, "机器 学习 模型 训练 数据 管道 现在 开始 运行 了 吗 呢"),
+]
+
+# jobs the build fires on this fixture, AQE stage jobs included. It was
+# 13 while the candidate pairs were checkpointed eagerly and counted by
+# each consumer, and the candidate ids were deduplicated before their
+# broadcast.
+CLEAN_CORPUS_BUILD_JOBS = 9
+
+
+def test_clean_corpus_build_job_budget(spark):
+    docs = spark.createDataFrame(_CORPUS_ROWS, "doc_id long, text string")
+    kw = dict(
+        min_tokens=10, jaccard_threshold=0.8, persist_gated=True,
+        corpus_rows=len(_CORPUS_ROWS),
+    )
+    staged, jobs = _jobs_fired(spark, lambda: corpus.clean_corpus_staged(docs, **kw))
+    assert jobs <= CLEAN_CORPUS_BUILD_JOBS, jobs
+    assert sorted(r["doc_id"] for r in staged.collect()) == [0, 3]
+
+    # the wrapper keeps the caller's columns; the staged gate columns
+    # give corpus_stats_staged the same report as corpus_stats, which
+    # recomputes them
+    plain = corpus.clean_corpus(docs, **kw)
+    assert plain.columns == docs.columns
+    got = sorted(map(tuple, corpus.corpus_stats_staged(staged).collect()))
+    assert got == sorted(map(tuple, corpus.corpus_stats(plain).collect()))
+
+
+# ---------------------------------------------------------------------------
+# literal_df input checks
+# ---------------------------------------------------------------------------
+def test_literal_df_builds_one_task_relation(spark):
+    df = literal_df(spark, [(1, "a"), (2, "b")], "k int, v string")
+    assert df.rdd.getNumPartitions() == 1
+    assert [tuple(r) for r in df.collect()] == [(1, "a"), (2, "b")]
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([(1, "a", 3)], "k int, v string"),  # row wider than the schema
+        ([(1,)], "k int, v string"),  # row narrower than the schema
+        ([(1,)], "k"),  # field without a type
+    ],
+)
+def test_literal_df_rejects_malformed_input(spark, rows, schema):
+    with pytest.raises(ValueError):
+        literal_df(spark, rows, schema)

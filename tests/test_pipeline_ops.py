@@ -56,7 +56,8 @@ def test_repetition_plan_is_pure_jvm_no_shuffle(spark):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # narrow scan: the only exchange is the test-data _spread repartition
+    # narrow scan: no hash exchange (the only exchange there can be is
+    # _spread's round-robin repartition, which a one-task table skips)
     assert "hashpartitioning" not in plan
 
 
