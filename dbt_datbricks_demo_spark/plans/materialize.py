@@ -82,16 +82,34 @@ class Materializer:
             .load(self.path(name, schema_suffix))
         )
 
+    def _read_back(self, name: str, schema_suffix: str, written: DataFrame) -> DataFrame:
+        """Read a table just written from ``written`` with that frame's
+        schema: the files hold exactly it, and without a schema Spark
+        fires one job per read to infer it from the parquet footers.
+        Delta rejects a user schema, so it infers. The partitioned,
+        ``insert_overwrite`` and existing-table ``append`` paths use
+        ``read`` and infer, because their on-disk column order or schema
+        is not the written frame's."""
+        if self.table_format == "parquet":
+            out = self.spark.read.schema(written.schema).parquet(
+                self.path(name, schema_suffix)
+            )
+        else:
+            out = self.read(name, schema_suffix)
+        out.createOrReplaceTempView(name)
+        return out
+
     # ---- strategies --------------------------------------------------------
     def as_view(self, name: str, df: DataFrame) -> DataFrame:
         df.createOrReplaceTempView(name)
         return df
 
     def as_table(self, name: str, schema_suffix: str, df: DataFrame) -> DataFrame:
+        """Full refresh: write ``df``, then read it back with ``df``'s
+        schema, which saves the schema-inference job (``_read_back``
+        lists the paths that still infer)."""
         self._atomic_write(df, self.path(name, schema_suffix))
-        out = self.read(name, schema_suffix)
-        out.createOrReplaceTempView(name)
-        return out
+        return self._read_back(name, schema_suffix, df)
 
     def high_water(self, name: str, schema_suffix: str, col: str):
         """max(watermark_col) of the existing target — collected driver-side
@@ -195,7 +213,9 @@ class Materializer:
         Delta targets use the native transactional MERGE — file-level
         rewrite of only the touched files, which is the whole point at
         100 TB. Parquet targets emulate the row-level semantics with
-        anti-join + unionByName + atomic swap (full rewrite)."""
+        anti-join + unionByName + atomic swap (full rewrite), then read
+        the result back with the merged frame's schema, which saves the
+        schema-inference job (``_read_back``)."""
         path = self.path(name, schema_suffix)
         if self.table_format == "delta":
             return self._merge_upsert_delta(path, name, new_rows, unique_key)
@@ -205,9 +225,7 @@ class Materializer:
         )
         merged = kept.unionByName(new_rows, allowMissingColumns=True)
         self._atomic_write(merged, path)
-        out = self.read(name, schema_suffix)
-        out.createOrReplaceTempView(name)
-        return out
+        return self._read_back(name, schema_suffix, merged)
 
     def _merge_upsert_delta(
         self, path: str, name: str, new_rows: DataFrame, unique_key: str

@@ -9,6 +9,13 @@ Centralizes the settings every entry point needs:
   - Arrow enabled for the Pandas-UDF operators (similarity/multimodal).
   - shuffle partitions default sized for local[32] testing; on a real
     cluster AQE coalesces from a deliberately high initial number.
+  - the package's parent directory on the Python workers' path. Workers
+    (Arrow UDFs, ``mapInPandas``) unpickle functions that import this
+    package by name, and they do not inherit the driver's ``sys.path``:
+    a driver started outside the repository directory otherwise fails
+    inside its first UDF with ``ModuleNotFoundError``. The path is the
+    driver's own, which is right for local mode; on a cluster the
+    package must be installed on the executors.
 """
 
 from __future__ import annotations
@@ -16,6 +23,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 
 
 def get_spark(
@@ -65,6 +75,9 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    extra = dict(extra_conf or {})
+    worker_path = [_PACKAGE_PARENT, extra.pop(_WORKER_PATH, "")]
+    builder = builder.config(_WORKER_PATH, os.pathsep.join(p for p in worker_path if p))
+    for k, v in extra.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -6,15 +6,20 @@ reference macros/test_value_in_range.sql:10-23). Four generic kinds are
 used by the reference plus one custom generic and one singular test
 (SURVEY.md §5).
 
-Scale note: every generic test is a single narrow scan (one column, or
-one column + a broadcast anti-join), so the whole 54-test suite is
-embarrassingly parallel and each test prunes to a one-column read on
-parquet. ``passes()`` uses ``isEmpty()``/``limit(1)`` so a failing test
-short-circuits without materializing all violations.
+Execution: ``column_test`` builds the generic column tests. The
+``not_null``, ``unique`` and ``accepted_values`` specs also carry an
+aggregate over their model that is 0 exactly when the violations are
+empty, so ``run_suite`` checks all of a model's column tests with one
+``agg(...).first()`` scan. Specs without one (``relationships``, which
+reads a second model, and singular tests) run as their own
+``isEmpty()`` query, which short-circuits without materializing all
+violations. Only a failing test builds its violations, to count them
+and, with ``store_failures_dir``, to write them.
 """
 
 from dbt_datbricks_demo_spark.testing.generic import (  # noqa: F401
     accepted_values,
+    column_test,
     not_null,
     relationships,
     unique,

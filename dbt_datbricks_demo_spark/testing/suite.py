@@ -9,13 +9,11 @@ is defined but bound to nothing, exactly like the reference
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from dbt_datbricks_demo_spark.testing import generic as G
+from dbt_datbricks_demo_spark.testing.generic import column_test
 from dbt_datbricks_demo_spark.testing.runner import TestSpec
 
-# (model, column, kind, extra) — kind ∈ not_null | unique | accepted_values
-# | relationships(to_model, to_field)
+# column_test(model, column, kind, extra) — kind ∈ not_null | unique |
+# accepted_values(values) | relationships(to_model, to_field)
 _COLUMN_TESTS: list[tuple] = [
     # --- staging (19) — reference models/staging/schema.yml
     ("stg_sensor_readings", "reading_id", "not_null", None),
@@ -82,28 +80,6 @@ _COLUMN_TESTS: list[tuple] = [
 ]
 
 
-def _column_spec(model: str, column: str, kind: str, extra) -> TestSpec:
-    if kind == "not_null":
-        build = lambda rel: G.not_null(rel[model], column)  # noqa: E731
-        name = f"not_null_{model}_{column}"
-    elif kind == "unique":
-        build = lambda rel: G.unique(rel[model], column)  # noqa: E731
-        name = f"unique_{model}_{column}"
-    elif kind == "accepted_values":
-        values: Sequence = extra
-        build = lambda rel: G.accepted_values(rel[model], column, values)  # noqa: E731
-        name = f"accepted_values_{model}_{column}"
-    elif kind == "relationships":
-        to_model, to_field = extra
-        build = lambda rel: G.relationships(  # noqa: E731
-            rel[model], column, rel[to_model], to_field
-        )
-        name = f"relationships_{model}_{column}__{to_model}_{to_field}"
-    else:  # pragma: no cover
-        raise ValueError(kind)
-    return TestSpec(name=name, model=model, build=build)
-
-
 def _assert_no_orphan_alerts(rel) -> object:
     """Singular test (reference tests/assert_no_orphan_alerts.sql:7-13):
     LEFT JOIN … IS NULL ≡ left anti-join."""
@@ -115,7 +91,7 @@ def _assert_no_orphan_alerts(rel) -> object:
 
 
 def reference_suite() -> list[TestSpec]:
-    specs = [_column_spec(*t) for t in _COLUMN_TESTS]
+    specs = [column_test(*t) for t in _COLUMN_TESTS]
     specs.append(
         TestSpec(
             name="assert_no_orphan_alerts",

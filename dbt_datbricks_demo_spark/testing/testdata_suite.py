@@ -9,17 +9,11 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from dbt_datbricks_demo_spark.testing.generic import (
-    accepted_values,
-    not_null,
+    column_test,
     relationships,
-    unique,
     value_in_range,
 )
 from dbt_datbricks_demo_spark.testing.runner import TestSpec
-
-
-def _col_spec(model: str, column: str, kind: str, fn) -> TestSpec:
-    return TestSpec(f"{kind}_{model}_{column}", model, fn)
 
 
 def testdata_suite() -> list[TestSpec]:
@@ -32,36 +26,15 @@ def testdata_suite() -> list[TestSpec]:
         ("events", "event_id"), ("documents", "doc_id"),
         ("embeddings", "vec_id"),
     ]:
-        specs.append(
-            _col_spec(model, key, "unique", lambda r, m=model, k=key: unique(r[m], k))
-        )
-        specs.append(
-            _col_spec(model, key, "not_null", lambda r, m=model, k=key: not_null(r[m], k))
-        )
+        specs.append(column_test(model, key, "unique"))
+        specs.append(column_test(model, key, "not_null"))
 
-    specs.append(
-        TestSpec(
-            "accepted_values_lineitem_l_returnflag", "lineitem",
-            lambda r: accepted_values(r["lineitem"], "l_returnflag", ["A", "N", "R"]),
-        )
-    )
-    specs.append(
-        TestSpec(
-            "accepted_values_events_event_type", "events",
-            lambda r: accepted_values(
-                r["events"], "event_type",
-                ["click", "error", "purchase", "signup", "view"],
-            ),
-        )
-    )
-    specs.append(
-        TestSpec(
-            "accepted_values_documents_lang", "documents",
-            lambda r: accepted_values(
-                r["documents"], "lang", ["en", "de", "es", "fr", "zh"]
-            ),
-        )
-    )
+    for model, column, values in [
+        ("lineitem", "l_returnflag", ["A", "N", "R"]),
+        ("events", "event_type", ["click", "error", "purchase", "signup", "view"]),
+        ("documents", "lang", ["en", "de", "es", "fr", "zh"]),
+    ]:
+        specs.append(column_test(model, column, "accepted_values", values))
     specs.append(
         TestSpec(
             "relationships_orders_custkey", "orders",
