@@ -9,11 +9,19 @@ plus the EDA notebook and freshness checks as verbs).
     python -m dbt_datbricks_demo_spark freshness
     python -m dbt_datbricks_demo_spark eda   [query ...]
     python -m dbt_datbricks_demo_spark sql   "select ..."
-    python -m dbt_datbricks_demo_spark docs
+    python -m dbt_datbricks_demo_spark docs  [--artifacts DIR [--catalog]]
+    python -m dbt_datbricks_demo_spark unit-test
+    python -m dbt_datbricks_demo_spark state-save DIR
 
 State lives in RunConfig.warehouse_dir (parquet warehouse); each verb
 builds what it needs from the seeds + existing materializations, so
 `seed → run → test` behaves like the reference's workflow DAG.
+
+`--seeds-dir` defaults to the reference seed snapshot,
+/root/reference/seeds. Only the verbs that read seed CSVs load it:
+seed, run, snapshot, test, freshness, sql, eda and `docs --catalog`.
+unit-test (mock inputs), state-save (model fingerprints), verify
+(testdata) and plain docs run without it.
 """
 
 from __future__ import annotations
@@ -33,7 +41,12 @@ from dbt_datbricks_demo_spark.testing.runner import summarize
 
 def _parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(prog="dbt_datbricks_demo_spark")
-    p.add_argument("--seeds-dir", default="/root/reference/seeds")
+    p.add_argument(
+        "--seeds-dir", default="/root/reference/seeds",
+        help="directory of the three seed CSVs (default: the reference "
+        "snapshot, %(default)s); read by seed, run, snapshot, test, "
+        "freshness, sql, eda and docs --catalog",
+    )
     p.add_argument("--warehouse-dir", default=None)
     p.add_argument("--target", default=None)
     sub = p.add_subparsers(dest="verb", required=True)
@@ -156,8 +169,29 @@ def main(argv: list[str] | None = None) -> int:
             names = list(GRADED_PREFIX) + (args.queries or [])
         return oracle_run(args.sf, names)
 
+    if args.verb == "state-save":
+        from dbt_datbricks_demo_spark.plans import state as state_mod
+
+        print(f"wrote {state_mod.save_state(args.dir)}")
+        return 0
+
     spark = get_spark(app_name=f"engine-{args.verb}")
     spark.sparkContext.setLogLevel("ERROR")
+
+    if args.verb == "unit-test":
+        from dbt_datbricks_demo_spark.testing.unit import run_unit_suite
+        from dbt_datbricks_demo_spark.testing.unit_suite import UNIT_SUITE
+
+        results = run_unit_suite(spark, UNIT_SUITE, cfg)
+        for r in results:
+            print(f"{'PASS' if r.passed else 'FAIL'} {r.name}"
+                  + ("" if r.passed else f": {r.message}"))
+        n_pass = sum(r.passed for r in results)
+        print(f"Done. PASS={n_pass} FAIL={len(results) - n_pass} "
+              f"TOTAL={len(results)}")
+        return 0 if n_pass == len(results) else 1
+
+    # every verb below reads the seed CSVs
     seeds = load_seeds(spark, args.seeds_dir)
     runner = PipelineRunner(spark, cfg)
 
@@ -192,25 +226,6 @@ def main(argv: list[str] | None = None) -> int:
         )
         built = [n for n in relations if n not in seeds]
         print(f"built {len(built)} relations: {', '.join(built)}")
-        return 0
-
-    if args.verb == "unit-test":
-        from dbt_datbricks_demo_spark.testing.unit import run_unit_suite
-        from dbt_datbricks_demo_spark.testing.unit_suite import UNIT_SUITE
-
-        results = run_unit_suite(spark, UNIT_SUITE, cfg)
-        for r in results:
-            print(f"{'PASS' if r.passed else 'FAIL'} {r.name}"
-                  + ("" if r.passed else f": {r.message}"))
-        n_pass = sum(r.passed for r in results)
-        print(f"Done. PASS={n_pass} FAIL={len(results) - n_pass} "
-              f"TOTAL={len(results)}")
-        return 0 if n_pass == len(results) else 1
-
-    if args.verb == "state-save":
-        from dbt_datbricks_demo_spark.plans import state as state_mod
-
-        print(f"wrote {state_mod.save_state(args.dir)}")
         return 0
 
     if args.verb == "snapshot":

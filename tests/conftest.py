@@ -1,9 +1,15 @@
 """Shared pytest fixtures: one local SparkSession, reference seed data,
-a frozen-clock RunConfig, and the built model DAG."""
+generated seed data, a frozen-clock RunConfig, and the built model DAG.
+
+The reference seed CSVs (SEEDS_DIR) are a snapshot outside the
+repository; tests that assert their golden numbers skip where it is
+absent. Tests whose assertions hold for any well-formed seeds run on
+seeds generated in the checkout instead."""
 
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
 
@@ -11,6 +17,7 @@ from dbt_datbricks_demo_spark.config import RunConfig
 from dbt_datbricks_demo_spark.session import get_spark
 from dbt_datbricks_demo_spark.sources import load_seeds
 from dbt_datbricks_demo_spark import models as M
+from perfbench.datagen import IotSeeds
 
 SEEDS_DIR = "/root/reference/seeds"
 SF_SMOKE = "/root/testdata/sf0.001"
@@ -32,7 +39,33 @@ def cfg():
 
 @pytest.fixture(scope="session")
 def seeds(spark):
+    """The reference seeds, for assertions on the reference's own
+    numbers (FIXTURES.md); skips where the snapshot is absent."""
+    if not os.path.isdir(SEEDS_DIR):
+        pytest.skip(f"{SEEDS_DIR} absent")
     return load_seeds(spark, SEEDS_DIR)
+
+
+@pytest.fixture(scope="session")
+def generated_seeds_dir(tmp_path_factory):
+    """A seeds directory holding the base batch of the deterministic
+    ``IotSeeds(7, 10, 500, ())``: 10 devices, ~500 readings, alerts that
+    all point at known devices, timestamps on 2025-01-15.
+
+    Only for tests whose assertions do not depend on what the seed rows
+    contain (row counts of built relations, lineage, schemas, planted
+    failures). An assertion on a reference value belongs on ``seeds``.
+    """
+    root = tmp_path_factory.mktemp("generated_seeds")
+    [(seeds_dir, _bytes)] = IotSeeds(7, 10, 500, ()).write(str(root))
+    return seeds_dir
+
+
+@pytest.fixture(scope="session")
+def generated_seeds(spark, generated_seeds_dir):
+    """``generated_seeds_dir`` loaded, keyed by seed name; the same
+    restriction applies."""
+    return load_seeds(spark, generated_seeds_dir)
 
 
 @pytest.fixture(scope="session")

@@ -3,18 +3,28 @@ seed → run (gated) → test → freshness."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from dbt_datbricks_demo_spark.cli import main
 from tests.conftest import SEEDS_DIR
 
+# the reference seeds' golden numbers (FIXTURES.md) need the snapshot
+needs_reference_seeds = pytest.mark.skipif(
+    not os.path.isdir(SEEDS_DIR), reason=f"{SEEDS_DIR} absent"
+)
 
-def _argv(tmp_path, *rest):
+
+def _argv(tmp_path, *rest, seeds_dir=SEEDS_DIR):
     return [
-        "--seeds-dir", SEEDS_DIR,
+        "--seeds-dir", str(seeds_dir),
         "--warehouse-dir", str(tmp_path / "wh"),
         *rest,
     ]
 
 
+@needs_reference_seeds
 def test_cli_seed_run_test_cycle(spark, tmp_path, capsys):
     assert main(_argv(tmp_path, "seed")) == 0
     out = capsys.readouterr().out
@@ -30,15 +40,18 @@ def test_cli_seed_run_test_cycle(spark, tmp_path, capsys):
     assert "PASS=54 FAIL=0 TOTAL=54" in out  # the reference's 54-test suite
 
 
-def test_cli_select_tags(spark, tmp_path, capsys):
-    assert main(_argv(tmp_path, "run", "--select", "bronze")) == 0
+def test_cli_select_tags(spark, tmp_path, capsys, generated_seeds_dir):
+    assert main(_argv(tmp_path, "run", "--select", "bronze",
+                      seeds_dir=generated_seeds_dir)) == 0
     out = capsys.readouterr().out
     # bronze = the 3 staging views only
     assert "built 3 relations" in out
 
 
-def test_cli_freshness_flags_stale_seeds(spark, tmp_path, capsys):
-    assert main(_argv(tmp_path, "freshness")) == 1  # seeds are months old
+def test_cli_freshness_flags_stale_seeds(spark, tmp_path, capsys,
+                                         generated_seeds_dir):
+    assert main(_argv(tmp_path, "freshness",
+                      seeds_dir=generated_seeds_dir)) == 1  # seeds are months old
     out = capsys.readouterr().out
     assert "raw_devices: skipped" in out  # loaded_at_field: null opt-out
     assert "raw_sensor_readings: error" in out
@@ -62,6 +75,7 @@ def test_freshness_clock_is_utc_pinned(spark):
     assert r_utc.status == r_tokyo.status == "warn"
 
 
+@needs_reference_seeds
 def test_cli_sql_verb(spark, tmp_path, capsys):
     assert (
         main(
@@ -292,11 +306,12 @@ def test_cli_docs_lineage(tmp_path, capsys):
     assert out.index("stg_sensor_readings") < out.index("fct_device_summary")
 
 
-def test_docs_artifacts_manifest_and_catalog(tmp_path, capsys):
+def test_docs_artifacts_manifest_and_catalog(tmp_path, capsys,
+                                             generated_seeds_dir):
     from dbt_datbricks_demo_spark.cli import main
 
     rc = main(
-        ["--seeds-dir", "/root/reference/seeds",
+        ["--seeds-dir", generated_seeds_dir,
          "docs", "--artifacts", str(tmp_path / "art"), "--catalog"]
     )
     assert rc == 0
@@ -317,6 +332,7 @@ def test_docs_artifacts_manifest_and_catalog(tmp_path, capsys):
     assert cols["device_id"] == "string"
 
 
+@needs_reference_seeds
 def test_cli_snapshot_verb_is_idempotent_and_tracks_changes(spark, tmp_path, capsys):
     assert main(_argv(tmp_path, "snapshot", "--at", "2025-01-16 00:00:00")) == 0
     out = capsys.readouterr().out
@@ -327,14 +343,18 @@ def test_cli_snapshot_verb_is_idempotent_and_tracks_changes(spark, tmp_path, cap
     assert "devices_snapshot: 10 rows (10 open)" in out
 
 
-def test_cli_state_save_and_noop_selection(spark, tmp_path, capsys):
+def test_cli_state_save_and_noop_selection(spark, tmp_path, capsys,
+                                           generated_seeds_dir):
     state_dir = str(tmp_path / "state")
-    assert main(_argv(tmp_path, "state-save", state_dir)) == 0
+    assert main(_argv(tmp_path, "state-save", state_dir,
+                      seeds_dir=generated_seeds_dir)) == 0
     assert "manifest_fingerprints.json" in capsys.readouterr().out
     # unchanged definitions: state:modified+ selects nothing, run reuses
-    assert main(_argv(tmp_path, "run")) == 0  # materialize once
+    assert main(_argv(tmp_path, "run",
+                      seeds_dir=generated_seeds_dir)) == 0  # materialize once
     capsys.readouterr()
-    assert main(_argv(tmp_path, "run", "--state", state_dir)) == 0
+    assert main(_argv(tmp_path, "run", "--state", state_dir,
+                      seeds_dir=generated_seeds_dir)) == 0
     out = capsys.readouterr().out
     assert "state:modified+ selected 0 models" in out
 
@@ -344,6 +364,17 @@ def test_cli_unit_test_verb(spark, tmp_path, capsys):
     out = capsys.readouterr().out
     assert "PASS anomaly_case_ladder" in out
     assert "Done. PASS=3 FAIL=0 TOTAL=3" in out
+
+
+def test_cli_verbs_without_seeds_ignore_seeds_dir(spark, tmp_path, capsys):
+    """unit-test runs on mock inputs and state-save fingerprints model
+    definitions: neither reads a seed, so a seeds directory without the
+    CSVs must not stop them."""
+    empty = tmp_path / "no_seeds"
+    empty.mkdir()
+    assert main(_argv(tmp_path, "unit-test", seeds_dir=empty)) == 0
+    state_dir = str(tmp_path / "state")
+    assert main(_argv(tmp_path, "state-save", state_dir, seeds_dir=empty)) == 0
 
 
 def test_bench_spread_excludes_cold_first_run():

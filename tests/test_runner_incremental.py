@@ -69,8 +69,8 @@ def test_full_refresh_flag(spark, runner, seeds):
     assert rel["int_sensor_readings_cleaned"].count() == 209
 
 
-def test_tag_selection_bronze_only(spark, runner, seeds):
-    rel = runner.run(seeds, select_tags={"bronze"})
+def test_tag_selection_bronze_only(spark, runner, generated_seeds):
+    rel = runner.run(generated_seeds, select_tags={"bronze"})
     assert "stg_devices" in rel
     # gold models not built (not selected, never materialized)
     assert "fct_device_summary" not in rel or rel["fct_device_summary"] is None
@@ -82,7 +82,7 @@ def test_gated_run_builds_gold_when_silver_passes(spark, runner, seeds):
     assert rel["fct_device_summary"].count() == 10
 
 
-def test_gate_blocks_gold_on_bad_data(spark, tmp_path, seeds):
+def test_gate_blocks_gold_on_bad_data(spark, tmp_path, generated_seeds):
     cfg = RunConfig(
         invocation_id="gate-test", frozen_now=FROZEN_NOW,
         warehouse_dir=str(tmp_path / "wh2"),
@@ -92,10 +92,10 @@ def test_gate_blocks_gold_on_bad_data(spark, tmp_path, seeds):
     orphan = spark.createDataFrame(
         [("ALT999", "DEV_MISSING", "threshold_breach", "critical", "temperature",
           85.0, 99.0, dt.datetime(2025, 1, 15, 9, 0), None, None)],
-        seeds["raw_alerts"].schema,
+        generated_seeds["raw_alerts"].schema,
     )
-    bad = dict(seeds)
-    bad["raw_alerts"] = seeds["raw_alerts"].unionByName(orphan)
+    bad = dict(generated_seeds)
+    bad["raw_alerts"] = generated_seeds["raw_alerts"].unionByName(orphan)
     rel, results = runner.run_gated(bad)
     failed = {r.name for r in results if not r.passed}
     assert "assert_no_orphan_alerts" in failed
@@ -165,7 +165,7 @@ def test_merge_upsert_schema_evolution(spark, tmp_path):
     assert rows[4]["v"] == "b" and rows[4]["extra"] == 1.5  # updated row
 
 
-def test_selected_model_with_missing_upstream_raises_descriptive(runner, seeds):
+def test_selected_model_with_missing_upstream_raises_descriptive(runner, generated_seeds):
     # fresh warehouse: gold's silver dependencies were never materialized
     with pytest.raises(RuntimeError, match="not\n*.*materialized|not materialized"):
-        runner.run(seeds, select_tags={"gold"})
+        runner.run(generated_seeds, select_tags={"gold"})

@@ -37,10 +37,10 @@ def test_new_model_counts_as_modified(tmp_path, monkeypatch):
     assert "brand_new_model" in state.modified(str(tmp_path))
 
 
-def test_runner_select_names_rebuilds_only_selection(spark, seeds, tmp_path):
+def test_runner_select_names_rebuilds_only_selection(spark, generated_seeds, tmp_path):
     cfg = RunConfig(warehouse_dir=str(tmp_path / "wh"))
     runner = PipelineRunner(spark, cfg)
-    runner.run(dict(seeds))  # full build materializes every table
+    runner.run(dict(generated_seeds))  # full build materializes every table
 
     untouched = runner.mat.path("fct_device_summary", "gold")
     before = max(
@@ -49,7 +49,7 @@ def test_runner_select_names_rebuilds_only_selection(spark, seeds, tmp_path):
     )
 
     out = runner.run(
-        dict(seeds),
+        dict(generated_seeds),
         select_names={"int_device_health", "fct_hourly_metrics"},
     )
     assert "fct_hourly_metrics" in out

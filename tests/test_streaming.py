@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from dbt_datbricks_demo_spark.config import RunConfig
 from dbt_datbricks_demo_spark.models.staging import stg_devices
+from dbt_datbricks_demo_spark.sources.seeds import load_seed
 from dbt_datbricks_demo_spark.streaming import (
     expect_or_drop,
     hourly_health_stream,
@@ -34,13 +35,27 @@ R005,DEV002,vibration,4.0,2025-01-15 09:59:00,2025-01-15 09:59:05
 """
 
 
+# the devices the readings above and below enrich from
+RAW_DEVICES = """device_id,device_name,device_type,location,zone,install_date,manufacturer,firmware_version,is_active
+DEV001,Compressor Alpha,compressor,Plant-Detroit,Zone-A,2021-03-15,Maker0,v2.1.4,true
+DEV002,Motor Beta,motor,Plant-Chicago,Zone-B,2022-06-01,Maker1,v2.0.3,true
+"""
+
+
 @pytest.fixture()
-def stream_setup(spark, tmp_path, seeds, cfg):
+def devices(spark, tmp_path, cfg):
+    seeds_dir = tmp_path / "devices_seed"
+    seeds_dir.mkdir()
+    (seeds_dir / "raw_devices.csv").write_text(RAW_DEVICES)
+    return stg_devices(load_seed(spark, str(seeds_dir), "raw_devices"), cfg)
+
+
+@pytest.fixture()
+def stream_setup(spark, tmp_path, devices):
     input_dir = tmp_path / "incoming"
     input_dir.mkdir()
     (input_dir / "batch1.csv").write_text(BATCH1)
     (input_dir / "batch2.csv").write_text(BATCH2)
-    devices = stg_devices(seeds["raw_devices"], cfg)
     return input_dir, devices, tmp_path
 
 
@@ -126,13 +141,12 @@ S009,DEV002,vibration,2.0,2025-01-15 08:36:00,2025-01-15 08:36:05
 """
 
 
-def test_stateful_anomaly_streaks(spark, seeds, cfg, tmp_path):
+def test_stateful_anomaly_streaks(spark, devices, cfg, tmp_path):
     from dbt_datbricks_demo_spark.streaming import anomaly_streaks
 
     input_dir = tmp_path / "streak_in"
     input_dir.mkdir()
     (input_dir / "a.csv").write_text(STREAK_A)
-    devices = stg_devices(seeds["raw_devices"], cfg)
 
     out_dir = tmp_path / "streak_out"
 
