@@ -9,10 +9,15 @@ compare equal across engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 NULL_SENTINEL = "_dbt_utils_surrogate_key_null_"
+
+# Largest relation the engine hints as a broadcast join side: ~32 MB of
+# (id, id) rows, or ~100 MB of short strings with the hash relation —
+# far under Spark's 8 GB broadcast ceiling.
+BROADCAST_ROW_LIMIT = 2_000_000
 
 
 def surrogate_key(*cols: Column | str) -> Column:
@@ -92,3 +97,55 @@ def literal_df(spark, rows, schema: str):
     # explicit numPartitions=1: a bare range(1) plans defaultParallelism
     # splits — 31 empty tasks per evaluation
     return spark.range(0, 1, 1, 1).select(_F.inline(_F.array(*structs)))
+
+
+def counted(df: DataFrame, storage_level=None) -> tuple[DataFrame, int]:
+    """Materialize `df` and count it in ONE action: a lazy
+    localCheckpoint whose blocks the count writes as it goes (on a real
+    pipeline: an intermediate table with its row count), so the
+    checkpoint adds no job ahead of the count. Returns the checkpointed
+    frame and its row count; `storage_level` overrides the checkpoint's
+    default MEMORY_AND_DISK."""
+    df = df.localCheckpoint(eager=False, storageLevel=storage_level)
+    return df, df.count()
+
+
+def broadcast_if_small(
+    df: DataFrame, bound: int | None = None, storage_level=None
+) -> DataFrame:
+    """`df` as a join side, hinted to broadcast when it holds at most
+    BROADCAST_ROW_LIMIT rows — the one size guard of every data-
+    dependent broadcast in the engine (dedup losers, flagged ids,
+    benchmark gram digests, tombstones, band keys, candidate ids and
+    pairs, connected-component labels).
+
+    `bound` is a known row count of `df` or a tight upper bound on it:
+    the counted candidate-pair watermark (the candidate ids are
+    2·|pairs| rows, a pairs-with-one-side join at most |pairs|), or the
+    counted edge-touched vertex set (component labels). A known bound
+    decides the hint without any job — broadcast within the limit,
+    shuffle above it — and the frame executes once, inside the join.
+    Without a bound the frame is materialized and counted (`counted`,
+    one action; `storage_level` passes through) and hinted only when
+    the count is within the limit. Above the limit the join falls back
+    to a shuffle, the worst case a plan without the hint always pays.
+    A bound that may far exceed the true count goes through
+    `loose_bound` first.
+
+    The hint is explicit because the planner's estimates are wrong
+    after checkpoints (unknown-size scans plan sort-merge joins), and
+    AQE decides a runtime broadcast only after materializing the big
+    side's exchange, which its byte-based coalescing can collapse to a
+    single task."""
+    if bound is None:
+        df, bound = counted(df, storage_level)
+    return F.broadcast(df) if bound <= BROADCAST_ROW_LIMIT else df
+
+
+def loose_bound(bound: int | None) -> int | None:
+    """A caller's upper bound that may far exceed the true row count —
+    the corpus size (parquet footer / metastore stats) bounding a set
+    of DISTINCT loser or flagged ids — as a `broadcast_if_small` bound:
+    kept when it is within the limit (the broadcast is then safe with
+    no count), None above it, so the set itself is counted."""
+    return bound if bound is not None and bound <= BROADCAST_ROW_LIMIT else None

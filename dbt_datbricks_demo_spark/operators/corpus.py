@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dbt_datbricks_demo_spark.functions import broadcast_if_small, loose_bound
 from dbt_datbricks_demo_spark.operators import dedup, text
 
 
@@ -46,9 +47,8 @@ def clean_corpus(docs: DataFrame, /, **kwargs) -> DataFrame:
 
     kwargs are clean_corpus_staged's keyword parameters (id_col,
     text_col, min_tokens, max_punct_ratio, allowed_langs, shingle_k,
-    num_hashes, bands, jaccard_threshold, persist_gated,
-    broadcast_pair_limit, corpus_rows); see its docstring. This is
-    clean_corpus_staged without the gate columns."""
+    num_hashes, bands, jaccard_threshold, corpus_rows); see its
+    docstring. This is clean_corpus_staged without the gate columns."""
     return clean_corpus_staged(docs, **kwargs).drop(
         GATE_LANG_COL, GATE_TOKENS_COL
     )
@@ -65,8 +65,6 @@ def clean_corpus_staged(
     bands: int = 2,
     shingle_k: int = 5,
     jaccard_threshold: float = 0.9,
-    persist_gated: bool = False,
-    broadcast_pair_limit: int = dedup.BROADCAST_PAIR_LIMIT,
     corpus_rows: int | None = None,
 ) -> DataFrame:
     """Return the cleaned corpus (original columns preserved) plus the
@@ -77,28 +75,27 @@ def clean_corpus_staged(
     tokenizer and the 5-language regex score over every surviving
     document.
 
-    persist_gated materializes the gate's input with the two columns
-    staged (lazy localCheckpoint; on a real pipeline: write it to
-    storage) and the gate filters the materialized columns — the
-    near-dup stage reads the gated corpus from 4 plan branches, and
-    without materialization each branch re-runs the regex-heavy
-    language/quality gates. (A filter over computed columns placed
-    above their projection is pushed below it with the expressions
-    substituted, which would score the language twice per row.) The
-    language is only scored for rows that pass the quality gate (NULL
-    otherwise, which the allowlist drops).
+    The gate's input is materialized with the two columns staged (lazy
+    localCheckpoint; on a real pipeline: write it to storage) and the
+    gate filters the materialized columns — the near-dup stage reads
+    the gated corpus from 4 plan branches, and without materialization
+    each branch re-runs the regex-heavy language/quality gates. (A
+    filter over computed columns placed above their projection is
+    pushed below it with the expressions substituted, which would
+    score the language twice per row.) The language is only scored for
+    rows that pass the quality gate (NULL otherwise, which the
+    allowlist drops).
 
     corpus_rows: caller-known upper bound on |docs| (parquet footer /
     metastore stats). Both loser sets (exact-dup losers, near-dup
-    losers) are bounded by it, so a bound under broadcast_pair_limit
-    skips their materialize+count guard jobs entirely (4 jobs + ~1.3 s
-    warm driver time at sf0.1).
+    losers) are bounded by it, so a bound under the broadcast limit
+    (functions.broadcast_if_small) skips their count jobs.
 
     Eager jobs: the candidate pairs are checkpointed and counted in ONE
-    job (dedup.counted_pairs) whose count feeds both broadcast guards
+    action (dedup.jaccard_pairs) whose count feeds both broadcast guards
     of the near-dup verification; the candidate hash arrays are the
     one other eager checkpoint. Without a corpus_rows bound the two
-    loser sets add their materialize+count guards."""
+    loser sets add one count action each."""
     # 1. exact dedup
     deduped = dedup.exact_dedup(docs, [text_col], id_col, row_bound=corpus_rows)
 
@@ -109,61 +106,34 @@ def clean_corpus_staged(
         (n_punct * 1.0 / F.nullif(F.length(text_col), F.lit(0)))
         <= max_punct_ratio
     )
-    # Examined, left alone (round 13): without persist_gated Catalyst
-    # pushes this deterministic gate below the caller's parallelizing
-    # repartition to the scan, so on a single-row-group file the whole
-    # regex gate runs inside the ONE scan task. A nondeterministic
-    # rand()-disjunct pushdown barrier was tried and is FOLDED AWAY by
-    # Spark 4's interval simplification (rand() < -1 is provably
-    # false), and on a real multi-file table the pushdown is the RIGHT
-    # behavior (filtering at the scan is optimal).
     staged = deduped.select(
         "*",
         F.when(quality_ok, text.predict_lang(text_col)).alias(GATE_LANG_COL),
         n_tokens.alias(GATE_TOKENS_COL),
-    )
-    if persist_gated:
-        staged = staged.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     gated = staged.filter(F.col(GATE_LANG_COL).isin(*allowed_langs))
 
     # 4. near-dup removal among the survivors: the corpus-wide pass is
     # the row-level codegen shingle path (explode → md5 per row →
     # partial-agged minhash); interpreted array lambdas only run on the
     # candidate subset (see dedup.shingle_hash_rows docstring)
-    rows = dedup.shingle_hash_rows(gated, id_col, text_col, k=shingle_k)
-    sigs = dedup.minhash_sigs_from_rows(rows, id_col, num_hashes=num_hashes)
-    pairs, n_pairs = dedup.counted_pairs(
-        dedup.candidate_pairs_from_sigs(
-            sigs, id_col, num_hashes=num_hashes, bands=bands
-        )
+    pairs = dedup.minhash_candidate_pairs(
+        gated, id_col, text_col, num_hashes, bands, shingle_k
     )
-    hashed_small = dedup.candidate_hash_arrays(
-        gated, pairs, id_col, text_col, k=shingle_k, n_pairs=n_pairs
-    )
-    confirmed = dedup.jaccard_pairs_from_hashes(
-        hashed_small,
-        pairs,
-        id_col,
-        broadcast_pair_limit=broadcast_pair_limit,
-        n_pairs=n_pairs,
-    )
+    confirmed, _ = dedup.jaccard_pairs(gated, pairs, id_col, text_col, shingle_k)
     # losers is O(confirmed duplicate pairs) but DISTINCT ids, so it is
-    # also bounded by |docs|: a caller-supplied corpus_rows bound under
-    # the limit decides the broadcast with no materialize+count jobs
-    # (the loser subtree reads the pairs/hash checkpoints, so the
-    # broadcast build is small). Without a bound, the original
-    # size-guard: materialize + count, broadcast only under the limit.
+    # also bounded by |docs| (the loser subtree reads the pairs/hash
+    # checkpoints, so the broadcast build is small)
     losers = (
         confirmed.filter(F.col("jaccard") >= jaccard_threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
-    if corpus_rows is not None and corpus_rows <= broadcast_pair_limit:
-        return gated.join(F.broadcast(losers), on=id_col, how="left_anti")
-    losers = losers.localCheckpoint(eager=True)
-    if losers.count() <= broadcast_pair_limit:
-        losers = F.broadcast(losers)
-    return gated.join(losers, on=id_col, how="left_anti")
+    return gated.join(
+        broadcast_if_small(losers, loose_bound(corpus_rows)),
+        on=id_col,
+        how="left_anti",
+    )
 
 
 def prepare_training_set(
@@ -249,20 +219,15 @@ def prepare_training_set(
     )
     # flagged ids are bounded by |docs|: the caller-known corpus_rows
     # bound (already used for the loser broadcasts in clean_corpus)
-    # decides this broadcast too — without the hint the planner's
+    # bounds this broadcast too — without the hint the planner's
     # unknown-size estimate plans a sort-merge anti-join whose
     # trainval-side exchange AQE coalesces to one partition, pushing
     # the final union + packing aggregation of the whole surviving
     # corpus into a single task (same defect as candidate_hash_arrays,
     # measured round 13).
-    corpus_rows = clean_kwargs.get("corpus_rows")
-    if (
-        corpus_rows is not None
-        and corpus_rows <= clean_kwargs.get(
-            "broadcast_pair_limit", dedup.BROADCAST_PAIR_LIMIT
-        )
-    ):
-        flagged = F.broadcast(flagged)
+    flagged = broadcast_if_small(
+        flagged, loose_bound(clean_kwargs.get("corpus_rows"))
+    )
     return trainval.join(flagged, id_col, "left_anti").unionByName(bench_docs)
 
 

@@ -29,12 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dbt_datbricks_demo_spark.functions import broadcast_if_small
 from dbt_datbricks_demo_spark.operators.text import tokens
-
-# Max benchmark n-gram set size to broadcast: ~50 B/gram string → ~100 MB,
-# comfortably under Spark's 8 GB broadcast ceiling with headroom for the
-# hash relation. Above it the join degrades to a shuffled hash join.
-BROADCAST_GRAM_LIMIT = 2_000_000
 
 
 def distinct_ngram_set(
@@ -62,7 +58,6 @@ def contamination_report(
     id_col: str = "doc_id",
     n: int = 5,
     flag_threshold: float = 0.2,
-    broadcast_gram_limit: int = BROADCAST_GRAM_LIMIT,
 ) -> DataFrame:
     """Per-document benchmark overlap: distinct n-grams, how many occur
     in `benchmark_grams` (1 column: gram), the overlap fraction, and a
@@ -70,7 +65,8 @@ def contamination_report(
     tokens have no grams → overlap_frac NULL, flagged false.
 
     `benchmark_grams` is materialized and counted once; broadcast only
-    under `broadcast_gram_limit` (shuffled join fallback above it).
+    under the limit (functions.broadcast_if_small; shuffled join
+    fallback above it).
     """
     # both sides probe on a 60-bit md5-derived gram digest, not the gram
     # string: the checkpointed/broadcast benchmark relation is 8-byte
@@ -85,13 +81,10 @@ def contamination_report(
     # without pinning executor memory at 100 TB.
     from pyspark import StorageLevel
 
-    bench = (
-        benchmark_grams.select(gh.alias("_gh"))
-        .distinct()
-        .localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+    bench = broadcast_if_small(
+        benchmark_grams.select(gh.alias("_gh")).distinct(),
+        storage_level=StorageLevel.DISK_ONLY,
     )
-    if bench.count() <= broadcast_gram_limit:
-        bench = F.broadcast(bench)
     bench_hit = bench.withColumn("_hit", F.lit(1))
 
     # ONE gram derivation feeds everything, in the row-level codegen

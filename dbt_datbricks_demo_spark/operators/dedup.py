@@ -49,12 +49,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from dbt_datbricks_demo_spark.functions import literal_df
+from dbt_datbricks_demo_spark.functions import (
+    broadcast_if_small,
+    counted,
+    literal_df,
+    loose_bound,
+)
 from dbt_datbricks_demo_spark.operators.text import tokens
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, the minhash permutation field
-
-BROADCAST_PAIR_LIMIT = 2_000_000  # ~32 MB of (id, id) rows — well under the ceiling
 
 
 def _affine_params(num_hashes: int) -> list[tuple[int, int]]:
@@ -107,26 +110,22 @@ def exact_dedup(
     df: DataFrame,
     cols: list[str],
     id_col: str,
-    broadcast_loser_limit: int = BROADCAST_PAIR_LIMIT,
     row_bound: int | None = None,
 ) -> DataFrame:
     """Keep the lowest-id row per distinct content (deterministic winner).
 
     The only shuffle moves (16-byte digest, id) — never document bodies:
     a narrow projection finds LOSER ids (window rn>1 over the digest),
-    and the corpus drops them with an anti-join. The loser set is
-    O(duplicate rows), so it is materialized + counted (watermark-scalar
-    pattern) and broadcast when under `broadcast_loser_limit` — on a
+    and the corpus drops them with an anti-join whose loser side is a
+    size-guarded broadcast (functions.broadcast_if_small) — on a
     typical corpus the bodies then never shuffle at all. Above the limit
     (dup-heavy corpus) the anti-join falls back to one corpus shuffle —
     the same worst case a direct window-over-digest plan always pays.
 
     row_bound: caller-known upper bound on the input rowcount (parquet
-    footer / metastore stats). Losers are at most |rows|, so a bound
-    under the limit decides the broadcast WITHOUT the materialize+count
-    jobs (2 jobs + ~0.6 s warm driver time per consuming query); the
-    loser subtree then executes exactly once, inside the broadcast
-    build.
+    footer / metastore stats); losers are at most |rows|, so a bound
+    within the broadcast limit decides the guard without a count job
+    (functions.loose_bound).
     """
     from pyspark.sql import Window
 
@@ -137,12 +136,11 @@ def exact_dedup(
         .filter(F.col("_rn") > 1)
         .select(id_col)
     )
-    if row_bound is not None and row_bound <= broadcast_loser_limit:
-        return df.join(F.broadcast(losers), on=id_col, how="left_anti")
-    losers = losers.localCheckpoint(eager=True)
-    if losers.count() <= broadcast_loser_limit:
-        losers = F.broadcast(losers)
-    return df.join(losers, on=id_col, how="left_anti")
+    return df.join(
+        broadcast_if_small(losers, loose_bound(row_bound)),
+        on=id_col,
+        how="left_anti",
+    )
 
 
 def char_shingles(col: Column | str, k: int = 5) -> Column:
@@ -267,20 +265,6 @@ def lsh_band_keys(
     return F.array(*keys)
 
 
-def shingle_hash_table(
-    df: DataFrame, id_col: str, text_col: str = "text", k: int = 5
-) -> DataFrame:
-    """The materialization point of the near-dup pipeline: (id, shingle-
-    hash array), computed in ONE pass over the text and localCheckpointed
-    (on a real cluster: written to storage). Candidate generation and
-    Jaccard verification both derive from this table, so the regex/md5-
-    heavy text pass runs exactly once no matter how many consumers read
-    it — the signature-table pattern every web-scale dedup pipeline uses.
-    """
-    staged = with_shingle_hashes(df, text_col, k, out="_hs")
-    return staged.select(F.col(id_col), F.col("_hs")).localCheckpoint(eager=True)
-
-
 def shingle_hash_rows(
     df: DataFrame, id_col: str, text_col: str = "text", k: int = 5
 ) -> DataFrame:
@@ -301,8 +285,8 @@ def shingle_hash_rows(
     |corpus k-grams|. Occurrence rows (not distinct shingles) are
     exactly what MinHash needs: min over occurrences = min over the
     distinct set. Consumers that need true distinct-shingle SETS
-    (Jaccard sizes) restrict to candidate ids first and use the array
-    form (with_shingle_hashes) on that small subset."""
+    (Jaccard sizes) restrict to candidate ids first and build the
+    arrays on that small subset (candidate_hash_arrays)."""
     norm = F.trim(F.lower(F.col(text_col)))
     staged = df.select(F.col(id_col), norm.alias("_n"))
     idx = F.explode(
@@ -364,44 +348,6 @@ def candidate_pairs_from_sigs(
     )
 
 
-def candidate_pairs_from_hashes(
-    hashed: DataFrame,
-    id_col: str,
-    num_hashes: int = 8,
-    bands: int = 4,
-) -> DataFrame:
-    """LSH candidate pairs (id_a < id_b) from a shingle_hash_table."""
-    rows_per_band = num_hashes // bands
-    sig = F.array(*_minhash_slots(F.col("_hs"), num_hashes))
-    keyed = hashed.select(
-        F.col(id_col),
-        F.explode(lsh_band_keys(sig, bands, rows_per_band)).alias("band_key"),
-    )
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (
-        a.join(b, "band_key")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-
-
-def counted_pairs(pairs: DataFrame) -> tuple[DataFrame, int]:
-    """Materialize candidate `pairs` and count them in ONE action.
-
-    Lazy localCheckpoint + count: the count job computes the pairs once
-    and writes the checkpoint blocks as it goes (the connected-
-    components setup pattern), instead of an eager checkpoint job
-    followed by a separate count per consumer. Returns the checkpointed
-    pairs and |pairs|; candidate_hash_arrays and
-    jaccard_pairs_from_hashes take that count for their broadcast
-    guards, so neither counts again."""
-    pairs = pairs.localCheckpoint(eager=False)
-    return pairs, pairs.count()
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -410,32 +356,14 @@ def minhash_candidate_pairs(
     bands: int = 4,
     k: int = 5,
 ) -> DataFrame:
-    """LSH candidate pairs (id_a < id_b): documents sharing ≥1 band bucket.
-
-    Standalone form — stages the shingle hashes itself. Pipelines that
-    also verify with Jaccard should build one shingle_hash_table and use
-    candidate_pairs_from_hashes / jaccard_pairs_from_hashes so the text
-    pass is shared. The self-join runs on exploded (band_key, id) pairs —
-    |docs|×bands rows of ~50 bytes — so the shuffle is tiny relative to
-    the corpus.
-    """
-    staged = with_minhash(df, text_col, num_hashes, k, sig_col="_sig")
-    rows_per_band = num_hashes // bands
-    keyed = staged.select(
-        F.col(id_col),
-        F.explode(lsh_band_keys("_sig", bands, rows_per_band)).alias(
-            "band_key"
-        ),
-    )
-    a, b = keyed.alias("a"), keyed.alias("b")
-    return (
-        a.join(b, "band_key")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
+    """LSH candidate pairs (id_a < id_b): documents sharing ≥1 band
+    bucket. The corpus-wide pass is row-level codegen work
+    (shingle_hash_rows → minhash_sigs_from_rows); the band self-join
+    runs on exploded (band_key, id) pairs — |docs|×bands rows of ~50
+    bytes — so the shuffle is tiny relative to the corpus."""
+    rows = shingle_hash_rows(df, id_col, text_col, k)
+    sigs = minhash_sigs_from_rows(rows, id_col, num_hashes)
+    return candidate_pairs_from_sigs(sigs, id_col, num_hashes, bands)
 
 
 def jaccard_pairs(
@@ -444,27 +372,27 @@ def jaccard_pairs(
     id_col: str,
     text_col: str = "text",
     k: int = 5,
-    broadcast_pair_limit: int = BROADCAST_PAIR_LIMIT,
-) -> DataFrame:
-    """Exact shingle-set Jaccard for candidate pairs (standalone form —
-    stages the shingle hashes itself; pipelines share a
-    shingle_hash_table and call jaccard_pairs_from_hashes)."""
-    hashed = shingle_hash_table(df, id_col, text_col, k)
-    pairs, n_pairs = counted_pairs(pairs)
-    return jaccard_pairs_from_hashes(
-        hashed,
-        pairs,
-        id_col,
-        broadcast_pair_limit=broadcast_pair_limit,
-        n_pairs=n_pairs,
+) -> tuple[DataFrame, int]:
+    """Exact shingle-set Jaccard for candidate `pairs` of `df`'s
+    documents; returns (scored pairs, |pairs|).
+
+    The pairs are materialized and counted in ONE action (functions.
+    counted); that count bounds both broadcast guards downstream, so
+    neither candidate_hash_arrays nor jaccard_pairs_from_hashes counts
+    again. Distinct-shingle arrays are built only for the candidate
+    documents."""
+    pairs, n_pairs = counted(pairs)
+    hashed = candidate_hash_arrays(
+        df, pairs, id_col, text_col, k, n_pairs=n_pairs
     )
+    scored = jaccard_pairs_from_hashes(hashed, pairs, id_col, n_pairs=n_pairs)
+    return scored, n_pairs
 
 
 def jaccard_pairs_from_hashes(
     hashed: DataFrame,
     pairs: DataFrame,
     id_col: str,
-    broadcast_pair_limit: int = BROADCAST_PAIR_LIMIT,
     *,
     n_pairs: int,
 ) -> DataFrame:
@@ -473,32 +401,28 @@ def jaccard_pairs_from_hashes(
     (``array_intersect``), |A∪B| = |A| + |B| − |A∩B|. Integer-only
     until the final division.
 
-    `pairs` comes from counted_pairs: materialized and COUNTED once
-    before planning (the watermark-scalar pattern), and `n_pairs` is
-    that count — this function fires no job of its own. Under
-    `broadcast_pair_limit` the pairs (and the pairs-with-one-side
-    intermediate, which is at most pairs-sized) broadcast, so the
-    signature table streams through two broadcast hash joins and
-    NOTHING corpus-sized ever shuffles or explodes — the previous
-    explode-equijoin formulation shuffled |docs|×|shingles| rows to
-    verify a handful of candidates. Above the limit — a dirty 100-TB
-    corpus where candidates are O(duplicate pairs) and would blow the
-    broadcast ceiling — both joins fall back to hash-partitioned
-    shuffles on doc id, moving each side's array exactly once."""
-    use_broadcast = n_pairs <= broadcast_pair_limit
-    pairs_hinted = F.broadcast(pairs) if use_broadcast else pairs
-
+    `pairs` is materialized and COUNTED once before planning (the
+    watermark-scalar pattern, jaccard_pairs), and `n_pairs` is that
+    count — under the broadcast limit this function fires no job of
+    its own. The pairs (and the pairs-with-one-side intermediate, which
+    is at most pairs-sized) broadcast, so the signature table streams
+    through two broadcast hash joins and NOTHING corpus-sized ever
+    shuffles or explodes — the previous explode-equijoin formulation
+    shuffled |docs|×|shingles| rows to verify a handful of candidates.
+    Above the limit — a dirty 100-TB corpus where candidates are
+    O(duplicate pairs) and would blow the broadcast ceiling — both
+    joins fall back to hash-partitioned shuffles on doc id, moving each
+    side's array exactly once."""
     ha = hashed.select(
         F.col(id_col).alias("id_a"), F.col("_hs").alias("_hs_a")
     )
     hb = hashed.select(
         F.col(id_col).alias("id_b"), F.col("_hs").alias("_hs_b")
     )
-    with_a = pairs_hinted.join(ha, "id_a")
-    if use_broadcast:
-        with_a = F.broadcast(with_a)
+    with_a = broadcast_if_small(pairs, n_pairs).join(ha, "id_a")
     return (
-        with_a.join(hb, "id_b")
+        broadcast_if_small(with_a, n_pairs)
+        .join(hb, "id_b")
         .select(
             "id_a",
             "id_b",
@@ -545,7 +469,6 @@ def connected_components(
     edges: DataFrame,
     id_col: str = "doc_id",
     max_iterations: int = 20,
-    broadcast_component_limit: int = BROADCAST_PAIR_LIMIT,
 ) -> DataFrame:
     """Undirected connected components by iterative min-label propagation
     — the transitive closure pairwise near-dup detection needs (A~B, B~C
@@ -587,16 +510,14 @@ def connected_components(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    # edge-touched vertices only: the loop's working set. Lazy
-    # checkpoint + count in one job — the count also materializes sym
-    # (its ancestor) and is the loop-size/broadcast watermark.
-    labels = (
+    # edge-touched vertices only: the loop's working set. Checkpointed
+    # and counted in one action — the count also materializes sym (its
+    # ancestor) and is the loop-size/broadcast watermark.
+    labels, n_loop_vertices = counted(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .select("id", F.col("id").alias("component"))
-        .localCheckpoint(eager=False)
     )
-    n_loop_vertices = labels.count()
     if n_loop_vertices == 0:
         # clean corpus: no edges, every vertex is its own component —
         # no loop, no join
@@ -606,22 +527,17 @@ def connected_components(
 
     # per-round join sides are bounded by the counted watermark:
     # labels has exactly n_loop_vertices rows every round, and
-    # neighbor_min at most that — broadcast-hint both under the limit
-    # (the planner sees only unknown-size checkpoint scans and would
-    # plan sort-merge joins whose per-round exchanges each cost an AQE
-    # stage job). Above the limit — a pathologically dirty corpus —
-    # the hint is withheld and the joins shuffle as before.
-    small_loop = n_loop_vertices <= broadcast_component_limit
-
+    # neighbor_min at most that (the planner sees only unknown-size
+    # checkpoint scans and would plan sort-merge joins whose per-round
+    # exchanges each cost an AQE stage job)
     for _ in range(max_iterations):
-        labels_j = F.broadcast(labels) if small_loop else labels
-        neighbor_min = (
-            sym.join(labels_j, sym.dst == labels.id)
+        labels_j = broadcast_if_small(labels, n_loop_vertices)
+        neighbor_min = broadcast_if_small(
+            sym.join(labels_j, sym.dst == labels_j.id)
             .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
+            .agg(F.min("component").alias("nbr_component")),
+            n_loop_vertices,
         )
-        if small_loop:
-            neighbor_min = F.broadcast(neighbor_min)
         updated = (
             labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
             .select(
@@ -645,11 +561,10 @@ def connected_components(
 
     # attach singletons: component = own id for every vertex the loop
     # never saw. The mapping is O(edge-touched vertices) — its rowcount
-    # is the invariant counted at setup — broadcast under the limit,
-    # shuffled join on a pathologically dirty corpus.
-    mapping = labels.withColumnRenamed("id", id_col)
-    if n_loop_vertices <= broadcast_component_limit:
-        mapping = F.broadcast(mapping)
+    # is the invariant counted at setup.
+    mapping = broadcast_if_small(
+        labels.withColumnRenamed("id", id_col), n_loop_vertices
+    )
     return (
         vertices.select(F.col(id_col))
         .join(mapping, on=id_col, how="left")
@@ -674,9 +589,9 @@ def candidate_hash_arrays(
     distinct-shingle set semantics for Jaccard sizes) computed only on
     the O(candidate) subset, so the HOF array lambdas run over thousands
     of docs, not the corpus. `pairs` and `n_pairs` come from
-    counted_pairs (materialized and counted once by the caller); the
-    candidate ids, 2·n_pairs rows, broadcast into the semi-join when
-    that is under BROADCAST_PAIR_LIMIT.
+    functions.counted (materialized and counted once by the caller);
+    the candidate ids, 2·n_pairs rows, are a size-guarded broadcast
+    into the semi-join.
 
     The result is EAGERLY checkpointed here: every consumer joins it
     twice (the id_a and id_b sides of the pair verification), and
@@ -701,12 +616,10 @@ def candidate_hash_arrays(
     # measured ~2 s task (guide §2.5: compute-heavy rows defeat
     # byte-based coalescing; §3.1: broadcast decisions off estimates
     # are wrong after checkpoints — hint explicitly). cand_ids holds
-    # exactly 2·n_pairs rows of one bigint, so guarding on that bound
-    # keeps the broadcast within the documented limit.
-    cand = cand_ids
-    if 2 * n_pairs <= BROADCAST_PAIR_LIMIT:
-        cand = F.broadcast(cand_ids)
-    subset = df.join(cand, on=id_col, how="left_semi")
+    # exactly 2·n_pairs rows of one bigint: that is the guard's bound.
+    subset = df.join(
+        broadcast_if_small(cand_ids, 2 * n_pairs), on=id_col, how="left_semi"
+    )
     # Row-level codegen form (round 12): the previous with_shingle_hashes
     # HOF array build measured marginally faster on a LUCKY JIT profile
     # (1.8 s vs 2.2-3.0 s at sf0.1) but Catalyst's interpreted lambda
@@ -773,17 +686,9 @@ def neardup_clusters(
     Corpus-wide work is the row-level codegen path (shingle_hash_rows →
     minhash_sigs_from_rows); the interpreted array lambdas only touch
     the candidate subset (candidate_hash_arrays)."""
-    rows = shingle_hash_rows(df, id_col, text_col, k)
-    sigs = minhash_sigs_from_rows(rows, id_col, num_hashes)
-    pairs, n_pairs = counted_pairs(
-        candidate_pairs_from_sigs(sigs, id_col, num_hashes, bands)
-    )
-    hashed_small = candidate_hash_arrays(
-        df, pairs, id_col, text_col, k, n_pairs=n_pairs
-    )
-    confirmed = jaccard_pairs_from_hashes(
-        hashed_small, pairs, id_col, n_pairs=n_pairs
-    ).filter(F.col("jaccard") >= jaccard_threshold)
+    pairs = minhash_candidate_pairs(df, id_col, text_col, num_hashes, bands, k)
+    scored, _ = jaccard_pairs(df, pairs, id_col, text_col, k)
+    confirmed = scored.filter(F.col("jaccard") >= jaccard_threshold)
     comp = connected_components(df, confirmed.select("id_a", "id_b"), id_col)
     return comp.select(F.col("id").alias(id_col), "component")
 
@@ -1087,11 +992,10 @@ def index_candidate_pairs(
     k: int = 5,
     num_hashes: int = 8,
     bands: int = 2,
-    broadcast_key_limit: int = BROADCAST_PAIR_LIMIT,
 ) -> DataFrame:
     """Candidate (batch_id, corpus_id) pairs for a new batch against a
     write_minhash_index layout: the batch's band keys are computed fresh
-    (batch-sized, eagerly checkpointed once), its DISTINCT bucket values
+    (batch-sized, materialized and counted once), its DISTINCT bucket values
     — at most MINHASH_INDEX_BUCKETS, a bounded driver read like the IVF
     probe-cell routing — prune the index scan to matching directories
     (PartitionFilters, plan-pinned), and the equi-join on band_key is a
@@ -1111,26 +1015,23 @@ def index_candidate_pairs(
     recover_minhash_index(index_path)
     rows = shingle_hash_rows(batch, id_col, text_col, k)
     sigs = minhash_sigs_from_rows(rows, id_col, num_hashes)
-    bk = (
+    probe = broadcast_if_small(
         sigs.select(
             F.col(id_col).alias("batch_id"),
             F.explode(
                 lsh_band_keys("_sig", bands, num_hashes // bands)
             ).alias("band_key"),
         )
-        .localCheckpoint(eager=True)
     )
-    use_broadcast = bk.count() <= broadcast_key_limit
     buckets = [
         r["b"]
-        for r in bk.select(_band_bucket(F.col("band_key")).alias("b"))
+        for r in probe.select(_band_bucket(F.col("band_key")).alias("b"))
         .distinct()
         .collect()
     ]
     idx = read_index_with_retry(spark, index_path).filter(
         F.col(MINHASH_BUCKET_COL).isin(buckets)
     )
-    probe = F.broadcast(bk) if use_broadcast else bk
     idx = _without_tombstoned(spark, index_path, idx, id_col)
     return (
         idx.join(probe, "band_key")
@@ -1150,9 +1051,6 @@ def index_candidate_pairs(
 # and after compaction — oracle-gated by minhash_index_maintenance and
 # pinned by tests/test_scale.py.
 # ---------------------------------------------------------------------------
-# tombstone sets are bounded by ops discipline (compact before the set
-# grows); above this the anti-join falls back from broadcast to shuffle
-TOMBSTONE_BROADCAST_LIMIT = 2_000_000
 
 
 def minhash_index_exists(index_path: str) -> bool:
@@ -1509,15 +1407,13 @@ def _without_tombstoned(
     spark, index_path: str, idx: DataFrame, id_col: str
 ) -> DataFrame:
     """Anti-join the postings stream against the tombstone set (no-op
-    when none exist). The tombstone set is counted and broadcast under
-    the limit — between compactions it is deleted-docs-sized, not
-    corpus-sized — with a shuffled anti-join fallback above it."""
+    when none exist). The tombstone set is a size-guarded broadcast —
+    between compactions (ops discipline: compact before the set grows)
+    it is deleted-docs-sized, not corpus-sized."""
     tomb = minhash_tombstones(spark, index_path)
     if tomb is None:
         return idx
-    tomb = tomb.localCheckpoint(eager=True)
-    if tomb.count() <= TOMBSTONE_BROADCAST_LIMIT:
-        tomb = F.broadcast(tomb)
+    tomb = broadcast_if_small(tomb)
     return idx.join(
         tomb, idx[id_col] == tomb["id"], "left_anti"
     )

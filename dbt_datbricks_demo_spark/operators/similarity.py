@@ -148,30 +148,6 @@ def probe_cells(centroids: list[list[float]], query: list[float], nprobe: int) -
     return [i for i, _d in sorted(q2, key=lambda t: t[1])[:nprobe]]
 
 
-def ivf_topk(
-    df: DataFrame,
-    centroids: list[list[float]],
-    query: list[float],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF approximate top-k over an UN-indexed DataFrame: exact cosine
-    restricted to the query's nprobe nearest cells, found by re-deriving
-    the cell assignment as a filter — a full scan. This is the ad-hoc /
-    one-shot form; repeated queries should write the corpus cell-
-    partitioned once (write_ivf_index) and search via ivf_index_topk,
-    where probing is directory pruning instead of a scan."""
-    cells = probe_cells(centroids, query, nprobe)
-    return (
-        df.filter(ivf_assign(F.col(vec_col), centroids).isin(cells))
-        .select(F.col(id_col), cosine_to_query(F.col(vec_col), query).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
 IVF_CELL_COL = "ivf_cell"
 
 

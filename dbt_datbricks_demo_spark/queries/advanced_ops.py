@@ -887,10 +887,8 @@ _SQL_PAIRS = f"""
 )
 def pagerank_similarity_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_t(spark, sf_dir, "documents"))
-    rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
-    sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=8)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, "doc_id", num_hashes=8, bands=2
+    pairs = dedup.minhash_candidate_pairs(
+        docs, "doc_id", num_hashes=8, bands=2
     ).localCheckpoint(eager=True)
     ranked = graph.pagerank_fixed(pairs, iterations=3, damping_pct=85)
     return (

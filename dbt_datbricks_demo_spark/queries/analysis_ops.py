@@ -546,17 +546,8 @@ def containment_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t_rowcount(sf_dir, "documents")
     nh, nb, _r = dedup.adaptive_minhash_geometry(n)
     docs = _spread(_t(spark, sf_dir, "documents"))
-    rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
-    sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=nh)
-    pairs, n_pairs = dedup.counted_pairs(
-        dedup.candidate_pairs_from_sigs(sigs, "doc_id", num_hashes=nh, bands=nb)
-    )
-    hashed_small = dedup.candidate_hash_arrays(
-        docs, pairs, "doc_id", "text", k=5, n_pairs=n_pairs
-    )
-    verified = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", n_pairs=n_pairs
-    )
+    pairs = dedup.minhash_candidate_pairs(docs, "doc_id", num_hashes=nh, bands=nb)
+    verified, _ = dedup.jaccard_pairs(docs, pairs, "doc_id")
     return (
         verified.select(
             "id_a",
@@ -609,10 +600,8 @@ def containment_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def triangle_count_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_t(spark, sf_dir, "documents"))
-    rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
-    sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=8)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, "doc_id", num_hashes=8, bands=2
+    pairs = dedup.minhash_candidate_pairs(
+        docs, "doc_id", num_hashes=8, bands=2
     ).localCheckpoint(eager=True)
     p1 = pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
     p2 = pairs.select(F.col("id_a").alias("b"), F.col("id_b").alias("c"))
@@ -780,10 +769,8 @@ def label_propagation_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _spread(_t(spark, sf_dir, "documents"))
-    rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
-    sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=8)
-    pairs = dedup.candidate_pairs_from_sigs(
-        sigs, "doc_id", num_hashes=8, bands=2
+    pairs = dedup.minhash_candidate_pairs(
+        docs, "doc_id", num_hashes=8, bands=2
     ).localCheckpoint(eager=True)
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")

@@ -419,17 +419,8 @@ def minhash_lsh_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t_rowcount(sf_dir, "documents")
     nh, b, _r = dedup.adaptive_minhash_geometry(n)
     docs = _spread(_t(spark, sf_dir, "documents"))
-    rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
-    sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=nh)
-    pairs, n_pairs = dedup.counted_pairs(
-        dedup.candidate_pairs_from_sigs(sigs, "doc_id", num_hashes=nh, bands=b)
-    )
-    hashed_small = dedup.candidate_hash_arrays(
-        docs, pairs, "doc_id", "text", k=5, n_pairs=n_pairs
-    )
-    jac = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", n_pairs=n_pairs
-    )
+    pairs = dedup.minhash_candidate_pairs(docs, "doc_id", num_hashes=nh, bands=b)
+    jac, _ = dedup.jaccard_pairs(docs, pairs, "doc_id")
     return jac.crossJoin(F.broadcast(_amh_geom_cert(docs, nh, b)))
 
 
@@ -579,17 +570,8 @@ def _amh_knee_report(
     n = _t_rowcount(sf_dir, "documents")
     nh, b, _r = dedup.adaptive_minhash_geometry(n, tiers=tiers)
     docs = _spread(_t(spark, sf_dir, "documents"))
-    rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
-    sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=nh)
-    pairs, n_pairs = dedup.counted_pairs(
-        dedup.candidate_pairs_from_sigs(sigs, "doc_id", num_hashes=nh, bands=b)
-    )
-    hashed_small = dedup.candidate_hash_arrays(
-        docs, pairs, "doc_id", "text", k=5, n_pairs=n_pairs
-    )
-    jac = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", n_pairs=n_pairs
-    )
+    pairs = dedup.minhash_candidate_pairs(docs, "doc_id", num_hashes=nh, bands=b)
+    jac, _ = dedup.jaccard_pairs(docs, pairs, "doc_id")
     # integer-only aggregate report: float jaccard SUMS are order-
     # sensitive across engines, so the report carries (sum_common,
     # sum_union) and counts pairs at/above the 0.841 banding knee via
@@ -1457,9 +1439,7 @@ def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_t(spark, sf_dir, "documents"))
     # the staged gate columns carry language and token count into
     # corpus_stats_staged — the tokenizer and the language score run once
-    cleaned = clean_corpus_staged(
-        docs, persist_gated=True, num_hashes=nh, bands=nb, corpus_rows=n
-    )
+    cleaned = clean_corpus_staged(docs, num_hashes=nh, bands=nb, corpus_rows=n)
     return corpus_stats_staged(cleaned)
 
 

@@ -2016,23 +2016,14 @@ def adaptive_band_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = dedup.adaptive_rows_per_band(n, num_hashes=_AB_HASHES)
     bands = _AB_HASHES // r
     docs = _spread(_t(spark, sf_dir, "documents"))
-    rows = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
-    sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=_AB_HASHES)
-    pairs, n_pairs = dedup.counted_pairs(
-        dedup.candidate_pairs_from_sigs(
-            sigs, "doc_id", num_hashes=_AB_HASHES, bands=bands
-        )
+    pairs = dedup.minhash_candidate_pairs(
+        docs, "doc_id", num_hashes=_AB_HASHES, bands=bands
     )
-    hashed_small = dedup.candidate_hash_arrays(
-        docs, pairs, "doc_id", "text", k=5, n_pairs=n_pairs
-    )
-    ver = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", n_pairs=n_pairs
-    )
+    ver, n_pairs = dedup.jaccard_pairs(docs, pairs, "doc_id")
     n_ver = ver.filter(F.col("jaccard") >= _AB_JACCARD).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_verified")
     )
-    # the candidate count is the counted_pairs watermark — no second
+    # the candidate count is the jaccard_pairs watermark — no second
     # aggregate over the pairs
     head = literal_df(
         spark,

@@ -842,9 +842,7 @@ def training_set_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t_rowcount(sf_dir, "documents")
     nh, nb, _r = adaptive_minhash_geometry(n)
     docs = _spread(_t(spark, sf_dir, "documents"))
-    final = prepare_training_set(
-        docs, persist_gated=True, num_hashes=nh, bands=nb, corpus_rows=n
-    )
+    final = prepare_training_set(docs, num_hashes=nh, bands=nb, corpus_rows=n)
     per_bucket = (
         final.select(
             "split",

@@ -454,17 +454,9 @@ def leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _t_rowcount(sf_dir, "documents")
     nh, nb, _r = dedup.adaptive_minhash_geometry(n)
     docs = _spread(_t(spark, sf_dir, "documents"))
-    rows = dedup.shingle_hash_rows(docs, "doc_id", "text", 5)
-    sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", nh)
-    pairs, n_pairs = dedup.counted_pairs(
-        dedup.candidate_pairs_from_sigs(sigs, "doc_id", nh, nb)
-    )
-    hashed_small = dedup.candidate_hash_arrays(
-        docs, pairs, "doc_id", "text", 5, n_pairs=n_pairs
-    )
-    confirmed = dedup.jaccard_pairs_from_hashes(
-        hashed_small, pairs, "doc_id", n_pairs=n_pairs
-    ).filter(F.col("jaccard") >= 0.9)
+    pairs = dedup.minhash_candidate_pairs(docs, "doc_id", num_hashes=nh, bands=nb)
+    scored, _ = dedup.jaccard_pairs(docs, pairs, "doc_id")
+    confirmed = scored.filter(F.col("jaccard") >= 0.9)
     # the edge set is read twice (components + the certification count):
     # one eager checkpoint, both branches read it — O(duplicate pairs)
     edges = confirmed.select("id_a", "id_b").localCheckpoint(eager=True)

@@ -13,11 +13,14 @@ Usage: python tests/oracle_harness.py [--sf DIR] [query ...]
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -94,7 +97,7 @@ def check_query(spark, con, name: str, sf_dir: str) -> list[str]:
     list of discrepancies (empty = hash-equivalent under the driver's
     sorted-columns/sorted-rows comparison). Rows-only queries (no
     oracle) are checked for successful execution only."""
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entry
 
     sdf = entry.queries()[name](spark, sf_dir).toPandas()
@@ -106,7 +109,7 @@ def check_query(spark, con, name: str, sf_dir: str) -> list[str]:
 
 
 def run(sf_dir: str, only: list[str] | None = None) -> int:
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, REPO_ROOT)
     import __spark_entry__ as entry
     from dbt_datbricks_demo_spark.session import get_spark
 

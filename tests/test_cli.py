@@ -10,6 +10,8 @@ import pytest
 from dbt_datbricks_demo_spark.cli import main
 from tests.conftest import SEEDS_DIR
 
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 # the reference seeds' golden numbers (FIXTURES.md) need the snapshot
 needs_reference_seeds = pytest.mark.skipif(
     not os.path.isdir(SEEDS_DIR), reason=f"{SEEDS_DIR} absent"
@@ -119,7 +121,7 @@ def test_bench_contract(tmp_path):
     )
     out = subprocess.run(
         [sys.executable, "bench.py"], capture_output=True, text=True,
-        env=env, cwd="/root/repo", timeout=300,
+        env=env, cwd=REPO_ROOT, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     line = out.stdout.strip().splitlines()[-1]
@@ -224,8 +226,7 @@ def test_load_prev_bench_prefix50():
     import sys
     import tempfile
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
+    sys.path.insert(0, REPO_ROOT)
     bench = importlib.import_module("bench")
 
     with tempfile.TemporaryDirectory() as d:
@@ -261,7 +262,7 @@ def test_load_prev_bench_prefix50():
 
     # the live repo artifact must yield the round-11 series value so
     # the next real bench run has a baseline to compare against
-    live = bench.load_prev_bench(repo)
+    live = bench.load_prev_bench(REPO_ROOT)
     if live is not None and live["src"] >= "BENCH_r11.json":
         assert live["prefix50_wall"] is not None
 
@@ -285,7 +286,7 @@ def test_bench_survives_failing_query(tmp_path):
     )
     out = subprocess.run(
         [sys.executable, "bench.py"], capture_output=True, text=True,
-        env=env, cwd="/root/repo", timeout=300,
+        env=env, cwd=REPO_ROOT, timeout=300,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     payload = json.loads(out.stdout.strip().splitlines()[-1])

@@ -1,15 +1,24 @@
 """Contracts on the Spark jobs and exchanges a query pays for: the
 work-sized _spread width, the single counted stage for candidate
-pairs, the jobs one clean_corpus build fires, and literal_df's input
-checks."""
+pairs, the jobs one clean_corpus build fires, the size-guarded
+broadcast rule, and literal_df's input checks."""
 
 from __future__ import annotations
+
+import itertools
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
-from dbt_datbricks_demo_spark.functions import literal_df
+from dbt_datbricks_demo_spark import functions
+from dbt_datbricks_demo_spark.functions import (
+    broadcast_if_small,
+    counted,
+    literal_df,
+    loose_bound,
+)
 from dbt_datbricks_demo_spark.operators import corpus, dedup
 from dbt_datbricks_demo_spark.queries import inventory
 
@@ -22,10 +31,15 @@ def _plan(df) -> str:
     return df._jdf.queryExecution().explainString(mode)
 
 
+_GROUP_SEQ = itertools.count()
+
+
 def _jobs_fired(spark, fn):
     """Run fn() inside a fresh job group; return (result, #jobs)."""
     sc = spark.sparkContext
-    group = f"job-budget-{id(fn)}"
+    # a counter, not id(fn): a freed lambda's id is reused, and its
+    # group would then still hold the earlier call's jobs
+    group = f"job-budget-{next(_GROUP_SEQ)}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -118,7 +132,7 @@ def test_counted_pairs_returns_the_pair_count(spark):
     raw = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (4, 5)], "id_a long, id_b long"
     )
-    pairs, n = dedup.counted_pairs(raw)
+    pairs, n = counted(raw)
     assert n == raw.count() == pairs.count() == 4
     assert sorted(map(tuple, pairs.collect())) == sorted(map(tuple, raw.collect()))
 
@@ -131,18 +145,19 @@ def test_pair_consumers_broadcast_on_the_passed_count(
          (3, "something else entirely")],
         "doc_id long, text string",
     )
-    pairs, n_pairs = dedup.counted_pairs(
+    pairs, n_pairs = counted(
         spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     )
     assert n_pairs == 1
-    limit = dedup.BROADCAST_PAIR_LIMIT
+    limit = functions.BROADCAST_ROW_LIMIT
 
     # candidate_hash_arrays checkpoints its result; keep it lazy here so
     # its plan stays inspectable and building it fires no job
     monkeypatch.setattr(
         type(docs), "localCheckpoint", lambda self, eager=True, storageLevel=None: self
     )
-    # cand_ids holds 2·n_pairs rows: the guard is on that bound
+    # cand_ids holds 2·n_pairs rows: the guard is on that bound, and a
+    # known bound decides the broadcast either way without a job
     for n, want in ((limit // 2, True), (limit // 2 + 1, False)):
         hashed, jobs = _jobs_fired(
             spark,
@@ -151,7 +166,8 @@ def test_pair_consumers_broadcast_on_the_passed_count(
         assert jobs == 0
         assert ("BroadcastExchange" in _plan(hashed)) is want
 
-    hashed = dedup.shingle_hash_table(docs, "doc_id")
+    # `hashed` is the unhinted (over-bound) form, so any broadcast in
+    # the Jaccard plan is the pair consumer's own
     for n, want in ((limit, True), (limit + 1, False)):
         jac, jobs = _jobs_fired(
             spark,
@@ -161,6 +177,11 @@ def test_pair_consumers_broadcast_on_the_passed_count(
         )
         assert jobs == 0
         assert ("BroadcastExchange" in _plan(jac)) is want
+
+    # the live verification path composes both on the counted pairs
+    scored, n = dedup.jaccard_pairs(docs, pairs, "doc_id")
+    assert n == 1
+    assert [(r["id_a"], r["id_b"]) for r in scored.collect()] == [(1, 2)]
 
 
 # ---------------------------------------------------------------------------
@@ -189,8 +210,7 @@ CLEAN_CORPUS_BUILD_JOBS = 9
 def test_clean_corpus_build_job_budget(spark):
     docs = spark.createDataFrame(_CORPUS_ROWS, "doc_id long, text string")
     kw = dict(
-        min_tokens=10, jaccard_threshold=0.8, persist_gated=True,
-        corpus_rows=len(_CORPUS_ROWS),
+        min_tokens=10, jaccard_threshold=0.8, corpus_rows=len(_CORPUS_ROWS),
     )
     staged, jobs = _jobs_fired(spark, lambda: corpus.clean_corpus_staged(docs, **kw))
     assert jobs <= CLEAN_CORPUS_BUILD_JOBS, jobs
@@ -203,6 +223,51 @@ def test_clean_corpus_build_job_budget(spark):
     assert plain.columns == docs.columns
     got = sorted(map(tuple, corpus.corpus_stats_staged(staged).collect()))
     assert got == sorted(map(tuple, corpus.corpus_stats(plain).collect()))
+
+
+# ---------------------------------------------------------------------------
+# (d) one size-guarded broadcast rule
+# ---------------------------------------------------------------------------
+def _small_side(spark):
+    # one partition: its count needs no exchange, so the count is one job
+    return spark.range(0, 10, 1, 1).withColumnRenamed("id", "k")
+
+
+def _joined_plan(spark, side) -> str:
+    return _plan(spark.range(100).join(side, F.col("id") == F.col("k")))
+
+
+def test_broadcast_if_small_known_bound_fires_no_job(spark, no_auto_broadcast):
+    limit = functions.BROADCAST_ROW_LIMIT
+    small = _small_side(spark)
+    hinted, jobs = _jobs_fired(spark, lambda: broadcast_if_small(small, limit))
+    assert jobs == 0
+    assert "BroadcastExchange" in _joined_plan(spark, hinted)
+
+
+def test_broadcast_if_small_unknown_bound_counts_in_one_job(
+    spark, no_auto_broadcast
+):
+    small = _small_side(spark)
+    hinted, jobs = _jobs_fired(spark, lambda: broadcast_if_small(small))
+    assert jobs == 1
+    assert "BroadcastExchange" in _joined_plan(spark, hinted)
+
+
+def test_broadcast_if_small_over_limit_keeps_rows_unhinted(
+    spark, monkeypatch, no_auto_broadcast
+):
+    monkeypatch.setattr(functions, "BROADCAST_ROW_LIMIT", 0)
+    # a known bound over the limit settles the shuffle without a job;
+    # a loose one over the limit is dropped, so the side is counted
+    assert loose_bound(5) is None and loose_bound(None) is None
+    for bound, want_jobs in ((5, 0), (None, 1)):
+        side, jobs = _jobs_fired(
+            spark, lambda: broadcast_if_small(_small_side(spark), bound)
+        )
+        assert jobs == want_jobs
+        assert "BroadcastExchange" not in _joined_plan(spark, side)
+        assert sorted(r["k"] for r in side.collect()) == list(range(10))
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ import hashlib
 import pytest
 from pyspark.sql import functions as F
 
+from dbt_datbricks_demo_spark import functions
 from dbt_datbricks_demo_spark.operators import dedup, multimodal, similarity, text
 
 
@@ -38,13 +39,12 @@ def test_exact_dedup_corpus_side_never_shuffles(docs):
     assert "hashpartitioning(" not in plan
 
 
-def test_exact_dedup_shuffled_fallback_matches(docs):
+def test_exact_dedup_shuffled_fallback_matches(docs, monkeypatch):
     want = {r["doc_id"] for r in dedup.exact_dedup(docs, ["text"], "doc_id").collect()}
+    monkeypatch.setattr(functions, "BROADCAST_ROW_LIMIT", 0)
     got = {
         r["doc_id"]
-        for r in dedup.exact_dedup(
-            docs, ["text"], "doc_id", broadcast_loser_limit=0
-        ).collect()
+        for r in dedup.exact_dedup(docs, ["text"], "doc_id").collect()
     }
     assert got == want == {1, 3, 4, 5, 6}
 
@@ -86,7 +86,8 @@ def test_minhash_lsh_finds_near_dups(docs):
     pairs = dedup.minhash_candidate_pairs(docs, "doc_id", "text", num_hashes=8, bands=4)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got  # exact dup always collides
-    jac = dedup.jaccard_pairs(docs, pairs, "doc_id", "text")
+    jac, n_pairs = dedup.jaccard_pairs(docs, pairs, "doc_id", "text")
+    assert n_pairs == len(got)
     jrows = {(r["id_a"], r["id_b"]): r["jaccard"] for r in jac.collect()}
     assert jrows[(1, 2)] == 1.0
     if (1, 3) in jrows:
@@ -215,7 +216,7 @@ def test_cosine_neardup_pairs_finds_duplicate_vectors(spark):
     assert (0, 2) not in pairs and (1, 2) not in pairs
 
 
-def test_ivf_topk_matches_bruteforce_for_clustered_data(spark):
+def test_ivf_topk_matches_bruteforce_for_clustered_data(spark, tmp_path):
     # three well-separated clusters; IVF probing the query's cell must
     # return the same top-3 as brute force
     import random
@@ -234,7 +235,11 @@ def test_ivf_topk_matches_bruteforce_for_clustered_data(spark):
     cents = similarity.train_ivf_centroids(emb, k=3, seed=1)
     assert len(cents) == 3 and len(cents[0]) == 8
     query = rows[5][1]  # inside cluster 0
-    approx = similarity.ivf_topk(emb, cents, query, k=3, nprobe=1).collect()
+    index = str(tmp_path / "ivf")
+    similarity.write_ivf_index(emb, cents, index)
+    approx = similarity.ivf_index_topk(
+        spark, index, cents, query, k=3, nprobe=1
+    ).collect()
     exact = similarity.cosine_topk(emb, query, k=3).collect()
     assert [r["vec_id"] for r in approx] == [r["vec_id"] for r in exact]
 

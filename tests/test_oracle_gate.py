@@ -15,11 +15,12 @@ sf0.01 (the driver's grading scale) is covered by running
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entry_mod  # noqa: E402
 
 from tests.oracle_harness import check_query, make_duckdb  # noqa: E402

@@ -346,7 +346,7 @@ def test_prepare_training_set_end_to_end(spark):
     from dbt_datbricks_demo_spark.sources import load_table
 
     docs = load_table(spark, SF, "documents")
-    final = prepare_training_set(docs, persist_gated=True)
+    final = prepare_training_set(docs)
     rows = final.select("doc_id", "split").collect()
     ids = [r["doc_id"] for r in rows]
     assert len(ids) == len(set(ids))  # no doc in two splits
@@ -388,7 +388,7 @@ def test_prepare_training_set_decontaminates_train_against_test(spark):
     rows[train_id] = (train_id, leaked)
     rows[test_id] = (test_id, benchmark_text)
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    final = prepare_training_set(df, persist_gated=True)
+    final = prepare_training_set(df)
     kept = {r["doc_id"] for r in final.select("doc_id").collect()}
     assert test_id in kept  # benchmark side always kept
     assert train_id not in kept  # contaminated training doc dropped
@@ -457,17 +457,17 @@ def test_bm25_indexed_matches_direct_and_prunes_partitions(spark, tmp_path):
     assert search.TERM_BUCKET_COL in plan.split("PartitionFilters")[1].split("]")[0]
 
 
-def test_contamination_shuffled_fallback_matches(spark):
-    """broadcast_gram_limit=0 forces the shuffled-join path; the report
+def test_contamination_shuffled_fallback_matches(spark, monkeypatch):
+    """A broadcast limit of 0 forces the shuffled-join path; the report
     must be identical to the broadcast path (the 100 TB fallback)."""
+    from dbt_datbricks_demo_spark import functions
     from dbt_datbricks_demo_spark.sources import load_table
 
     docs = load_table(spark, SF, "documents")
     bench = decontam.distinct_ngram_set(docs.limit(20), n=3)
     a = decontam.contamination_report(docs, bench, n=3).collect()
-    b = decontam.contamination_report(
-        docs, bench, n=3, broadcast_gram_limit=0
-    ).collect()
+    monkeypatch.setattr(functions, "BROADCAST_ROW_LIMIT", 0)
+    b = decontam.contamination_report(docs, bench, n=3).collect()
     key = lambda r: r["doc_id"]  # noqa: E731
     assert sorted(a, key=key) == sorted(b, key=key)
 

@@ -322,7 +322,8 @@ def test_containment_dominates_jaccard(spark, docs):
         [(a, b) for a in range(len(docs)) for b in range(a + 1, len(docs))],
         "id_a long, id_b long",
     )
-    out = dedup.jaccard_pairs(df, pairs, "doc_id", k=3).collect()
+    scored, _ = dedup.jaccard_pairs(df, pairs, "doc_id", k=3)
+    out = scored.collect()
     for r in out:
         cont = r.n_common / min(r.size_a, r.size_b) if min(r.size_a, r.size_b) else 0.0
         assert -1e-12 <= r.jaccard <= 1 + 1e-12

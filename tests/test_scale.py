@@ -175,6 +175,7 @@ def test_neardup_path_survives_shuffled_fallback_on_dup_heavy_corpus(spark):
     every join to the shuffled strategy (broadcast thresholds off) on a
     pathologically duplicate-heavy corpus and require the same answer the
     default-planned run gives."""
+    from dbt_datbricks_demo_spark import functions
     from dbt_datbricks_demo_spark.operators import corpus
 
     # 40 distinct "templates", 10 exact copies each, plus noise docs:
@@ -203,10 +204,10 @@ def test_neardup_path_survives_shuffled_fallback_on_dup_heavy_corpus(spark):
 
     # force the over-limit fallback: limit 0 disables the pair/loser
     # broadcasts, the joins run shuffled — answers must be identical
-    cleaned_guarded = corpus.clean_corpus(docs, broadcast_pair_limit=0).select(
-        "doc_id"
-    )
-    assert {r["doc_id"] for r in cleaned_guarded.collect()} == want
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(functions, "BROADCAST_ROW_LIMIT", 0)
+        cleaned_guarded = corpus.clean_corpus(docs).select("doc_id")
+        assert {r["doc_id"] for r in cleaned_guarded.collect()} == want
 
     # belt-and-braces: also kill every broadcast (static + AQE) so even
     # the dim-style joins run shuffled
