@@ -100,14 +100,17 @@ def literal_df(spark, rows, schema: str):
 
 
 def counted(df: DataFrame, storage_level=None) -> tuple[DataFrame, int]:
-    """Materialize `df` and count it in ONE action: a lazy
-    localCheckpoint whose blocks the count writes as it goes (on a real
-    pipeline: an intermediate table with its row count), so the
-    checkpoint adds no job ahead of the count. Returns the checkpointed
-    frame and its row count; `storage_level` overrides the checkpoint's
-    default MEMORY_AND_DISK."""
+    """Materialize `df` and count it in ONE job: a lazy localCheckpoint
+    whose blocks the count writes as it goes (on a real pipeline: an
+    intermediate table with its row count), so the checkpoint adds no
+    job ahead of the count. The count sums partition sizes on the JVM
+    (RDD.count over the executed plan): DataFrame.count() plans a
+    partial and a final aggregate, which under AQE run as two jobs on a
+    multi-partition frame. Returns the checkpointed frame and its row
+    count; `storage_level` overrides the checkpoint's default
+    MEMORY_AND_DISK."""
     df = df.localCheckpoint(eager=False, storageLevel=storage_level)
-    return df, df.count()
+    return df, int(df._jdf.queryExecution().toRdd().count())
 
 
 def broadcast_if_small(

@@ -31,17 +31,10 @@ CollapseProject will NOT inline a non-cheap alias referenced more than
 once, so a staged column is computed exactly once per row. Measured at
 sf0.01 this turns a 34 s band-key projection into < 1 s.
 
-Standing-index concurrency contract (rounds 9-10): CONCURRENT READERS
-ride recovery + one retry (read_index_with_retry — plan-time listing
-covered; a reader mid-scan during an .old rmtree is the documented
-residual, catalog territory). CONCURRENT WRITERS serialize on the
-index write lock (operators/locks.py): every write entry point
-(write_minhash_index, delete_from_minhash_index,
-compact_minhash_index) holds `{index}.writer.lock` for its duration —
-a live second writer fails fast with IndexWriterConflict, a stale lock
-(crashed writer) is taken over atomically. Without it, a tombstone or
-postings append landing inside the old tree mid-compaction is silently
-wiped by the swap.
+The standing MinHash band index's storage lifecycle (write/delete/
+compact under the index write lock, recovery, the plan-time read retry,
+tombstones) is operators/index_store.py, shared with the batch IVF-PQ
+index; the functions here name its bucket column and posting keys.
 """
 
 from __future__ import annotations
@@ -55,6 +48,7 @@ from dbt_datbricks_demo_spark.functions import (
     literal_df,
     loose_bound,
 )
+from dbt_datbricks_demo_spark.operators import index_store
 from dbt_datbricks_demo_spark.operators.text import tokens
 
 MERSENNE31 = 2_147_483_647  # 2^31 - 1, the minhash permutation field
@@ -931,6 +925,21 @@ def _band_bucket(band_key: Column) -> Column:
     )
 
 
+def _band_postings(
+    df: DataFrame, id_col: str, text_col: str, k: int, num_hashes: int, bands: int
+) -> DataFrame:
+    """(id, band_key) LSH postings: one row per document and band."""
+    sigs = minhash_sigs_from_rows(
+        shingle_hash_rows(df, id_col, text_col, k), id_col, num_hashes
+    )
+    return sigs.select(
+        F.col(id_col),
+        F.explode(
+            lsh_band_keys("_sig", bands, num_hashes // bands)
+        ).alias("band_key"),
+    )
+
+
 def write_minhash_index(
     df: DataFrame,
     path: str,
@@ -956,31 +965,14 @@ def write_minhash_index(
     Writer-writer: serialized on the index write lock (operators.locks
     — an append racing a compaction would land postings in the old
     tree and lose them to the swap)."""
-    from dbt_datbricks_demo_spark.operators.locks import index_write_lock
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
-    rows = shingle_hash_rows(df, id_col, text_col, k)
-    sigs = minhash_sigs_from_rows(rows, id_col, num_hashes)
-    keyed = sigs.select(
-        F.col(id_col),
-        F.explode(
-            lsh_band_keys("_sig", bands, num_hashes // bands)
-        ).alias("band_key"),
+    keyed = _band_postings(df, id_col, text_col, k, num_hashes, bands)
+    index_store.write(
+        keyed.withColumn(MINHASH_BUCKET_COL, _band_bucket(F.col("band_key"))),
+        path,
+        MINHASH_BUCKET_COL,
+        f"write_minhash_index[{mode}]",
+        mode,
     )
-    with index_write_lock(path, f"write_minhash_index[{mode}]"):
-        # under-lock recovery (round-10 advice): an append landing while
-        # the index sits in a crashed mid-swap state must first roll the
-        # swap back, and must do so while HOLDING the lock — never from
-        # an unlocked call site that could race a live compactor
-        recover_minhash_index(path)
-        write_partitioned(
-            keyed.withColumn(
-                MINHASH_BUCKET_COL, _band_bucket(F.col("band_key"))
-            ),
-            path,
-            MINHASH_BUCKET_COL,
-            mode=mode,
-        )
 
 
 def index_candidate_pairs(
@@ -1007,21 +999,16 @@ def index_candidate_pairs(
     compaction swap renames leaves no directory at index_path, and a
     probe-only restart (this function, or the minhash_index_lookup
     query) would otherwise fail until the next WRITE-path call ran
-    recovery. recover_minhash_index is idempotent and three-stat-cheap
+    recovery. index_store.recover is idempotent and three-stat-cheap
     when healthy, so the probe path affords it. The index read itself
-    goes through read_index_with_retry (round-9 item 6): a compaction
-    running in ANOTHER session can swap the directory away between our
-    recovery and the read — retry once through recovery."""
-    recover_minhash_index(index_path)
-    rows = shingle_hash_rows(batch, id_col, text_col, k)
-    sigs = minhash_sigs_from_rows(rows, id_col, num_hashes)
+    goes through index_store.read_with_retry (round-9 item 6): a
+    compaction running in ANOTHER session can swap the directory away
+    between our recovery and the read — retry once through recovery."""
+    index_store.recover(index_path)
     probe = broadcast_if_small(
-        sigs.select(
-            F.col(id_col).alias("batch_id"),
-            F.explode(
-                lsh_band_keys("_sig", bands, num_hashes // bands)
-            ).alias("band_key"),
-        )
+        _band_postings(
+            batch, id_col, text_col, k, num_hashes, bands
+        ).withColumnRenamed(id_col, "batch_id")
     )
     buckets = [
         r["b"]
@@ -1029,10 +1016,10 @@ def index_candidate_pairs(
         .distinct()
         .collect()
     ]
-    idx = read_index_with_retry(spark, index_path).filter(
+    idx = index_store.read_with_retry(spark, index_path).filter(
         F.col(MINHASH_BUCKET_COL).isin(buckets)
     )
-    idx = _without_tombstoned(spark, index_path, idx, id_col)
+    idx = index_store.without_tombstoned(spark, index_path, idx, id_col)
     return (
         idx.join(probe, "band_key")
         .filter(F.col("batch_id") != F.col(id_col))
@@ -1049,30 +1036,44 @@ def index_candidate_pairs(
 # bytes written), compact physically rewrites each bucket to one file
 # and drops the tombstoned postings. Probe results are IDENTICAL before
 # and after compaction — oracle-gated by minhash_index_maintenance and
-# pinned by tests/test_scale.py.
+# pinned by tests/test_scale.py. The storage protocol (locking,
+# recovery, tombstones, the compaction swap) is operators/index_store.py;
+# these name the layout's bucket column and posting keys.
 # ---------------------------------------------------------------------------
-
-
 def minhash_index_exists(index_path: str) -> bool:
-    """Does a standing index live at this path? Checks for bucket
-    directories rather than the _SUCCESS marker — a dynamic-partition-
-    mode write commits without the root marker, and the bucket dirs ARE
-    the index. (Local-filesystem check, like the other path stamps in
-    this repo; a cluster deployment fronts this with its catalog.)"""
-    import os
+    """Does a standing MinHash index live at this path? Its crashed
+    mid-swap state counts as existing (index_store.exists)."""
+    return index_store.exists(index_path, MINHASH_BUCKET_COL)
 
-    def _has_buckets(p: str) -> bool:
-        return os.path.isdir(p) and any(
-            e.startswith(MINHASH_BUCKET_COL + "=") for e in os.listdir(p)
-        )
 
-    # the crashed between-renames compaction state (base missing,
-    # ``.old`` holding the only copy) COUNTS as existing: callers must
-    # route to paths that recover under the writer lock or the reader
-    # retry contract — an unlocked recovery at a WRITE call site would
-    # race a live compactor between its swap renames (round-10 advice)
-    return _has_buckets(index_path) or _has_buckets(
-        index_path.rstrip("/") + ".old"
+def delete_from_minhash_index(
+    spark, index_path: str, ids, id_col: str = "doc_id"
+) -> None:
+    """Logically delete documents from a standing MinHash index by
+    appending their ids to the tombstone set ({index}/_tombstones —
+    hidden from the postings scan); lookups anti-join the set until
+    compact_minhash_index retires the postings physically. ``ids`` is
+    a DataFrame with ``id_col`` or a plain id list. Locked, recovery
+    first (index_store.delete)."""
+    index_store.delete(
+        spark, index_path, ids, id_col, "delete_from_minhash_index"
+    )
+
+
+def compact_minhash_index(spark, index_path: str) -> dict:
+    """Physically compact a standing MinHash index: drop tombstoned
+    postings, retire replayed (doc_id, band_key) duplicates (the
+    postings are logically a SET; lookups are distinct-ed, so results
+    never change) and rewrite every bucket directory to one file,
+    swapped in atomically (index_store.compact). Offline maintenance
+    op, like VersionedTable.optimize. Returns before/after file and row
+    counts."""
+    return index_store.compact(
+        spark,
+        index_path,
+        MINHASH_BUCKET_COL,
+        ("doc_id", "band_key"),
+        "compact_minhash_index",
     )
 
 
@@ -1280,251 +1281,3 @@ def planted_recall_cert(
         F.count(F.lit(1)).cast("bigint").alias("cert_planted")
     )
     return planted.crossJoin(F.broadcast(hits))
-
-
-def recover_minhash_index(index_path: str) -> str:
-    """Repair a standing index after a crash at ANY point of the
-    compaction swap (round-7 verdict item: the two-rename discipline
-    alone does NOT cover a crash BETWEEN the renames — that window
-    leaves no directory at index_path at all). Idempotent, cheap (three
-    stat calls when healthy), and safe to run before every write:
-
-      * index missing + ``.old`` present (crashed between renames):
-        roll BACK — the pre-compaction state is always valid and
-        compaction is idempotent, so re-running it later converges.
-      * index present + ``.old`` present (crashed before the final
-        cleanup): finish the cleanup.
-      * stale ``.compacting`` (crashed mid-write or pre-swap): drop it —
-        it is re-derivable by the next compaction.
-
-    Returns what it did: "ok" | "rolled_back" | "cleaned_old" |
-    "cleaned_tmp". The streaming ingest calls this at every batch start
-    (restart-safe) and compact_minhash_index calls it first."""
-    import os
-    import shutil
-
-    base = index_path.rstrip("/")
-    tmp, old = base + ".compacting", base + ".old"
-    action = "ok"
-    if not os.path.exists(base) and os.path.exists(old):
-        os.rename(old, base)
-        action = "rolled_back"
-    elif os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
-        action = "cleaned_old"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp, ignore_errors=True)
-        if action == "ok":
-            action = "cleaned_tmp"
-    return action
-
-
-def _is_missing_path_error(e: BaseException) -> bool:
-    """A plan-time read failure caused by the index directory not being
-    there (the between-renames window of a CONCURRENT compaction swap),
-    as opposed to a real error that must propagate."""
-    if isinstance(e, FileNotFoundError):
-        return True
-    msg = str(e)
-    return "PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-
-
-def _plan_read_index(spark, index_path: str) -> DataFrame:
-    # the one plan-time read of a standing index — a seam for the race
-    # tests to inject a concurrent compactor between recovery and read
-    return spark.read.parquet(index_path)
-
-
-def read_index_with_retry(spark, index_path: str) -> DataFrame:
-    """Plan-time read of a standing index under the CONCURRENT-READER
-    contract (round-9 verdict item 6): recovery, read, and — if the
-    directory vanished between the two because a compaction in ANOTHER
-    session was between its swap renames (or crashed there) — one more
-    recovery + read. Recovery rolls the crashed swap back to the valid
-    pre-compaction tree, and a compactor that FINISHED between our
-    attempts left the new tree at the same path, so the second read
-    succeeds against a consistent index either way.
-
-    Contract boundary, stated plainly: this covers PLAN-time listing.
-    A reader that already resolved file paths and is mid-SCAN when a
-    concurrent compactor rmtree's the retired ``.old`` tree can still
-    fail at execution time — single-machine two-session torture is as
-    far as a bare filesystem goes; a real multi-writer deployment
-    fronts these indexes with a catalog/snapshot layer (Delta/Iceberg)
-    whose commit protocol gives readers a pinned file listing."""
-    recover_minhash_index(index_path)
-    try:
-        return _plan_read_index(spark, index_path)
-    except Exception as e:  # noqa: BLE001
-        if not _is_missing_path_error(e):
-            raise
-        recover_minhash_index(index_path)
-        return _plan_read_index(spark, index_path)
-
-
-def minhash_index_max_files_per_bucket(index_path: str) -> int:
-    """Largest parquet-file generation count across bucket directories —
-    the compaction-cadence signal: N ingest appends leave N file
-    generations per bucket, and file-open overhead eventually dominates
-    the pruned probe. (Local stat walk; a cluster deployment reads this
-    from its catalog/file-index stats.)"""
-    import os
-
-    worst = 0
-    if not os.path.isdir(index_path):
-        return 0
-    for d in os.listdir(index_path):
-        if not d.startswith(MINHASH_BUCKET_COL + "="):
-            continue
-        n = sum(
-            1
-            for f in os.listdir(os.path.join(index_path, d))
-            if f.endswith(".parquet")
-        )
-        worst = max(worst, n)
-    return worst
-
-
-def _tombstones_path(index_path: str) -> str:
-    # underscore prefix: Spark's file index treats "_*" as hidden, so
-    # the postings scan over index_path never reads the tombstone set
-    import os
-
-    return os.path.join(index_path, "_tombstones")
-
-
-def minhash_tombstones(spark, index_path: str) -> DataFrame | None:
-    """The tombstoned id set, or None when nothing was deleted."""
-    import os
-
-    tp = _tombstones_path(index_path)
-    if not os.path.exists(tp):
-        return None
-    return spark.read.parquet(tp).select("id").distinct()
-
-
-def _without_tombstoned(
-    spark, index_path: str, idx: DataFrame, id_col: str
-) -> DataFrame:
-    """Anti-join the postings stream against the tombstone set (no-op
-    when none exist). The tombstone set is a size-guarded broadcast —
-    between compactions (ops discipline: compact before the set grows)
-    it is deleted-docs-sized, not corpus-sized."""
-    tomb = minhash_tombstones(spark, index_path)
-    if tomb is None:
-        return idx
-    tomb = broadcast_if_small(tomb)
-    return idx.join(
-        tomb, idx[id_col] == tomb["id"], "left_anti"
-    )
-
-
-def delete_from_minhash_index(
-    spark, index_path: str, ids, id_col: str = "doc_id"
-) -> None:
-    """Logically delete documents from a standing MinHash index by
-    appending their ids to the tombstone set ({index}/_tombstones —
-    hidden from the postings scan). O(|deleted|) bytes written, no
-    postings rewrite; lookups anti-join the set until
-    compact_minhash_index retires the postings physically. ``ids`` is
-    a DataFrame with ``id_col`` or a plain id list. Recovery runs
-    FIRST (round-9 advice): a delete against the crashed-between-
-    renames state would recreate the index dir with only _tombstones
-    inside, and the next recovery's cleaned_old branch would then
-    destroy the .old dir holding the only real postings copy.
-    Writer-writer: serialized on the index write lock (operators.locks
-    — a tombstone landing inside the old tree mid-compaction is wiped
-    by the swap, a silently LOST delete)."""
-    from dbt_datbricks_demo_spark.operators.locks import index_write_lock
-
-    with index_write_lock(index_path, "delete_from_minhash_index"):
-        recover_minhash_index(index_path)
-        if not isinstance(ids, DataFrame):
-            ids = spark.createDataFrame(
-                [(int(i),) for i in ids], f"{id_col} long"
-            )
-        ids.select(F.col(id_col).cast("long").alias("id")).write.mode(
-            "append"
-        ).parquet(_tombstones_path(index_path))
-
-
-def compact_minhash_index(
-    spark, index_path: str, files_per_bucket: int = 1
-) -> dict:
-    """Physically compact a standing MinHash index: drop tombstoned
-    postings and rewrite every bucket directory to ``files_per_bucket``
-    files (N ingest appends otherwise leave N file generations per
-    bucket, and file-open overhead eventually dominates the pruned
-    probe scan). The rewrite shuffles postings by bucket (plus a salt
-    when files_per_bucket > 1 — at 100 TB one file per bucket is too
-    coarse; size files at ~1 GB), writes to a sibling directory, and
-    atomically swaps via two renames — the same swap discipline as
-    table materialization (plans/materialize.py). Offline maintenance
-    op, single writer, like VersionedTable.optimize. Tombstones are
-    cleared by the swap (they lived inside the old directory). Returns
-    before/after file and row counts.
-
-    Concurrent readers: probes entering DURING the swap are covered at
-    plan time by read_index_with_retry (retry through recovery); a
-    reader already mid-scan when the retired tree is rmtree'd is the
-    documented residual race — a multi-writer deployment fronts the
-    index with a catalog/snapshot layer (see read_index_with_retry).
-    Writer-writer: serialized on the index write lock (operators.locks
-    — two compactions interleaving their renames can rmtree the only
-    valid postings copy; an append or delete mid-swap loses rows)."""
-    from dbt_datbricks_demo_spark.operators.locks import index_write_lock
-
-    with index_write_lock(index_path, "compact_minhash_index"):
-        return _compact_minhash_index_locked(
-            spark, index_path, files_per_bucket
-        )
-
-
-def _compact_minhash_index_locked(
-    spark, index_path: str, files_per_bucket: int = 1
-) -> dict:
-    import os
-    import shutil
-
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
-    recover_minhash_index(index_path)
-    postings = spark.read.parquet(index_path)
-    rows_before = postings.count()
-    kept = _without_tombstoned(spark, index_path, postings, "doc_id")
-    # (doc_id, band_key) is logically a SET: a replayed streaming batch
-    # may double-append postings (lookups are distinct-ed so results
-    # never change), and compaction is where the physical duplicates
-    # are retired
-    kept = kept.dropDuplicates(["doc_id", "band_key"])
-    if files_per_bucket <= 1:
-        kept = kept.repartition(MINHASH_BUCKET_COL)
-    else:
-        kept = kept.repartition(
-            MINHASH_BUCKET_COL,
-            F.pmod(F.hash("doc_id"), F.lit(files_per_bucket)),
-        )
-    tmp = index_path.rstrip("/") + ".compacting"
-    old = index_path.rstrip("/") + ".old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_partitioned(kept, tmp, MINHASH_BUCKET_COL)
-    rows_after = spark.read.parquet(tmp).count()
-
-    def _nfiles(p: str) -> int:
-        return sum(
-            1
-            for root, _, files in os.walk(p)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    files_before, files_after = _nfiles(index_path), _nfiles(tmp)
-    os.rename(index_path, old)
-    os.rename(tmp, index_path)
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "files_before": files_before,
-        "files_after": files_after,
-    }

@@ -4,7 +4,7 @@ verdict item 3).
 The MinHash band index and the batch IVF-PQ index are maintained by
 multi-step write ops (append postings / append tombstones / compact's
 rewrite + two-rename swap). CONCURRENT READERS are covered by
-recovery + retry (dedup.read_index_with_retry); two concurrent WRITERS
+recovery + retry (index_store.read_with_retry); two concurrent WRITERS
 were not: a tombstone append landing inside the old tree mid-compaction
 is wiped by the swap (a lost delete), and two compactions interleaving
 their renames can destroy the only valid postings copy. Every write
@@ -23,7 +23,7 @@ entry point now serializes on a lock FILE next to the index:
     writers behind a minutes-long compaction would just hide the
     conflict);
   * a lock older than ``stale_after_s`` (a crashed writer — the write
-    ops themselves are crash-recoverable via recover_minhash_index, so
+    ops themselves are crash-recoverable via index_store.recover, so
     abandoning the lock is safe) is TAKEN OVER: the claimant renames
     the stale lock ASIDE to a claimant-unique name — os.rename of one
     source path succeeds for exactly one racer (every loser sees

@@ -15,12 +15,10 @@ Dot products accumulate sequentially in array order with double math —
 bit-identical across engines, which is what makes the DuckDB oracle able
 to hash-match exact float cosines.
 
-Standing-index concurrency contract (rounds 9-10): readers ride
-recovery + one retry (dedup.read_index_with_retry); WRITERS serialize
-on the index write lock (operators/locks.py) — write/append/delete/
-compact of the batch IVF-PQ index each hold `{index}.writer.lock`, a
-live second writer fails fast (IndexWriterConflict), a stale lock is
-taken over atomically. See operators/dedup.py for the full statement.
+The batch IVF-PQ index's storage lifecycle (write/append/delete/
+compact under the index write lock, recovery, the plan-time read retry,
+tombstones) is operators/index_store.py, shared with the MinHash band
+index; the functions here name its cell column and encoding.
 """
 
 from __future__ import annotations
@@ -29,6 +27,8 @@ import hashlib
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dbt_datbricks_demo_spark.operators import index_store
 
 
 def train_ivf_centroids(
@@ -930,6 +930,29 @@ def write_ivfpq_index(
 BATCH_SUB_COL = "sub_bucket"
 
 
+def _batch_index_rows(
+    df: DataFrame,
+    coarse: list[list[float]],
+    books: list[list[list[float]]],
+    planes: int,
+    id_col: str,
+    vec_col: str,
+    plane_prefix: str,
+) -> DataFrame:
+    """The batch index's encoded rows (id, 4-bit codes, packed code,
+    hyperplane sub-bucket, coarse cell), sorted by sub_bucket within
+    each cell so parquet row-group stats prune sub-bucket ranges."""
+    w = hyperplane_weights(planes, len(coarse[0]), prefix=plane_prefix)
+    codes = pq_encode(F.col(vec_col), books)
+    return df.select(
+        F.col(id_col),
+        codes.alias("pq_codes"),
+        pq_pack(codes, len(books[0])).alias("pq_code"),
+        hyperplane_bucket(F.col(vec_col), w).alias(BATCH_SUB_COL),
+        ivf_assign(F.col(vec_col), coarse).alias(IVFPQ_CELL_COL),
+    ).sortWithinPartitions(IVFPQ_CELL_COL, BATCH_SUB_COL)
+
+
 def write_batch_ivfpq_index(
     df: DataFrame,
     coarse: list[list[float]],
@@ -951,24 +974,17 @@ def write_batch_ivfpq_index(
     coarse directories serves the whole batch, and each query's
     scoring join matches only its own (cell, sub_bucket) rows —
     O(batch x nprobe x width) scored candidates instead of the brute
-    |corpus| x |batch| product. Rows are sorted by sub_bucket within
-    each cell directory so parquet row-group stats prune sub-bucket
-    ranges at real scale. Writer-writer: serialized on the index write
-    lock (operators.locks)."""
-    from dbt_datbricks_demo_spark.operators.locks import index_write_lock
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
-    w = hyperplane_weights(planes, len(coarse[0]), prefix=plane_prefix)
-    codes = pq_encode(F.col(vec_col), books)
-    staged = df.select(
-        F.col(id_col),
-        codes.alias("pq_codes"),
-        pq_pack(codes, len(books[0])).alias("pq_code"),
-        hyperplane_bucket(F.col(vec_col), w).alias(BATCH_SUB_COL),
-        ivf_assign(F.col(vec_col), coarse).alias(IVFPQ_CELL_COL),
-    ).sortWithinPartitions(IVFPQ_CELL_COL, BATCH_SUB_COL)
-    with index_write_lock(path, "write_batch_ivfpq_index"):
-        write_partitioned(staged, path, IVFPQ_CELL_COL)
+    |corpus| x |batch| product. Locked, recovery first
+    (index_store.write)."""
+    index_store.write(
+        _batch_index_rows(
+            df, coarse, books, planes, id_col, vec_col, plane_prefix
+        ),
+        path,
+        IVFPQ_CELL_COL,
+        "write_batch_ivfpq_index",
+        "overwrite",
+    )
 
 
 def append_batch_ivfpq_index(
@@ -987,123 +1003,53 @@ def append_batch_ivfpq_index(
     the index layer). Encodes with the SAME coarse/books/planes the
     index was built with and dynamic-partition-appends into the cell
     directories; N appends leave N file generations per cell until
-    compact_batch_ivfpq_index retires them. Recovery runs first so an
-    append after a crashed compaction swap lands in a healthy tree.
-    Writer-writer: serialized on the index write lock (operators.locks
-    — an append racing a compaction would land rows in the old tree
-    and lose them to the swap)."""
-    from dbt_datbricks_demo_spark.operators.dedup import (
-        recover_minhash_index as _recover,
+    compact_batch_ivfpq_index retires them. Locked, recovery first, so
+    an append after a crashed compaction swap lands in a healthy tree
+    (index_store.write)."""
+    index_store.write(
+        _batch_index_rows(
+            df, coarse, books, planes, id_col, vec_col, plane_prefix
+        ),
+        path,
+        IVFPQ_CELL_COL,
+        "append_batch_ivfpq_index",
+        "append",
     )
-    from dbt_datbricks_demo_spark.operators.locks import index_write_lock
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
-    with index_write_lock(path, "append_batch_ivfpq_index"):
-        _recover(path)
-        w = hyperplane_weights(planes, len(coarse[0]), prefix=plane_prefix)
-        codes = pq_encode(F.col(vec_col), books)
-        staged = df.select(
-            F.col(id_col),
-            codes.alias("pq_codes"),
-            pq_pack(codes, len(books[0])).alias("pq_code"),
-            hyperplane_bucket(F.col(vec_col), w).alias(BATCH_SUB_COL),
-            ivf_assign(F.col(vec_col), coarse).alias(IVFPQ_CELL_COL),
-        ).sortWithinPartitions(IVFPQ_CELL_COL, BATCH_SUB_COL)
-        write_partitioned(staged, path, IVFPQ_CELL_COL, mode="append")
 
 
 def delete_from_batch_ivfpq_index(
     spark, path: str, ids, id_col: str = "vec_id"
 ) -> None:
     """Logically delete vectors from a standing batch index: append
-    their ids to the index's hidden tombstone set (the
-    delete_from_minhash_index discipline — O(|deleted|) bytes, no
-    rewrite). Probes anti-join the set until compaction retires the
-    rows physically. Recovery runs FIRST (round-9 advice, medium): a
-    delete issued while the index sits in the crashed-between-renames
-    state (base missing, .old holding the only copy) would otherwise
-    recreate the base dir containing only _tombstones — and the next
-    recovery, seeing base+.old both present, would take the
-    cleaned_old branch and rmtree the only real copy. Writer-writer:
-    serialized on the index write lock (operators.locks — a tombstone
-    landing inside the old tree mid-compaction is wiped by the swap, a
-    silently LOST delete)."""
-    from dbt_datbricks_demo_spark.operators.dedup import (
-        _tombstones_path,
-        recover_minhash_index as _recover,
-    )
-    from dbt_datbricks_demo_spark.operators.locks import index_write_lock
-
-    with index_write_lock(path, "delete_from_batch_ivfpq_index"):
-        _recover(path)
-        if not isinstance(ids, DataFrame):
-            ids = spark.createDataFrame(
-                [(int(i),) for i in ids], f"{id_col} long"
-            )
-        ids.select(F.col(id_col).cast("long").alias("id")).write.mode(
-            "append"
-        ).parquet(_tombstones_path(path))
+    their ids to the index's hidden tombstone set — O(|deleted|) bytes,
+    no rewrite. Probes anti-join the set until compaction retires the
+    rows physically. Locked, recovery first (index_store.delete)."""
+    index_store.delete(spark, path, ids, id_col, "delete_from_batch_ivfpq_index")
 
 
 def compact_batch_ivfpq_index(spark, path: str) -> dict:
-    """Physically compact a standing batch IVF-PQ index: run recovery,
-    drop tombstoned rows, retire physical duplicates from replayed
-    appends (vec_id is logically unique), rewrite each cell directory
-    to one sub_bucket-sorted file (restoring the row-group pruning the
-    fresh build provides), and atomically swap via the two-rename +
-    recover discipline shared with compact_minhash_index
-    (operators/dedup.py — including its between-renames crash window,
-    which recovery rolls back). Returns before/after row/file counts.
-    Writer-writer: serialized on the index write lock (operators.locks
-    — two compactions interleaving their renames can rmtree the only
-    valid postings copy)."""
-    from dbt_datbricks_demo_spark.operators.locks import index_write_lock
-
-    with index_write_lock(path, "compact_batch_ivfpq_index"):
-        return _compact_batch_ivfpq_index_locked(spark, path)
-
-
-def _compact_batch_ivfpq_index_locked(spark, path: str) -> dict:
-    import os
-    import shutil
-
-    from dbt_datbricks_demo_spark.operators.dedup import (
-        _without_tombstoned,
-        recover_minhash_index as _recover,
+    """Physically compact a standing batch IVF-PQ index: drop tombstoned
+    rows, retire physical duplicates from replayed appends (vec_id is
+    logically unique), and rewrite each cell directory to one
+    sub_bucket-sorted file (restoring the row-group pruning the fresh
+    build provides), swapped in atomically by index_store.compact's
+    two-rename + recover discipline (including its between-renames
+    crash window, which recovery rolls back). Returns before/after
+    row/file counts."""
+    return index_store.compact(
+        spark,
+        path,
+        IVFPQ_CELL_COL,
+        ("vec_id",),
+        "compact_batch_ivfpq_index",
+        sort_col=BATCH_SUB_COL,
     )
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
 
-    _recover(path)
-    rows = spark.read.parquet(path)
-    rows_before = rows.count()
-    kept = _without_tombstoned(spark, path, rows, "vec_id")
-    kept = kept.dropDuplicates(["vec_id"])
-    kept = kept.repartition(IVFPQ_CELL_COL).sortWithinPartitions(
-        IVFPQ_CELL_COL, BATCH_SUB_COL
-    )
-    tmp, old = path.rstrip("/") + ".compacting", path.rstrip("/") + ".old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_partitioned(kept, tmp, IVFPQ_CELL_COL)
-    rows_after = spark.read.parquet(tmp).count()
 
-    def _nfiles(p: str) -> int:
-        return sum(
-            1
-            for root, _, files in os.walk(p)
-            for f in files
-            if f.endswith(".parquet")
-        )
-
-    files_before, files_after = _nfiles(path), _nfiles(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "files_before": files_before,
-        "files_after": files_after,
-    }
+def batch_index_exists(path: str) -> bool:
+    """Does a batch IVF-PQ index live at this path? Its crashed
+    mid-swap state counts as existing (index_store.exists)."""
+    return index_store.exists(path, IVFPQ_CELL_COL)
 
 
 # adaptive ADC-table delivery threshold for batch_ivfpq_index_topk:
@@ -1113,47 +1059,6 @@ def _compact_batch_ivfpq_index_locked(spark, path: str) -> dict:
 # 20-query sf0.1 batch (literal 2x faster) and the 2,000-query x100
 # batch (join 2.5-4x faster).
 ADC_LITERAL_MAX_BATCH = 64
-
-
-def batch_index_exists(path: str) -> bool:
-    """Does a batch IVF-PQ index live at this path? Checks for cell
-    directories rather than _SUCCESS (dynamic-partition appends commit
-    without the root marker) — the minhash_index_exists discipline.
-    An index sitting in the crashed between-renames compaction state
-    (base missing, ``.old`` holding the only copy) COUNTS as existing:
-    callers must route to the locked write paths, whose under-lock
-    recovery rolls the swap back — an unlocked recovery here would
-    race a live compactor between its two renames (round-10 advice)."""
-    import os
-
-    def _has_cells(p: str) -> bool:
-        return os.path.isdir(p) and any(
-            e.startswith(IVFPQ_CELL_COL + "=") for e in os.listdir(p)
-        )
-
-    return _has_cells(path) or _has_cells(path.rstrip("/") + ".old")
-
-
-def batch_index_max_files_per_cell(path: str) -> int:
-    """Largest parquet-file generation count across cell directories —
-    the compaction-cadence signal for the streaming ANN ingest (N
-    appends leave N file generations per cell; probes pay per file
-    open). Local stat walk, like minhash_index_max_files_per_bucket."""
-    import os
-
-    worst = 0
-    if not os.path.isdir(path):
-        return 0
-    for d in os.listdir(path):
-        if not d.startswith(IVFPQ_CELL_COL + "="):
-            continue
-        n = sum(
-            1
-            for f in os.listdir(os.path.join(path, d))
-            if f.endswith(".parquet")
-        )
-        worst = max(worst, n)
-    return worst
 
 
 def packed_double_array_lit(values) -> Column:
@@ -1308,16 +1213,11 @@ def batch_ivfpq_index_topk(
     # probe-path recovery + logical deletes (round-8 lifecycle): repair
     # a crashed compaction swap before reading — retrying once through
     # recovery if a compactor in ANOTHER session swaps the directory
-    # away mid-plan (round-9 item 6, read_index_with_retry) — and
+    # away mid-plan (round-9 item 6, index_store.read_with_retry) — and
     # anti-join the tombstone set so deleted vectors never surface as
     # neighbors
-    from dbt_datbricks_demo_spark.operators.dedup import (
-        _without_tombstoned,
-        read_index_with_retry,
-    )
-
-    indexed = _without_tombstoned(
-        spark, index_path, read_index_with_retry(spark, index_path), id_col
+    indexed = index_store.without_tombstoned(
+        spark, index_path, index_store.read_with_retry(spark, index_path), id_col
     )
     cand = indexed.join(
         F.broadcast(qroutes),

@@ -21,14 +21,23 @@ oracle comparison is bit-exact by construction.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dbt_datbricks_demo_spark.operators import clustering, dedup, graph, text
+from dbt_datbricks_demo_spark.operators import (
+    clustering,
+    dedup,
+    graph,
+    index_store,
+    text,
+)
 from dbt_datbricks_demo_spark.queries.inventory import (
-    _cache_root,
     _register,
+    _source,
     _spread,
+    _stream_inputs,
     _t,
 )
 from dbt_datbricks_demo_spark.queries.llm_ops import (
@@ -480,26 +489,19 @@ def span_removal_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _minhash_index_for(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per testdata dir) a standing MinHash band index for
     the corpus split (doc_id % 10 != 7), hive-partitioned by band-key
-    bucket. Keyed by the source parquet's path+mtime+size; signatures
-    are deterministic, so a rebuild reproduces the identical index."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
+    bucket. Cached on the source stamp (index_store.cached_build);
+    signatures are deterministic, so a rebuild reproduces the identical
+    index."""
 
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    stamp = "|".join(
-        f"{p}:{os.stat(p).st_mtime_ns}:{os.stat(p).st_size}"
-        for p in sorted(glob.glob(src) + glob.glob(os.path.join(src, "*")))
-    )
-    key = hashlib.md5(f"{stamp}|k5h8b2|mod10ne7".encode()).hexdigest()[:12]
-    path = os.path.join(_cache_root(), f"spark_graft_mh_{key}", "index")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         corpus = _t(spark, sf_dir, "documents").filter(
             F.col("doc_id") % 10 != 7
         )
         dedup.write_minhash_index(corpus, path)
-    return path
+
+    return index_store.cached_build(
+        "mh", _source(sf_dir, "documents"), "k5h8b2|mod10ne7", build
+    )
 
 
 @_register(
@@ -551,19 +553,8 @@ def _maintained_index_for(spark: SparkSession, sf_dir: str) -> str:
     must physically drop the tombstoned postings and collapse the two
     append generations to one file per bucket directory. Deterministic
     end state, cached on the source stamp like _minhash_index_for."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
 
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    stamp = "|".join(
-        f"{p}:{os.stat(p).st_mtime_ns}:{os.stat(p).st_size}"
-        for p in sorted(glob.glob(src) + glob.glob(os.path.join(src, "*")))
-    )
-    key = hashlib.md5(f"{stamp}|k5h8b2|lifecycle1".encode()).hexdigest()[:12]
-    path = os.path.join(_cache_root(), f"spark_graft_mhlc_{key}", "index")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         docs = _t(spark, sf_dir, "documents")
         corpus = docs.filter(F.col("doc_id") % 10 != 7)
         gen_a = corpus.filter(F.col("doc_id") % 10 <= 4)
@@ -575,7 +566,10 @@ def _maintained_index_for(spark: SparkSession, sf_dir: str) -> str:
         )
         stats = dedup.compact_minhash_index(spark, path)
         assert stats["rows_after"] < stats["rows_before"], stats
-    return path
+
+    return index_store.cached_build(
+        "mhlc", _source(sf_dir, "documents"), "k5h8b2|lifecycle1", build
+    )
 
 
 @_register(
@@ -632,46 +626,24 @@ def _stream_ingested_index_for(spark: SparkSession, sf_dir: str) -> str:
     near-dup admission gate is disabled (jaccard_threshold > 1 admits
     everything) so the indexed corpus is SQL-derivable — the
     admission-enabled path is pytest-gated for parity in
-    tests/test_streaming.py. Cached on the source stamp like
-    _minhash_index_for; signatures are deterministic, so a rebuild
+    tests/test_streaming.py. The stream's inputs, corpus and checkpoint
+    live beside the index in the build root, cached on the source stamp
+    like _minhash_index_for; signatures are deterministic, so a rebuild
     reproduces the identical index."""
-    import glob
-    import hashlib
-    import os
-    import shutil
-    import tempfile
 
-    src = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    stamp = "|".join(
-        f"{p}:{os.stat(p).st_mtime_ns}:{os.stat(p).st_size}"
-        for p in sorted(glob.glob(src) + glob.glob(os.path.join(src, "*")))
-    )
-    key = hashlib.md5(f"{stamp}|k5h8b2|streamidx1".encode()).hexdigest()[:12]
-    root = os.path.join(_cache_root(), f"spark_graft_smh_{key}")
-    path = os.path.join(root, "index")
-    marker = os.path.join(root, "_STREAM_INGEST_DONE")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         from dbt_datbricks_demo_spark.streaming.corpus import (
             index_ingest_batch_fn,
             read_document_stream,
         )
 
-        shutil.rmtree(root, ignore_errors=True)
-        input_dir = os.path.join(root, "in")
-        os.makedirs(input_dir)
+        root = os.path.dirname(path)
         corpus = (
             _t(spark, sf_dir, "documents")
             .filter(F.col("doc_id") % 10 != 7)
             .select("doc_id", "text")
         )
-        for i in range(3):
-            stage = os.path.join(root, f"stage{i}")
-            corpus.filter(F.col("doc_id") % 3 == i).coalesce(
-                1
-            ).write.mode("overwrite").json(stage)
-            part = glob.glob(os.path.join(stage, "part-*.json"))[0]
-            shutil.move(part, os.path.join(input_dir, f"batch{i}.json"))
-            shutil.rmtree(stage, ignore_errors=True)
+        input_dir = _stream_inputs(corpus, "doc_id", root, "json")
         fn = index_ingest_batch_fn(
             os.path.join(root, "corpus"),
             path,
@@ -686,9 +658,10 @@ def _stream_ingested_index_for(spark: SparkSession, sf_dir: str) -> str:
             .start()
         )
         q.awaitTermination()
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return path
+
+    return index_store.cached_build(
+        "smh", _source(sf_dir, "documents"), "k5h8b2|streamidx1", build
+    )
 
 
 @_register(

@@ -75,33 +75,32 @@ def _t_rowcount(sf_dir: str, name: str) -> int:
     return footer_row_count(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _cache_root() -> str:
-    """Root directory for derived standing-index caches (MinHash /
-    IVF-PQ indexes keyed on the source parquet stamp).
-
-    Round-11 advice: these lived under tempfile.gettempdir(), where a
-    /tmp sweep between an index build and its probe INSIDE one run
-    failed the probing query (self-healing on rerun, but a spurious
-    red). They now live with the other staged artifacts under the
-    repo's gitignored ``scaledata/index_cache``; override with
-    SPARK_GRAFT_CACHE_DIR, falling back to the system temp dir only
-    when the repo checkout is not writable."""
+def _source(sf_dir: str, name: str) -> str:
+    """Path of a testdata table — the source a cached index is keyed on
+    (operators/index_store.cached_build)."""
     import os
-    import tempfile
 
-    env = os.environ.get("SPARK_GRAFT_CACHE_DIR")
-    if env:
-        os.makedirs(env, exist_ok=True)
-        return env
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    root = os.path.join(repo, "scaledata", "index_cache")
-    try:
-        os.makedirs(root, exist_ok=True)
-        return root
-    except OSError:
-        return tempfile.gettempdir()
+    return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _stream_inputs(df: DataFrame, id_col: str, root: str, fmt: str) -> str:
+    """Split `df` into 3 single-file micro-batch inputs (id % 3) under
+    `root`/in, named batch0..2 in stream order, for the stream-built
+    index fixtures; returns the input directory."""
+    import glob
+    import os
+    import shutil
+
+    input_dir = os.path.join(root, "in")
+    os.makedirs(input_dir)
+    for i in range(3):
+        stage = os.path.join(root, f"stage{i}")
+        df.filter(F.col(id_col) % 3 == i).coalesce(1).write.mode(
+            "overwrite"
+        ).format(fmt).save(stage)
+        part = glob.glob(os.path.join(stage, f"part-*.{fmt}"))[0]
+        shutil.move(part, os.path.join(input_dir, f"batch{i}.{fmt}"))
+    return input_dir
 
 
 # Rows that make one task's worth of work, per cost class. A spread

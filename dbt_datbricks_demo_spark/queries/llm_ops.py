@@ -11,11 +11,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dbt_datbricks_demo_spark.operators import dedup, multimodal, similarity, text
+from dbt_datbricks_demo_spark.operators import (
+    dedup,
+    index_store,
+    multimodal,
+    similarity,
+    text,
+)
 from dbt_datbricks_demo_spark.operators.dedup import MERSENNE31, _affine_params
 from dbt_datbricks_demo_spark.queries.inventory import (
-    _cache_root,
     _register,
+    _source,
     _spread,
     _t,
 )
@@ -1155,41 +1161,32 @@ def frame_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 def _ivf_index_for(spark: SparkSession, sf_dir: str) -> tuple[str, list[list[float]]]:
     """Build (once) and locate the cell-partitioned IVF index for a
-    testdata dir. Keyed by the source parquet's path+mtime+size so a
-    regenerated table invalidates the cache; training is seeded, so a
-    rebuild reproduces the identical index."""
-    import glob
-    import hashlib
+    testdata dir and its trained centroids (centroids.json beside it),
+    cached on the source stamp (index_store.cached_build); training is
+    seeded, so a rebuild reproduces the identical index."""
     import json
     import os
-    import tempfile
 
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    stamp = "|".join(
-        f"{p}:{os.stat(p).st_mtime_ns}:{os.stat(p).st_size}"
-        for p in sorted(glob.glob(src) + glob.glob(os.path.join(src, "*")))
+    def build(path: str) -> None:
+        # MLlib k-means with random init: measured faster than a
+        # DataFrame-expression Lloyd's here (literal-heavy assign
+        # expressions recompile per round and dominate); train on the
+        # compact input, spread only the assignment scan
+        cents = similarity.train_ivf_centroids(
+            _t(spark, sf_dir, "embeddings"), k=16, seed=42, max_iter=5,
+            init_mode="random",
+        )
+        similarity.write_ivf_index(
+            _spread(_t(spark, sf_dir, "embeddings")), cents, path
+        )
+        with open(os.path.join(os.path.dirname(path), "centroids.json"), "w") as f:
+            json.dump(cents, f)
+
+    path = index_store.cached_build(
+        "ivf", _source(sf_dir, "embeddings"), "k16|seed42|iter5|random", build
     )
-    key = hashlib.md5(f"{stamp}|k16|seed42|iter5|random".encode()).hexdigest()[:12]
-    base = os.path.join(_cache_root(), f"spark_graft_ivf_{key}")
-    cent_path = os.path.join(base, "centroids.json")
-    idx_path = os.path.join(base, "index")
-    if os.path.exists(cent_path) and os.path.exists(
-        os.path.join(idx_path, "_SUCCESS")
-    ):
-        with open(cent_path) as f:
-            return idx_path, json.load(f)
-    # MLlib k-means with random init: measured faster than a DataFrame-
-    # expression Lloyd's here (literal-heavy assign expressions recompile
-    # per round and dominate); train on the compact input, spread only
-    # the assignment scan
-    cents = similarity.train_ivf_centroids(
-        _t(spark, sf_dir, "embeddings"), k=16, seed=42, max_iter=5, init_mode="random"
-    )
-    similarity.write_ivf_index(_spread(_t(spark, sf_dir, "embeddings")), cents, idx_path)
-    os.makedirs(base, exist_ok=True)
-    with open(cent_path, "w") as f:
-        json.dump(cents, f)
-    return idx_path, cents
+    with open(os.path.join(os.path.dirname(path), "centroids.json")) as f:
+        return path, json.load(f)
 
 
 @_register(

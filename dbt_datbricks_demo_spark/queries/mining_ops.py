@@ -40,15 +40,19 @@ decimal spellings round-trip through both engines' parsers.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dbt_datbricks_demo_spark.functions import literal_df
-from dbt_datbricks_demo_spark.operators import dedup, similarity, text
+from dbt_datbricks_demo_spark.operators import dedup, index_store, similarity, text
 from dbt_datbricks_demo_spark.queries.inventory import (
-    _cache_root,
     _register,
+    _source,
     _spread,
+    _stream_inputs,
     _t,
 )
 from dbt_datbricks_demo_spark.queries.llm_ops import (
@@ -577,35 +581,23 @@ _IVFPQ_COARSE = similarity.pq_codebooks(
 
 
 def _ivfpq_index_for(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once) and locate the IVF-PQ index for a testdata dir —
-    the stamp-key cache discipline of _ivf_index_for (llm_ops): keyed
-    by the source parquet's path+mtime+size, so a regenerated table
-    invalidates; the quantizers are fixed, so a rebuild reproduces the
-    identical index."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
+    """Build (once) and locate the IVF-PQ index for a testdata dir,
+    cached on the source stamp (index_store.cached_build); the
+    quantizers are fixed, so a rebuild reproduces the identical
+    index."""
 
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    stamp = "|".join(
-        f"{p}:{os.stat(p).st_mtime_ns}:{os.stat(p).st_size}"
-        for p in sorted(glob.glob(src) + glob.glob(os.path.join(src, "*")))
-    )
-    key = hashlib.md5(
-        f"{stamp}|ivfpq|cells{_IVFPQ_CELLS}|m{_PQ_M}|k{_PQ_K}".encode()
-    ).hexdigest()[:12]
-    idx_path = os.path.join(
-        _cache_root(), f"spark_graft_ivfpq_{key}", "index"
-    )
-    if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
+    def build(path: str) -> None:
         similarity.write_ivfpq_index(
             _spread(_t(spark, sf_dir, "embeddings")),
             _IVFPQ_COARSE,
             _PQ_BOOKS,
-            idx_path,
+            path,
         )
-    return idx_path
+
+    params = f"ivfpq|cells{_IVFPQ_CELLS}|m{_PQ_M}|k{_PQ_K}"
+    return index_store.cached_build(
+        "ivfpq", _source(sf_dir, "embeddings"), params, build
+    )
 
 
 def _sql_ivfpq() -> str:
@@ -702,77 +694,24 @@ _BATCH_PLANES_W = similarity.hyperplane_weights(
 )
 
 
-def _publish_staging(staging: str, root: str, idx_path: str) -> None:
-    """Atomically publish a session-private staging dir at root, losing
-    gracefully to a concurrent publisher. On a blocked first rename the
-    stale partial at root is moved ASIDE with a rename — never rmtree'd
-    in place: between the _SUCCESS re-check and an rmtree a concurrent
-    process may publish a healthy index, and the rmtree would destroy
-    it under a concurrent reader (round-9 advice TOCTOU). A rename is
-    atomic: it either takes the whole dir aside (harmless — we publish
-    an equivalent one next) or fails because the path vanished."""
-    import os
-    import shutil
-
-    try:
-        os.rename(staging, root)
-        return
-    except OSError:
-        if os.path.exists(os.path.join(idx_path, "_SUCCESS")):
-            # lost the race to a healthy publish — discard ours
-            shutil.rmtree(staging, ignore_errors=True)
-            return
-    # a stale partial blocks the publish: take it aside atomically,
-    # then retry once; if a healthy index appeared in the window, our
-    # equivalent replaces it and the aside copy is retired
-    aside = f"{root}.stale.{os.getpid()}"
-    try:
-        os.rename(root, aside)
-    except OSError:
-        pass
-    try:
-        os.rename(staging, root)
-    except OSError:
-        # the path reappeared (another publisher won the retry window)
-        shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(aside, ignore_errors=True)
-
-
 def _batch_index_for(spark: SparkSession, sf_dir: str, planes: int) -> str:
     """Build (once) and locate the batch IVF-PQ index for a testdata
-    dir — the _ivfpq_index_for stamp-cache discipline, keyed also by
-    the adaptive plane count so a corpus-size change invalidates."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
+    dir — the _ivfpq_index_for stamp cache, keyed also by the adaptive
+    plane count so a corpus-size change invalidates."""
 
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    stamp = "|".join(
-        f"{p}:{os.stat(p).st_mtime_ns}:{os.stat(p).st_size}"
-        for p in sorted(glob.glob(src) + glob.glob(os.path.join(src, "*")))
-    )
-    key = hashlib.md5(
-        f"{stamp}|bqidx|pl{planes}|cells{_IVFPQ_CELLS}|m{_PQ_M}|k{_PQ_K}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(_cache_root(), f"spark_graft_bqidx_{key}")
-    idx_path = os.path.join(root, "index")
-    if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
-        # build in a session-private staging dir and rename-publish:
-        # two concurrent sessions (parallel pytest workers, bench
-        # alongside tests) must never read a directory the other is
-        # mid-overwrite (round-8 advice item). os.rename is atomic on
-        # one filesystem; the loser of the race discards its staging.
-        staging = f"{root}.staging.{os.getpid()}"
+    def build(path: str) -> None:
         similarity.write_batch_ivfpq_index(
             _spread(_t(spark, sf_dir, "embeddings")),
             _IVFPQ_COARSE,
             _PQ_BOOKS,
             planes,
-            os.path.join(staging, "index"),
+            path,
         )
-        _publish_staging(staging, root, idx_path)
-    return idx_path
+
+    params = f"bqidx|pl{planes}|cells{_IVFPQ_CELLS}|m{_PQ_M}|k{_PQ_K}"
+    return index_store.cached_build(
+        "bqidx", _source(sf_dir, "embeddings"), params, build
+    )
 
 
 def _sql_batch_planes() -> str:
@@ -1128,12 +1067,10 @@ def _probe_batch_index(
     # the shared literal by ordinal.
     from pyspark.sql.window import Window
 
-    from dbt_datbricks_demo_spark.operators.dedup import read_index_with_retry
-
     # codes-only, coalesced: 8 query ordinals x 30 file-partitions
     # would schedule ~240 tiny tasks; 8 partitions keep it one stage
     idxdf = (
-        read_index_with_retry(spark, idx_path)
+        index_store.read_with_retry(spark, idx_path)
         .select("vec_id", "pq_codes")
         .coalesce(8)
     )
@@ -1214,40 +1151,15 @@ def _stream_ingested_batch_index_for(
     source stamp like _batch_index_for; encodings are deterministic
     given the frozen (coarse, books, planes), so a rebuild reproduces
     the identical index."""
-    import glob
-    import hashlib
-    import os
-    import shutil
 
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    stamp = "|".join(
-        f"{p}:{os.stat(p).st_mtime_ns}:{os.stat(p).st_size}"
-        for p in sorted(glob.glob(src) + glob.glob(os.path.join(src, "*")))
-    )
-    key = hashlib.md5(
-        f"{stamp}|bqstream|pl{planes}|cells{_IVFPQ_CELLS}"
-        f"|m{_PQ_M}|k{_PQ_K}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(_cache_root(), f"spark_graft_bqstr_{key}")
-    idx_path = os.path.join(root, "index")
-    marker = os.path.join(root, "_STREAM_INGEST_DONE")
-    if not os.path.exists(marker):
+    def build(path: str) -> None:
         from dbt_datbricks_demo_spark.streaming.vectors import (
             write_vector_index_ingest,
         )
 
-        shutil.rmtree(root, ignore_errors=True)
-        input_dir = os.path.join(root, "in")
-        os.makedirs(input_dir)
+        root = os.path.dirname(path)
         emb = _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        for i in range(3):
-            stage = os.path.join(root, f"stage{i}")
-            emb.filter(F.col("vec_id") % 3 == i).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(stage)
-            part = glob.glob(os.path.join(stage, "part-*.parquet"))[0]
-            shutil.move(part, os.path.join(input_dir, f"batch{i}.parquet"))
-            shutil.rmtree(stage, ignore_errors=True)
+        input_dir = _stream_inputs(emb, "vec_id", root, "parquet")
         stream = (
             spark.readStream.schema(emb.schema)
             .option("maxFilesPerTrigger", 1)
@@ -1256,7 +1168,7 @@ def _stream_ingested_batch_index_for(
         q = (
             write_vector_index_ingest(
                 stream,
-                idx_path,
+                path,
                 os.path.join(root, "ckpt"),
                 _IVFPQ_COARSE,
                 _PQ_BOOKS,
@@ -1267,9 +1179,11 @@ def _stream_ingested_batch_index_for(
             .start()
         )
         q.awaitTermination()
-        with open(marker, "w") as fh:
-            fh.write("ok")
-    return idx_path
+
+    params = f"bqstream|pl{planes}|cells{_IVFPQ_CELLS}|m{_PQ_M}|k{_PQ_K}"
+    return index_store.cached_build(
+        "bqstr", _source(sf_dir, "embeddings"), params, build
+    )
 
 
 @_register(
@@ -1321,52 +1235,44 @@ def ann_stream_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the ANN layer (minhash_index_maintenance is the template).
 # ---------------------------------------------------------------------------
 def _maintained_batch_index_for(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
-    """Build (once per testdata dir, stamp-cached, staged + atomically
-    rename-published like _batch_index_for) a batch IVF-PQ index that
-    has lived a full maintenance cycle: generation A (vec_id % 10 <= 4)
-    written fresh, generation B (vec_id % 10 in 5,6,8,9) appended, the
+    """Build (once per testdata dir, cached on the source stamp by
+    index_store.cached_build) a batch IVF-PQ index that has lived a
+    full maintenance cycle: generation A (vec_id % 10 <= 4) written
+    fresh, generation B (vec_id % 10 in 5,6,8,9) appended, the
     vec_id % 17 == 3 slice tombstoned, then compacted. Returns
     (index_path, planes) — planes are adaptive to the PRE-delete ingest
-    count, what a standing index would have been built with."""
-    import glob
-    import hashlib
-    import os
-    import tempfile
+    count, what a standing index would have been built with; they are
+    counted once at build and kept beside the index (planes.json), so a
+    warm call fires no job."""
 
-    src = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    stamp = "|".join(
-        f"{p}:{os.stat(p).st_mtime_ns}:{os.stat(p).st_size}"
-        for p in sorted(glob.glob(src) + glob.glob(os.path.join(src, "*")))
-    )
-    key = hashlib.md5(
-        f"{stamp}|bqmaint|cells{_IVFPQ_CELLS}|m{_PQ_M}|k{_PQ_K}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(_cache_root(), f"spark_graft_bqmnt_{key}")
-    idx_path = os.path.join(root, "index")
-    emb = _t(spark, sf_dir, "embeddings")
-    pre = emb.filter(F.col("vec_id") % 10 != 7)
-    planes = similarity.adaptive_planes(
-        pre.count(), _IVFPQ_CELLS, _BATCH_WIDTH, _BATCH_MAX_PLANES
-    )
-    if not os.path.exists(os.path.join(idx_path, "_SUCCESS")):
-        staging = f"{root}.staging.{os.getpid()}"
-        spath = os.path.join(staging, "index")
+    def build(path: str) -> None:
+        pre = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 10 != 7)
+        planes = similarity.adaptive_planes(
+            pre.count(), _IVFPQ_CELLS, _BATCH_WIDTH, _BATCH_MAX_PLANES
+        )
         gen_a = pre.filter(F.col("vec_id") % 10 <= 4)
         gen_b = pre.filter(F.col("vec_id") % 10 > 4)
         similarity.write_batch_ivfpq_index(
-            gen_a, _IVFPQ_COARSE, _PQ_BOOKS, planes, spath
+            gen_a, _IVFPQ_COARSE, _PQ_BOOKS, planes, path
         )
         similarity.append_batch_ivfpq_index(
-            gen_b, _IVFPQ_COARSE, _PQ_BOOKS, planes, spath
+            gen_b, _IVFPQ_COARSE, _PQ_BOOKS, planes, path
         )
         similarity.delete_from_batch_ivfpq_index(
-            spark, spath, pre.filter(F.col("vec_id") % 17 == 3)
+            spark, path, pre.filter(F.col("vec_id") % 17 == 3)
         )
-        stats = similarity.compact_batch_ivfpq_index(spark, spath)
+        stats = similarity.compact_batch_ivfpq_index(spark, path)
         assert stats["rows_after"] < stats["rows_before"], stats
         assert stats["files_after"] <= stats["files_before"], stats
-        _publish_staging(staging, root, idx_path)
-    return idx_path, planes
+        with open(os.path.join(os.path.dirname(path), "planes.json"), "w") as fh:
+            json.dump(planes, fh)
+
+    params = f"bqmaint|cells{_IVFPQ_CELLS}|m{_PQ_M}|k{_PQ_K}"
+    path = index_store.cached_build(
+        "bqmnt", _source(sf_dir, "embeddings"), params, build
+    )
+    with open(os.path.join(os.path.dirname(path), "planes.json")) as fh:
+        return path, json.load(fh)
 
 
 def _sql_index_maint() -> str:

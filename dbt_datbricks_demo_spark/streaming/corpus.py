@@ -320,14 +320,15 @@ def index_ingest_batch_fn(
     grows O(admitted docs × bands) short rows; compaction keeps the
     per-bucket file count flat."""
     from dbt_datbricks_demo_spark.operators.dedup import (
+        MINHASH_BUCKET_COL,
         compact_minhash_index,
         index_candidate_pairs,
         lsh_band_keys,
         minhash_index_exists,
-        minhash_index_max_files_per_bucket,
         with_minhash,
         write_minhash_index,
     )
+    from dbt_datbricks_demo_spark.operators.index_store import compaction_due
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -431,13 +432,10 @@ def index_ingest_batch_fn(
         # 4. in-stream compaction (sequential foreachBatch — no
         # concurrent reader during the atomic swap): batch-count
         # cadence and/or file-generation threshold
-        due = compact_every and (batch_id + 1) % compact_every == 0
-        if not due and compact_files_per_bucket:
-            due = (
-                minhash_index_max_files_per_bucket(index_path)
-                > compact_files_per_bucket
-            )
-        if due:
+        if compaction_due(
+            index_path, MINHASH_BUCKET_COL, batch_id,
+            compact_every, compact_files_per_bucket,
+        ):
             compact_minhash_index(spark, index_path)
 
     return process

@@ -4,8 +4,10 @@ item 7): the MinHash band index has been stream-maintained since round
 had batch append — a new embedding generation had to wait for an
 offline job. This closes the symmetry: a foreachBatch wrapper encodes
 each micro-batch with the index's frozen (coarse, books, planes) and
-dynamic-partition-appends it into the standing cell directories, with
-the same cadence-config compaction and crash-recovery discipline.
+dynamic-partition-appends it into the standing cell directories. Both
+ingests share one storage lifecycle (operators/index_store.py): the
+cadence check (index_store.compaction_due), the locked write, delete
+and compaction paths, and their crash recovery.
 
 Encoding parameters are FROZEN at index build time by design: IVF-PQ
 serving quality is a property of (coarse, books, planes) chosen from
@@ -23,7 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from dbt_datbricks_demo_spark.operators import similarity
+from dbt_datbricks_demo_spark.operators import index_store, similarity
 
 
 def ann_index_ingest_batch_fn(
@@ -40,9 +42,9 @@ def ann_index_ingest_batch_fn(
     index (operators/similarity.write_batch_ivfpq_index layout) as
     vector batches stream in. Per micro-batch:
 
-      1. every write entry point (append/write/compact in
-         operators/similarity.py) runs recovery UNDER the index write
-         lock before acting, so a restart that killed a compaction at
+      1. every write entry point (similarity's append/write/compact,
+         through operators/index_store.py) runs recovery UNDER the
+         index write lock before acting, so a restart that killed a compaction at
          any point of the swap finds a readable index and converges —
          no unlocked recovery happens here (an unlocked rename-back
          would race a live compactor between its two swap renames);
@@ -78,13 +80,10 @@ def ann_index_ingest_batch_fn(
                 batch, coarse, books, planes, index_path,
                 id_col=id_col, vec_col=vec_col,
             )
-        due = compact_every and (batch_id + 1) % compact_every == 0
-        if not due and compact_files_per_cell:
-            due = (
-                similarity.batch_index_max_files_per_cell(index_path)
-                > compact_files_per_cell
-            )
-        if due:
+        if index_store.compaction_due(
+            index_path, similarity.IVFPQ_CELL_COL, batch_id,
+            compact_every, compact_files_per_cell,
+        ):
             similarity.compact_batch_ivfpq_index(spark, index_path)
 
     return process

@@ -228,9 +228,8 @@ def test_clean_corpus_build_job_budget(spark):
 # ---------------------------------------------------------------------------
 # (d) one size-guarded broadcast rule
 # ---------------------------------------------------------------------------
-def _small_side(spark):
-    # one partition: its count needs no exchange, so the count is one job
-    return spark.range(0, 10, 1, 1).withColumnRenamed("id", "k")
+def _small_side(spark, partitions: int = 1):
+    return spark.range(0, 10, 1, partitions).withColumnRenamed("id", "k")
 
 
 def _joined_plan(spark, side) -> str:
@@ -248,10 +247,18 @@ def test_broadcast_if_small_known_bound_fires_no_job(spark, no_auto_broadcast):
 def test_broadcast_if_small_unknown_bound_counts_in_one_job(
     spark, no_auto_broadcast
 ):
-    small = _small_side(spark)
-    hinted, jobs = _jobs_fired(spark, lambda: broadcast_if_small(small))
-    assert jobs == 1
-    assert "BroadcastExchange" in _joined_plan(spark, hinted)
+    # one job at any partition count: a DataFrame.count() of several
+    # partitions is a partial and a final aggregate, two jobs under AQE
+    for partitions in (1, 4):
+        small = _small_side(spark, partitions)
+        hinted, jobs = _jobs_fired(spark, lambda: broadcast_if_small(small))
+        assert jobs == 1, partitions
+        assert "BroadcastExchange" in _joined_plan(spark, hinted)
+        (frame, n), jobs = _jobs_fired(spark, lambda: counted(small))
+        assert (n, jobs) == (10, 1), partitions
+        # the checkpoint keeps the frame's partitions and rows
+        assert frame.rdd.getNumPartitions() == partitions
+        assert sorted(r["k"] for r in frame.collect()) == list(range(10))
 
 
 def test_broadcast_if_small_over_limit_keeps_rows_unhinted(

@@ -5,12 +5,19 @@ dedup behavior is exercised here with synthetic dupes)."""
 from __future__ import annotations
 
 import hashlib
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from dbt_datbricks_demo_spark import functions
-from dbt_datbricks_demo_spark.operators import dedup, multimodal, similarity, text
+from dbt_datbricks_demo_spark.operators import (
+    dedup,
+    index_store,
+    multimodal,
+    similarity,
+    text,
+)
 
 
 @pytest.fixture(scope="module")
@@ -900,7 +907,7 @@ def test_index_probe_path_recovers_after_swap_crash(spark, tmp_path):
     followed by a PROBE-only restart (index_candidate_pairs, with no
     intervening write) must repair the index rather than fail on a
     missing directory — the probe entry point now runs
-    recover_minhash_index first."""
+    index_store.recover first."""
     import os
     import shutil
 
@@ -1135,7 +1142,7 @@ def test_probe_retries_through_concurrent_compaction_window(
         _PQ_BOOKS,
     )
 
-    real_read = dedup._plan_read_index
+    real_read = index_store._plan_read_index
 
     def raced_read_factory(path):
         state = {"raced": False}
@@ -1169,7 +1176,7 @@ def test_probe_retries_through_concurrent_compaction_window(
     )
     assert want
     raced, state = raced_read_factory(index)
-    monkeypatch.setattr(dedup, "_plan_read_index", raced)
+    monkeypatch.setattr(index_store, "_plan_read_index", raced)
     got = sorted(
         (r["batch_id"], r["corpus_id"])
         for r in dedup.index_candidate_pairs(spark, index, probe_docs).collect()
@@ -1178,7 +1185,7 @@ def test_probe_retries_through_concurrent_compaction_window(
     assert got == want
     assert dedup.minhash_index_exists(index)
     assert not os.path.exists(index + ".old")
-    monkeypatch.setattr(dedup, "_plan_read_index", real_read)
+    monkeypatch.setattr(index_store, "_plan_read_index", real_read)
 
     # --- batch IVF-PQ probe path (batch_ivfpq_index_topk)
     rng = random.Random(41)
@@ -1207,7 +1214,7 @@ def test_probe_retries_through_concurrent_compaction_window(
     bwant = bprobe()
     assert bwant
     braced, bstate = raced_read_factory(bidx)
-    monkeypatch.setattr(dedup, "_plan_read_index", braced)
+    monkeypatch.setattr(index_store, "_plan_read_index", braced)
     assert bprobe() == bwant
     assert bstate["raced"]
     assert not os.path.exists(bidx + ".old")
@@ -1244,7 +1251,7 @@ def test_probe_survives_full_concurrent_compaction(spark, tmp_path, monkeypatch)
         (r["batch_id"], r["corpus_id"])
         for r in dedup.index_candidate_pairs(spark, index, probe_docs).collect()
     )
-    real_read = dedup._plan_read_index
+    real_read = index_store._plan_read_index
     state = {"fired": False}
 
     def read_after_full_compaction(spark_, index_path):
@@ -1253,13 +1260,106 @@ def test_probe_survives_full_concurrent_compaction(spark, tmp_path, monkeypatch)
             dedup.compact_minhash_index(spark_, index_path)
         return real_read(spark_, index_path)
 
-    monkeypatch.setattr(dedup, "_plan_read_index", read_after_full_compaction)
+    monkeypatch.setattr(index_store, "_plan_read_index", read_after_full_compaction)
     got = sorted(
         (r["batch_id"], r["corpus_id"])
         for r in dedup.index_candidate_pairs(spark, index, probe_docs).collect()
     )
     assert state["fired"]
     assert got == want  # compaction never changes probe results
+
+
+# ---------------------------------------------------------------------------
+# index_store.cached_build: one stamp-keyed build, published atomically
+# ---------------------------------------------------------------------------
+@pytest.fixture
+def cache_src(tmp_path, monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CACHE_DIR", str(tmp_path / "cache"))
+    src = tmp_path / "t.parquet"
+    src.mkdir()
+    (src / "part-0.parquet").write_bytes(b"rows")
+    return str(src)
+
+
+def _file_builder(calls):
+    def build(index_path):
+        calls.append(index_path)
+        os.makedirs(index_path)
+        with open(os.path.join(index_path, "part-0"), "w") as fh:
+            fh.write("postings")
+
+    return build
+
+
+def _assert_one_complete_tree(tmp_path, index_path):
+    root = os.path.dirname(index_path)
+    assert sorted(os.listdir(tmp_path / "cache")) == [os.path.basename(root)]
+    assert os.path.basename(root).startswith("spark_graft_t_")
+    assert os.path.exists(os.path.join(root, index_store.BUILT_MARKER))
+    assert os.listdir(index_path) == ["part-0"]
+
+
+def test_cached_build_reuses_published_index(cache_src, tmp_path):
+    calls = []
+    path = index_store.cached_build("t", cache_src, "p", _file_builder(calls))
+    again = index_store.cached_build("t", cache_src, "p", _file_builder(calls))
+    assert again == path
+    assert len(calls) == 1  # the second call never ran the builder
+    _assert_one_complete_tree(tmp_path, path)
+
+
+def test_cached_build_replaces_stale_partial(cache_src, tmp_path):
+    calls = []
+    path = index_store.cached_build("t", cache_src, "p", _file_builder(calls))
+    # a partial left at the cache root by a dead in-place writer: no
+    # marker, and a stray file the complete build does not have
+    os.remove(os.path.join(os.path.dirname(path), index_store.BUILT_MARKER))
+    with open(os.path.join(path, "part-9"), "w") as fh:
+        fh.write("half")
+    assert index_store.cached_build(
+        "t", cache_src, "p", _file_builder(calls)
+    ) == path
+    assert len(calls) == 2
+    _assert_one_complete_tree(tmp_path, path)
+
+
+def test_cached_build_failed_builder_publishes_nothing(cache_src, tmp_path):
+    def dies(index_path):
+        _file_builder([])(index_path)
+        raise RuntimeError("builder died")
+
+    with pytest.raises(RuntimeError, match="builder died"):
+        index_store.cached_build("t", cache_src, "p", dies)
+    assert os.listdir(tmp_path / "cache") == []
+    calls = []
+    path = index_store.cached_build("t", cache_src, "p", _file_builder(calls))
+    assert len(calls) == 1  # the next call rebuilt
+    _assert_one_complete_tree(tmp_path, path)
+
+
+def test_cached_build_concurrent_builders_leave_one_tree(cache_src, tmp_path):
+    import threading
+
+    both_built = threading.Barrier(2)
+    calls, roots = [], []
+
+    def build(index_path):
+        _file_builder(calls)(index_path)
+        # neither publishes before both have built: a real race
+        both_built.wait(timeout=30)
+
+    def run():
+        roots.append(index_store.cached_build("t", cache_src, "p", build))
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert len(calls) == 2 and len(roots) == 2
+    assert calls[0] != calls[1]  # each built in its own private staging
+    assert roots[0] == roots[1]
+    _assert_one_complete_tree(tmp_path, roots[0])
 
 
 def test_subprobe_radius_sql_case_matches_python_schedule():

@@ -362,7 +362,7 @@ def test_minhash_index_delete_and_compact_lifecycle(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from dbt_datbricks_demo_spark.operators import dedup
+    from dbt_datbricks_demo_spark.operators import dedup, index_store
     from dbt_datbricks_demo_spark.sources.testdata import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -395,7 +395,7 @@ def test_minhash_index_delete_and_compact_lifecycle(spark, tmp_path):
     stats = dedup.compact_minhash_index(spark, path)
     assert stats["rows_after"] < stats["rows_before"]
     assert stats["files_after"] < stats["files_before"]
-    assert dedup.minhash_tombstones(spark, path) is None
+    assert index_store.tombstones(spark, path) is None
     for d in os.listdir(path):
         if d.startswith(dedup.MINHASH_BUCKET_COL):
             n = sum(

@@ -787,7 +787,7 @@ def test_index_compaction_crash_recovery_all_windows(spark, tmp_path):
     import os
     import shutil
 
-    from dbt_datbricks_demo_spark.operators import dedup
+    from dbt_datbricks_demo_spark.operators import dedup, index_store
 
     docs = spark.createDataFrame(
         [(i, f"document number {i} with shared shingle text {i % 3}")
@@ -810,7 +810,7 @@ def test_index_compaction_crash_recovery_all_windows(spark, tmp_path):
 
     # window 1: crash mid-write of .compacting (index untouched)
     os.makedirs(index + ".compacting/partial", exist_ok=True)
-    assert dedup.recover_minhash_index(index) == "cleaned_tmp"
+    assert index_store.recover(index) == "cleaned_tmp"
     assert not os.path.exists(index + ".compacting")
     readable_and_equal()
 
@@ -822,14 +822,14 @@ def test_index_compaction_crash_recovery_all_windows(spark, tmp_path):
     # route to the locked/retrying paths instead of re-creating the
     # index over a recoverable one via an unlocked recovery
     assert dedup.minhash_index_exists(index)
-    assert dedup.recover_minhash_index(index) == "rolled_back"
+    assert index_store.recover(index) == "rolled_back"
     readable_and_equal()
     assert not os.path.exists(index + ".old")
     assert not os.path.exists(index + ".compacting")
 
     # window 3: crash after the swap, before the .old cleanup
     shutil.copytree(index, index + ".old")
-    assert dedup.recover_minhash_index(index) == "cleaned_old"
+    assert index_store.recover(index) == "cleaned_old"
     readable_and_equal()
 
     # a fresh compaction over the recovered index converges
@@ -869,7 +869,7 @@ def test_index_compaction_file_count_cadence(spark, tmp_path):
     every append that leaves a second file generation in any bucket is
     followed by an in-stream compaction — file counts stay flat while
     batch-count-only cadence would let them grow per append."""
-    from dbt_datbricks_demo_spark.operators import dedup
+    from dbt_datbricks_demo_spark.operators import dedup, index_store
     from dbt_datbricks_demo_spark.streaming.corpus import (
         index_ingest_batch_fn,
     )
@@ -889,7 +889,9 @@ def test_index_compaction_file_count_cadence(spark, tmp_path):
             spark.createDataFrame([(i, t)], "doc_id long, text string"),
             i,
         )
-        assert dedup.minhash_index_max_files_per_bucket(index) <= 1, i
+        assert index_store.max_files_per_partition(
+            index, dedup.MINHASH_BUCKET_COL
+        ) <= 1, i
     got = {
         r["doc_id"]
         for r in spark.read.parquet(index).select("doc_id").distinct().collect()
