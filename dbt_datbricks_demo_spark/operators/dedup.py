@@ -22,14 +22,15 @@ Scale design:
   * All hashes derive from md5 (not Spark's xxhash64) so results are
     engine-portable and oracle-checkable.
 
-Expression staging: the shingle/token hash arrays are materialized as
-real columns (`with_shingle_hashes` / `with_minhash` / `with_simhash`)
-before being referenced by downstream expressions. A nested one-shot
-expression tree re-evaluates the per-shingle md5 pipeline once per
-consumer (8 signature slots × band slices ⇒ up to 64×); Catalyst's
-CollapseProject will NOT inline a non-cheap alias referenced more than
-once, so a staged column is computed exactly once per row. Measured at
-sf0.01 this turns a 34 s band-key projection into < 1 s.
+Expression staging: an array that several downstream expressions read
+is materialized as a real column first (`with_simhash` stages the
+token-hash array its 32 bit-votes read). A nested one-shot expression
+tree re-evaluates the per-element md5 pipeline once per consumer;
+Catalyst's CollapseProject will NOT inline a non-cheap alias referenced
+more than once, so a staged column is computed exactly once per row.
+Every MinHash signature — batch queries, the standing index and the
+streaming ingest — comes from the row-level form above
+(shingle_hash_rows → minhash_sigs_from_rows), which stages nothing.
 
 The standing MinHash band index's storage lifecycle (write/delete/
 compact under the index write lock, recovery, the plan-time read retry,
@@ -151,33 +152,10 @@ def char_shingles(col: Column | str, k: int = 5) -> Column:
 
 def shingle_hashes(col: Column | str, k: int = 5) -> Column:
     """Each distinct shingle → 31-bit integer (one md5 per shingle).
-    Pure-expression form; for repeated downstream use, stage it via
-    with_shingle_hashes instead."""
+    Pure-expression form for tiny inputs; the scan path is
+    shingle_hash_rows."""
     return F.transform(
         char_shingles(col, k), lambda s: md5_int32(s) % F.lit(MERSENNE31)
-    )
-
-
-def with_shingle_hashes(
-    df: DataFrame, text_col: str = "text", k: int = 5, out: str = "_hs"
-) -> DataFrame:
-    """Stage the shingle-hash array as a materialized column, via two
-    projection steps (normalize, then shingle+hash) so each expensive
-    sub-expression is evaluated once per row regardless of how many
-    expressions read `out` downstream."""
-    norm_col = f"_norm_{out}"
-    c = F.col(norm_col)
-    shingles = F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.lit(1), F.length(c) - (k - 1))),
-            lambda i: c.substr(i, F.lit(k)),
-        )
-    )
-    hs = F.transform(shingles, lambda s: md5_int32(s) % F.lit(MERSENNE31))
-    return (
-        df.withColumn(norm_col, F.trim(F.lower(F.col(text_col))))
-        .withColumn(out, hs)
-        .drop(norm_col)
     )
 
 
@@ -202,29 +180,9 @@ def minhash_signature(col: Column | str, num_hashes: int = 8, k: int = 5) -> Col
 
     Pure-expression form — each slot re-derives the shingle hashes, so
     only use this where the input is tiny or the expression is consumed
-    once; the scan path is with_minhash.
+    once; the scan path is shingle_hash_rows → minhash_sigs_from_rows.
     """
     return F.array(*_minhash_slots(shingle_hashes(col, k), num_hashes))
-
-
-def with_minhash(
-    df: DataFrame,
-    text_col: str = "text",
-    num_hashes: int = 8,
-    k: int = 5,
-    sig_col: str = "minhash_sig",
-    keep_hashes: str | None = None,
-) -> DataFrame:
-    """Stage the MinHash signature (array<bigint>) as a column, computing
-    the shingle-hash array exactly once per row. keep_hashes optionally
-    retains the staged shingle-hash column under that name (for Jaccard
-    verification downstream)."""
-    hs_col = keep_hashes or f"_hs_{sig_col}"
-    staged = with_shingle_hashes(df, text_col, k, out=hs_col)
-    staged = staged.withColumn(
-        sig_col, F.array(*_minhash_slots(F.col(hs_col), num_hashes))
-    )
-    return staged if keep_hashes else staged.drop(hs_col)
 
 
 def lsh_band_keys(
@@ -614,12 +572,13 @@ def candidate_hash_arrays(
     subset = df.join(
         broadcast_if_small(cand_ids, 2 * n_pairs), on=id_col, how="left_semi"
     )
-    # Row-level codegen form (round 12): the previous with_shingle_hashes
-    # HOF array build measured marginally faster on a LUCKY JIT profile
-    # (1.8 s vs 2.2-3.0 s at sf0.1) but Catalyst's interpreted lambda
-    # walker is a per-JVM profile lottery — inside full bench sessions
-    # the same checkpoint ran bimodal ~2 s / ~17 s (clean_corpus build,
-    # measured round 12). Position explode → per-row substr → string
+    # Row-level codegen form (round 12): the previous staged HOF array
+    # build (transform over the distinct shingles) measured marginally
+    # faster on a LUCKY JIT profile (1.8 s vs 2.2-3.0 s at sf0.1) but
+    # Catalyst's interpreted lambda walker is a per-JVM profile
+    # lottery — inside full bench sessions the same checkpoint ran
+    # bimodal ~2 s / ~17 s (clean_corpus build, measured round 12).
+    # Position explode → per-row substr → string
     # distinct → per-row md5 → collect_list keeps every expression in
     # generated code; the two candidate-bounded exchanges it adds are
     # O(candidate shingles), not corpus-sized. The array (same multiset,
@@ -1066,7 +1025,7 @@ def compact_minhash_index(spark, index_path: str) -> dict:
     postings are logically a SET; lookups are distinct-ed, so results
     never change) and rewrite every bucket directory to one file,
     swapped in atomically (index_store.compact). Offline maintenance
-    op, like VersionedTable.optimize. Returns before/after file and row
+    op, like VersionedTable.optimize. Returns before/after file
     counts."""
     return index_store.compact(
         spark,
@@ -1191,7 +1150,7 @@ def planted_recall_cert(
     num_hashes: the side is encoded into the id (2*id / 2*id+1) and the
     affine permutation params are DATA — a broadcast num_hashes-row
     table joined against the shingle-hash rows — instead of num_hashes
-    plan expressions. The previous two with_minhash plans carried
+    plan expressions. The previous two staged-HOF signature plans carried
     2 x num_hashes higher-order-function expressions, and even the
     rows-path aggregate carries num_hashes min() columns; Catalyst
     analysis alone measured ~11 ms PER EXPRESSION, dominating the

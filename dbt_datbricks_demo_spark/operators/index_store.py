@@ -264,7 +264,10 @@ def compact(
     to a sibling directory and swapped in atomically via two renames —
     the swap discipline of table materialization (plans/materialize.py).
     Tombstones are cleared by the swap (they lived inside the old
-    directory). Returns before/after row and file counts.
+    directory). Returns the before/after file counts, which the swap
+    lists anyway; it counts no rows, so an in-stream compaction fires
+    only the rewrite's jobs (a caller that checks rows counts the
+    index itself).
 
     Concurrent readers entering DURING the swap are covered at plan time
     by read_with_retry. Writer-writer: two compactions interleaving
@@ -275,7 +278,6 @@ def compact(
     with index_write_lock(index_path, owner):
         recover(index_path)
         rows = spark.read.parquet(index_path)
-        rows_before = rows.count()
         kept = without_tombstoned(spark, index_path, rows, unique_cols[0])
         kept = kept.dropDuplicates(list(unique_cols)).repartition(part_col)
         if sort_col is not None:
@@ -284,17 +286,11 @@ def compact(
         tmp, old = base + ".compacting", base + ".old"
         shutil.rmtree(tmp, ignore_errors=True)
         write_partitioned(kept, tmp, part_col)
-        rows_after = spark.read.parquet(tmp).count()
         files_before, files_after = _nfiles(index_path), _nfiles(tmp)
         os.rename(index_path, old)
         os.rename(tmp, index_path)
         shutil.rmtree(old, ignore_errors=True)
-    return {
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-        "files_before": files_before,
-        "files_after": files_after,
-    }
+    return {"files_before": files_before, "files_after": files_after}
 
 
 # ---------------------------------------------------------------------------

@@ -1035,7 +1035,7 @@ def compact_batch_ivfpq_index(spark, path: str) -> dict:
     build provides), swapped in atomically by index_store.compact's
     two-rename + recover discipline (including its between-renames
     crash window, which recovery rolls back). Returns before/after
-    row/file counts."""
+    file counts."""
     return index_store.compact(
         spark,
         path,

@@ -35,6 +35,47 @@ except ImportError:
     _HAVE_DELTA = False
 
 
+def table_exists(path: str) -> bool:
+    """Does a table live at ``path``: a directory holding parquet files,
+    a ``_SUCCESS`` marker or a Delta log?"""
+    return os.path.isdir(path) and any(
+        f.endswith(".parquet") or f in ("_SUCCESS", "_delta_log")
+        for f in os.listdir(path)
+    )
+
+
+def swap_write(df: DataFrame, path: str) -> None:
+    """Write ``df`` as parquet to a uuid-suffixed sibling of ``path``,
+    then swap it in: readers never see a half-written table, and a plan
+    that reads the table it replaces (a merge) is computed before the
+    old data disappears."""
+    tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").parquet(tmp)
+    if os.path.isdir(path):
+        shutil.rmtree(path)
+    os.replace(tmp, path)
+
+
+def parquet_merge_upsert(
+    spark: SparkSession, path: str, new_rows: DataFrame, unique_key: str
+) -> DataFrame:
+    """Keyed upsert into the parquet table at ``path`` with MERGE
+    whenMatchedUpdateAll / whenNotMatchedInsertAll semantics: target rows
+    whose key is in ``new_rows`` are dropped (anti-join), ``new_rows``
+    are unioned in (``append_new_columns``: missing columns become
+    nulls) and the result is swapped in (``swap_write``, a full
+    rewrite). Returns the merged frame that was written. The one upsert
+    of the incremental materialization (``Materializer.merge_upsert``)
+    and the streaming silver merge (``streaming.write_silver_merge``)."""
+    target = spark.read.parquet(path)
+    kept = target.join(
+        new_rows.select(unique_key).distinct(), on=unique_key, how="left_anti"
+    )
+    merged = kept.unionByName(new_rows, allowMissingColumns=True)
+    swap_write(merged, path)
+    return merged
+
+
 class Materializer:
     """Writes/reads relations under ``warehouse_dir`` with medallion
     schema routing ``<target>_<suffix>.<name>`` (reference
@@ -67,14 +108,7 @@ class Materializer:
         return os.path.join(self.warehouse_dir, f"{self.target}_{schema_suffix}", name)
 
     def exists(self, name: str, schema_suffix: str) -> bool:
-        p = self.path(name, schema_suffix)
-        return os.path.isdir(p) and bool(
-            [
-                f
-                for f in os.listdir(p)
-                if f.endswith(".parquet") or f in ("_SUCCESS", "_delta_log")
-            ]
-        )
+        return table_exists(self.path(name, schema_suffix))
 
     def read(self, name: str, schema_suffix: str) -> DataFrame:
         return (
@@ -212,19 +246,15 @@ class Materializer:
 
         Delta targets use the native transactional MERGE — file-level
         rewrite of only the touched files, which is the whole point at
-        100 TB. Parquet targets emulate the row-level semantics with
-        anti-join + unionByName + atomic swap (full rewrite), then read
-        the result back with the merged frame's schema, which saves the
-        schema-inference job (``_read_back``)."""
+        100 TB. Parquet targets emulate the row-level semantics
+        (``parquet_merge_upsert``: anti-join + unionByName + atomic swap,
+        a full rewrite), then read the result back with the merged
+        frame's schema, which saves the schema-inference job
+        (``_read_back``)."""
         path = self.path(name, schema_suffix)
         if self.table_format == "delta":
             return self._merge_upsert_delta(path, name, new_rows, unique_key)
-        target = self.spark.read.parquet(path)
-        kept = target.join(
-            new_rows.select(unique_key).distinct(), on=unique_key, how="left_anti"
-        )
-        merged = kept.unionByName(new_rows, allowMissingColumns=True)
-        self._atomic_write(merged, path)
+        merged = parquet_merge_upsert(self.spark, path, new_rows, unique_key)
         return self._read_back(name, schema_suffix, merged)
 
     def _merge_upsert_delta(
@@ -251,11 +281,9 @@ class Materializer:
 
     # ---- internals ---------------------------------------------------------
     def _atomic_write(self, df: DataFrame, path: str) -> None:
-        """Write to a temp dir then swap — readers never see a half-written
-        table, and self-referencing plans (merge reads the table it
-        replaces) are computed before the old data disappears. Delta
-        writes are transactional via the log, so they overwrite in
-        place instead of directory-swapping."""
+        """Full-refresh write: parquet swaps a temp dir in
+        (``swap_write``); Delta writes are transactional via the log, so
+        they overwrite in place instead of directory-swapping."""
         if self.table_format == "delta":
             (
                 df.write.format("delta")
@@ -264,8 +292,4 @@ class Materializer:
                 .save(path)
             )
             return
-        tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.replace(tmp, path)
+        swap_write(df, path)

@@ -10,6 +10,8 @@ gated, and appended to the training corpus.
                                            not document bodies
     quality / language gates               same narrow expressions, per
                                            micro-batch
+    near-dup dedup (minhash_candidate_     foreachBatch against the standing
+    pairs → jaccard_pairs)                 MinHash index, the same chain
     corpus write                           append-mode file sink
 
 State note: exact dedup against ALL history needs one state entry per
@@ -22,10 +24,11 @@ dropDuplicates.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from dbt_datbricks_demo_spark.functions import broadcast_if_small
 from dbt_datbricks_demo_spark.operators import dedup, text
 
 DOC_SCHEMA = StructType(
@@ -107,162 +110,6 @@ def write_corpus_append(
     )
 
 
-# ---------------------------------------------------------------------------
-# Cross-batch NEAR-dup ingestion (foreachBatch + persistent signature store)
-# ---------------------------------------------------------------------------
-def neardup_ingest_batch_fn(
-    corpus_dir: str,
-    sig_store_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 8,
-    bands: int = 2,
-    shingle_k: int = 5,
-    jaccard_threshold: float = 0.9,
-):
-    """foreachBatch function for streaming ingestion that drops documents
-    NEAR-duplicating anything previously admitted — the streaming analog
-    of operators/corpus.clean_corpus step 4 (dropDuplicates only catches
-    byte-identical bodies).
-
-    The admitted-document SIGNATURE STORE persists as parquet rows
-    (id, content_hash, shingle-hash array, band keys): ~1 KB per doc
-    instead of the body, the same metadata the batch pipeline computes.
-    Per micro-batch:
-
-      1. within-batch exact dedup (lowest id wins) + exact cross-batch
-         dedup (anti-join on content_hash against the store);
-      2. near-dup candidates = band-key join (batch × store ∪ batch ×
-         batch, id-ordered), verified with exact Jaccard via
-         array_intersect on the staged shingle-hash arrays — no
-         explode, the arrays are already distinct hashes;
-      3. survivors append to the corpus and their signatures to the
-         store, both PARTITIONED BY BATCH ID with dynamic overwrite —
-         a replayed batch overwrites its own partition, so retries are
-         idempotent (the parquet stand-in for a Delta MERGE).
-
-    State growth is the store: O(admitted docs) × ~1 KB, a table scan
-    per batch. At 10¹¹ docs, bucket the store by band key so the
-    candidate join prunes (plans/bucketing.py) and compact it
-    periodically; the logic here is unchanged.
-    """
-    from dbt_datbricks_demo_spark.operators.dedup import (
-        content_hash,
-        lsh_band_keys,
-        with_minhash,
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        rows_per_band = num_hashes // bands
-
-        staged = with_minhash(
-            batch_df, text_col, num_hashes, shingle_k,
-            sig_col="_sig", keep_hashes="_hs",
-        )
-        staged = staged.withColumn("_ch", content_hash(text_col)).withColumn(
-            "_bands", lsh_band_keys("_sig", bands, rows_per_band)
-        )
-        # 1. within-batch exact dedup, lowest id wins
-        w_rn = F.row_number().over(Window.partitionBy("_ch").orderBy(id_col))
-        staged = staged.withColumn("_rn", w_rn).filter(F.col("_rn") == 1).drop("_rn")
-
-        try:
-            store = spark.read.parquet(sig_store_dir)
-        except Exception:  # first batch: empty store
-            store = None
-
-        if store is not None:
-            staged = staged.join(
-                store.select(F.col("content_hash").alias("_ch")).distinct(),
-                on="_ch",
-                how="left_anti",
-            )
-
-        # 2. near-dup candidates: batch vs store, plus batch vs batch
-        cand_b = staged.select(
-            F.col(id_col).alias("_bid"),
-            F.col("_hs").alias("_bhs"),
-            F.explode("_bands").alias("band_key"),
-        )
-        sides = []
-        if store is not None:
-            sides.append(
-                cand_b.join(
-                    store.select(
-                        F.col("hs").alias("_ohs"),
-                        F.explode(F.col("band_keys")).alias("band_key"),
-                    ),
-                    on="band_key",
-                )
-            )
-        older = staged.select(
-            F.col(id_col).alias("_oid"),
-            F.col("_hs").alias("_ohs"),
-            F.explode("_bands").alias("band_key"),
-        )
-        sides.append(
-            cand_b.join(older, on="band_key").filter(
-                F.col("_oid") < F.col("_bid")
-            ).drop("_oid")
-        )
-        cands = sides[0]
-        for s in sides[1:]:
-            cands = cands.unionByName(s)
-        inter = F.size(F.array_intersect("_bhs", "_ohs"))
-        union = F.size("_bhs") + F.size("_ohs") - inter
-        losers = (
-            cands.withColumn("_j", inter / F.nullif(union, F.lit(0)))
-            .filter(F.col("_j") >= jaccard_threshold)
-            .select(F.col("_bid").alias(id_col))
-            .distinct()
-        )
-        survivors = staged.join(losers, on=id_col, how="left_anti")
-
-        # 3. idempotent batch-partitioned appends (dynamic overwrite as
-        # a WRITER option — a session-level conf would leak into every
-        # later partitioned overwrite in this session)
-        (
-            survivors.select(id_col, text_col)
-            .withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(corpus_dir)
-        )
-        (
-            survivors.select(
-                F.col(id_col),
-                F.col("_ch").alias("content_hash"),
-                F.col("_hs").alias("hs"),
-                F.col("_bands").alias("band_keys"),
-            )
-            .withColumn("_batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch")
-            .parquet(sig_store_dir)
-        )
-
-    return process
-
-
-def write_corpus_neardup(
-    stream: DataFrame,
-    corpus_dir: str,
-    sig_store_dir: str,
-    checkpoint_dir: str,
-    **kwargs,
-):
-    """Near-dup-aware streaming sink: quality/language gates in-stream,
-    then foreachBatch ingestion against the signature store."""
-    return (
-        stream.writeStream.foreachBatch(
-            neardup_ingest_batch_fn(corpus_dir, sig_store_dir, **kwargs)
-        ).option("checkpointLocation", checkpoint_dir)
-    )
-
-
 def index_ingest_batch_fn(
     corpus_dir: str,
     index_path: str,
@@ -275,23 +122,29 @@ def index_ingest_batch_fn(
     compact_every: int = 0,
     compact_files_per_bucket: int = 0,
 ):
-    """foreachBatch ingestion that maintains the STANDING MinHash band
-    index (operators/dedup.write_minhash_index layout) instead of a
-    private signature store — so batch jobs (minhash_index_lookup /
-    index_candidate_pairs) and the streaming ingest share ONE index,
-    and the round-6 lifecycle ops run inside the stream. Per
-    micro-batch:
+    """foreachBatch ingestion that drops documents NEAR-duplicating an
+    earlier one — the streaming analog of operators/corpus.clean_corpus
+    step 4 (dropDuplicates only catches byte-identical bodies) — and
+    maintains the STANDING MinHash band index
+    (operators/dedup.write_minhash_index layout), so batch jobs
+    (minhash_index_lookup / index_candidate_pairs) and the streaming
+    ingest share ONE index, and the round-6 lifecycle ops run inside
+    the stream. Per micro-batch:
 
-      1. within-batch near-dup: band-key self-join (id-ordered),
-         verified with exact Jaccard on the staged shingle-hash
-         arrays. Exact duplicates need no separate pass — identical
-         text shares every band key and verifies at Jaccard 1.0.
-      2. batch-vs-corpus: candidates from the PARTITION-PRUNED
-         standing-index probe (index_candidate_pairs — which also
-         honors tombstones), then verification recomputes shingle
-         arrays ONLY for the candidate corpus docs (candidate-bounded
-         join against the corpus table; the index stays short rows,
-         bodies are never indexed).
+      1. candidates, on the batch near-dup chain: within-batch pairs
+         from dedup.minhash_candidate_pairs (id_a < id_b), and
+         batch-vs-corpus pairs from the PARTITION-PRUNED standing-index
+         probe (index_candidate_pairs — which also honors tombstones)
+         as (id_a = corpus_id, id_b = batch_id). Both sets are verified
+         in one dedup.jaccard_pairs over the batch's documents plus the
+         corpus table's, which builds shingle arrays ONLY for the
+         candidate documents (the index stays short rows, bodies are
+         never indexed). Wherever Jaccard reaches the threshold, id_b
+         loses: the higher id within the batch, the batch document
+         against the corpus whatever the ids. Exact duplicates need no
+         separate pass — identical text shares every band key and
+         verifies at Jaccard 1.0.
+      2. the survivors are materialized once for the two writes.
       3. survivors append to the corpus partitioned by batch id
          (dynamic overwrite — replays rewrite their own partition) and
          their postings append to the index
@@ -315,6 +168,10 @@ def index_ingest_batch_fn(
          advice: it would race a live compactor in another session) —
          pytest-gated in tests/test_streaming.py.
 
+    Document ids are the corpus key: a batch document whose id is
+    already in the corpus (a replayed batch) is the same document, and
+    the probe drops it as a self-match.
+
     State model at scale: the only driver-side state is the ≤32-value
     bucket list inside the probe; everything else is tables. The index
     grows O(admitted docs × bands) short rows; compaction keeps the
@@ -323,9 +180,9 @@ def index_ingest_batch_fn(
         MINHASH_BUCKET_COL,
         compact_minhash_index,
         index_candidate_pairs,
-        lsh_band_keys,
+        jaccard_pairs,
+        minhash_candidate_pairs,
         minhash_index_exists,
-        with_minhash,
         write_minhash_index,
     )
     from dbt_datbricks_demo_spark.operators.index_store import compaction_due
@@ -338,76 +195,44 @@ def index_ingest_batch_fn(
         # under the reader retry contract, write/delete/compact under
         # the writer lock. minhash_index_exists counts the crashed
         # mid-swap state as existing so the append path handles it.
-        rows_per_band = num_hashes // bands
-        staged = with_minhash(
-            batch_df, text_col, num_hashes, shingle_k,
-            sig_col="_sig", keep_hashes="_hs",
-        ).withColumn(
-            "_bands", lsh_band_keys("_sig", bands, rows_per_band)
-        ).localCheckpoint(eager=True)
+        # The batch is read by every step below: checkpointed lazily,
+        # its first action materializes it once.
+        batch = batch_df.select(id_col, text_col).localCheckpoint(eager=False)
 
-        # 1. within-batch near-dup (higher id loses to a verified
-        # lower-id near-dup; covers exact dups at Jaccard 1.0)
-        younger = staged.select(
-            F.col(id_col).alias("_bid"),
-            F.col("_hs").alias("_bhs"),
-            F.explode("_bands").alias("band_key"),
+        # 1. within-batch and batch-vs-corpus candidates, one
+        # verification
+        pairs = minhash_candidate_pairs(
+            batch, id_col, text_col, num_hashes, bands, shingle_k
         )
-        older = staged.select(
-            F.col(id_col).alias("_oid"),
-            F.col("_hs").alias("_ohs"),
-            F.explode("_bands").alias("band_key"),
-        )
-        inter = F.size(F.array_intersect("_bhs", "_ohs"))
-        union = F.size("_bhs") + F.size("_ohs") - inter
-        within_losers = (
-            younger.join(older, "band_key")
-            .filter(F.col("_oid") < F.col("_bid"))
-            .withColumn("_j", inter / F.nullif(union, F.lit(0)))
-            .filter(F.col("_j") >= jaccard_threshold)
-            .select(F.col("_bid").alias(id_col))
-            .distinct()
-        )
-        batch_kept = staged.join(within_losers, id_col, "left_anti")
-
-        # 2. batch-vs-corpus via the standing index, candidate-bounded
-        # verification against the corpus table
+        docs = batch
         if minhash_index_exists(index_path):
-            cands = index_candidate_pairs(
-                spark, index_path,
-                batch_kept.select(id_col, text_col),
+            cross = index_candidate_pairs(
+                spark, index_path, batch,
                 id_col=id_col, text_col=text_col,
                 k=shingle_k, num_hashes=num_hashes, bands=bands,
-            ).localCheckpoint(eager=True)
-            if cands.count():
-                corpus = spark.read.parquet(corpus_dir)
-                cand_docs = corpus.join(
-                    cands.select(
-                        F.col("corpus_id").alias(id_col)
-                    ).distinct(),
-                    id_col,
+            )
+            pairs = pairs.unionByName(
+                cross.select(
+                    F.col("corpus_id").alias("id_a"),
+                    F.col("batch_id").alias("id_b"),
                 )
-                cand_hs = with_minhash(
-                    cand_docs, text_col, num_hashes, shingle_k,
-                    sig_col="_sig", keep_hashes="_ohs",
-                ).select(F.col(id_col).alias("corpus_id"), "_ohs")
-                verified = (
-                    cands.join(cand_hs, "corpus_id")
-                    .join(
-                        batch_kept.select(
-                            F.col(id_col).alias("batch_id"),
-                            F.col("_hs").alias("_bhs"),
-                        ),
-                        "batch_id",
-                    )
-                    .withColumn("_j", inter / F.nullif(union, F.lit(0)))
-                    .filter(F.col("_j") >= jaccard_threshold)
-                    .select(F.col("batch_id").alias(id_col))
-                    .distinct()
-                )
-                batch_kept = batch_kept.join(verified, id_col, "left_anti")
+            )
+            # the corpus holds the batch's columns: read with their
+            # schema, no inference job
+            docs = batch.unionByName(
+                spark.read.schema(batch.schema)
+                .parquet(corpus_dir)
+                .select(id_col, text_col)
+            )
+        scored, n_pairs = jaccard_pairs(docs, pairs, id_col, text_col, shingle_k)
+        losers = scored.filter(F.col("jaccard") >= jaccard_threshold).select(
+            F.col("id_b").alias(id_col)
+        )
 
-        survivors = batch_kept.localCheckpoint(eager=True)
+        # 2. survivors, materialized once for the two writes
+        survivors = batch.join(
+            broadcast_if_small(losers, n_pairs), id_col, "left_anti"
+        ).localCheckpoint(eager=True)
 
         # 3. idempotent corpus append + index postings append. The
         # dynamic-overwrite mode is a WRITER option, not a session conf:
@@ -415,8 +240,7 @@ def index_ingest_batch_fn(
         # dynamic-mode commit skips the root _SUCCESS marker (the bug
         # the marker-independent minhash_index_exists guards against).
         (
-            survivors.select(id_col, text_col)
-            .withColumn("_batch", F.lit(batch_id))
+            survivors.withColumn("_batch", F.lit(batch_id))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")
             .partitionBy("_batch")
@@ -424,7 +248,7 @@ def index_ingest_batch_fn(
         )
         mode = "append" if minhash_index_exists(index_path) else "overwrite"
         write_minhash_index(
-            survivors.select(id_col, text_col), index_path,
+            survivors, index_path,
             id_col=id_col, text_col=text_col,
             k=shingle_k, num_hashes=num_hashes, bands=bands, mode=mode,
         )

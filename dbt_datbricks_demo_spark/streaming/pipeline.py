@@ -27,6 +27,11 @@ from pyspark.sql.streaming import DataStreamWriter
 
 from dbt_datbricks_demo_spark.config import RunConfig
 from dbt_datbricks_demo_spark.models.intermediate import _anomaly_flag
+from dbt_datbricks_demo_spark.plans.materialize import (
+    parquet_merge_upsert,
+    swap_write,
+    table_exists,
+)
 from dbt_datbricks_demo_spark.sources.seeds import SEED_SCHEMAS
 
 
@@ -164,29 +169,15 @@ def write_silver_merge(
 ) -> DataStreamWriter:
     """foreachBatch keyed upsert into a parquet silver table — the
     streaming analog of the incremental MERGE materialization (S6).
-    Each micro-batch updates matched keys and inserts new ones."""
-    import os
+    Each micro-batch updates matched keys and inserts new ones through
+    the materialization's own upsert (plans.materialize.
+    parquet_merge_upsert); the first batch creates the table."""
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if os.path.isdir(target_path) and any(
-            f.endswith(".parquet") or f == "_SUCCESS"
-            for f in os.listdir(target_path)
-        ):
-            target = spark.read.parquet(target_path)
-            kept = target.join(
-                batch.select(unique_key).distinct(), on=unique_key, how="left_anti"
-            )
-            merged = kept.unionByName(batch, allowMissingColumns=True)
+        if table_exists(target_path):
+            parquet_merge_upsert(batch.sparkSession, target_path, batch, unique_key)
         else:
-            merged = batch
-        tmp = target_path + "__tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        if os.path.isdir(target_path):
-            shutil.rmtree(target_path)
-        os.replace(tmp, target_path)
+            swap_write(batch, target_path)
 
     return (
         cleaned.writeStream.foreachBatch(upsert)

@@ -223,8 +223,15 @@ def main(argv: list[str] | None = None) -> int:
                 spark, index_dir, docs.filter(F.col("doc_id") % 17 == 3)
             ),
         )
+        # compaction returns file counts; the rows it retired are
+        # counted here, outside the timed stage
+        rows_before = spark.read.parquet(index_dir).count()
         stats = timed(
             "compact", lambda: dedup.compact_minhash_index(spark, index_dir)
+        )
+        stats.update(
+            rows_before=rows_before,
+            rows_after=spark.read.parquet(index_dir).count(),
         )
         if stats["rows_after"] >= stats["rows_before"]:
             raise SystemExit(f"compaction retired nothing: {stats}")

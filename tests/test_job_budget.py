@@ -1,7 +1,8 @@
 """Contracts on the Spark jobs and exchanges a query pays for: the
 work-sized _spread width, the single counted stage for candidate
-pairs, the jobs one clean_corpus build fires, the size-guarded
-broadcast rule, and literal_df's input checks."""
+pairs, the jobs one clean_corpus build fires, the jobs one streaming
+near-dup ingest micro-batch fires, the size-guarded broadcast rule,
+and literal_df's input checks."""
 
 from __future__ import annotations
 
@@ -226,7 +227,37 @@ def test_clean_corpus_build_job_budget(spark):
 
 
 # ---------------------------------------------------------------------------
-# (d) one size-guarded broadcast rule
+# (d) the jobs one streaming near-dup ingest micro-batch fires
+# ---------------------------------------------------------------------------
+# jobs one micro-batch fires against a non-empty standing index, AQE
+# stage jobs and the corpus and index writes included. It was 31 while
+# the ingest staged HOF signatures, verified its two candidate sets
+# with two inline Jaccard joins, and checkpointed and counted the
+# cross-batch candidates on their own.
+STREAM_INGEST_BATCH_JOBS = 20
+
+
+def test_index_ingest_micro_batch_job_budget(spark, tmp_path):
+    from dbt_datbricks_demo_spark.streaming.corpus import index_ingest_batch_fn
+
+    corpus_dir = str(tmp_path / "corpus")
+    fn = index_ingest_batch_fn(corpus_dir, str(tmp_path / "index"))
+    schema = "doc_id long, text string"
+    fn(spark.createDataFrame([_CORPUS_ROWS[0], _CORPUS_ROWS[3]], schema), 0)
+    batch = spark.createDataFrame(
+        # a near-dup of admitted 0, an exact copy of 3, one new document
+        [_CORPUS_ROWS[2], (7, _CORPUS_ROWS[3][1]),
+         (8, "a genuinely new document about columnar engines and indexes")],
+        schema,
+    )
+    _, jobs = _jobs_fired(spark, lambda: fn(batch, 1))
+    assert jobs <= STREAM_INGEST_BATCH_JOBS, jobs
+    admitted = {r["doc_id"] for r in spark.read.parquet(corpus_dir).collect()}
+    assert admitted == {0, 3, 8}
+
+
+# ---------------------------------------------------------------------------
+# (e) one size-guarded broadcast rule
 # ---------------------------------------------------------------------------
 def _small_side(spark, partitions: int = 1):
     return spark.range(0, 10, 1, partitions).withColumnRenamed("id", "k")

@@ -117,7 +117,8 @@ def test_minhash_signature_invariances(spark, a, b):
         [(0, a), (1, "  " + a.upper() + " "), (2, b)],
         "doc_id long, text string",
     )
-    staged = dedup.with_minhash(df, "text", num_hashes=4, k=3, sig_col="sig")
+    rows = dedup.shingle_hash_rows(df, "doc_id", "text", k=3)
+    staged = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=4, sig_col="sig")
     sigs = {r["doc_id"]: r["sig"] for r in staged.select("doc_id", "sig").collect()}
     assert sigs[0] == sigs[1]
     if a.strip().lower() == b.strip().lower():

@@ -392,8 +392,9 @@ def test_minhash_index_delete_and_compact_lifecycle(spark, tmp_path):
 
     # physical compaction: same probe result, tombstones retired, one
     # file per bucket directory, fewer files than the two generations
+    rows_before = spark.read.parquet(path).count()
     stats = dedup.compact_minhash_index(spark, path)
-    assert stats["rows_after"] < stats["rows_before"]
+    assert spark.read.parquet(path).count() < rows_before
     assert stats["files_after"] < stats["files_before"]
     assert index_store.tombstones(spark, path) is None
     for d in os.listdir(path):

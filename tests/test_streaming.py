@@ -233,61 +233,6 @@ def test_streaming_corpus_dedup_across_batches(spark, tmp_path):
     assert got2 == {1, 3, 7}  # 6 deduped against batch-1 state
 
 
-def test_streaming_corpus_neardup_across_batches(spark, tmp_path):
-    """Cross-batch NEAR-dup ingestion: a later batch's minor edit of an
-    admitted document is dropped via the persistent signature store,
-    while genuinely new documents are admitted."""
-    from dbt_datbricks_demo_spark.streaming.corpus import (
-        corpus_stream_cleaned,
-        read_document_stream,
-        write_corpus_neardup,
-    )
-
-    input_dir = tmp_path / "nd_in"
-    input_dir.mkdir()
-    corpus = str(tmp_path / "nd_corpus")
-    store = str(tmp_path / "nd_store")
-    ckpt = str(tmp_path / "nd_ckpt")
-
-    base = (
-        "the quick brown fox jumps over the lazy dog while the morning "
-        "sun rises slowly over the quiet green valley again today"
-    )
-    near = base.replace("quiet green valley", "quiet green valleys")
-    other = (
-        "completely different content about distributed query engines "
-        "and the columnar execution of analytical workloads at scale"
-    )
-
-    def run():
-        stream = corpus_stream_cleaned(read_document_stream(spark, str(input_dir)))
-        q = (
-            write_corpus_neardup(stream, corpus, store, ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    (input_dir / "b1.jsonl").write_text(
-        f'{{"doc_id": 1, "text": "{base}"}}\n'
-        f'{{"doc_id": 2, "text": "{base}"}}\n'  # in-batch exact dup
-    )
-    run()
-    got1 = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got1 == {1}
-
-    (input_dir / "b2.jsonl").write_text(
-        f'{{"doc_id": 3, "text": "{near}"}}\n'   # near-dup of admitted 1
-        f'{{"doc_id": 4, "text": "{other}"}}\n'  # genuinely new
-        f'{{"doc_id": 5, "text": "{base}"}}\n'   # exact cross-batch dup
-    )
-    run()
-    got2 = {r["doc_id"] for r in spark.read.parquet(corpus).collect()}
-    assert got2 == {1, 4}
-    # the store accumulated exactly the admitted docs' signatures
-    assert {r["doc_id"] for r in spark.read.parquet(store).collect()} == {1, 4}
-
-
 def test_streaming_corpus_pii_scrub(spark, tmp_path):
     """scrub_pii=True redacts at ingest; the dedup state keys on the RAW
     content hash, so a re-sent raw document still dedups against its
@@ -692,6 +637,125 @@ def test_streaming_domain_quota_across_batches(spark, tmp_path):
     }
 
 
+# A planted corpus for the standing-index ingest, one list per micro-
+# batch. Jaccard is over char-5 shingles. Batch 0: 11 near-dups 10 (within
+# the batch). Batch 1: 20 near-dups 50 and 21 is an exact copy of 10
+# (both across batches; 50 is older than 20 but has the higher id), 22
+# is an LSH candidate of 12 below the threshold (Jaccard 0.88). Batch 2:
+# 6 near-dups 5 (within), 1 near-dups 12 (across, older higher id).
+_IX_A = (
+    "the quick brown fox jumps over the lazy dog while the morning sun "
+    "rises slowly over the quiet green valley again today"
+)
+_IX_B = (
+    "completely different content about distributed query engines and "
+    "the columnar execution of analytical workloads at scale"
+)
+_IX_C = (
+    "a streaming ingest keeps the standing band index current as new "
+    "micro batches of documents arrive from the nightly crawl"
+)
+_IX_E = (
+    "exact jaccard verification over character shingles confirms every "
+    "candidate pair that the banded minhash signatures propose"
+)
+_IX_F = (
+    "sensor readings from the plant floor are cleaned enriched and "
+    "rolled up into hourly device health summaries for the dashboard"
+)
+IX_BATCHES = [
+    [(50, _IX_A), (10, _IX_B), (11, _IX_B.replace("at scale", "at scales")),
+     (12, _IX_C)],
+    [(20, _IX_A.replace("valley", "valleys")), (21, _IX_B),
+     (22, _IX_C.replace("as new", "while new")), (30, _IX_F)],
+    [(5, _IX_E), (6, _IX_E.replace("propose", "proposes")),
+     (1, _IX_C.replace("nightly", "nightly,"))],
+]
+
+
+def _char_shingles(text: str, k: int = 5) -> set[str]:
+    """dedup.char_shingles in Python: Spark's trim strips spaces only."""
+    norm = text.strip(" ").lower()
+    return {norm[i:i + k] for i in range(max(1, len(norm) - k + 1))}
+
+
+def _jaccard(a: str, b: str) -> float:
+    sa, sb = _char_shingles(a), _char_shingles(b)
+    return len(sa & sb) / len(sa | sb)
+
+
+def _reference_admission(batches, threshold: float = 0.9) -> list[set[int]]:
+    """Per batch, the ids it admits: a document loses to a lower-id
+    document of its own batch, or to any admitted earlier document,
+    whose exact Jaccard reaches the threshold."""
+    admitted: dict[int, str] = {}
+    per_batch = []
+    for batch in batches:
+        losers = {
+            j
+            for i, a in batch
+            for j, b in batch
+            if i < j and _jaccard(a, b) >= threshold
+        } | {
+            j
+            for j, b in batch
+            if any(_jaccard(c, b) >= threshold for c in admitted.values())
+        }
+        kept = {j: b for j, b in batch if j not in losers}
+        admitted.update(kept)
+        per_batch.append(set(kept))
+    return per_batch
+
+
+def test_index_ingest_admits_what_exact_jaccard_admits(spark, tmp_path):
+    """Three file micro-batches stream through the standing-index
+    ingest. Each batch admits exactly what exact char-5-shingle Jaccard
+    admits: the higher id of a within-batch near-dup loses, and a batch
+    document near-duplicating an admitted one loses whatever the ids."""
+    import json
+    import os
+    import time
+
+    from dbt_datbricks_demo_spark.streaming.corpus import (
+        read_document_stream,
+        write_corpus_index_ingest,
+    )
+
+    want = _reference_admission(IX_BATCHES)
+    assert want == [{50, 10, 12}, {22, 30}, {5}]
+
+    input_dir = tmp_path / "adm_in"
+    input_dir.mkdir()
+    corpus = str(tmp_path / "adm_corpus")
+    index = str(tmp_path / "adm_index")
+    # one file per micro-batch, in modification-time order
+    t0 = time.time() - 60
+    for b, rows in enumerate(IX_BATCHES):
+        path = input_dir / f"b{b}.jsonl"
+        path.write_text(
+            "".join(
+                json.dumps({"doc_id": i, "text": t}) + "\n" for i, t in rows
+            )
+        )
+        os.utime(path, (t0 + b, t0 + b))
+    q = (
+        write_corpus_index_ingest(
+            read_document_stream(spark, str(input_dir)),
+            corpus, index, str(tmp_path / "adm_ckpt"),
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+
+    got = [set() for _ in IX_BATCHES]
+    for r in spark.read.parquet(corpus).collect():
+        got[r["_batch"]].add(r["doc_id"])
+    assert got == want
+    postings = spark.read.parquet(index).select("doc_id").distinct()
+    assert {r["doc_id"] for r in postings.collect()} == set().union(*want)
+
+
 def test_streaming_index_ingest_maintains_standing_index(spark, tmp_path):
     """Round-6 lifecycle in-stream: the ingest maintains the SHARED
     standing MinHash index (write_minhash_index layout) — within-batch
@@ -833,8 +897,8 @@ def test_index_compaction_crash_recovery_all_windows(spark, tmp_path):
     readable_and_equal()
 
     # a fresh compaction over the recovered index converges
-    stats = dedup.compact_minhash_index(spark, index)
-    assert stats["rows_after"] == len(want)
+    dedup.compact_minhash_index(spark, index)
+    assert spark.read.parquet(index).count() == len(want)
     readable_and_equal()
     # and the streaming ingest's per-batch recovery call makes the
     # RESTART path concrete: simulate the between-renames crash again,
@@ -979,8 +1043,8 @@ def test_streaming_ann_index_ingest_matches_batch_built(spark, tmp_path):
     # deleted ids retired physically, probes reflect the delete
     victim = want[0][1]
     similarity.delete_from_batch_ivfpq_index(spark, idx, [victim])
-    stats = similarity.compact_batch_ivfpq_index(spark, idx)
-    assert stats["rows_after"] == 119
+    similarity.compact_batch_ivfpq_index(spark, idx)
+    assert spark.read.parquet(idx).count() == 119
     after = probe(idx)
     assert all(v != victim for _, v, _, _ in after)
 
