@@ -75,6 +75,3 @@ class RunConfig:
                 out, thresholds=dataclasses.replace(out.thresholds, **thr)
             )
         return out
-
-
-DEFAULT_THRESHOLDS = Thresholds()

@@ -138,83 +138,24 @@ def exact_dedup(
     )
 
 
-def char_shingles(col: Column | str, k: int = 5) -> Column:
-    """Distinct character k-shingles of normalized text — the unit set for
-    MinHash/Jaccard. Array stays JVM-side."""
-    c = F.trim(F.lower(F.col(col) if isinstance(col, str) else col))
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(1), F.greatest(F.lit(1), F.length(c) - (k - 1))),
-            lambda i: c.substr(i, F.lit(k)),
-        )
-    )
-
-
-def shingle_hashes(col: Column | str, k: int = 5) -> Column:
-    """Each distinct shingle → 31-bit integer (one md5 per shingle).
-    Pure-expression form for tiny inputs; the scan path is
-    shingle_hash_rows."""
-    return F.transform(
-        char_shingles(col, k), lambda s: md5_int32(s) % F.lit(MERSENNE31)
-    )
-
-
-def _minhash_slots(hs: Column, num_hashes: int) -> list[Column]:
-    """One array_min-of-affine-permutation per signature slot, reading a
-    (preferably staged) shingle-hash array. Products stay < 2^62 — no
-    64-bit overflow on any engine."""
-
-    def perm(a: int, b: int):
-        # closure factory: F.transform inspects lambda arity, so the
-        # constants must be captured, not passed as default args
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(MERSENNE31)
-
-    return [
-        F.array_min(F.transform(hs, perm(a, b)))
-        for a, b in _affine_params(num_hashes)
-    ]
-
-
-def minhash_signature(col: Column | str, num_hashes: int = 8, k: int = 5) -> Column:
-    """MinHash signature as an array<bigint> of length num_hashes.
-
-    Pure-expression form — each slot re-derives the shingle hashes, so
-    only use this where the input is tiny or the expression is consumed
-    once; the scan path is shingle_hash_rows → minhash_sigs_from_rows.
-    """
-    return F.array(*_minhash_slots(shingle_hashes(col, k), num_hashes))
-
-
-def lsh_band_keys(
-    sig_col: Column | str, bands: int, rows_per_band: int
-) -> Column:
+def lsh_band_keys(sig_col: str, bands: int, rows_per_band: int) -> Column:
     """Array of per-band bucket keys: md5 over the band's slice of the
-    signature (prefixed with the band index). sig_col should be a staged
-    attribute, not a nested signature expression.
+    signature (prefixed with the band index). ``sig_col`` names a staged
+    signature attribute.
 
-    Passing the attribute NAME (str) builds the whole tree as one
-    JVM-parsed expression string: the per-node py4j construction of the
-    Column form costs ~0.6 s of driver time per build at the tier-2
-    geometry (96 element_at/cast round trips), re-paid on every run."""
-    if isinstance(sig_col, str):
-        keys = []
-        for b in range(bands):
-            lo = b * rows_per_band
-            parts = [f"'{b}'"] + [
-                f"cast(element_at({sig_col}, {lo + r + 1}) as string)"
-                for r in range(rows_per_band)
-            ]
-            keys.append(f"md5(concat_ws('-', {', '.join(parts)}))")
-        return F.expr(f"array({', '.join(keys)})")
+    The whole tree is one JVM-parsed expression string: building it
+    node by node through py4j costs ~0.6 s of driver time per build at
+    the tier-2 geometry (96 element_at/cast round trips), re-paid on
+    every run."""
     keys = []
     for b in range(bands):
         lo = b * rows_per_band
-        parts = [F.lit(str(b))] + [
-            F.element_at(sig_col, lo + r + 1).cast("string")
+        parts = [f"'{b}'"] + [
+            f"cast(element_at({sig_col}, {lo + r + 1}) as string)"
             for r in range(rows_per_band)
         ]
-        keys.append(F.md5(F.concat_ws("-", *parts)))
-    return F.array(*keys)
+        keys.append(f"md5(concat_ws('-', {', '.join(parts)}))")
+    return F.expr(f"array({', '.join(keys)})")
 
 
 def shingle_hash_rows(
@@ -255,9 +196,9 @@ def minhash_sigs_from_rows(
     """MinHash signatures from shingle-hash ROWS: one groupBy with
     num_hashes min-aggregates. Map-side partial aggregation reduces each
     partition to its doc count before the exchange — the signature
-    shuffle carries |docs| × num_hashes bigints. Values are identical to
-    the array-form minhash (same affine permutations over the same
-    hashes; duplicates cannot change a min)."""
+    shuffle carries |docs| × num_hashes bigints. Occurrence rows give
+    the MinHash of the distinct shingle set: duplicates cannot change a
+    min."""
     # ONE JVM-parsed aggregate expression building the signature array
     # directly: the previous per-slot construction (96 py4j min-agg
     # trees + a 96-column agg + a 96-element array select) cost 1.28 s
@@ -332,8 +273,19 @@ def jaccard_pairs(
     counted); that count bounds both broadcast guards downstream, so
     neither candidate_hash_arrays nor jaccard_pairs_from_hashes counts
     again. Distinct-shingle arrays are built only for the candidate
-    documents."""
+    documents, and not at all when there are none: the count is then
+    the only job."""
     pairs, n_pairs = counted(pairs)
+    if n_pairs == 0:
+        zero = F.lit(0)
+        return pairs.select(
+            "id_a",
+            "id_b",
+            zero.alias("n_common"),
+            zero.alias("size_a"),
+            zero.alias("size_b"),
+            F.lit(0.0).alias("jaccard"),
+        ), 0
     hashed = candidate_hash_arrays(
         df, pairs, id_col, text_col, k, n_pairs=n_pairs
     )
@@ -665,14 +617,6 @@ def _simhash_from_hashes(hs: Column) -> Column:
     return out
 
 
-def simhash32(col: Column | str) -> Column:
-    """32-bit SimHash over whitespace tokens (pure-expression form; the
-    scan path is with_simhash, which tokenizes once per row instead of
-    once per bit). Near-duplicate documents differ in a small number of
-    bits (compare via Hamming distance)."""
-    return _simhash_from_hashes(F.transform(tokens(col), lambda t: md5_int32(t)))
-
-
 def with_simhash(
     df: DataFrame, text_col: str = "text", out: str = "simhash"
 ) -> DataFrame:
@@ -951,8 +895,10 @@ def index_candidate_pairs(
     probe-cell routing — prune the index scan to matching directories
     (PartitionFilters, plan-pinned), and the equi-join on band_key is a
     size-guarded broadcast of the batch postings with a shuffled
-    fallback. Self-matches (a batch doc already in the index under the
-    same id) are dropped.
+    fallback. Only the join side carries the broadcast hint: a hint on
+    the frame the bucket read scans sits outside any join, which Spark
+    logs as a hint error. Self-matches (a batch doc already in the index
+    under the same id) are dropped.
 
     Recovery runs first (round-8 advice item): a crash BETWEEN the
     compaction swap renames leaves no directory at index_path, and a
@@ -964,7 +910,7 @@ def index_candidate_pairs(
     compaction running in ANOTHER session can swap the directory away
     between our recovery and the read — retry once through recovery."""
     index_store.recover(index_path)
-    probe = broadcast_if_small(
+    probe, n_postings = counted(
         _band_postings(
             batch, id_col, text_col, k, num_hashes, bands
         ).withColumnRenamed(id_col, "batch_id")
@@ -980,7 +926,7 @@ def index_candidate_pairs(
     )
     idx = index_store.without_tombstoned(spark, index_path, idx, id_col)
     return (
-        idx.join(probe, "band_key")
+        idx.join(broadcast_if_small(probe, n_postings), "band_key")
         .filter(F.col("batch_id") != F.col(id_col))
         .select("batch_id", F.col(id_col).alias("corpus_id"))
         .distinct()

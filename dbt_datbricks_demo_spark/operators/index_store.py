@@ -210,11 +210,9 @@ def write(
     (mode='append') index rows, hive-partitioned by ``part_col``.
     Writer-writer: an append racing a compaction would land rows in the
     old tree and lose them to the swap, so it holds the lock."""
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
     with index_write_lock(index_path, owner):
         recover(index_path)
-        write_partitioned(rows, index_path, part_col, mode=mode)
+        rows.write.mode(mode).partitionBy(part_col).parquet(index_path)
 
 
 def delete(spark, index_path: str, ids, id_col: str, owner: str) -> None:
@@ -273,8 +271,6 @@ def compact(
     by read_with_retry. Writer-writer: two compactions interleaving
     their renames can rmtree the only valid copy, and an append or
     delete mid-swap loses rows, so it holds the lock."""
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
     with index_write_lock(index_path, owner):
         recover(index_path)
         rows = spark.read.parquet(index_path)
@@ -285,7 +281,7 @@ def compact(
         base = index_path.rstrip("/")
         tmp, old = base + ".compacting", base + ".old"
         shutil.rmtree(tmp, ignore_errors=True)
-        write_partitioned(kept, tmp, part_col)
+        kept.write.mode("overwrite").partitionBy(part_col).parquet(tmp)
         files_before, files_after = _nfiles(index_path), _nfiles(tmp)
         os.rename(index_path, old)
         os.rename(tmp, index_path)

@@ -22,7 +22,7 @@ training-data-pipeline extension surface.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
@@ -63,73 +63,3 @@ def residual_pii_count(col: Column | str) -> Column:
     for _, pat, _ in PII_PATTERNS:
         out = out + F.regexp_count(c, F.lit(pat))
     return out
-
-
-def pii_report(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Per-document PII audit: counts per class, redacted text, and the
-    residual count after redaction (0 proves the scrub)."""
-    counts = pii_counts(text_col)
-    redacted = redact_pii(text_col)
-    return df.select(
-        F.col(id_col),
-        *[c.alias(f"n_{name}") for name, c in counts.items()],
-        redacted.alias("redacted_text"),
-        residual_pii_count(redacted).alias("n_residual"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Column-tag-driven masking (governance layer)
-# ---------------------------------------------------------------------------
-# Databricks/Unity-style column masking re-expressed engine-side: a
-# model declares per-column sensitivity tags; masked_view applies the
-# matching mask expression and returns a DataFrame safe to expose as a
-# view. Masking is a narrow projection — zero shuffles, free at scale.
-
-MASKS = {
-    # scrub PII classes inside free text
-    "pii_text": lambda c, salt: redact_pii(c),
-    # keyed pseudonymous join key: sha2(salt || value) keeps equality
-    # semantics within one salt while a brute-force dictionary over a
-    # guessable domain (phones, emails, sequential ids) is useless
-    # without the salt. NOT irreversible for the salt holder — this is
-    # linkable pseudonymization, not anonymization.
-    "pseudonymize": lambda c, salt: F.sha2(
-        F.concat(F.lit(salt), c.cast("string")), 256
-    ),
-    # drop the value entirely, keep the column shape
-    "redact_full": lambda c, salt: F.lit("[REDACTED]"),
-    # keep only the last 4 characters (card/phone-tail style)
-    "mask_prefix": lambda c, salt: F.concat(
-        F.lit("****"), F.substring(c.cast("string"), -4, 4)
-    ),
-}
-
-
-def masked_view(
-    df: DataFrame, tags: dict[str, str], salt: str = ""
-) -> DataFrame:
-    """Apply per-column masks by tag: ``tags`` maps column name → mask
-    name from MASKS. Untagged columns pass through; unknown tags or
-    columns raise immediately (a silent no-op mask is a data leak).
-
-    ``salt`` keys the ``pseudonymize`` mask (inject a per-deployment
-    secret from config); the default empty salt degrades to unsalted
-    hashing and should only be used where linkability is acceptable."""
-    unknown_cols = [c for c in tags if c not in df.columns]
-    if unknown_cols:
-        raise ValueError(f"masked_view: no such columns {unknown_cols}")
-    unknown_tags = [t for t in tags.values() if t not in MASKS]
-    if unknown_tags:
-        raise ValueError(
-            f"masked_view: unknown mask tags {unknown_tags}; "
-            f"available: {sorted(MASKS)}"
-        )
-    return df.select(
-        *[
-            MASKS[tags[c]](F.col(c), salt).alias(c) if c in tags else F.col(c)
-            for c in df.columns
-        ]
-    )

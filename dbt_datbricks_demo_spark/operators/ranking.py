@@ -91,34 +91,3 @@ def ntile_report(
             F.max(value_col).alias("max_value"),
         )
     )
-
-
-def with_distributed_ntile(
-    df: DataFrame,
-    value_col: str,
-    tie_col: str,
-    k: int = 10,
-    out: str = "bucket",
-) -> DataFrame:
-    """Per-row ntile(k) over (value, tie_col) order, distributed: rank
-    within the tie group (window partitioned BY VALUE), plus the
-    histogram's cumulative offset (broadcast join on value), gives the
-    global rank; the bucket follows from exact interval math. Matches
-    ``ntile(k) over (order by value, tie_col)`` row for row. Skew bound:
-    the largest tie group, not the dataset."""
-    w_tie = Window.partitionBy(value_col).orderBy(tie_col)
-    ranked = df.withColumn("_vrn", F.row_number().over(w_tie))
-    hist = _histogram_with_offsets(df, value_col).drop("_cnt")
-    joined = ranked.join(F.broadcast(hist), value_col)
-    rank = F.col("_cum_before") + F.col("_vrn")
-    n = F.col("_n_total")
-    q, r = F.floor(n / k), n % k
-    # invert the bucket→interval map: ranks 1..r(q+1) fall in the first r
-    # (q+1)-sized buckets, the rest in q-sized buckets after them
-    in_big = rank <= r * (q + 1)
-    bucket = F.when(in_big, F.floor((rank - 1) / (q + 1)) + 1).otherwise(
-        r + F.floor((rank - 1 - r * (q + 1)) / q) + 1
-    )
-    return joined.withColumn(out, bucket.cast("int")).drop(
-        "_vrn", "_cum_before", "_n_total"
-    )

@@ -28,8 +28,6 @@ would materialize term_doc_freqs once and reuse it across queries.
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -133,103 +131,6 @@ def bm25_scores(
     )
     stats = corpus_stats(df, text_col=text_col)
     return _score_and_fold(post, dfs, stats, id_col, k1, b, idf_mode)
-
-
-TERM_BUCKET_COL = "term_bucket"
-TERM_BUCKETS = 256
-
-
-def term_bucket(term: Column | str, n_buckets: int = TERM_BUCKETS) -> Column:
-    """Stable term → directory bucket (md5 prefix mod n): the postings
-    index partition key. Content-derived, so every writer/reader/engine
-    agrees without coordination."""
-    c = F.col(term) if isinstance(term, str) else term
-    return (
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint") % n_buckets
-    )
-
-
-def write_search_index(
-    df: DataFrame,
-    path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = TERM_BUCKETS,
-) -> None:
-    """Materialize the standing search index for a corpus version:
-
-    - `<path>/postings`: the FULL (doc, term, tf, dl) table, hive-
-      partitioned by term bucket — a query for any term set reads only
-      its buckets via PartitionFilters (directory pruning), never the
-      whole postings table;
-    - `<path>/dfs`: per-term document frequencies (same bucket layout);
-    - `<path>/stats`: the 1-row (n_docs, avgdl).
-
-    This is the search analog of write_ivf_index: pay the corpus explode
-    + one shuffle once at write time; every subsequent query is bucket-
-    pruned reads + broadcast joins. At 100 TB the postings table is
-    ~|tokens| rows of short fixed-width data, and per-term access cost
-    is |postings(term's bucket)| — independent of corpus width."""
-    toks = df.select(
-        F.col(id_col),
-        F.size(tokens(text_col)).cast("bigint").alias("dl"),
-        F.explode(tokens(text_col)).alias("term"),
-    )
-    post = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("tf"), F.first("dl").alias("dl"))
-        .withColumn(TERM_BUCKET_COL, term_bucket("term", n_buckets))
-    )
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
-    write_partitioned(post, f"{path}/postings", TERM_BUCKET_COL)
-    dfs = (
-        post.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("doc_freq"))
-        .withColumn(TERM_BUCKET_COL, term_bucket("term", n_buckets))
-    )
-    write_partitioned(dfs, f"{path}/dfs", TERM_BUCKET_COL)
-    corpus_stats(df, text_col=text_col).write.mode("overwrite").parquet(
-        f"{path}/stats"
-    )
-
-
-def bm25_indexed_topk(
-    spark,
-    index_path: str,
-    query_terms: list[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-    k1: float = K1,
-    b: float = B,
-    idf_mode: str = "log",
-    n_buckets: int = TERM_BUCKETS,
-) -> DataFrame:
-    """BM25 top-k against a write_search_index layout. The term-bucket
-    predicate is a PartitionFilter (directory pruning, plan-pinned in
-    tests) and the residual term filter prunes within the bucket files
-    via parquet min-max stats; scoring and the sorted fold match
-    bm25_topk exactly."""
-    buckets = sorted(
-        {
-            int(hashlib.md5(t.encode()).hexdigest()[:8], 16) % n_buckets
-            for t in query_terms
-        }
-    )
-    post = (
-        spark.read.parquet(f"{index_path}/postings")
-        .filter(F.col(TERM_BUCKET_COL).isin(buckets))
-        .filter(F.col("term").isin(list(query_terms)))
-    )
-    dfs = (
-        spark.read.parquet(f"{index_path}/dfs")
-        .filter(F.col(TERM_BUCKET_COL).isin(buckets))
-        .filter(F.col("term").isin(list(query_terms)))
-        .select("term", "doc_freq")
-    )
-    stats = spark.read.parquet(f"{index_path}/stats")
-    folded = _score_and_fold(post, dfs, stats, id_col, k1, b, idf_mode)
-    return folded.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
 
 
 def bm25_topk(

@@ -162,10 +162,10 @@ def write_ivf_index(
     the point of IVF — a query probing nprobe of |cells| directories
     reads nprobe/|cells| of the data, enforced by the planner's
     partition pruning, not by a filter over a full scan."""
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
     cell = ivf_assign(F.col(vec_col), centroids)
-    write_partitioned(df.withColumn(IVF_CELL_COL, cell), path, IVF_CELL_COL)
+    df.withColumn(IVF_CELL_COL, cell).write.mode("overwrite").partitionBy(
+        IVF_CELL_COL
+    ).parquet(path)
 
 
 def ivf_index_topk(
@@ -914,8 +914,6 @@ def write_ivfpq_index(
     pruning, and what it reads is 4-byte codes instead of 256-byte
     float vectors (the 64× scan reduction on top of the pruning).
     Encoding is one narrow zero-shuffle codegen pass."""
-    from dbt_datbricks_demo_spark.plans.bucketing import write_partitioned
-
     cell = ivf_assign(F.col(vec_col), coarse)
     codes = pq_encode(F.col(vec_col), books)
     staged = df.select(
@@ -924,7 +922,7 @@ def write_ivfpq_index(
         pq_pack(codes, len(books[0])).alias("pq_code"),
         cell.alias(IVFPQ_CELL_COL),
     )
-    write_partitioned(staged, path, IVFPQ_CELL_COL)
+    staged.write.mode("overwrite").partitionBy(IVFPQ_CELL_COL).parquet(path)
 
 
 BATCH_SUB_COL = "sub_bucket"

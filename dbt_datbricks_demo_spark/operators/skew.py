@@ -1,14 +1,9 @@
-"""Skew mitigation: salted joins and two-phase salted aggregation.
+"""Skew mitigation: two-phase salted aggregation.
 
 AQE's skew-join splitting (enabled in session.py) handles most runtime
-skew by splitting oversized shuffle partitions; these helpers cover the
-cases AQE can't:
-  * a HOT KEY in a shuffle join where one reducer would receive a large
-    fraction of all rows (AQE splits the partition but every split still
-    joins against the same build rows) — salt the probe side, replicate
-    the build side;
-  * a high-skew groupBy where one group dominates a reducer — aggregate
-    in two phases over (key, salt) then key.
+skew by splitting oversized shuffle partitions; this covers the case
+AQE can't: a high-skew groupBy where one group dominates a reducer —
+aggregate in two phases over (key, salt) then key.
 
 Salts are DETERMINISTIC (hash of a row-unique column, not rand()), so
 plans stay reproducible and retries/speculative tasks see stable data.
@@ -29,46 +24,6 @@ def with_salt(df: DataFrame, from_col: str, buckets: int) -> DataFrame:
     return df.withColumn(
         SALT_COL, F.pmod(F.hash(F.col(from_col)), F.lit(buckets)).cast("int")
     )
-
-
-def replicate_salts(df: DataFrame, buckets: int) -> DataFrame:
-    """Build-side counterpart: replicate every row once per salt value so
-    the salted probe side finds its match in every salt bucket. Costs
-    |build| × buckets rows — use for the small side of a skewed join."""
-    return df.withColumn(
-        SALT_COL, F.explode(F.array(*[F.lit(i) for i in range(buckets)]))
-    )
-
-
-SALT_SAFE_JOINS = frozenset({"inner", "left", "left_outer", "left_semi", "left_anti"})
-
-
-def salted_join(
-    probe: DataFrame,
-    build: DataFrame,
-    on: str | list[str],
-    buckets: int,
-    probe_salt_from: str,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-safe equi-join: probe salted, build replicated, join on
-    (keys..., salt). Result rows identical to the unsalted join; the hot
-    key's work is spread across `buckets` reducers instead of one.
-
-    Only probe-preserving join types are allowed: in a right/full outer
-    join an unmatched BUILD row surfaces once per salt replicate
-    (`buckets` duplicates), so those types are rejected rather than
-    silently wrong — salt the other side instead."""
-    if how not in SALT_SAFE_JOINS:
-        raise ValueError(
-            f"salted_join supports {sorted(SALT_SAFE_JOINS)}; got {how!r}. "
-            "Right/full-outer would emit unmatched build rows once per "
-            "salt replicate — swap the sides instead."
-        )
-    keys = [on] if isinstance(on, str) else list(on)
-    p = with_salt(probe, probe_salt_from, buckets)
-    b = replicate_salts(build, buckets)
-    return p.join(b, on=keys + [SALT_COL], how=how).drop(SALT_COL)
 
 
 def salted_aggregate(

@@ -551,39 +551,6 @@ def remove_duplicate_spans(
 # ---------------------------------------------------------------------------
 # Bigram LM with stupid backoff (held-out scoring)
 # ---------------------------------------------------------------------------
-def bigram_rows(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Adjacent word-pair rows (w1, w2) per document, built by exploding
-    the POSITION sequence and indexing the token array per row — the
-    codegen-safe shape of word_gram_rows (no interpreted transform()
-    lambda on the corpus path). Docs with < 2 tokens yield no rows."""
-    t = tokens(text_col)
-    return (
-        df.select(
-            F.col(id_col),
-            *[F.col(c) for c in keep_cols],
-            t.alias("_t"),
-        )
-        .filter(F.size("_t") >= 2)
-        .select(
-            id_col,
-            *keep_cols,
-            F.explode(
-                F.sequence(F.lit(1), F.size("_t") - 1)
-            ).alias("_i"),
-            F.col("_t"),
-        )
-        .select(
-            id_col,
-            *keep_cols,
-            F.element_at("_t", F.col("_i")).alias("w1"),
-            F.element_at("_t", F.col("_i") + 1).alias("w2"),
-        )
-    )
 
 
 def bigram_backoff_nll(

@@ -120,10 +120,7 @@ class Materializer:
         """Read a table just written from ``written`` with that frame's
         schema: the files hold exactly it, and without a schema Spark
         fires one job per read to infer it from the parquet footers.
-        Delta rejects a user schema, so it infers. The partitioned,
-        ``insert_overwrite`` and existing-table ``append`` paths use
-        ``read`` and infer, because their on-disk column order or schema
-        is not the written frame's."""
+        Delta rejects a user schema, so it infers."""
         if self.table_format == "parquet":
             out = self.spark.read.schema(written.schema).parquet(
                 self.path(name, schema_suffix)
@@ -140,8 +137,7 @@ class Materializer:
 
     def as_table(self, name: str, schema_suffix: str, df: DataFrame) -> DataFrame:
         """Full refresh: write ``df``, then read it back with ``df``'s
-        schema, which saves the schema-inference job (``_read_back``
-        lists the paths that still infer)."""
+        schema, which saves the schema-inference job (``_read_back``)."""
         self._atomic_write(df, self.path(name, schema_suffix))
         return self._read_back(name, schema_suffix, df)
 
@@ -151,92 +147,6 @@ class Materializer:
         file skipping (SURVEY.md §4)."""
         return self.read(name, schema_suffix).agg(F.max(col).alias("m")).first()["m"]
 
-    def as_partitioned_table(
-        self,
-        name: str,
-        schema_suffix: str,
-        df: DataFrame,
-        partition_by: list[str],
-    ) -> DataFrame:
-        """Table materialization with hive-style partition layout
-        (dbt-databricks ``partition_by`` config). At 100 TB this is what
-        makes downstream predicate-on-partition-key queries prune files
-        instead of scanning the world: the read path gets
-        PartitionFilters, asserted in tests/test_materialize_strategies.
-        """
-        path = self.path(name, schema_suffix)
-        tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
-        if os.path.isdir(path):
-            shutil.rmtree(path)
-        os.replace(tmp, path)
-        out = self.read(name, schema_suffix)
-        out.createOrReplaceTempView(name)
-        return out
-
-    def insert_overwrite(
-        self,
-        name: str,
-        schema_suffix: str,
-        new_rows: DataFrame,
-        partition_by: str,
-    ) -> DataFrame:
-        """Incremental strategy ``insert_overwrite`` (dbt-databricks):
-        atomically replace exactly the partitions present in
-        ``new_rows``; untouched partitions are never read or rewritten.
-        This is the canonical 100-TB incremental pattern for
-        append-mostly, late-arriving data keyed by a date/hour column —
-        no row-level MERGE shuffle, and reprocessing a day is
-        idempotent. Equivalent to Spark's dynamic partitionOverwriteMode
-        on a partitioned table; implemented here as a per-partition
-        directory swap so it works on plain parquet."""
-        path = self.path(name, schema_suffix)
-        if not self.exists(name, schema_suffix):
-            return self.as_partitioned_table(
-                name, schema_suffix, new_rows, [partition_by]
-            )
-        tmp = f"{path}__tmp_{uuid.uuid4().hex[:8]}"
-        new_rows.write.mode("overwrite").partitionBy(partition_by).parquet(tmp)
-        # Swap the partition directories Spark ACTUALLY wrote. Formatting
-        # collected values as f"{col}={val}" does not survive hive
-        # escaping (':' → %3A, NULL → __HIVE_DEFAULT_PARTITION__) and a
-        # mismatch would silently drop the new partition while stale
-        # target data lives on.
-        swapped = 0
-        for part_dir in os.listdir(tmp):
-            if not part_dir.startswith(f"{partition_by}="):
-                continue
-            src, dst = os.path.join(tmp, part_dir), os.path.join(path, part_dir)
-            if not os.path.isdir(src):
-                continue
-            if os.path.isdir(dst):
-                shutil.rmtree(dst)
-            os.replace(src, dst)
-            swapped += 1
-        shutil.rmtree(tmp, ignore_errors=True)
-        if swapped == 0 and new_rows.limit(1).count() > 0:
-            raise RuntimeError(
-                f"insert_overwrite: no '{partition_by}=' partition dirs "
-                f"found in staged write for non-empty increment ({name})"
-            )
-        out = self.read(name, schema_suffix)
-        out.createOrReplaceTempView(name)
-        return out
-
-    def append(
-        self, name: str, schema_suffix: str, new_rows: DataFrame
-    ) -> DataFrame:
-        """Incremental strategy ``append`` (dbt-databricks): write new
-        files into the existing table directory without reading or
-        rewriting any existing data — the cheapest possible increment
-        for insert-only event streams (no keys, no partitions)."""
-        path = self.path(name, schema_suffix)
-        if not self.exists(name, schema_suffix):
-            return self.as_table(name, schema_suffix, new_rows)
-        new_rows.write.mode("append").parquet(path)
-        out = self.read(name, schema_suffix)
-        out.createOrReplaceTempView(name)
-        return out
 
     def merge_upsert(
         self, name: str, schema_suffix: str, new_rows: DataFrame, unique_key: str

@@ -23,9 +23,7 @@ batch between the OPEN slice and the incoming batch — closed history is
 a pass-through union that a table format (Delta MERGE) would never even
 rewrite, and the open slice is bounded by the number of live keys, not
 by history length. No window over the snapshot table, no broadcast of
-anything O(history). Bucketing the snapshot table by ``unique_key``
-(plans/bucketing.py) makes the per-batch join exchange-free on the
-snapshot side.
+anything O(history).
 """
 
 from __future__ import annotations

@@ -30,10 +30,6 @@ from dbt_datbricks_demo_spark.queries.inventory import (
 # normalized text / tokens / shingle hashes exactly mirroring operators.text
 _SQL_NORM = "trim(lower(text))"
 _SQL_TOKENS = f"string_split_regex({_SQL_NORM}, '\\s+')"
-_SQL_SHINGLES = (
-    f"list_distinct(list_transform(range(1, greatest(1, length({_SQL_NORM}) - 4) + 1),"
-    f" i -> substr({_SQL_NORM}, i, 5)))"
-)
 _SQL_H32 = "(('0x' || substr(md5({x}), 1, 8))::ubigint)::bigint"
 
 
@@ -54,7 +50,7 @@ _SQL_SHINGLE_HASHES = _sql_shingle_hashes_expr("text")
 
 def _sql_minhash_cols(num_hashes: int = 8) -> list[str]:
     """One list_min expression per affine permutation — same (a, b) as
-    operators.dedup.minhash_signature."""
+    operators.dedup.minhash_sigs_from_rows."""
     cols = []
     for i, (a, b) in enumerate(_affine_params(num_hashes)):
         cols.append(
@@ -71,7 +67,6 @@ def _sql_minhash_cols(num_hashes: int = 8) -> list[str]:
 # (_affine_params is one fixed LCG stream, so h0-h7 of the 32-hash
 # family are byte-identical to the historical 8-hash oracle columns).
 _AMH_TIERS = dedup.ADAPTIVE_GEOMETRY_TIERS  # ((20000, 8, 2, 4), (2e6, 32, 4, 8))
-_AMH_MAX_HASHES = _AMH_TIERS[-1][1]
 _AMH_CERT_PLANTED = 16
 
 
@@ -370,7 +365,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_register(
     "minhash_signatures",
     "MinHash signatures (8 perms over char-5-shingles; operators.dedup."
-    "minhash_signature) — md5-derived, engine-portable",
+    "minhash_sigs_from_rows) — md5-derived, engine-portable",
     f"""
     with hashed as (select doc_id, {_SQL_SHINGLE_HASHES} as hs from documents)
     select doc_id, {', '.join(_sql_minhash_cols(8))}
@@ -668,7 +663,7 @@ def _sql_simhash() -> str:
 
 @_register(
     "simhash_docs",
-    "32-bit SimHash per document (operators.dedup.simhash32): near-dups "
+    "32-bit SimHash per document (operators.dedup.with_simhash): near-dups "
     "differ in few bits (Hamming distance)",
     f"select doc_id, {_sql_simhash()} as simhash from documents",
 )

@@ -5,5 +5,5 @@ from dbt_datbricks_demo_spark.sources.seeds import (  # noqa: F401
     load_seed,
     load_seeds,
 )
-from dbt_datbricks_demo_spark.sources.testdata import load_table, register_testdata  # noqa: F401
+from dbt_datbricks_demo_spark.sources.testdata import load_table  # noqa: F401
 from dbt_datbricks_demo_spark.sources.freshness import check_freshness, FreshnessResult  # noqa: F401

@@ -125,13 +125,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df._graft_rows = rows
     df._graft_scan_partitions = scan_est
     return df
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every table and register it as a temp view of the same name."""
-    out = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -18,6 +18,7 @@ from dbt_datbricks_demo_spark.streaming.corpus import (  # noqa: F401
     corpus_stream_cleaned,
     read_document_stream,
     write_corpus_append,
+    write_corpus_index_ingest,
 )
 from dbt_datbricks_demo_spark.streaming.vectors import (  # noqa: F401
     ann_index_ingest_batch_fn,

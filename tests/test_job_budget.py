@@ -185,6 +185,21 @@ def test_pair_consumers_broadcast_on_the_passed_count(
     assert [(r["id_a"], r["id_b"]) for r in scored.collect()] == [(1, 2)]
 
 
+def test_jaccard_pairs_without_candidates_fires_only_the_count(spark):
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta!")],
+        "doc_id long, text string",
+    )
+    none = spark.createDataFrame([], "id_a long, id_b long")
+    (scored, n), jobs = _jobs_fired(
+        spark, lambda: dedup.jaccard_pairs(docs, none, "doc_id")
+    )
+    assert (n, jobs) == (0, 1)
+    assert scored.collect() == []
+    one = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
+    assert scored.dtypes == dedup.jaccard_pairs(docs, one, "doc_id")[0].dtypes
+
+
 # ---------------------------------------------------------------------------
 # (c) the eager jobs one clean_corpus build fires
 # ---------------------------------------------------------------------------

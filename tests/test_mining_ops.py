@@ -152,16 +152,6 @@ def test_bigram_backoff_fires_only_on_unseen_transitions(spark):
     assert abs(r["avg_nll"] - expect) < 1e-9
 
 
-def test_bigram_rows_positions_and_short_docs(spark):
-    rows = [(1, "x y z"), (2, "solo"), (3, "")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    out = sorted(
-        (r["doc_id"], r["w1"], r["w2"])
-        for r in text.bigram_rows(df).collect()
-    )
-    assert out == [(1, "x", "y"), (1, "y", "z")]
-
-
 def test_bpe_merges_match_hand_computation(spark):
     """Classic Sennrich toy corpus: 'low' x2 + 'lowest'. Pair counts
     round 1: (l,o)=3, (o,w)=3, others <=1... tie between (l,o) and

@@ -80,8 +80,9 @@ def test_content_hash_single_column_matches_plain_md5(spark):
 
 
 def test_minhash_identical_docs_identical_signatures(docs):
-    sig = dedup.minhash_signature("text", num_hashes=8)
-    rows = {r["doc_id"]: r["sig"] for r in docs.select("doc_id", sig.alias("sig")).collect()}
+    hashes = dedup.shingle_hash_rows(docs, "doc_id", "text", k=5)
+    sigs = dedup.minhash_sigs_from_rows(hashes, "doc_id", num_hashes=8)
+    rows = {r["doc_id"]: r["_sig"] for r in sigs.collect()}
     assert rows[1] == rows[2]
     assert rows[1] != rows[4]
     # near-dup shares most minhashes with the original
@@ -104,7 +105,7 @@ def test_minhash_lsh_finds_near_dups(docs):
 def test_simhash_hamming(docs):
     rows = {
         r["doc_id"]: r["sh"]
-        for r in docs.select("doc_id", dedup.simhash32("text").alias("sh")).collect()
+        for r in dedup.with_simhash(docs, "text", out="sh").collect()
     }
     assert rows[1] == rows[2]
     ham_near = bin(rows[1] ^ rows[3]).count("1")
@@ -393,35 +394,6 @@ def test_neardup_clusters_transitive(spark):
     assert comp[1] == 0 and comp[2] == 0  # transitive single cluster
 
 
-def test_jsonl_roundtrip_and_corrupt_handling(spark, tmp_path):
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from dbt_datbricks_demo_spark.sources.corpus_io import read_jsonl, write_jsonl
-
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    docs = spark.createDataFrame(
-        [(1, "hello world"), (2, "guten tag")], schema
-    )
-    path = str(tmp_path / "corpus")
-    write_jsonl(docs, path, num_files=1)
-    back = read_jsonl(spark, path, schema)
-    assert {tuple(r) for r in back.collect()} == {(1, "hello world"), (2, "guten tag")}
-
-    # corrupt line: dropped by default, visible with keep_corrupt
-    broken = tmp_path / "broken"
-    broken.mkdir()
-    (broken / "part.jsonl").write_text(
-        '{"doc_id": 1, "text": "ok"}\nnot json at all\n{"doc_id": 2, "text": "also ok"}\n'
-    )
-    clean = read_jsonl(spark, str(broken), schema)
-    assert clean.count() == 2
-    kept = read_jsonl(spark, str(broken), schema, keep_corrupt=True).cache()
-    assert kept.filter("_corrupt_record is not null").count() == 1
-    kept.unpersist()
-
-
 def test_per_group_principal_direction(spark):
     import math
     import random
@@ -454,7 +426,6 @@ def test_per_group_principal_direction(spark):
             assert out[g][check] is True, check
 
 
-
 class TestDistributedRanking:
     """operators.ranking: exact ntile semantics without the
     single-partition window (tie groups split across bucket boundaries
@@ -476,18 +447,6 @@ class TestDistributedRanking:
             values.select("rid", "v", F.ntile(k).over(w).alias("b"))
             .collect()
         )
-
-    @pytest.mark.parametrize("k", [3, 4, 10])
-    def test_per_row_matches_sql_ntile(self, spark, values, k):
-        from dbt_datbricks_demo_spark.operators.ranking import (
-            with_distributed_ntile,
-        )
-        want = {(r["rid"]): r["b"] for r in self._expected(spark, values, k)}
-        got = {
-            r["rid"]: r["bucket"]
-            for r in with_distributed_ntile(values, "v", "rid", k=k).collect()
-        }
-        assert got == want
 
     @pytest.mark.parametrize("k", [3, 4, 10])
     def test_report_matches_sql_ntile_aggregates(self, spark, values, k):
@@ -1428,28 +1387,6 @@ def test_semdedup_misses_cross_cell_pairs_by_design(spark):
         for r in similarity.semdedup(emb, cents, threshold=0.95).collect()
     }
     assert out[1]["kept"] and out[2]["kept"] and not out[3]["kept"]
-
-
-def test_orc_roundtrip_partitioned_with_pushdown(spark, tmp_path):
-    """ORC interchange: partitioned write, schema'd read-back, and the
-    scale contract — partition pruning plus predicate pushdown both
-    reach the ORC scan."""
-    from dbt_datbricks_demo_spark.sources.corpus_io import read_orc, write_orc
-
-    docs = spark.createDataFrame(
-        [(1, "alpha", "en"), (2, "beta", "en"), (3, "gamma", "de")],
-        "doc_id long, text string, lang string",
-    )
-    path = str(tmp_path / "docs_orc")
-    write_orc(docs, path, partition_by=("lang",))
-    back = read_orc(spark, path)
-    assert {r["doc_id"] for r in back.collect()} == {1, 2, 3}
-
-    q = back.filter((F.col("lang") == "en") & (F.col("doc_id") > 1)).select("doc_id")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "lang" in plan.split("PartitionFilters")[1].split("]")[0]
-    assert "PushedFilters" in plan and "doc_id" in plan.split("PushedFilters")[1].split("]")[0]
-    assert [r["doc_id"] for r in q.collect()] == [2]
 
 
 # ---------------------------------------------------------------------------

@@ -122,7 +122,15 @@ def test_pii_detection_and_redaction(spark):
         ],
         ["doc_id", "text"],
     )
-    rows = {r["doc_id"]: r for r in pii.pii_report(df).collect()}
+    counts = pii.pii_counts("text")
+    redacted = pii.redact_pii("text")
+    out = df.select(
+        "doc_id",
+        *[c.alias(f"n_{name}") for name, c in counts.items()],
+        redacted.alias("redacted_text"),
+        pii.residual_pii_count(redacted).alias("n_residual"),
+    )
+    rows = {r["doc_id"]: r for r in out.collect()}
     assert rows[1]["n_email"] == 1
     assert rows[1]["redacted_text"] == "mail [EMAIL] now"
     assert rows[2]["n_ipv4"] == 1 and rows[2]["n_phone"] == 1
@@ -428,35 +436,6 @@ def test_stratified_sample_plan_uses_window_group_limit(spark):
     assert plan.count("hashpartitioning") <= 2  # _spread + the window key
 
 
-def test_bm25_indexed_matches_direct_and_prunes_partitions(spark, tmp_path):
-    """The standing search index returns bit-identical scores to the
-    direct corpus computation, and query plans prune postings
-    directories by term bucket (PartitionFilters, like the IVF index)."""
-    from dbt_datbricks_demo_spark.operators import search
-    from dbt_datbricks_demo_spark.sources import load_table
-
-    docs = load_table(spark, SF, "documents")
-    idx = str(tmp_path / "search_idx")
-    search.write_search_index(docs, idx)
-
-    terms = ["spark", "merge", "window"]
-    direct = {
-        r["doc_id"]: (r["score"], r["n_matched_terms"])
-        for r in search.bm25_topk(docs, terms, k=500, idf_mode="rational").collect()
-    }
-    indexed_df = search.bm25_indexed_topk(
-        spark, idx, terms, k=500, idf_mode="rational"
-    )
-    indexed = {
-        r["doc_id"]: (r["score"], r["n_matched_terms"]) for r in indexed_df.collect()
-    }
-    assert indexed == direct  # bit-identical scores, same doc set
-
-    plan = indexed_df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    assert search.TERM_BUCKET_COL in plan.split("PartitionFilters")[1].split("]")[0]
-
-
 def test_contamination_shuffled_fallback_matches(spark, monkeypatch):
     """A broadcast limit of 0 forces the shuffled-join path; the report
     must be identical to the broadcast path (the 100 TB fallback)."""
@@ -470,44 +449,3 @@ def test_contamination_shuffled_fallback_matches(spark, monkeypatch):
     b = decontam.contamination_report(docs, bench, n=3).collect()
     key = lambda r: r["doc_id"]  # noqa: E731
     assert sorted(a, key=key) == sorted(b, key=key)
-
-
-def test_masked_view_applies_tag_masks(spark):
-    """Governance masking: tagged columns are transformed, untagged pass
-    through, unknown tags/columns fail loudly (a silent no-op mask is a
-    leak)."""
-    import pytest
-    from pyspark.sql import Row
-
-    from dbt_datbricks_demo_spark.operators.pii import masked_view
-
-    df = spark.createDataFrame(
-        [
-            Row(
-                id=7,
-                email_note="reach me at a.b@example.com",
-                card="4111222233334444",
-                city="berlin",
-            )
-        ]
-    )
-    tags = {
-        "email_note": "pii_text",
-        "card": "mask_prefix",
-        "id": "pseudonymize",
-    }
-    out = masked_view(df, tags, salt="s3cret").collect()[0]
-    assert out["email_note"] == "reach me at [EMAIL]"
-    assert out["card"] == "****4444"
-    assert out["city"] == "berlin"
-    assert len(out["id"]) == 64 and out["id"] != "7"
-    # the pseudonym is keyed: a different salt yields a different token,
-    # same salt is stable (equality-join semantics preserved)
-    other = masked_view(df, tags, salt="different").collect()[0]
-    again = masked_view(df, tags, salt="s3cret").collect()[0]
-    assert other["id"] != out["id"] and again["id"] == out["id"]
-
-    with pytest.raises(ValueError, match="no such columns"):
-        masked_view(df, {"nope": "pii_text"})
-    with pytest.raises(ValueError, match="unknown mask tags"):
-        masked_view(df, {"city": "not_a_mask"})

@@ -54,20 +54,6 @@ def test_failing_suite_reports_counts(spark, dag):
     assert not res.passed and res.failures == 10
 
 
-def test_testdata_suite_all_pass(spark):
-    """The generic-test framework generalizes past the IoT models: the
-    declared suite over the TPC-H-ish testdata tables passes wholesale."""
-    from dbt_datbricks_demo_spark.sources.testdata import register_testdata
-    from dbt_datbricks_demo_spark.testing.runner import run_suite, summarize
-    from dbt_datbricks_demo_spark.testing.testdata_suite import testdata_suite
-
-    relations = register_testdata(spark, "/root/testdata/sf0.001")
-    results = run_suite(testdata_suite(), relations)
-    assert len(results) >= 26
-    failed = [r.name for r in results if not r.passed]
-    assert not failed, summarize(results)
-
-
 def test_store_failures_persists_violations(spark, tmp_path):
     """dbt --store-failures parity: a failing test writes its violating
     rows to an audit path named after the test; passing tests write
@@ -92,39 +78,3 @@ def test_store_failures_persists_violations(spark, tmp_path):
     assert len(stored) == 1  # one duplicated key group
     stored_nn = spark.read.parquet(f"{audit}/not_null_t_id").collect()
     assert len(stored_nn) == 1
-
-
-def test_compare_relations_classifies_drift(spark):
-    """dbt-audit-helper parity: added/removed/changed/identical counts
-    plus per-column drift, and the cell-level drilldown."""
-    from pyspark.sql import Row
-
-    from dbt_datbricks_demo_spark.testing.audit import (
-        changed_rows,
-        compare_relations,
-    )
-
-    old = spark.createDataFrame(
-        [
-            Row(id=1, v=10.0, s="a"),
-            Row(id=2, v=20.0, s="b"),
-            Row(id=3, v=30.0, s="c"),  # removed in new
-        ]
-    )
-    new = spark.createDataFrame(
-        [
-            Row(id=1, v=10.0, s="a"),  # identical
-            Row(id=2, v=99.0, s="b"),  # v changed
-            Row(id=4, v=40.0, s="d"),  # added
-        ]
-    )
-    summary = compare_relations(old, new, "id").collect()[0]
-    assert (summary["n_old"], summary["n_new"]) == (3, 3)
-    assert summary["n_added"] == 1 and summary["n_removed"] == 1
-    assert summary["n_changed"] == 1 and summary["n_identical"] == 1
-    assert summary["changed_v"] == 1 and summary["changed_s"] == 0
-
-    drill = changed_rows(old, new, "id").collect()
-    assert [(r["id"], r["column"], r["old_value"], r["new_value"]) for r in drill] == [
-        (2, "v", "20.0", "99.0")
-    ]

@@ -102,6 +102,27 @@ def test_gate_blocks_gold_on_bad_data(spark, tmp_path, generated_seeds):
     assert not runner.mat.exists("fct_device_summary", "gold")
 
 
+def test_conditional_refresh_branches_on_anomaly_count(
+    runner, generated_seeds, monkeypatch
+):
+    """Reference if/else branch: more anomalies in the built silver table
+    than the threshold → full refresh (incremental models rewritten, no
+    merge), else an incremental run (incremental models merged)."""
+    rel = runner.run(generated_seeds)
+    n = rel["int_sensor_readings_cleaned"].filter("is_anomaly").count()
+    merged = []
+    merge = runner.mat.merge_upsert
+    monkeypatch.setattr(
+        runner.mat,
+        "merge_upsert",
+        lambda name, *a, **kw: merged.append(name) or merge(name, *a, **kw),
+    )
+    runner.conditional_refresh(generated_seeds, anomaly_threshold=n - 1)
+    assert merged == []
+    runner.conditional_refresh(generated_seeds, anomaly_threshold=n + 1)
+    assert "int_sensor_readings_cleaned" in merged
+
+
 def test_per_plant_health(spark, runner, seeds):
     rel = runner.run(seeds)
     plants = runner.per_plant_health(rel)

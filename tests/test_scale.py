@@ -1,13 +1,13 @@
-"""Scale-technique modules: bucketed co-located joins (zero-exchange
-plans) and deterministic skew salting (identical results, spread keys)."""
+"""Scale-technique modules: hive-partitioned index writes (directory
+pruning on read), deterministic skew salting (identical results, spread
+keys) and the standing MinHash band index."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_datbricks_demo_spark.operators import skew
-from dbt_datbricks_demo_spark.plans import bucketing
+from dbt_datbricks_demo_spark.operators import index_store, skew
 
 
 @pytest.fixture()
@@ -22,19 +22,6 @@ def skewed(spark):
         F.lit(3.0).alias("v"),
     )
     return hot.unionByName(cold)
-
-
-def test_salted_join_matches_plain_join(spark, skewed):
-    dim = spark.createDataFrame(
-        [(k, f"name{k}") for k in range(1, 51)], "k long, name string"
-    )
-    plain = skewed.join(dim, "k").select("row_id", "name")
-    salted = skew.salted_join(
-        skewed, dim, on="k", buckets=8, probe_salt_from="row_id"
-    ).select("row_id", "name")
-    assert plain.subtract(salted).count() == 0
-    assert salted.subtract(plain).count() == 0
-    assert salted.count() == plain.count()  # no dup/loss from replication
 
 
 def test_salt_spreads_hot_key(spark, skewed):
@@ -77,47 +64,6 @@ def test_salted_aggregate_matches_plain(spark, skewed):
     assert {tuple(r) for r in plain} == {tuple(r) for r in two_phase}
 
 
-def test_bucketed_join_plans_without_exchange(spark, tmp_path):
-    facts = spark.range(5_000).select(
-        F.col("id").alias("k"), (F.col("id") % 100).alias("v")
-    )
-    other = spark.range(5_000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("w")
-    )
-    bucketing.write_bucketed(facts, "t_facts_b", "k", 4)
-    bucketing.write_bucketed(other, "t_other_b", "k", 4)
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bucketing.colocated_join(spark, "t_facts_b", "t_other_b", "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: shuffle paid at write
-        assert "Bucketed: true" in plan
-        assert joined.count() == 5_000
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("drop table if exists t_facts_b")
-        spark.sql("drop table if exists t_other_b")
-
-
-def test_bucketed_agg_plans_without_exchange(spark):
-    facts = spark.range(5_000).select(
-        F.col("id").alias("k"), (F.col("id") % 100).alias("v")
-    )
-    bucketing.write_bucketed(facts, "t_agg_b", "k", 4)
-    try:
-        agg = (
-            bucketing.read_bucketed(spark, "t_agg_b")
-            .groupBy("k")
-            .agg(F.sum("v").alias("sv"))
-        )
-        plan = agg._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan  # grouping key = bucket key
-        assert agg.count() == 5_000
-    finally:
-        spark.sql("drop table if exists t_agg_b")
-
-
 def test_partitioned_write_prunes_on_read(spark, tmp_path):
     from dbt_datbricks_demo_spark.sources.testdata import load_table
 
@@ -125,7 +71,7 @@ def test_partitioned_write_prunes_on_read(spark, tmp_path):
         "event_date", F.to_date("ts")
     )
     path = str(tmp_path / "events_by_date")
-    bucketing.write_partitioned(ev, path, "event_date")
+    index_store.write(ev, path, "event_date", "test", mode="overwrite")
 
     back = spark.read.parquet(path)
     one_day = back.filter(F.col("event_date") == "2024-01-05")
@@ -260,14 +206,6 @@ def test_blocked_self_join_bounds_hot_lsh_bucket(spark):
     assert max(sizes) <= math.ceil(300 / 4 * 1.5)
 
 
-def test_salted_join_rejects_build_preserving_types(spark, skewed):
-    dim = spark.createDataFrame([(1, "x")], "k long, name string")
-    with pytest.raises(ValueError, match="salted_join supports"):
-        skew.salted_join(skewed, dim, "k", 4, "row_id", how="full_outer")
-    with pytest.raises(ValueError, match="salted_join supports"):
-        skew.salted_join(skewed, dim, "k", 4, "row_id", how="right")
-
-
 # ---------------------------------------------------------------------------
 # Standing MinHash band index (write once, batch lookups prune directories)
 # ---------------------------------------------------------------------------
@@ -283,8 +221,19 @@ def test_minhash_index_lookup_matches_direct_band_join(spark, tmp_path):
     path = str(tmp_path / "mh_index")
     dedup.write_minhash_index(corpus, path)
 
-    got = dedup.index_candidate_pairs(spark, path, batch)
-    got_set = {(r.batch_id, r.corpus_id) for r in got.collect()}
+    # only the explicit hint may broadcast the batch postings
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        got = dedup.index_candidate_pairs(spark, path, batch)
+        got_set = {(r.batch_id, r.corpus_id) for r in got.collect()}
+        plan = got._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert "BroadcastHashJoin" in plan
 
     # reference: direct band-key equi-join between batch and corpus
     def keyed(df):
@@ -292,7 +241,7 @@ def test_minhash_index_lookup_matches_direct_band_join(spark, tmp_path):
         sigs = dedup.minhash_sigs_from_rows(rows, "doc_id", num_hashes=8)
         return sigs.select(
             "doc_id",
-            F.explode(dedup.lsh_band_keys(F.col("_sig"), 2, 4)).alias("band_key"),
+            F.explode(dedup.lsh_band_keys("_sig", 2, 4)).alias("band_key"),
         )
 
     direct = (
@@ -308,11 +257,6 @@ def test_minhash_index_lookup_matches_direct_band_join(spark, tmp_path):
 
     # scale contract: the index read is partition-PRUNED (directory
     # filter on band_bucket), not a full scan with a post-filter
-    plan = got._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
     assert "PartitionFilters" in plan
     assert dedup.MINHASH_BUCKET_COL in plan.split("PartitionFilters", 1)[1][:400]
 

@@ -674,7 +674,8 @@ IX_BATCHES = [
 
 
 def _char_shingles(text: str, k: int = 5) -> set[str]:
-    """dedup.char_shingles in Python: Spark's trim strips spaces only."""
+    """The distinct char-k shingles dedup.candidate_hash_arrays hashes
+    for Jaccard, in Python: Spark's trim strips spaces only."""
     norm = text.strip(" ").lower()
     return {norm[i:i + k] for i in range(max(1, len(norm) - k + 1))}
 
