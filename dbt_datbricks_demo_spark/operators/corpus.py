@@ -203,32 +203,24 @@ def prepare_training_set(
     ).drop("top_bigram_frac", "top_trigram_frac", "dup_5gram_frac")
 
     bench_docs = assigned.filter(F.col("split") == test_name)
-    bench = decontam.distinct_ngram_set(bench_docs, text_col=text_col, n=decontam_n)
-    trainval = assigned.filter(F.col("split") != test_name)
-    flagged = (
-        decontam.contamination_report(
-            trainval,
-            bench,
-            text_col=text_col,
-            id_col=id_col,
-            n=decontam_n,
-            flag_threshold=decontam_threshold,
-        )
-        .filter(F.col("contaminated"))
-        .select(id_col)
-    )
     # flagged ids are bounded by |docs|: the caller-known corpus_rows
     # bound (already used for the loser broadcasts in clean_corpus)
-    # bounds this broadcast too — without the hint the planner's
+    # bounds their broadcast too — without the hint the planner's
     # unknown-size estimate plans a sort-merge anti-join whose
     # trainval-side exchange AQE coalesces to one partition, pushing
     # the final union + packing aggregation of the whole surviving
     # corpus into a single task (same defect as candidate_hash_arrays,
     # measured round 13).
-    flagged = broadcast_if_small(
-        flagged, loose_bound(clean_kwargs.get("corpus_rows"))
+    trainval = decontam.decontaminate(
+        assigned.filter(F.col("split") != test_name),
+        bench_docs,
+        text_col=text_col,
+        id_col=id_col,
+        n=decontam_n,
+        flag_threshold=decontam_threshold,
+        flagged_bound=loose_bound(clean_kwargs.get("corpus_rows")),
     )
-    return trainval.join(flagged, id_col, "left_anti").unionByName(bench_docs)
+    return trainval.unionByName(bench_docs)
 
 
 def corpus_stats(

@@ -158,13 +158,23 @@ def decontaminate(
     id_col: str = "doc_id",
     n: int = 5,
     flag_threshold: float = 0.2,
+    flagged_bound: int | None = None,
 ) -> DataFrame:
     """Drop contaminated documents: corpus minus docs whose distinct
     n-gram overlap fraction against `benchmark` reaches the threshold.
-    The removal is a left-anti join on the (small) contaminated id set."""
+    The removal is a left-anti join on the (small) contaminated id set,
+    broadcast under the size guard (functions.broadcast_if_small);
+    `flagged_bound` is a caller-known bound on that set (see
+    functions.loose_bound) that decides the hint without a count."""
     grams = distinct_ngram_set(benchmark, text_col=text_col, n=n)
-    flagged = contamination_report(
-        corpus, grams, text_col=text_col, id_col=id_col, n=n,
-        flag_threshold=flag_threshold,
-    ).filter(F.col("contaminated"))
-    return corpus.join(flagged.select(id_col), id_col, "left_anti")
+    flagged = (
+        contamination_report(
+            corpus, grams, text_col=text_col, id_col=id_col, n=n,
+            flag_threshold=flag_threshold,
+        )
+        .filter(F.col("contaminated"))
+        .select(id_col)
+    )
+    return corpus.join(
+        broadcast_if_small(flagged, flagged_bound), id_col, "left_anti"
+    )

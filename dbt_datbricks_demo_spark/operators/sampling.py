@@ -104,10 +104,14 @@ def mixture_sample(
     id_col: str = "doc_id",
     salt: str = "mix",
     mod: int = 10_000,
+    thresholds: DataFrame | None = None,
 ) -> DataFrame:
     """The kept subset of `df` under the target mixture (original
-    columns preserved). Deterministic in (salt, id)."""
-    thresholds = mixture_thresholds(df, weights, domain_col=domain_col, mod=mod)
+    columns preserved). Deterministic in (salt, id). A caller that
+    already holds ``mixture_thresholds(df, weights, ...)`` passes it as
+    `thresholds`, which saves deriving it (a second corpus scan)."""
+    if thresholds is None:
+        thresholds = mixture_thresholds(df, weights, domain_col=domain_col, mod=mod)
     bucket = (
         F.conv(
             F.substring(

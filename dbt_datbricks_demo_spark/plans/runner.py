@@ -114,16 +114,24 @@ class PipelineRunner:
             is_incremental = (
                 not full_refresh and mat.exists(model.name, model.schema_suffix)
             )
+            # the write records watermark_col's high-water mark, which the
+            # next run's high_water reads
             watermark = (
-                mat.high_water(model.name, model.schema_suffix, model.watermark_col)
+                mat.high_water(
+                    model.name, model.schema_suffix, col=model.watermark_col
+                )
                 if is_incremental
                 else None
             )
             new_rows = model.build(relations, cfg, watermark)
             if not is_incremental:
-                return mat.as_table(model.name, model.schema_suffix, new_rows)
+                return mat.as_table(
+                    model.name, model.schema_suffix, new_rows,
+                    watermark_col=model.watermark_col,
+                )
             return mat.merge_upsert(
-                model.name, model.schema_suffix, new_rows, model.unique_key
+                model.name, model.schema_suffix, new_rows, model.unique_key,
+                watermark_col=model.watermark_col,
             )
         raise ValueError(model.materialization)  # pragma: no cover
 

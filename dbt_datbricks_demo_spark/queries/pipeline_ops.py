@@ -361,21 +361,12 @@ _SQL_MIX_WEIGHTS = ", ".join(
 def mixture_sample_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _spread(_t(spark, sf_dir, "documents"))
     # one thresholds subtree shared by the report columns and the kept
-    # filter (mixture_sample would re-derive it — a second corpus scan)
+    # filter
     thresholds = sampling.mixture_thresholds(docs, _MIX_WEIGHTS).localCheckpoint(
         eager=True
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("mix"), F.col("doc_id").cast("string"))), 1, 8),
-            16,
-            10,
-        ).cast("bigint")
-        % 10_000
-    )
     kept = (
-        docs.join(F.broadcast(thresholds.select("source", "threshold")), "source")
-        .filter(bucket < F.col("threshold"))
+        sampling.mixture_sample(docs, _MIX_WEIGHTS, thresholds=thresholds)
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("_c"))
     )

@@ -16,6 +16,16 @@ Centralizes the settings every entry point needs:
     inside its first UDF with ``ModuleNotFoundError``. The path is the
     driver's own, which is right for local mode; on a cluster the
     package must be installed on the executors.
+  - PySpark's DataFrame query-context capture off
+    (``spark.python.sql.dataFrameDebugging.enabled=false``). With it on,
+    every ``F.*`` and DataFrame call makes about ten extra py4j round
+    trips to record its Python call site: building ``fct_device_summary``'s
+    plan sends ~2 100 py4j commands with it on, ~500 with it off. The cost: a runtime error's query context no longer
+    names the Python line that built the failing expression (analysis
+    errors such as a missing column still name the column).
+    ``extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}``
+    turns it back on. PySpark reads the flag once per process, at its
+    first call with an active session, so it is set in the builder.
 """
 
 from __future__ import annotations
@@ -34,6 +44,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The engine's session, with the settings the module docstring
+    lists; ``extra_conf`` entries override them (among them the
+    DataFrame query-context capture, off here)."""
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
@@ -74,6 +87,7 @@ def get_spark(
         # starts. Memory cost is bounded: classes, not data.
         .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     extra = dict(extra_conf or {})
     worker_path = [_PACKAGE_PARENT, extra.pop(_WORKER_PATH, "")]

@@ -46,10 +46,6 @@ ALLOWED = {
     "operators.corpus:corpus_stats": "the plain form corpus_stats_staged is tested against",
     # environment gate of the stateful streaming tests
     "streaming.stateful:transform_with_state_available": "tests/test_streaming.py",
-    # test-only one-call forms whose live paths inline them
-    # (mixture_sample_report, corpus.prepare_training_set)
-    "operators.sampling:mixture_sample": "tests/test_pipeline_ops.py",
-    "operators.decontam:decontaminate": "tests/test_pipeline_ops.py",
 }
 
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")

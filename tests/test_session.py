@@ -40,3 +40,12 @@ print("WORKERS_OK")
     )
     assert "ModuleNotFoundError" not in out.stderr
     assert out.returncode == 0 and "WORKERS_OK" in out.stdout, out.stderr[-2000:]
+
+
+def test_missing_column_still_names_the_column(spark):
+    """With the DataFrame query-context capture off, an analysis error
+    still says which column is missing."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="no_such_col"):
+        spark.range(3).select("no_such_col").schema

@@ -1,11 +1,18 @@
-"""Contracts on the Spark jobs the medallion write path pays for: the
-54-test suite over a full-refresh DAG, and reading a table back right
-after writing it, which takes the written schema instead of inferring
-it. Inputs are the benchmark's seeded sensor seeds, small."""
+"""Contracts on the Spark jobs and py4j round trips the medallion write
+path pays for: the 54-test suite over a full-refresh DAG; reading a
+table, which takes the schema stored in its parquet footer instead of
+inferring it; an increment's high-water marks, which the previous write
+recorded; the one-shuffle merges; and building a gold model's plan with
+PySpark's per-call query-context capture off. Inputs are the
+benchmark's seeded sensor seeds, small."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
+from py4j.java_gateway import GatewayClient
+from pyspark.errors import utils as pyspark_error_utils
 
 from dbt_datbricks_demo_spark.config import RunConfig
 from dbt_datbricks_demo_spark.plans import PipelineRunner
@@ -16,7 +23,17 @@ from perfbench.datagen import IotSeeds
 
 # the parent's one isEmpty() query per test fired 70 jobs here
 SUITE_JOB_BUDGET = 40
+# the three merges of one increment fire 10 jobs; the anti-join + union
+# merge, which computed the new rows twice and inferred the target's
+# schema, fired 16
+MERGE_JOB_BUDGET = 10
+# building fct_device_summary's plan (no action) sends ~500 py4j
+# commands with the query-context capture off, ~2 100 with it on
+PLAN_ROUND_TRIP_BUDGET = 750
 STORED = sorted(n for n, m in MODELS.items() if m.materialization != "view")
+# one job group per measured call: a group name reused by a later call
+# would count the earlier call's jobs again
+_GROUP_IDS = itertools.count()
 
 
 def _jobs_fired(spark, fn):
@@ -26,7 +43,7 @@ def _jobs_fired(spark, fn):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     floor = max(tracker.getJobIdsForGroup(None), default=-1)
-    group = f"write-path-{id(fn)}"
+    group = f"write-path-{next(_GROUP_IDS)}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -37,22 +54,26 @@ def _jobs_fired(spark, fn):
     return out, len(tracker.getJobIdsForGroup(group)) + len(stray)
 
 
-class _CountingReadBack:
-    """Wraps ``Materializer._read_back`` and records the jobs each call
-    fires, by model name."""
+class _CountingCalls:
+    """Wraps the named ``Materializer`` methods and records the jobs
+    each call fires, by (method, model name)."""
+
+    METHODS = ("_read_back", "high_water", "merge_upsert")
 
     def __init__(self, spark, mat):
-        self.jobs: dict[str, int] = {}
-        original = mat._read_back
+        self.jobs: dict[tuple[str, str], int] = {}
+        for method in self.METHODS:
+            setattr(mat, method, self._counting(spark, method, getattr(mat, method)))
 
-        def read_back(name, schema_suffix, written):
-            out, n = _jobs_fired(
-                spark, lambda: original(name, schema_suffix, written)
-            )
-            self.jobs[name] = n
+    def _counting(self, spark, method, original):
+        def call(name, *args, **kwargs):
+            out, n = _jobs_fired(spark, lambda: original(name, *args, **kwargs))
+            self.jobs[method, name] = n
             return out
+        return call
 
-        mat._read_back = read_back
+    def of(self, method: str) -> dict[str, int]:
+        return {name: n for (m, name), n in self.jobs.items() if m == method}
 
 
 @pytest.fixture(scope="module")
@@ -68,14 +89,15 @@ def medallion(spark, tmp_path_factory):
                         frozen_now=IotSeeds.frozen_now(batch),
                         warehouse_dir=warehouse)
         runner = PipelineRunner(spark, cfg)
-        probe = _CountingReadBack(spark, runner.mat)
+        probe = _CountingCalls(spark, runner.mat)
         rel = runner.run(load_seeds(spark, seeds_dir), full_refresh=batch == 0)
         schemas = {
             n: (rel[n].schema,
                 spark.read.parquet(runner.mat.path(n, MODELS[n].schema_suffix)).schema)
             for n in STORED
         }
-        runs.append({"read_back_jobs": probe.jobs, "schemas": schemas})
+        runs.append({"calls": probe, "schemas": schemas, "runner": runner,
+                     "rel": rel, "cfg": cfg})
         if batch == 0:
             runs[0]["suite"] = _jobs_fired(
                 spark, lambda: run_suite(reference_suite(), rel)
@@ -92,7 +114,7 @@ def test_suite_on_full_refresh_fits_job_budget(medallion):
 
 @pytest.mark.parametrize("run", [0, 1], ids=["full_refresh", "increment"])
 def test_read_back_fires_no_job(medallion, run):
-    jobs = medallion[run]["read_back_jobs"]
+    jobs = medallion[run]["calls"].of("_read_back")
     assert sorted(jobs) == STORED
     assert jobs == {n: 0 for n in STORED}
 
@@ -101,3 +123,64 @@ def test_read_back_fires_no_job(medallion, run):
 def test_read_back_schema_is_the_inferred_schema(medallion, run):
     for name, (given, inferred) in medallion[run]["schemas"].items():
         assert given == inferred, name
+
+
+def test_read_fires_no_job_and_takes_the_inferred_schema(spark, medallion):
+    mat = medallion[1]["runner"].mat
+    for name in STORED:
+        suffix = MODELS[name].schema_suffix
+        df, jobs = _jobs_fired(spark, lambda: mat.read(name, suffix))
+        assert jobs == 0, name
+        assert df.schema == spark.read.parquet(mat.path(name, suffix)).schema, name
+
+
+INCREMENTAL = sorted(n for n, m in MODELS.items() if m.materialization == "incremental")
+
+
+def test_increment_high_water_fires_no_job(medallion):
+    jobs = medallion[1]["calls"].of("high_water")
+    assert jobs == {n: 0 for n in INCREMENTAL}
+
+
+def test_increment_merges_fit_job_budget(medallion):
+    jobs = medallion[1]["calls"].of("merge_upsert")
+    assert sorted(jobs) == INCREMENTAL
+    assert sum(jobs.values()) <= MERGE_JOB_BUDGET, jobs
+
+
+def _round_trips(fn) -> int:
+    """py4j commands the driver sends while fn() runs."""
+    sent = 0
+    original = GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        nonlocal sent
+        sent += 1
+        return original(self, *args, **kwargs)
+
+    GatewayClient.send_command = counting
+    try:
+        fn()
+    finally:
+        GatewayClient.send_command = original
+    return sent
+
+
+def _build_gold(medallion):
+    run = medallion[1]
+    model = MODELS["fct_device_summary"]
+    return lambda: model.build(run["rel"], run["cfg"], None)
+
+
+def test_gold_plan_build_fits_round_trip_budget(medallion):
+    assert pyspark_error_utils.is_debugging_enabled() is False
+    assert _round_trips(_build_gold(medallion)) <= PLAN_ROUND_TRIP_BUDGET
+
+
+def test_round_trip_budget_fails_with_query_context_capture(medallion, monkeypatch):
+    """The budget above tells the capture apart: with it on (PySpark
+    caches the flag per process, so the cache is flipped) the same
+    build exceeds it."""
+    monkeypatch.setattr(pyspark_error_utils, "_enable_debugging_cache", True)
+    assert _round_trips(_build_gold(medallion)) > PLAN_ROUND_TRIP_BUDGET
+
