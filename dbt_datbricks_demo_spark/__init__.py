@@ -12,7 +12,7 @@ Layout:
   session      — SparkSession factory (AQE, UTC timezone, tuned shuffles)
   functions    — scalar helpers (dbt_utils-compatible surrogate keys, ...)
   sources      — typed seed/parquet loaders, source registry, freshness
-  models       — the 10 reference models as DataFrame builder functions
+  models       — the 10 reference models as Spark SQL text
   plans        — model registry, DAG runner, materializations (view/table/
                  incremental-merge), orchestration control flow
   testing      — data-quality test framework (not_null/unique/accepted_values/

@@ -231,7 +231,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.verb == "snapshot":
         import datetime as dt
 
-        from dbt_datbricks_demo_spark.models.staging import stg_devices
+        from dbt_datbricks_demo_spark.plans.dag import MODELS
         from dbt_datbricks_demo_spark.plans.snapshots import (
             SnapshotConfig,
             snapshot_apply,
@@ -245,7 +245,7 @@ def main(argv: list[str] | None = None) -> int:
             ),
         )
         batch_ts = args.at or dt.datetime.now().strftime("%Y-%m-%d %H:%M:%S")
-        source = stg_devices(seeds["raw_devices"], cfg).select(
+        source = MODELS["stg_devices"].build(seeds, cfg).select(
             "device_id", "device_name", "device_type", "plant_location",
             "factory_zone", "firmware_version", "is_active",
         )

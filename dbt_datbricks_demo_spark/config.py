@@ -3,9 +3,10 @@
 The reference injects 7 numeric anomaly thresholds at compile time via
 Jinja ``{{ var(...) }}`` (reference: dbt_project.yml:18-26) and a run-scoped
 ``{{ invocation_id }}`` literal (stg_sensor_readings.sql:25). Here they are
-a typed config object passed to model builders; values become ``F.lit``
-literals inside the DataFrame plans, so Catalyst constant-folds them exactly
-as dbt's text substitution did.
+a typed config object whose values the models' SQL binds as named
+parameter markers (``:temperature_upper``, ``:invocation_id``, …; see
+``RunConfig.sql_args``). Spark binds each marker as a literal, so Catalyst
+constant-folds them exactly as dbt's text substitution did.
 """
 
 from __future__ import annotations
@@ -75,3 +76,17 @@ class RunConfig:
                 out, thresholds=dataclasses.replace(out.thresholds, **thr)
             )
         return out
+
+    def sql_args(self) -> dict[str, object]:
+        """The values of the models' named parameter markers: the 7
+        thresholds, ``invocation_id``, and the frozen clock as
+        ``frozen_now`` / ``frozen_today`` — None when the clock runs,
+        which the models' ``coalesce`` turns into ``current_timestamp()``
+        / ``current_date()``."""
+        frozen = self.frozen_now
+        return {
+            **dataclasses.asdict(self.thresholds),
+            "invocation_id": self.invocation_id,
+            "frozen_now": frozen,
+            "frozen_today": None if frozen is None else frozen.date(),
+        }

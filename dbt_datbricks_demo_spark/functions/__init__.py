@@ -46,12 +46,6 @@ def surrogate_key_sql(*exprs: str) -> str:
     return f"md5(concat_ws('-', {parts}))"
 
 
-def safe_divide(num: Column, den: Column) -> Column:
-    """x / nullif(y, 0) — the reference's div-by-zero guard
-    (int_device_health.sql:51, fct_device_summary.sql:44,49)."""
-    return num / F.nullif(den, F.lit(0))
-
-
 def literal_df(spark, rows, schema: str):
     """Tiny constant relation as a PURE-JVM literal table.
 

@@ -9,10 +9,15 @@ Parity targets (behavior, not text):
   int_alerts_enriched — reference int_alerts_enriched.sql (join J2,
       resolution math, severity score)
 
+All three are incremental: on an increment the first ref is filtered to
+rows past the target's high-water mark before the text runs
+(``plans.dag.ModelDef.build``). The reference's F1 is a strict ``>`` —
+ties and late rows drop by design, and that semantic is reproduced.
+
 Scale notes:
   * The devices dimension is tiny relative to readings at any scale the
-    reference contemplates, so the enrichment joins are explicit
-    ``F.broadcast`` — no shuffle of the fact side.
+    reference contemplates, so the enrichment joins carry an explicit
+    BROADCAST hint — no shuffle of the fact side.
   * The dedup window partitions by reading_id (the natural key); at 100 TB
     this is a single hash-partitioned exchange over the key, which Spark
     executes as one shuffle — there is no cheaper way to express
@@ -22,188 +27,106 @@ Scale notes:
     same hash and add no extra shuffle.
 """
 
-from __future__ import annotations
+# The reference's threshold CASE (int_sensor_readings_cleaned.sql:74-95),
+# also the streaming silver flag (streaming.pipeline). Vibration has an
+# upper bound only — no lower threshold exists in the config
+# (dbt_project.yml:18-26).
+ANOMALY_CASE = """CASE
+    WHEN metric_name = 'temperature' AND metric_value IS NOT NULL
+         AND (metric_value > :temperature_upper OR metric_value < :temperature_lower)
+      THEN true
+    WHEN metric_name = 'vibration' AND metric_value IS NOT NULL
+         AND metric_value > :vibration_upper
+      THEN true
+    WHEN metric_name = 'humidity' AND metric_value IS NOT NULL
+         AND (metric_value > :humidity_upper OR metric_value < :humidity_lower)
+      THEN true
+    WHEN metric_name = 'pressure' AND metric_value IS NOT NULL
+         AND (metric_value > :pressure_upper OR metric_value < :pressure_lower)
+      THEN true
+    ELSE false
+  END"""
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+# Dedup semantics (reference W1, SURVEY.md §2.6): *key-based* keep-latest
+# ingest per reading_id. Content duplicates with distinct reading_ids
+# survive — do not "fix".
+INT_SENSOR_READINGS_CLEANED = f"""
+WITH deduped AS (
+  SELECT * FROM (
+    SELECT
+      *,
+      row_number() OVER (PARTITION BY reading_id ORDER BY ingested_at DESC)
+        AS _row_num
+    FROM {{stg_sensor_readings}}
+  )
+  WHERE _row_num = 1
+)
+SELECT /*+ BROADCAST(d) */
+  r.reading_id, r.device_id, r.metric_name, r.metric_value, r.reading_ts,
+  r.ingested_at, d.device_name, d.device_type, d.plant_location,
+  d.factory_zone, d.manufacturer,
+  r.metric_value IS NULL AS is_missing_value,
+  {ANOMALY_CASE} AS is_anomaly,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_processed_at
+FROM deduped r
+LEFT JOIN {{stg_devices}} d ON r.device_id = d.device_id
+"""
 
-from dbt_datbricks_demo_spark.config import RunConfig
-from dbt_datbricks_demo_spark.functions import safe_divide, surrogate_key
-from dbt_datbricks_demo_spark.models._common import now_col
+# One hash aggregation: partial aggregates map-side, final after a single
+# shuffle on the composite key. stddev is sample stddev (stddev_samp) —
+# null for 1-row groups, preserved through round().
+INT_DEVICE_HEALTH = """
+WITH hourly AS (
+  SELECT
+    device_id, device_name, device_type, plant_location, factory_zone,
+    metric_name,
+    date_trunc('hour', reading_ts) AS reading_hour,
+    count(1) AS reading_count,
+    round(avg(metric_value), 2) AS avg_value,
+    round(min(metric_value), 2) AS min_value,
+    round(max(metric_value), 2) AS max_value,
+    round(stddev_samp(metric_value), 2) AS stddev_value,
+    sum(CASE WHEN is_anomaly THEN 1 ELSE 0 END) AS anomaly_count,
+    round(sum(CASE WHEN is_anomaly THEN 1 ELSE 0 END) * 100.0D
+          / nullif(count(1), 0), 1) AS anomaly_rate_pct,
+    max(reading_ts) AS latest_reading_ts
+  FROM {int_sensor_readings_cleaned}
+  WHERE NOT is_missing_value
+  GROUP BY device_id, device_name, device_type, plant_location, factory_zone,
+           metric_name, date_trunc('hour', reading_ts)
+)
+SELECT
+  md5(concat_ws('-',
+    coalesce(CAST(device_id AS STRING), '_dbt_utils_surrogate_key_null_'),
+    coalesce(CAST(metric_name AS STRING), '_dbt_utils_surrogate_key_null_'),
+    coalesce(CAST(reading_hour AS STRING), '_dbt_utils_surrogate_key_null_')
+  )) AS device_health_key,
+  device_id, device_name, device_type, plant_location, factory_zone,
+  metric_name, reading_hour, reading_count, avg_value, min_value, max_value,
+  stddev_value, anomaly_count, anomaly_rate_pct, latest_reading_ts,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_processed_at
+FROM hourly
+"""
 
-
-def _anomaly_flag(cfg: RunConfig):
-    """The reference's threshold CASE (int_sensor_readings_cleaned.sql:74-95).
-
-    Note vibration has an upper bound only — no lower threshold exists in the
-    config (dbt_project.yml:18-26).
-    """
-    t = cfg.thresholds
-    mv, mn = F.col("metric_value"), F.col("metric_name")
-    return (
-        F.when(
-            (mn == "temperature")
-            & mv.isNotNull()
-            & ((mv > t.temperature_upper) | (mv < t.temperature_lower)),
-            F.lit(True),
-        )
-        .when((mn == "vibration") & mv.isNotNull() & (mv > t.vibration_upper), F.lit(True))
-        .when(
-            (mn == "humidity")
-            & mv.isNotNull()
-            & ((mv > t.humidity_upper) | (mv < t.humidity_lower)),
-            F.lit(True),
-        )
-        .when(
-            (mn == "pressure")
-            & mv.isNotNull()
-            & ((mv > t.pressure_upper) | (mv < t.pressure_lower)),
-            F.lit(True),
-        )
-        .otherwise(F.lit(False))
-    )
-
-
-def int_sensor_readings_cleaned(
-    stg_sensor_readings: DataFrame,
-    stg_devices: DataFrame,
-    cfg: RunConfig,
-    watermark=None,
-) -> DataFrame:
-    """Dedup (keep latest ingest per reading_id), enrich with device
-    attributes, flag missing values and threshold anomalies.
-
-    watermark: high-water ``ingested_at`` from the existing target for
-    incremental runs (reference F1: strict ``>`` — ties/late rows drop by
-    design; we reproduce that exact semantic). None → full scan.
-
-    Dedup semantics (reference W1, SURVEY.md §2.6): *key-based* keep-latest.
-    Content duplicates with distinct reading_ids survive — do not "fix".
-    """
-    readings = stg_sensor_readings
-    if watermark is not None:
-        # Driver-side literal rather than a scalar subquery: enables
-        # parquet/Delta min-max file skipping on the ingest-time column.
-        readings = readings.filter(F.col("ingested_at") > F.lit(watermark))
-
-    rn = F.row_number().over(
-        Window.partitionBy("reading_id").orderBy(F.col("ingested_at").desc())
-    )
-    deduped = readings.withColumn("_row_num", rn).filter(F.col("_row_num") == 1)
-
-    d = F.broadcast(
-        stg_devices.select(
-            "device_id", "device_name", "device_type", "plant_location",
-            "factory_zone", "manufacturer",
-        )
-    )
-    joined = deduped.join(d, on="device_id", how="left")
-
-    return joined.select(
-        F.col("reading_id"),
-        F.col("device_id"),
-        F.col("metric_name"),
-        F.col("metric_value"),
-        F.col("reading_ts"),
-        F.col("ingested_at"),
-        F.col("device_name"),
-        F.col("device_type"),
-        F.col("plant_location"),
-        F.col("factory_zone"),
-        F.col("manufacturer"),
-        F.col("metric_value").isNull().alias("is_missing_value"),
-        _anomaly_flag(cfg).alias("is_anomaly"),
-        now_col(cfg).alias("_dbt_processed_at"),
-    )
-
-
-def int_device_health(
-    int_sensor_readings_cleaned: DataFrame,
-    cfg: RunConfig,
-    watermark=None,
-) -> DataFrame:
-    """Hourly per-device-per-metric health statistics (reference A1).
-
-    One hash aggregation: partial aggregates map-side, final after a single
-    shuffle on the composite key. ``stddev`` is sample stddev
-    (``stddev_samp``) — null for 1-row groups, preserved through round().
-    """
-    src = int_sensor_readings_cleaned.filter(~F.col("is_missing_value"))
-    if watermark is not None:
-        src = src.filter(F.col("_dbt_processed_at") > F.lit(watermark))
-
-    hour = F.date_trunc("hour", F.col("reading_ts"))
-    anomaly_int = F.when(F.col("is_anomaly"), 1).otherwise(0)
-
-    return (
-        src.groupBy(
-            "device_id", "device_name", "device_type", "plant_location",
-            "factory_zone", "metric_name", hour.alias("reading_hour"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("reading_count"),
-            F.round(F.avg("metric_value"), 2).alias("avg_value"),
-            F.round(F.min("metric_value"), 2).alias("min_value"),
-            F.round(F.max("metric_value"), 2).alias("max_value"),
-            F.round(F.stddev_samp("metric_value"), 2).alias("stddev_value"),
-            F.sum(anomaly_int).alias("anomaly_count"),
-            F.round(
-                safe_divide(F.sum(anomaly_int) * 100.0, F.count(F.lit(1))), 1
-            ).alias("anomaly_rate_pct"),
-            F.max("reading_ts").alias("latest_reading_ts"),
-        )
-        .select(
-            surrogate_key("device_id", "metric_name", F.col("reading_hour")).alias(
-                "device_health_key"
-            ),
-            "device_id", "device_name", "device_type", "plant_location",
-            "factory_zone", "metric_name", "reading_hour", "reading_count",
-            "avg_value", "min_value", "max_value", "stddev_value",
-            "anomaly_count", "anomaly_rate_pct", "latest_reading_ts",
-            now_col(cfg).alias("_dbt_processed_at"),
-        )
-    )
-
-
-def int_alerts_enriched(
-    stg_alerts: DataFrame,
-    stg_devices: DataFrame,
-    cfg: RunConfig,
-    watermark=None,
-) -> DataFrame:
-    """Alerts ⟕ devices with resolution time and severity scoring."""
-    alerts = stg_alerts
-    if watermark is not None:
-        alerts = alerts.filter(F.col("alert_ts") > F.lit(watermark))
-
-    d = F.broadcast(
-        stg_devices.select(
-            "device_id", "device_name", "device_type", "plant_location",
-            "factory_zone", "manufacturer", "days_since_install",
-        )
-    )
-    joined = alerts.join(d, on="device_id", how="left")
-
-    minutes_to_resolve = F.when(
-        F.col("is_resolved"),
-        F.round(
-            (F.unix_timestamp("resolved_at") - F.unix_timestamp("alert_ts")) / 60.0, 1
-        ),
-    ).otherwise(F.lit(None).cast("double"))
-
-    severity_score = (
-        F.when(F.col("severity") == "critical", 3)
-        .when(F.col("severity") == "warning", 2)
-        .when(F.col("severity") == "info", 1)
-        .otherwise(0)
-    )
-
-    return joined.select(
-        "alert_id", "device_id", "alert_type", "severity", "metric_name",
-        "threshold_value", "actual_value", "alert_ts", "resolved_at",
-        "resolution_notes", "is_resolved", "device_name", "device_type",
-        "plant_location", "factory_zone", "manufacturer", "days_since_install",
-        minutes_to_resolve.alias("minutes_to_resolve"),
-        severity_score.alias("severity_score"),
-        now_col(cfg).alias("_dbt_processed_at"),
-    )
+INT_ALERTS_ENRICHED = """
+SELECT /*+ BROADCAST(d) */
+  a.alert_id, a.device_id, a.alert_type, a.severity, a.metric_name,
+  a.threshold_value, a.actual_value, a.alert_ts, a.resolved_at,
+  a.resolution_notes, a.is_resolved, d.device_name, d.device_type,
+  d.plant_location, d.factory_zone, d.manufacturer, d.days_since_install,
+  CASE
+    WHEN a.is_resolved
+      THEN round((unix_timestamp(a.resolved_at) - unix_timestamp(a.alert_ts))
+                 / 60.0D, 1)
+    ELSE CAST(NULL AS DOUBLE)
+  END AS minutes_to_resolve,
+  CASE
+    WHEN a.severity = 'critical' THEN 3
+    WHEN a.severity = 'warning' THEN 2
+    WHEN a.severity = 'info' THEN 1
+    ELSE 0
+  END AS severity_score,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_processed_at
+FROM {stg_alerts} a
+LEFT JOIN {stg_devices} d ON a.device_id = d.device_id
+"""

@@ -17,258 +17,176 @@ Faithfully-reproduced quirks (SURVEY.md §7 hard parts):
   * vibration has no lower threshold → null lower_threshold.
   * fct_device_summary health_score keeps the reference's exact operand
     order and round(x, 0) (not a cast).
+
+Fractional literals carry the ``D`` suffix: Spark SQL reads a bare
+``100.0`` as DECIMAL, which would turn the rates into decimal columns.
 """
 
-from __future__ import annotations
+# Pure projection over the silver aggregate — no shuffle.
+FCT_HOURLY_METRICS = """
+SELECT
+  device_health_key, device_id, device_name, device_type, plant_location,
+  factory_zone, metric_name, reading_hour, reading_count, avg_value,
+  min_value, max_value, stddev_value, anomaly_count, anomaly_rate_pct,
+  latest_reading_ts,
+  to_date(reading_hour) AS reading_date,
+  hour(reading_hour) AS hour_of_day,
+  dayofweek(reading_hour) AS day_of_week,
+  CASE
+    WHEN anomaly_rate_pct >= 50.0D THEN 'critical'
+    WHEN anomaly_rate_pct >= 25.0D THEN 'degraded'
+    WHEN anomaly_rate_pct > 0 THEN 'warning'
+    ELSE 'healthy'
+  END AS health_status,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_created_at
+FROM {int_device_health}
+"""
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+# Daily device scorecard: two independent hash aggregations, then a
+# composite-key left join (device_id, date). Both sides aggregate to
+# ~|devices|×|days| rows, so even at 100 TB of readings the join inputs
+# are small; AQE broadcasts the alert side. avg over a CASE without ELSE
+# ignores nulls: the mean of resolved alerts only (reference
+# fct_device_summary.sql:72-76).
+FCT_DEVICE_SUMMARY = """
+WITH daily_readings AS (
+  SELECT
+    device_id, device_name, device_type, plant_location, factory_zone,
+    to_date(reading_ts) AS reading_date,
+    count(1) AS total_readings,
+    sum(CASE WHEN is_missing_value THEN 1 ELSE 0 END) AS missing_readings,
+    sum(CASE WHEN is_anomaly THEN 1 ELSE 0 END) AS anomaly_readings,
+    round((count(1) - sum(CASE WHEN is_missing_value THEN 1 ELSE 0 END)) * 100.0D
+          / nullif(count(1), 0), 1) AS data_completeness_pct,
+    round(sum(CASE WHEN is_anomaly THEN 1 ELSE 0 END) * 100.0D
+          / nullif(count(1), 0), 1) AS anomaly_rate_pct,
+    min(reading_ts) AS first_reading_ts,
+    max(reading_ts) AS last_reading_ts
+  FROM {int_sensor_readings_cleaned}
+  GROUP BY device_id, device_name, device_type, plant_location, factory_zone,
+           to_date(reading_ts)
+),
+daily_alerts AS (
+  SELECT
+    device_id,
+    to_date(alert_ts) AS alert_date,
+    count(1) AS total_alerts,
+    sum(CASE WHEN severity = 'critical' THEN 1 ELSE 0 END) AS critical_alerts,
+    sum(CASE WHEN severity = 'warning' THEN 1 ELSE 0 END) AS warning_alerts,
+    sum(CASE WHEN is_resolved THEN 1 ELSE 0 END) AS resolved_alerts,
+    round(avg(CASE WHEN minutes_to_resolve IS NOT NULL THEN minutes_to_resolve END), 1)
+      AS avg_resolution_minutes
+  FROM {int_alerts_enriched}
+  GROUP BY device_id, to_date(alert_ts)
+)
+SELECT
+  md5(concat_ws('-',
+    coalesce(CAST(r.device_id AS STRING), '_dbt_utils_surrogate_key_null_'),
+    coalesce(CAST(r.reading_date AS STRING), '_dbt_utils_surrogate_key_null_')
+  )) AS device_summary_key,
+  r.device_id, r.device_name, r.device_type, r.plant_location,
+  r.factory_zone, r.reading_date, r.total_readings, r.missing_readings,
+  r.anomaly_readings, r.data_completeness_pct, r.anomaly_rate_pct,
+  r.first_reading_ts, r.last_reading_ts,
+  coalesce(a.total_alerts, 0) AS total_alerts,
+  coalesce(a.critical_alerts, 0) AS critical_alerts,
+  coalesce(a.warning_alerts, 0) AS warning_alerts,
+  coalesce(a.resolved_alerts, 0) AS resolved_alerts,
+  a.avg_resolution_minutes,
+  round(greatest(0,
+    100
+    - coalesce(a.critical_alerts, 0) * 20
+    - coalesce(a.warning_alerts, 0) * 5
+    - r.anomaly_rate_pct * 0.5D
+    - (100 - r.data_completeness_pct) * 0.3D
+  ), 0) AS health_score,
+  CASE
+    WHEN coalesce(a.critical_alerts, 0) > 3 THEN 'critical'
+    WHEN coalesce(a.critical_alerts, 0) > 0 THEN 'at_risk'
+    WHEN r.anomaly_rate_pct > 10 THEN 'degraded'
+    ELSE 'healthy'
+  END AS health_category,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_created_at
+FROM daily_readings r
+LEFT JOIN daily_alerts a
+  ON r.device_id = a.device_id AND r.reading_date = a.alert_date
+"""
 
-from dbt_datbricks_demo_spark.config import RunConfig
-from dbt_datbricks_demo_spark.functions import safe_divide, surrogate_key
-from dbt_datbricks_demo_spark.models._common import now_col
+# Flattened anomaly events with threshold context and breach direction.
+FCT_ANOMALY_EVENTS = """
+SELECT
+  md5(concat_ws('-',
+    coalesce(CAST(reading_id AS STRING), '_dbt_utils_surrogate_key_null_')
+  )) AS anomaly_event_key,
+  reading_id, device_id, device_name, device_type, plant_location,
+  factory_zone, manufacturer, metric_name,
+  metric_value AS actual_value,
+  CASE
+    WHEN metric_name = 'temperature' THEN :temperature_upper
+    WHEN metric_name = 'vibration' THEN :vibration_upper
+    WHEN metric_name = 'humidity' THEN :humidity_upper
+    WHEN metric_name = 'pressure' THEN :pressure_upper
+  END AS upper_threshold,
+  CASE
+    WHEN metric_name = 'temperature' THEN :temperature_lower
+    WHEN metric_name = 'humidity' THEN :humidity_lower
+    WHEN metric_name = 'pressure' THEN :pressure_lower
+    ELSE CAST(NULL AS DOUBLE)
+  END AS lower_threshold,
+  reading_ts AS anomaly_ts,
+  to_date(reading_ts) AS anomaly_date,
+  hour(reading_ts) AS anomaly_hour,
+  CASE
+    WHEN metric_name IN ('temperature', 'humidity', 'pressure')
+         AND metric_value > CASE
+           WHEN metric_name = 'temperature' THEN :temperature_upper
+           WHEN metric_name = 'humidity' THEN :humidity_upper
+           WHEN metric_name = 'pressure' THEN :pressure_upper
+         END
+      THEN 'above_upper'
+    ELSE 'below_lower'
+  END AS breach_direction,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_created_at
+FROM {int_sensor_readings_cleaned}
+WHERE is_anomaly
+"""
 
-
-def fct_hourly_metrics(int_device_health: DataFrame, cfg: RunConfig) -> DataFrame:
-    """Hourly fact: health rows + time dimensions + health classification.
-
-    Pure projection over the silver aggregate — no shuffle.
-    """
-    rate = F.col("anomaly_rate_pct")
-    health_status = (
-        F.when(rate >= 50.0, "critical")
-        .when(rate >= 25.0, "degraded")
-        .when(rate > 0, "warning")
-        .otherwise("healthy")
-    )
-    return int_device_health.select(
-        "device_health_key", "device_id", "device_name", "device_type",
-        "plant_location", "factory_zone", "metric_name", "reading_hour",
-        "reading_count", "avg_value", "min_value", "max_value", "stddev_value",
-        "anomaly_count", "anomaly_rate_pct", "latest_reading_ts",
-        F.to_date("reading_hour").alias("reading_date"),
-        F.hour("reading_hour").alias("hour_of_day"),
-        F.dayofweek("reading_hour").alias("day_of_week"),
-        health_status.alias("health_status"),
-        now_col(cfg).alias("_dbt_created_at"),
-    )
-
-
-def fct_device_summary(
-    int_sensor_readings_cleaned: DataFrame,
-    int_alerts_enriched: DataFrame,
-    cfg: RunConfig,
-) -> DataFrame:
-    """Daily device scorecard: readings agg ⟕ alerts agg + health score.
-
-    Two independent hash aggregations then a composite-key left join
-    (device_id, date). Both sides aggregate to ~|devices|×|days| rows, so
-    even at 100 TB of readings the join inputs are small; AQE broadcasts
-    the alert side.
-    """
-    missing_int = F.when(F.col("is_missing_value"), 1).otherwise(0)
-    anomaly_int = F.when(F.col("is_anomaly"), 1).otherwise(0)
-
-    daily_readings = (
-        int_sensor_readings_cleaned.groupBy(
-            "device_id", "device_name", "device_type", "plant_location",
-            "factory_zone", F.to_date("reading_ts").alias("reading_date"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("total_readings"),
-            F.sum(missing_int).alias("missing_readings"),
-            F.sum(anomaly_int).alias("anomaly_readings"),
-            F.round(
-                safe_divide(
-                    (F.count(F.lit(1)) - F.sum(missing_int)) * 100.0,
-                    F.count(F.lit(1)),
-                ),
-                1,
-            ).alias("data_completeness_pct"),
-            F.round(
-                safe_divide(F.sum(anomaly_int) * 100.0, F.count(F.lit(1))), 1
-            ).alias("anomaly_rate_pct"),
-            F.min("reading_ts").alias("first_reading_ts"),
-            F.max("reading_ts").alias("last_reading_ts"),
-        )
-    )
-
-    # avg over a CASE-without-ELSE: avg ignores nulls, so this is the mean
-    # of resolved alerts only (reference fct_device_summary.sql:72-76).
-    daily_alerts = (
-        int_alerts_enriched.groupBy(
-            "device_id", F.to_date("alert_ts").alias("alert_date")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("total_alerts"),
-            F.sum(F.when(F.col("severity") == "critical", 1).otherwise(0)).alias(
-                "critical_alerts"
-            ),
-            F.sum(F.when(F.col("severity") == "warning", 1).otherwise(0)).alias(
-                "warning_alerts"
-            ),
-            F.sum(F.when(F.col("is_resolved"), 1).otherwise(0)).alias(
-                "resolved_alerts"
-            ),
-            F.round(
-                F.avg(
-                    F.when(
-                        F.col("minutes_to_resolve").isNotNull(),
-                        F.col("minutes_to_resolve"),
-                    )
-                ),
-                1,
-            ).alias("avg_resolution_minutes"),
-        )
-    )
-
-    r, a = daily_readings.alias("r"), daily_alerts.alias("a")
-    joined = r.join(
-        a,
-        (F.col("r.device_id") == F.col("a.device_id"))
-        & (F.col("r.reading_date") == F.col("a.alert_date")),
-        "left",
-    )
-
-    crit = F.coalesce(F.col("a.critical_alerts"), F.lit(0))
-    warn = F.coalesce(F.col("a.warning_alerts"), F.lit(0))
-    health_score = F.round(
-        F.greatest(
-            F.lit(0),
-            F.lit(100)
-            - (crit * 20)
-            - (warn * 5)
-            - (F.col("r.anomaly_rate_pct") * 0.5)
-            - ((F.lit(100) - F.col("r.data_completeness_pct")) * 0.3),
-        ),
-        0,
-    )
-    health_category = (
-        F.when(crit > 3, "critical")
-        .when(crit > 0, "at_risk")
-        .when(F.col("r.anomaly_rate_pct") > 10, "degraded")
-        .otherwise("healthy")
-    )
-
-    return joined.select(
-        surrogate_key(F.col("r.device_id"), F.col("r.reading_date")).alias(
-            "device_summary_key"
-        ),
-        F.col("r.device_id").alias("device_id"),
-        F.col("r.device_name").alias("device_name"),
-        F.col("r.device_type").alias("device_type"),
-        F.col("r.plant_location").alias("plant_location"),
-        F.col("r.factory_zone").alias("factory_zone"),
-        F.col("r.reading_date").alias("reading_date"),
-        F.col("r.total_readings").alias("total_readings"),
-        F.col("r.missing_readings").alias("missing_readings"),
-        F.col("r.anomaly_readings").alias("anomaly_readings"),
-        F.col("r.data_completeness_pct").alias("data_completeness_pct"),
-        F.col("r.anomaly_rate_pct").alias("anomaly_rate_pct"),
-        F.col("r.first_reading_ts").alias("first_reading_ts"),
-        F.col("r.last_reading_ts").alias("last_reading_ts"),
-        F.coalesce(F.col("a.total_alerts"), F.lit(0)).alias("total_alerts"),
-        crit.alias("critical_alerts"),
-        warn.alias("warning_alerts"),
-        F.coalesce(F.col("a.resolved_alerts"), F.lit(0)).alias("resolved_alerts"),
-        F.col("a.avg_resolution_minutes").alias("avg_resolution_minutes"),
-        health_score.alias("health_score"),
-        health_category.alias("health_category"),
-        now_col(cfg).alias("_dbt_created_at"),
-    )
-
-
-def fct_anomaly_events(
-    int_sensor_readings_cleaned: DataFrame, cfg: RunConfig
-) -> DataFrame:
-    """Flattened anomaly events with threshold context and breach direction."""
-    t = cfg.thresholds
-    mn = F.col("metric_name")
-
-    upper_threshold = (
-        F.when(mn == "temperature", t.temperature_upper)
-        .when(mn == "vibration", t.vibration_upper)
-        .when(mn == "humidity", t.humidity_upper)
-        .when(mn == "pressure", t.pressure_upper)
-    )
-    lower_threshold = (
-        F.when(mn == "temperature", t.temperature_lower)
-        .when(mn == "humidity", t.humidity_lower)
-        .when(mn == "pressure", t.pressure_lower)
-        .otherwise(F.lit(None).cast("double"))
-    )
-    upper_for_direction = (
-        F.when(mn == "temperature", t.temperature_upper)
-        .when(mn == "humidity", t.humidity_upper)
-        .when(mn == "pressure", t.pressure_upper)
-    )
-    breach_direction = F.when(
-        mn.isin("temperature", "humidity", "pressure")
-        & (F.col("metric_value") > upper_for_direction),
-        "above_upper",
-    ).otherwise("below_lower")
-
-    return int_sensor_readings_cleaned.filter(F.col("is_anomaly")).select(
-        surrogate_key("reading_id").alias("anomaly_event_key"),
-        "reading_id", "device_id", "device_name", "device_type",
-        "plant_location", "factory_zone", "manufacturer", "metric_name",
-        F.col("metric_value").alias("actual_value"),
-        upper_threshold.alias("upper_threshold"),
-        lower_threshold.alias("lower_threshold"),
-        F.col("reading_ts").alias("anomaly_ts"),
-        F.to_date("reading_ts").alias("anomaly_date"),
-        F.hour("reading_ts").alias("anomaly_hour"),
-        breach_direction.alias("breach_direction"),
-        now_col(cfg).alias("_dbt_created_at"),
-    )
-
-
-def dim_devices(
-    stg_devices: DataFrame,
-    int_sensor_readings_cleaned: DataFrame,
-    cfg: RunConfig,
-) -> DataFrame:
-    """SCD1-style device dimension with lifetime reading stats."""
-    stats = int_sensor_readings_cleaned.groupBy("device_id").agg(
-        F.count(F.lit(1)).alias("total_readings"),
-        F.sum(F.when(F.col("is_anomaly"), 1).otherwise(0)).alias("total_anomalies"),
-        F.sum(F.when(F.col("is_missing_value"), 1).otherwise(0)).alias(
-            "total_missing"
-        ),
-        F.min("reading_ts").alias("first_reading_ts"),
-        F.max("reading_ts").alias("last_reading_ts"),
-    )
-
-    d, s = stg_devices.alias("d"), stats.alias("s")
-    joined = d.join(s, on="device_id", how="left")
-
-    lifetime_rate = F.when(
-        F.col("s.total_readings") > 0,
-        F.round(F.col("s.total_anomalies") * 100.0 / F.col("s.total_readings"), 2),
-    ).otherwise(F.lit(0).cast("double"))
-
-    return joined.select(
-        surrogate_key("device_id").alias("device_key"),
-        "device_id",
-        F.col("d.device_name").alias("device_name"),
-        F.col("d.device_type").alias("device_type"),
-        F.col("d.plant_location").alias("plant_location"),
-        F.col("d.factory_zone").alias("factory_zone"),
-        F.col("d.install_date").alias("install_date"),
-        F.col("d.manufacturer").alias("manufacturer"),
-        F.col("d.firmware_version").alias("firmware_version"),
-        F.col("d.is_active").alias("is_active"),
-        F.col("d.days_since_install").alias("days_since_install"),
-        F.coalesce(F.col("s.total_readings"), F.lit(0)).alias("lifetime_readings"),
-        F.coalesce(F.col("s.total_anomalies"), F.lit(0)).alias("lifetime_anomalies"),
-        F.coalesce(F.col("s.total_missing"), F.lit(0)).alias(
-            "lifetime_missing_readings"
-        ),
-        F.col("s.first_reading_ts").alias("first_reading_ts"),
-        F.col("s.last_reading_ts").alias("last_reading_ts"),
-        lifetime_rate.alias("lifetime_anomaly_rate_pct"),
-        now_col(cfg).alias("_valid_from"),
-        F.lit(None).cast("timestamp").alias("_valid_to"),
-        F.lit(True).alias("_is_current"),
-        now_col(cfg).alias("_dbt_created_at"),
-    )
+# SCD1-style device dimension with lifetime reading stats.
+DIM_DEVICES = """
+WITH devices AS (
+  SELECT * FROM {stg_devices}
+),
+reading_stats AS (
+  SELECT
+    device_id,
+    count(1) AS total_readings,
+    sum(CASE WHEN is_anomaly THEN 1 ELSE 0 END) AS total_anomalies,
+    sum(CASE WHEN is_missing_value THEN 1 ELSE 0 END) AS total_missing,
+    min(reading_ts) AS first_reading_ts,
+    max(reading_ts) AS last_reading_ts
+  FROM {int_sensor_readings_cleaned}
+  GROUP BY device_id
+)
+SELECT
+  md5(concat_ws('-',
+    coalesce(CAST(d.device_id AS STRING), '_dbt_utils_surrogate_key_null_')
+  )) AS device_key,
+  d.device_id, d.device_name, d.device_type, d.plant_location,
+  d.factory_zone, d.install_date, d.manufacturer, d.firmware_version,
+  d.is_active, d.days_since_install,
+  coalesce(s.total_readings, 0) AS lifetime_readings,
+  coalesce(s.total_anomalies, 0) AS lifetime_anomalies,
+  coalesce(s.total_missing, 0) AS lifetime_missing_readings,
+  s.first_reading_ts, s.last_reading_ts,
+  CASE
+    WHEN s.total_readings > 0
+      THEN round(s.total_anomalies * 100.0D / s.total_readings, 2)
+    ELSE CAST(0 AS DOUBLE)
+  END AS lifetime_anomaly_rate_pct,
+  coalesce(:frozen_now, current_timestamp()) AS _valid_from,
+  CAST(NULL AS TIMESTAMP) AS _valid_to,
+  true AS _is_current,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_created_at
+FROM devices d
+LEFT JOIN reading_stats s ON d.device_id = s.device_id
+"""

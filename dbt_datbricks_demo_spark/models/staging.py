@@ -10,62 +10,46 @@ flags); they stay inside whole-stage codegen and cost one scan each.
 Materialized as views (reference dbt_project.yml:31) so they add no storage.
 """
 
-from __future__ import annotations
+STG_SENSOR_READINGS = """
+SELECT
+  reading_id, device_id,
+  lower(trim(metric_name)) AS metric_name,
+  CAST(metric_value AS DOUBLE) AS metric_value,
+  CAST(reading_ts AS TIMESTAMP) AS reading_ts,
+  CAST(ingested_at AS TIMESTAMP) AS ingested_at,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_loaded_at,
+  :invocation_id AS _dbt_invocation_id
+FROM {raw_sensor_readings}
+"""
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+# location → plant_location, zone → factory_zone
+STG_DEVICES = """
+SELECT
+  device_id, device_name,
+  lower(trim(device_type)) AS device_type,
+  location AS plant_location,
+  zone AS factory_zone,
+  CAST(install_date AS DATE) AS install_date,
+  manufacturer, firmware_version,
+  CAST(is_active AS BOOLEAN) AS is_active,
+  datediff(coalesce(:frozen_today, current_date()), CAST(install_date AS DATE))
+    AS days_since_install,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_loaded_at
+FROM {raw_devices}
+"""
 
-from dbt_datbricks_demo_spark.config import RunConfig
-from dbt_datbricks_demo_spark.models._common import now_col, today_col
-
-
-def stg_sensor_readings(raw_sensor_readings: DataFrame, cfg: RunConfig) -> DataFrame:
-    """Normalize metric names, enforce double/timestamp types, stamp lineage."""
-    return raw_sensor_readings.select(
-        F.col("reading_id"),
-        F.col("device_id"),
-        F.lower(F.trim(F.col("metric_name"))).alias("metric_name"),
-        F.col("metric_value").cast("double").alias("metric_value"),
-        F.col("reading_ts").cast("timestamp").alias("reading_ts"),
-        F.col("ingested_at").cast("timestamp").alias("ingested_at"),
-        now_col(cfg).alias("_dbt_loaded_at"),
-        F.lit(cfg.invocation_id).alias("_dbt_invocation_id"),
-    )
-
-
-def stg_devices(raw_devices: DataFrame, cfg: RunConfig) -> DataFrame:
-    """Rename location→plant_location / zone→factory_zone, type casts,
-    derived days_since_install = datediff(today, install_date)."""
-    install_date = F.col("install_date").cast("date")
-    return raw_devices.select(
-        F.col("device_id"),
-        F.col("device_name"),
-        F.lower(F.trim(F.col("device_type"))).alias("device_type"),
-        F.col("location").alias("plant_location"),
-        F.col("zone").alias("factory_zone"),
-        install_date.alias("install_date"),
-        F.col("manufacturer"),
-        F.col("firmware_version"),
-        F.col("is_active").cast("boolean").alias("is_active"),
-        F.datediff(today_col(cfg), install_date).alias("days_since_install"),
-        now_col(cfg).alias("_dbt_loaded_at"),
-    )
-
-
-def stg_alerts(raw_alerts: DataFrame, cfg: RunConfig) -> DataFrame:
-    """Normalize categorical fields, cast numerics/timestamps, derive
-    is_resolved = resolved_at IS NOT NULL."""
-    return raw_alerts.select(
-        F.col("alert_id"),
-        F.col("device_id"),
-        F.lower(F.trim(F.col("alert_type"))).alias("alert_type"),
-        F.lower(F.trim(F.col("severity"))).alias("severity"),
-        F.lower(F.trim(F.col("metric_name"))).alias("metric_name"),
-        F.col("threshold_value").cast("double").alias("threshold_value"),
-        F.col("actual_value").cast("double").alias("actual_value"),
-        F.col("alert_ts").cast("timestamp").alias("alert_ts"),
-        F.col("resolved_at").cast("timestamp").alias("resolved_at"),
-        F.col("resolution_notes"),
-        F.col("resolved_at").cast("timestamp").isNotNull().alias("is_resolved"),
-        now_col(cfg).alias("_dbt_loaded_at"),
-    )
+STG_ALERTS = """
+SELECT
+  alert_id, device_id,
+  lower(trim(alert_type)) AS alert_type,
+  lower(trim(severity)) AS severity,
+  lower(trim(metric_name)) AS metric_name,
+  CAST(threshold_value AS DOUBLE) AS threshold_value,
+  CAST(actual_value AS DOUBLE) AS actual_value,
+  CAST(alert_ts AS TIMESTAMP) AS alert_ts,
+  CAST(resolved_at AS TIMESTAMP) AS resolved_at,
+  resolution_notes,
+  CAST(resolved_at AS TIMESTAMP) IS NOT NULL AS is_resolved,
+  coalesce(:frozen_now, current_timestamp()) AS _dbt_loaded_at
+FROM {raw_alerts}
+"""

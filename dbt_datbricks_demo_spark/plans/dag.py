@@ -1,102 +1,106 @@
 """Model registry and DAG (reference operators S2/S3: source()/ref()
 resolution).
 
-Each ModelDef declares its upstream dependencies by name; the runner
-resolves them from a relations dict — the Spark-native equivalent of dbt's
-manifest graph. Tags drive layer selection (reference dbt_project.yml:
-bronze/staging, silver/intermediate, gold/marts).
+Each ModelDef holds its model's SQL text (``models/``) and its
+materialization config; its upstream dependencies are the text's
+``{name}`` placeholders, which the runner resolves from a relations dict
+— the Spark-native equivalent of dbt's manifest graph. Tags drive layer
+selection (reference dbt_project.yml: bronze/staging,
+silver/intermediate, gold/marts).
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable, Mapping
+import re
+from collections.abc import Mapping
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from dbt_datbricks_demo_spark import models as M
 from dbt_datbricks_demo_spark.config import RunConfig
+from dbt_datbricks_demo_spark.models import intermediate, marts, run_sql, staging
+
+_REF = re.compile(r"\{(\w+)\}")
 
 
 @dataclass(frozen=True)
 class ModelDef:
     name: str
-    deps: tuple[str, ...]
-    # builder(relations, cfg, watermark) -> DataFrame
-    build: Callable[[Mapping[str, DataFrame], RunConfig, object], DataFrame]
+    sql: str
     materialization: str = "view"  # view | table | incremental
     unique_key: str | None = None
     watermark_col: str | None = None  # incremental high-water column
     tags: tuple[str, ...] = field(default=())
     schema_suffix: str = "bronze"  # medallion routing (generate_schema_name)
 
+    @property
+    def deps(self) -> tuple[str, ...]:
+        """The refs of the text, in order of first appearance."""
+        return tuple(dict.fromkeys(_REF.findall(self.sql)))
+
+    def build(
+        self, relations: Mapping[str, DataFrame], cfg: RunConfig, watermark=None
+    ) -> DataFrame:
+        """The model's lazy DataFrame over ``relations``. A ``watermark``
+        (the target's high-water mark, on an increment) keeps the first
+        ref's rows whose ``watermark_col`` is past it — a driver-side
+        literal rather than a scalar subquery, so the scan gets parquet
+        min/max file skipping."""
+        refs = {d: relations[d] for d in self.deps}
+        if watermark is not None:
+            first = self.deps[0]
+            refs[first] = refs[first].filter(
+                F.col(self.watermark_col) > F.lit(watermark)
+            )
+        return run_sql(self.sql, cfg, **refs)
+
 
 MODELS: dict[str, ModelDef] = {
     m.name: m
     for m in [
         ModelDef(
-            "stg_sensor_readings", ("raw_sensor_readings",),
-            lambda r, c, w: M.stg_sensor_readings(r["raw_sensor_readings"], c),
+            "stg_sensor_readings", staging.STG_SENSOR_READINGS,
             "view", tags=("bronze", "staging"), schema_suffix="bronze",
         ),
         ModelDef(
-            "stg_devices", ("raw_devices",),
-            lambda r, c, w: M.stg_devices(r["raw_devices"], c),
+            "stg_devices", staging.STG_DEVICES,
             "view", tags=("bronze", "staging"), schema_suffix="bronze",
         ),
         ModelDef(
-            "stg_alerts", ("raw_alerts",),
-            lambda r, c, w: M.stg_alerts(r["raw_alerts"], c),
+            "stg_alerts", staging.STG_ALERTS,
             "view", tags=("bronze", "staging"), schema_suffix="bronze",
         ),
         ModelDef(
-            "int_sensor_readings_cleaned", ("stg_sensor_readings", "stg_devices"),
-            lambda r, c, w: M.int_sensor_readings_cleaned(
-                r["stg_sensor_readings"], r["stg_devices"], c, watermark=w
-            ),
+            "int_sensor_readings_cleaned", intermediate.INT_SENSOR_READINGS_CLEANED,
             "incremental", unique_key="reading_id", watermark_col="ingested_at",
             tags=("silver", "intermediate", "incremental"), schema_suffix="silver",
         ),
         ModelDef(
-            "int_device_health", ("int_sensor_readings_cleaned",),
-            lambda r, c, w: M.int_device_health(
-                r["int_sensor_readings_cleaned"], c, watermark=w
-            ),
+            "int_device_health", intermediate.INT_DEVICE_HEALTH,
             "incremental", unique_key="device_health_key",
             watermark_col="_dbt_processed_at",
             tags=("silver", "intermediate"), schema_suffix="silver",
         ),
         ModelDef(
-            "int_alerts_enriched", ("stg_alerts", "stg_devices"),
-            lambda r, c, w: M.int_alerts_enriched(
-                r["stg_alerts"], r["stg_devices"], c, watermark=w
-            ),
+            "int_alerts_enriched", intermediate.INT_ALERTS_ENRICHED,
             "incremental", unique_key="alert_id", watermark_col="alert_ts",
             tags=("silver", "intermediate"), schema_suffix="silver",
         ),
         ModelDef(
-            "fct_hourly_metrics", ("int_device_health",),
-            lambda r, c, w: M.fct_hourly_metrics(r["int_device_health"], c),
+            "fct_hourly_metrics", marts.FCT_HOURLY_METRICS,
             "table", tags=("gold", "marts", "fact"), schema_suffix="gold",
         ),
         ModelDef(
-            "fct_device_summary",
-            ("int_sensor_readings_cleaned", "int_alerts_enriched"),
-            lambda r, c, w: M.fct_device_summary(
-                r["int_sensor_readings_cleaned"], r["int_alerts_enriched"], c
-            ),
+            "fct_device_summary", marts.FCT_DEVICE_SUMMARY,
             "table", tags=("gold", "marts", "fact"), schema_suffix="gold",
         ),
         ModelDef(
-            "fct_anomaly_events", ("int_sensor_readings_cleaned",),
-            lambda r, c, w: M.fct_anomaly_events(r["int_sensor_readings_cleaned"], c),
+            "fct_anomaly_events", marts.FCT_ANOMALY_EVENTS,
             "table", tags=("gold", "marts", "fact"), schema_suffix="gold",
         ),
         ModelDef(
-            "dim_devices", ("stg_devices", "int_sensor_readings_cleaned"),
-            lambda r, c, w: M.dim_devices(
-                r["stg_devices"], r["int_sensor_readings_cleaned"], c
-            ),
+            "dim_devices", marts.DIM_DEVICES,
             "table", tags=("gold", "marts", "dimension"), schema_suffix="gold",
         ),
     ]

@@ -8,15 +8,13 @@ incremental — first run = CTAS; later runs = keyed upsert of rows newer
               int_*.sql config blocks + MERGE shape documented at
               databricks_data_flow.sql:193-203).
 
-Delta Lake note: the reference's MERGE runs on Delta. delta-spark is not
-available in this environment, so the upsert is expressed over parquet
-as one keyed window over target ∪ new rows plus an atomic directory
-swap — the same row-level semantics as
-``whenMatchedUpdateAll().whenNotMatchedInsertAll()``. When delta-spark
-IS importable we use a native DeltaTable.merge instead (no rewrite of
-untouched files at 100 TB — see _HAVE_DELTA path). Schema evolution
-(`on_schema_change='append_new_columns'`) is handled in both paths by
-unioning with missing columns added as nulls.
+Delta Lake note: the reference's MERGE runs on Delta. Here tables are
+parquet, and the upsert is one keyed window over target ∪ new rows plus
+an atomic directory swap — the same row-level semantics as
+``whenMatchedUpdateAll().whenNotMatchedInsertAll()``, at the price of a
+full rewrite instead of Delta's rewrite of only the touched files.
+Schema evolution (`on_schema_change='append_new_columns'`) is handled
+by unioning with missing columns added as nulls.
 
 The parquet path pays no Spark job beyond the writes themselves:
 
@@ -55,13 +53,6 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-try:  # delta-spark is optional in this environment
-    from delta.tables import DeltaTable  # type: ignore
-
-    _HAVE_DELTA = True
-except ImportError:
-    _HAVE_DELTA = False
-
 HIGH_WATER_FILE = "_high_water.json"
 # the key under which Spark's parquet writer stores the frame's schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
@@ -94,13 +85,12 @@ def _recover_swap(path: str) -> None:
 
 
 def table_exists(path: str) -> bool:
-    """Does a table live at ``path``: a directory holding parquet files,
-    a ``_SUCCESS`` marker or a Delta log? A swap that crashed between
-    its renames is rolled back first (``_recover_swap``)."""
+    """Does a table live at ``path``: a directory holding parquet files
+    or a ``_SUCCESS`` marker? A swap that crashed between its renames is
+    rolled back first (``_recover_swap``)."""
     _recover_swap(path)
     return os.path.isdir(path) and any(
-        f.endswith(".parquet") or f in ("_SUCCESS", "_delta_log")
-        for f in os.listdir(path)
+        f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(path)
     )
 
 
@@ -232,21 +222,10 @@ class Materializer:
         spark: SparkSession,
         warehouse_dir: str,
         target: str = "iot_dev",
-        table_format: str = "parquet",
     ):
-        if table_format not in ("parquet", "delta"):
-            raise ValueError(f"unsupported table_format {table_format!r}")
-        if table_format == "delta" and not _HAVE_DELTA:
-            raise RuntimeError(
-                "table_format='delta' requires delta-spark, which is not "
-                "importable here — run on a Delta-enabled cluster or "
-                "install delta-spark (see tests/test_delta_path.py for "
-                "the test matrix)"
-            )
         self.spark = spark
         self.warehouse_dir = warehouse_dir
         self.target = target
-        self.table_format = table_format
         os.makedirs(warehouse_dir, exist_ok=True)
 
     # ---- paths / existence -------------------------------------------------
@@ -258,11 +237,8 @@ class Materializer:
 
     def read(self, name: str, schema_suffix: str) -> DataFrame:
         """The table, read with its footer schema (``read_table``: no
-        inference job); Delta reads through its log."""
-        path = self.path(name, schema_suffix)
-        if self.table_format == "delta":
-            return self.spark.read.format("delta").load(path)
-        return read_table(self.spark, path)
+        inference job)."""
+        return read_table(self.spark, self.path(name, schema_suffix))
 
     def _read_back(self, name: str, schema_suffix: str) -> DataFrame:
         """The table just written, read (``read``) and registered as a
@@ -286,20 +262,19 @@ class Materializer:
         """Full refresh: write ``df``, then read it back (``_read_back``).
         An incremental model passes its ``watermark_col``, whose
         high-water mark the write records (``swap_write``)."""
-        self._atomic_write(df, self.path(name, schema_suffix), watermark_col)
+        swap_write(df, self.path(name, schema_suffix), watermark_col)
         return self._read_back(name, schema_suffix)
 
     def high_water(self, name: str, schema_suffix: str, col: str):
         """max(``col``) of the existing target — pushed back by the model
         as a literal, so the scan of new data gets min/max file skipping
-        (SURVEY.md §4). A parquet target's last write recorded it in
+        (SURVEY.md §4). The target's last write recorded it in
         ``HIGH_WATER_FILE``, which answers without a Spark job; the table
         is scanned where that file is missing, names another column or
-        holds a type it cannot round-trip, and on Delta."""
-        if self.table_format == "parquet":
-            mark = _recorded_high_water(self.path(name, schema_suffix), col)
-            if mark is not _UNRECORDED:
-                return mark
+        holds a type it cannot round-trip."""
+        mark = _recorded_high_water(self.path(name, schema_suffix), col)
+        if mark is not _UNRECORDED:
+            return mark
         return self.read(name, schema_suffix).agg(F.max(col).alias("m")).first()["m"]
 
     def merge_upsert(
@@ -311,56 +286,13 @@ class Materializer:
         watermark_col: str | None = None,
     ) -> DataFrame:
         """Keyed upsert: rows in `new_rows` replace same-key target rows,
-        others append (MERGE whenMatchedUpdateAll/whenNotMatchedInsertAll).
-
-        Delta targets use the native transactional MERGE — file-level
-        rewrite of only the touched files, which is the whole point at
-        100 TB. Parquet targets emulate the row-level semantics with one
-        shuffle (``parquet_merge_upsert``: a keyed window over target ∪
-        ``new_rows``, which are computed once, then an atomic swap and a
-        full rewrite that records ``watermark_col``'s high-water mark),
-        then read the result back (``_read_back``)."""
-        path = self.path(name, schema_suffix)
-        if self.table_format == "delta":
-            self._merge_upsert_delta(path, new_rows, unique_key)
-        else:
-            parquet_merge_upsert(
-                self.spark, path, new_rows, unique_key, watermark_col
-            )
+        others append (MERGE whenMatchedUpdateAll/whenNotMatchedInsertAll),
+        in one shuffle (``parquet_merge_upsert``: a keyed window over
+        target ∪ ``new_rows``, which are computed once, then an atomic
+        swap and a full rewrite that records ``watermark_col``'s
+        high-water mark), then read the result back (``_read_back``)."""
+        parquet_merge_upsert(
+            self.spark, self.path(name, schema_suffix), new_rows, unique_key,
+            watermark_col,
+        )
         return self._read_back(name, schema_suffix)
-
-    def _merge_upsert_delta(
-        self, path: str, new_rows: DataFrame, unique_key: str
-    ) -> None:
-        """Native Delta MERGE (reference MERGE shape,
-        databricks_data_flow.sql:193-203). autoMerge carries the
-        append_new_columns schema-evolution contract the parquet path
-        implements via unionByName(allowMissingColumns)."""
-        self.spark.conf.set(
-            "spark.databricks.delta.schema.autoMerge.enabled", "true"
-        )
-        (
-            DeltaTable.forPath(self.spark, path)
-            .alias("t")
-            .merge(new_rows.alias("s"), f"t.{unique_key} = s.{unique_key}")
-            .whenMatchedUpdateAll()
-            .whenNotMatchedInsertAll()
-            .execute()
-        )
-
-    # ---- internals ---------------------------------------------------------
-    def _atomic_write(
-        self, df: DataFrame, path: str, watermark_col: str | None
-    ) -> None:
-        """Full-refresh write: parquet swaps a temp dir in
-        (``swap_write``); Delta writes are transactional via the log, so
-        they overwrite in place instead of directory-swapping."""
-        if self.table_format == "delta":
-            (
-                df.write.format("delta")
-                .mode("overwrite")
-                .option("overwriteSchema", "true")
-                .save(path)
-            )
-            return
-        swap_write(df, path, watermark_col)

@@ -69,7 +69,7 @@ class PipelineRunner:
                     continue
             missing = [d for d in model.deps if d not in relations]
             if missing:
-                # without this, the build lambda dies on a bare KeyError
+                # without this, the build dies on a bare KeyError
                 # (e.g. `run --select gold` on a fresh warehouse whose
                 # silver tables were never materialized)
                 raise RuntimeError(

@@ -3,8 +3,8 @@
 dbt's slim CI builds only the models whose compiled definition changed
 versus a saved manifest, plus everything downstream of them. The
 Spark-native equivalent fingerprints each model's *definition* — the
-builder's source, its backing model function, and its materialization
-config — and compares against a saved state file:
+SQL text it runs and its materialization config — and compares against
+a saved state file:
 
     fp = fingerprints()                        # current state
     save_state(state_dir)                      # after a green prod run
@@ -18,33 +18,21 @@ silver model (and its gold children) and rebuilding the world.
 from __future__ import annotations
 
 import hashlib
-import inspect
 import json
 import os
 
-from dbt_datbricks_demo_spark import models as M
 from dbt_datbricks_demo_spark.plans.dag import MODELS
 
 STATE_FILE = "manifest_fingerprints.json"
 
 
-def _source_of(obj) -> str:
-    try:
-        return inspect.getsource(obj)
-    except (OSError, TypeError):  # builtins, REPL lambdas
-        return repr(obj)
-
-
 def fingerprints() -> dict[str, str]:
-    """md5 per model over everything that defines its output: builder
-    lambda source, the same-named function in the models package (where
-    the real logic lives), deps, materialization, keys."""
+    """md5 per model over everything that defines its output: the SQL
+    text (whose placeholders are its deps), materialization, keys."""
     out = {}
     for name, m in MODELS.items():
         parts = [
-            _source_of(m.build),
-            _source_of(getattr(M, name)) if hasattr(M, name) else "",
-            repr(m.deps),
+            m.sql,
             m.materialization,
             repr(m.unique_key),
             repr(m.watermark_col),

@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from dbt_datbricks_demo_spark.config import RunConfig
-from dbt_datbricks_demo_spark.models.intermediate import _anomaly_flag
+from dbt_datbricks_demo_spark.models import run_sql
+from dbt_datbricks_demo_spark.models.intermediate import ANOMALY_CASE
 from dbt_datbricks_demo_spark.plans.materialize import (
     parquet_merge_upsert,
     swap_write,
@@ -86,15 +87,18 @@ def sensor_stream_cleaned(
             "factory_zone", "manufacturer",
         )
     )
-    enriched = deduped.join(d, on="device_id", how="left")
-    return enriched.select(
+    enriched = deduped.join(d, on="device_id", how="left").select(
         "reading_id", "device_id",
         F.lower(F.trim(F.col("metric_name"))).alias("metric_name"),
         F.col("metric_value").cast("double").alias("metric_value"),
         "reading_ts", "ingested_at", "device_name", "device_type",
         "plant_location", "factory_zone", "manufacturer",
-        F.col("metric_value").isNull().alias("is_missing_value"),
-        _anomaly_flag(cfg).alias("is_anomaly"),
+    )
+    # the batch model's anomaly CASE, its thresholds bound from cfg
+    return run_sql(
+        "SELECT *, metric_value IS NULL AS is_missing_value, "
+        f"{ANOMALY_CASE} AS is_anomaly FROM {{enriched}}",
+        cfg, enriched=enriched,
     )
 
 

@@ -115,8 +115,7 @@ def anomaly_streaks(cleaned: DataFrame, threshold: int = 3) -> DataFrame:
 # ...RocksDBStateStoreProvider (transformWithState contract in OSS
 # Spark 4), plus the `protobuf` package (the state-server protocol of
 # the Python API). protobuf is not installed in this sandbox, so the
-# test skips when transform_with_state_available() is False — the same
-# env-gating pattern as the delta-spark merge path.
+# test skips when transform_with_state_available() is False.
 
 
 def transform_with_state_available() -> bool:

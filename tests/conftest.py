@@ -14,9 +14,9 @@ import os
 import pytest
 
 from dbt_datbricks_demo_spark.config import RunConfig
+from dbt_datbricks_demo_spark.plans.dag import MODELS, topo_order
 from dbt_datbricks_demo_spark.session import get_spark
 from dbt_datbricks_demo_spark.sources import load_seeds
-from dbt_datbricks_demo_spark import models as M
 from perfbench.datagen import IotSeeds
 
 SEEDS_DIR = "/root/reference/seeds"
@@ -71,24 +71,10 @@ def generated_seeds(spark, generated_seeds_dir):
 @pytest.fixture(scope="session")
 def dag(spark, seeds, cfg):
     """All 10 models built (full-refresh mode), keyed by model name."""
-    stg_r = M.stg_sensor_readings(seeds["raw_sensor_readings"], cfg)
-    stg_d = M.stg_devices(seeds["raw_devices"], cfg)
-    stg_a = M.stg_alerts(seeds["raw_alerts"], cfg)
-    cleaned = M.int_sensor_readings_cleaned(stg_r, stg_d, cfg)
-    health = M.int_device_health(cleaned, cfg)
-    enriched = M.int_alerts_enriched(stg_a, stg_d, cfg)
-    out = {
-        "stg_sensor_readings": stg_r,
-        "stg_devices": stg_d,
-        "stg_alerts": stg_a,
-        "int_sensor_readings_cleaned": cleaned,
-        "int_device_health": health,
-        "int_alerts_enriched": enriched,
-        "fct_hourly_metrics": M.fct_hourly_metrics(health, cfg),
-        "fct_device_summary": M.fct_device_summary(cleaned, enriched, cfg),
-        "fct_anomaly_events": M.fct_anomaly_events(cleaned, cfg),
-        "dim_devices": M.dim_devices(stg_d, cleaned, cfg),
-    }
+    out = dict(seeds)
+    for name in topo_order(MODELS):
+        out[name] = MODELS[name].build(out, cfg)
+    out = {name: out[name] for name in MODELS}
     # cache: every test reuses these tiny frames
     for df in out.values():
         df.cache()

@@ -181,16 +181,10 @@ def _fallback_unsupported_type(mat, path):
     return "w"
 
 
-def _fallback_delta(mat, path):
-    # the Delta branch, on a stand-in: its reads go through parquet
-    mat.table_format = "delta"
-    return "w"
-
-
 @pytest.mark.parametrize(
     "make", [_fallback_missing_file, _fallback_other_column,
-             _fallback_unsupported_type, _fallback_delta],
-    ids=["missing_file", "other_column", "unsupported_type", "delta"],
+             _fallback_unsupported_type],
+    ids=["missing_file", "other_column", "unsupported_type"],
 )
 def test_high_water_falls_back_to_scan(spark, tmp_path, monkeypatch, make):
     mat = Materializer(spark, str(tmp_path / "wh"), target="t")

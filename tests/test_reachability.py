@@ -3,7 +3,7 @@ is reached, by name, from an entry point, or is on ``ALLOWED`` with the
 reason it stays.
 
 Entry points (roots): the registered queries (functions decorated with
-``_register``), the model builders (``plans.dag.MODELS``), the CLI
+``_register``), the model registry (``plans.dag.MODELS``), the CLI
 (``cli.py``, ``__main__.py``), the public methods of ``PipelineRunner``,
 the names ``streaming/__init__.py`` exports, and the names ``bench.py``,
 ``__spark_entry__.py`` and ``perfbench/`` use.

@@ -4,10 +4,14 @@ their downstream closure, and rebuild only those."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
+
+import pytest
 
 from dbt_datbricks_demo_spark.config import RunConfig
 from dbt_datbricks_demo_spark.plans import state
+from dbt_datbricks_demo_spark.plans.dag import MODELS
 from dbt_datbricks_demo_spark.plans.runner import PipelineRunner
 
 
@@ -58,3 +62,31 @@ def test_runner_select_names_rebuilds_only_selection(spark, generated_seeds, tmp
         for f in os.listdir(untouched)
     )
     assert after == before, "deselected gold table must not be rewritten"
+
+
+def _downstream(name: str) -> set[str]:
+    children = {n for n, m in MODELS.items() if name in m.deps}
+    return {name}.union(*(_downstream(c) for c in children))
+
+
+@pytest.mark.parametrize("name", sorted(MODELS))
+def test_sql_edit_selects_model_and_downstream(tmp_path, monkeypatch, name):
+    state.save_state(str(tmp_path))
+    edited = dataclasses.replace(MODELS[name], sql=MODELS[name].sql + "-- edited\n")
+    monkeypatch.setitem(MODELS, name, edited)
+    assert state.modified(str(tmp_path)) == {name}
+    assert state.modified_plus_downstream(str(tmp_path)) == _downstream(name)
+
+
+def test_anomaly_case_edit_selects_cleaned_and_its_children(tmp_path, monkeypatch):
+    state.save_state(str(tmp_path))
+    name = "int_sensor_readings_cleaned"
+    sql = MODELS[name].sql.replace(
+        "metric_value > :vibration_upper", "metric_value >= :vibration_upper"
+    )
+    assert sql != MODELS[name].sql
+    monkeypatch.setitem(MODELS, name, dataclasses.replace(MODELS[name], sql=sql))
+    assert state.modified_plus_downstream(str(tmp_path)) == {
+        name, "int_device_health", "fct_hourly_metrics", "fct_device_summary",
+        "fct_anomaly_events", "dim_devices",
+    }

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbt_datbricks_demo_spark.config import RunConfig
-from dbt_datbricks_demo_spark.models.staging import stg_devices
+from dbt_datbricks_demo_spark.plans.dag import MODELS
 from dbt_datbricks_demo_spark.sources.seeds import load_seed
 from dbt_datbricks_demo_spark.streaming import (
     expect_or_drop,
@@ -47,7 +47,8 @@ def devices(spark, tmp_path, cfg):
     seeds_dir = tmp_path / "devices_seed"
     seeds_dir.mkdir()
     (seeds_dir / "raw_devices.csv").write_text(RAW_DEVICES)
-    return stg_devices(load_seed(spark, str(seeds_dir), "raw_devices"), cfg)
+    raw_devices = load_seed(spark, str(seeds_dir), "raw_devices")
+    return MODELS["stg_devices"].build({"raw_devices": raw_devices}, cfg)
 
 
 @pytest.fixture()

@@ -2,13 +2,15 @@
 path pays for: the 54-test suite over a full-refresh DAG; reading a
 table, which takes the schema stored in its parquet footer instead of
 inferring it; an increment's high-water marks, which the previous write
-recorded; the one-shuffle merges; and building a gold model's plan with
-PySpark's per-call query-context capture off. Inputs are the
-benchmark's seeded sensor seeds, small."""
+recorded; the one-shuffle merges; building a gold model's plan from its
+SQL text; and building a registered query's plan, from ``F.*`` calls,
+with PySpark's per-call query-context capture off. Inputs are the
+benchmark's seeded sensor seeds, small, and the smoke-scale testdata."""
 
 from __future__ import annotations
 
 import itertools
+import os
 
 import pytest
 from py4j.java_gateway import GatewayClient
@@ -17,9 +19,12 @@ from pyspark.errors import utils as pyspark_error_utils
 from dbt_datbricks_demo_spark.config import RunConfig
 from dbt_datbricks_demo_spark.plans import PipelineRunner
 from dbt_datbricks_demo_spark.plans.dag import MODELS
+from dbt_datbricks_demo_spark.queries import QUERIES
 from dbt_datbricks_demo_spark.sources import load_seeds
 from dbt_datbricks_demo_spark.testing import reference_suite, run_suite
 from perfbench.datagen import IotSeeds
+
+from conftest import SF_SMOKE
 
 # the parent's one isEmpty() query per test fired 70 jobs here
 SUITE_JOB_BUDGET = 40
@@ -27,9 +32,13 @@ SUITE_JOB_BUDGET = 40
 # merge, which computed the new rows twice and inferred the target's
 # schema, fired 16
 MERGE_JOB_BUDGET = 10
-# building fct_device_summary's plan (no action) sends ~500 py4j
-# commands with the query-context capture off, ~2 100 with it on
-PLAN_ROUND_TRIP_BUDGET = 750
+# building fct_device_summary's plan (no action) from its SQL text sends
+# 15 py4j commands, with the query-context capture off or on; its
+# Column-DSL builder sent ~500 off, ~2 100 on
+PLAN_ROUND_TRIP_BUDGET = 25
+# building daily_summary_join's plan, the same shape from F.* calls,
+# sends ~330 py4j commands with the capture off, over 1 000 with it on
+QUERY_ROUND_TRIP_BUDGET = 600
 STORED = sorted(n for n, m in MODELS.items() if m.materialization != "view")
 # one job group per measured call: a group name reused by a later call
 # would count the earlier call's jobs again
@@ -177,10 +186,21 @@ def test_gold_plan_build_fits_round_trip_budget(medallion):
     assert _round_trips(_build_gold(medallion)) <= PLAN_ROUND_TRIP_BUDGET
 
 
-def test_round_trip_budget_fails_with_query_context_capture(medallion, monkeypatch):
+def _build_query(spark):
+    if not os.path.isdir(SF_SMOKE):
+        pytest.skip(f"{SF_SMOKE} absent")
+    build = QUERIES["daily_summary_join"].build
+    return lambda: build(spark, SF_SMOKE)
+
+
+def test_query_plan_build_fits_round_trip_budget(spark):
+    assert pyspark_error_utils.is_debugging_enabled() is False
+    assert _round_trips(_build_query(spark)) <= QUERY_ROUND_TRIP_BUDGET
+
+
+def test_round_trip_budget_fails_with_query_context_capture(spark, monkeypatch):
     """The budget above tells the capture apart: with it on (PySpark
     caches the flag per process, so the cache is flipped) the same
     build exceeds it."""
     monkeypatch.setattr(pyspark_error_utils, "_enable_debugging_cache", True)
-    assert _round_trips(_build_gold(medallion)) > PLAN_ROUND_TRIP_BUDGET
-
+    assert _round_trips(_build_query(spark)) > QUERY_ROUND_TRIP_BUDGET
