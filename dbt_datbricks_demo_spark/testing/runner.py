@@ -7,7 +7,10 @@ from collections.abc import Callable, Mapping
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.util import inheritable_thread_target
+
+from dbt_datbricks_demo_spark import config
 
 
 @dataclass(frozen=True)
@@ -76,7 +79,6 @@ def run_suite(
     specs: list[TestSpec],
     relations: Mapping[str, DataFrame],
     models: set[str] | None = None,
-    threads: int = 4,
     store_failures_dir: str | None = None,
 ) -> list[TestResult]:
     """Run (a selection of) the suite; results come back in spec order.
@@ -85,10 +87,10 @@ def run_suite(
     checked with one ``agg(...).first()`` over the model — one scan
     instead of one query per test. Specs without one (relationships,
     singular tests) run their own ``isEmpty()`` query. The per-model
-    checks and those queries share a pool of ``threads`` driver threads
-    (4 mirrors the reference's dbt profile concurrency,
-    profiles.yml.template:24); Spark jobs from separate driver threads
-    run concurrently on the cluster."""
+    checks and those queries share a pool of ``config.THREADS`` driver
+    threads, each batch with a copy of the caller's Spark local
+    properties (its job group, …); Spark jobs from separate driver
+    threads run concurrently on the cluster."""
     selected = [s for s in specs if models is None or s.model in models]
     groups: dict[str, list[int]] = {}
     for i, s in enumerate(selected):
@@ -105,9 +107,14 @@ def run_suite(
         return _run_model_checks(batch, relations, store_failures_dir)
 
     results: list[TestResult] = [None] * len(selected)  # type: ignore[list-item]
-    with ThreadPoolExecutor(max_workers=threads) as pool:
-        for idx, batch_results in zip(batches, pool.map(check, batches)):
-            for i, r in zip(idx, batch_results):
+    spark = SparkSession.active()
+    with ThreadPoolExecutor(max_workers=config.THREADS) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(check), idx)
+            for idx in batches
+        ]
+        for idx, future in zip(batches, futures):
+            for i, r in zip(idx, future.result()):
                 results[i] = r
     return results
 

@@ -10,6 +10,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from dbt_datbricks_demo_spark import config
 from dbt_datbricks_demo_spark.testing import column_test, run_suite
 from dbt_datbricks_demo_spark.testing import runner
 from dbt_datbricks_demo_spark.testing.runner import run_test
@@ -78,7 +79,7 @@ def _specs():
     ]
 
 
-def test_run_suite_matches_run_test_per_spec(spark):
+def test_run_suite_matches_run_test_per_spec(spark, monkeypatch):
     rel = _relations(spark)
     specs = _specs()
     fused = run_suite(specs, rel)
@@ -89,7 +90,8 @@ def test_run_suite_matches_run_test_per_spec(spark):
         "not_null_t_k", "unique_t_k", "accepted_values_t_cat",
         "not_null_t_cat", "relationships_t_k__p_k", "unique_p_k", "big_v",
     }
-    selected = run_suite(specs, rel, models={"p"}, threads=1)
+    monkeypatch.setattr(config, "THREADS", 1)
+    selected = run_suite(specs, rel, models={"p"})
     assert selected == [r for r, s in zip(alone, specs) if s.model == "p"]
 
 

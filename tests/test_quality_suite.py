@@ -20,7 +20,7 @@ from dbt_datbricks_demo_spark.testing.runner import run_test
 def test_54_tests_all_pass(dag):
     specs = reference_suite()
     assert len(specs) == 54
-    results = run_suite(specs, dag, threads=4)
+    results = run_suite(specs, dag)
     failed = [r for r in results if not r.passed]
     assert not failed, f"failing tests: {[r.name for r in failed]}"
 

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbt_datbricks_demo_spark.config import RunConfig
-from dbt_datbricks_demo_spark.plans import PipelineRunner
+from dbt_datbricks_demo_spark.plans import MODELS, PipelineRunner
 from dbt_datbricks_demo_spark.sources import load_seeds
 from tests.conftest import FROZEN_NOW, SEEDS_DIR
 
@@ -188,5 +188,14 @@ def test_merge_upsert_schema_evolution(spark, tmp_path):
 
 def test_selected_model_with_missing_upstream_raises_descriptive(runner, generated_seeds):
     # fresh warehouse: gold's silver dependencies were never materialized
-    with pytest.raises(RuntimeError, match="not\n*.*materialized|not materialized"):
+    with pytest.raises(RuntimeError, match="not materialized") as err:
         runner.run(generated_seeds, select_tags={"gold"})
+    # the first gold model in topological order names its silver refs
+    assert "model 'dim_devices' depends on ['int_sensor_readings_cleaned']" in str(
+        err.value
+    )
+    # the selection is checked before any model is built
+    assert runner.run_results == []
+    assert not any(
+        runner.mat.exists(n, m.schema_suffix) for n, m in MODELS.items()
+    )
