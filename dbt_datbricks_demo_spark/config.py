@@ -16,9 +16,10 @@ import datetime as _dt
 import uuid
 from dataclasses import dataclass, field
 
-# Driver threads that build independent models (``PipelineRunner.run``)
-# and run tests (``run_suite``) at once: the reference's dbt profile runs
-# 4 (profiles.yml.template:24). Read at call time, so a test may patch it.
+# Driver threads that build independent models at once
+# (``PipelineRunner.run``, its only reader): the reference's dbt profile
+# runs 4 (profiles.yml.template:24). Read at call time, so a test may
+# patch it.
 THREADS = 4
 
 

@@ -6,15 +6,15 @@ reference macros/test_value_in_range.sql:10-23). Four generic kinds are
 used by the reference plus one custom generic and one singular test
 (SURVEY.md §5).
 
-Execution: ``column_test`` builds the generic column tests. The
-``not_null``, ``unique`` and ``accepted_values`` specs also carry an
-aggregate over their model that is 0 exactly when the violations are
-empty, so ``run_suite`` checks all of a model's column tests with one
-``agg(...).first()`` scan. Specs without one (``relationships``, which
-reads a second model, and singular tests) run as their own
-``isEmpty()`` query, which short-circuits without materializing all
-violations. Only a failing test builds its violations, to count them
-and, with ``store_failures_dir``, to write them.
+Execution: ``run_suite`` decides every selected spec in one Spark
+statement with one action, a ``UNION ALL`` of per-test rows under one
+``GROUP BY test_id`` whose per-test excess is 0 exactly when the
+violations are empty (testing/runner.py). ``column_test`` gives the
+``not_null``, ``unique`` and ``accepted_values`` specs a column form
+that stacks rows over their model; ``relationships`` (which reads a
+second model) and singular tests add their violation rows. Only a
+failing test builds its violations, to count them and, with
+``store_failures_dir``, to write them.
 """
 
 from dbt_datbricks_demo_spark.testing.generic import (  # noqa: F401

@@ -7,24 +7,22 @@ Shapes match dbt's generated test queries (reference SURVEY.md §5):
   relationships    — child keys absent from the parent (anti-join)
   value_in_range   — reference macros/test_value_in_range.sql:10-23
 
-``not_null``, ``unique`` and ``accepted_values`` also have an aggregate
-over the model that is 0 exactly when their violations DataFrame is
-empty; ``column_test`` attaches it to the spec, so ``run_suite`` can
-check all of a model's column tests in one scan (testing/runner.py).
+``column_test`` also gives ``not_null`` and ``accepted_values`` their
+violation predicate and ``unique`` its value column, the column form in
+which ``run_suite`` decides them inside its one statement
+(testing/runner.py); ``relationships`` reads a second model and is
+decided on its violation rows.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.utils import get_lit_sql_str
 
-from dbt_datbricks_demo_spark.testing.runner import TestSpec
-
-
-def _outside(column: str, values: Sequence) -> Column:
-    return F.col(column).isNotNull() & ~F.col(column).isin(list(values))
+from dbt_datbricks_demo_spark.testing.runner import TestSpec, _quote
 
 
 def not_null(df: DataFrame, column: str) -> DataFrame:
@@ -43,19 +41,20 @@ def unique(df: DataFrame, column: str) -> DataFrame:
 def accepted_values(df: DataFrame, column: str, values: Sequence) -> DataFrame:
     return (
         df.select(column)
-        .filter(_outside(column, values))
+        .filter(F.col(column).isNotNull() & ~F.col(column).isin(list(values)))
         .distinct()
     )
 
 
 def relationships(child: DataFrame, column: str, parent: DataFrame, field: str) -> DataFrame:
     """Child FK values with no matching parent row. Broadcast anti-join:
-    the parent side is a dimension in every reference usage."""
+    the parent side is a dimension in every reference usage. Its
+    duplicate keys change nothing, so they are not removed."""
     return (
         child.select(F.col(column))
         .filter(F.col(column).isNotNull())
         .join(
-            F.broadcast(parent.select(F.col(field).alias(column)).distinct()),
+            F.broadcast(parent.select(F.col(field).alias(column))),
             on=column,
             how="left_anti",
         )
@@ -75,49 +74,31 @@ def value_in_range(
     )
 
 
-# ---- aggregates: 0 exactly when the matching test above finds nothing ----
-def null_count(column: str) -> Column:
-    return F.count_if(F.col(column).isNull())
-
-
-def duplicate_excess(column: str) -> Column:
-    """Non-NULL values minus distinct non-NULL values: 0 iff no value
-    occurs twice."""
-    return F.count(column) - F.count_distinct(column)
-
-
-def outside_count(column: str, values: Sequence) -> Column:
-    return F.count_if(_outside(column, values))
-
-
-_AGGREGATED = {
-    "not_null": (not_null, null_count),
-    "unique": (unique, duplicate_excess),
-    "accepted_values": (accepted_values, outside_count),
-}
-
-
 def column_test(model: str, column: str, kind: str, extra=None) -> TestSpec:
     """The dbt generic test ``kind`` on ``model.column``, named as dbt
-    names it. ``extra`` is the accepted values, or ``(to_model,
-    to_field)`` for ``relationships``. Every kind but ``relationships``
-    (which reads a second model) carries its aggregate."""
+    names it, with its column form (testing/runner.py). ``extra`` is the
+    accepted values, or ``(to_model, to_field)`` for ``relationships``,
+    which has no column form: it reads a second model."""
+    q = _quote(column)
     if kind == "relationships":
         to_model, to_field = extra
         return TestSpec(
-            name=f"relationships_{model}_{column}__{to_model}_{to_field}",
-            model=model,
-            build=lambda rel: relationships(
-                rel[model], column, rel[to_model], to_field
-            ),
+            f"relationships_{model}_{column}__{to_model}_{to_field}", model,
+            lambda rel: relationships(rel[model], column, rel[to_model], to_field),
         )
-    if kind not in _AGGREGATED:
+    if kind == "not_null":
+        build, form = not_null, {"bad": f"{q} IS NULL"}
+    elif kind == "unique":
+        build, form = unique, {"value": column}
+    elif kind == "accepted_values":
+        extra = tuple(extra)
+        listed = ", ".join(
+            get_lit_sql_str(v) if isinstance(v, str) else str(v) for v in extra
+        )
+        build = accepted_values
+        form = {"bad": f"{q} IS NOT NULL AND {q} NOT IN ({listed})"}
+    else:
         raise ValueError(f"unknown column test kind {kind!r}")
-    build, aggregate = _AGGREGATED[kind]
-    args = () if extra is None else (tuple(extra),)
-    return TestSpec(
-        name=f"{kind}_{model}_{column}",
-        model=model,
-        build=lambda rel: build(rel[model], column, *args),
-        aggregate=lambda: aggregate(column, *args),
-    )
+    args = () if extra is None else (extra,)
+    return TestSpec(f"{kind}_{model}_{column}", model,
+                    lambda rel: build(rel[model], column, *args), **form)

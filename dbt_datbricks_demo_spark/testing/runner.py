@@ -1,16 +1,27 @@
 """Test suite runner: executes TestSpecs, reports PASS/FAIL counts like
-``dbt test`` (reference SETUP_GUIDE.md:347-351 'Done. PASS=54')."""
+``dbt test`` (reference SETUP_GUIDE.md:347-351 'Done. PASS=54').
+
+``run_suite`` decides every selected spec in one Spark statement with
+one action: a ``UNION ALL`` of ``(test_id, bad, v…)`` rows under one
+``GROUP BY test_id`` that computes, per test,
+
+    count_if(bad) + Σ (count(v) − count(DISTINCT v))
+
+which is 0 exactly when the test's violations are empty. A spec with a
+column form stacks one row per row of its model: ``bad`` is its
+predicate, ``v`` the value that must not repeat, in the value column of
+its Spark type (no cast, so ``count(DISTINCT)`` groups NaN and ±0.0 as
+``GROUP BY`` does). A spec without one (``relationships``, singular and
+ad-hoc tests) adds its ``build()`` rows with ``bad`` true. Only a
+failing test builds its violations, to count them and, with
+``store_failures_dir``, to write them."""
 
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.util import inheritable_thread_target
-
-from dbt_datbricks_demo_spark import config
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass(frozen=True)
@@ -18,10 +29,12 @@ class TestSpec:
     name: str  # e.g. "not_null_stg_devices_device_id"
     model: str  # model the test targets (for layer/tag selection)
     build: Callable[[Mapping[str, DataFrame]], DataFrame]  # → violations
-    # an aggregate over relations[model] that is 0 exactly when build()
-    # is empty; run_suite checks all of a model's aggregates in one scan.
-    # None: the test runs on its own (isEmpty() on build()).
-    aggregate: Callable[[], Column] | None = None
+    # the column form, over relations[model]: a SQL predicate true on a
+    # violating row, and a column whose non-NULL values must not repeat.
+    # build() is empty exactly when neither finds one. A spec with
+    # neither is decided on build()'s rows.
+    bad: str | None = None
+    value: str | None = None
 
 
 @dataclass(frozen=True)
@@ -45,34 +58,47 @@ def _failed(
     return TestResult(spec.name, False, violations.count())
 
 
-def run_test(
-    spec: TestSpec,
-    relations: Mapping[str, DataFrame],
-    store_failures_dir: str | None = None,
-) -> TestResult:
-    violations = spec.build(relations)
-    # isEmpty() avoids counting all violations just to learn pass/fail
-    if violations.isEmpty():
-        return TestResult(spec.name, True, 0)
-    return _failed(spec, violations, store_failures_dir)
+def _quote(column: str) -> str:
+    return "`" + column.replace("`", "``") + "`"
 
 
-def _run_model_checks(
-    specs: list[TestSpec],
-    relations: Mapping[str, DataFrame],
-    store_failures_dir: str | None,
-) -> list[TestResult]:
-    """Every aggregate of one model in a single scan; only a test whose
-    aggregate is non-zero builds its violations."""
-    row = relations[specs[0].model].agg(
-        *(s.aggregate().alias(f"t{i}") for i, s in enumerate(specs))
-    ).first()
-    return [
-        TestResult(s.name, True, 0)
-        if row[i] == 0
-        else _failed(s, s.build(relations), store_failures_dir)
-        for i, s in enumerate(specs)
-    ]
+def _suite_sql(
+    specs: list[TestSpec], relations: Mapping[str, DataFrame]
+) -> tuple[str, dict[str, DataFrame]]:
+    """The statement deciding ``specs`` and the DataFrames its
+    placeholders name; its rows are ``(test_id, excess)`` for the
+    failing specs only (test_id = index in ``specs``). Column-form
+    specs stack rows over their model, one placeholder per model; any
+    other spec stacks one row per row of its own ``build()``."""
+    typed = {i: relations[s.model].schema[s.value].dataType.simpleString()
+             for i, s in enumerate(specs) if s.value is not None}
+    types = list(dict.fromkeys(typed.values()))  # one value column per type
+    names = ", ".join(["test_id", "bad", *(f"v{k}" for k in range(len(types)))])
+
+    def row(i: int) -> str:
+        s = specs[i]
+        bad = s.bad or ("false" if s.value is not None else "true")
+        vs = (_quote(s.value) if typed.get(i) == t else f"CAST(NULL AS {t})"
+              for t in types)
+        # literal text of the format string spark.sql fills in
+        return ", ".join([str(i), bad, *vs]).replace("{", "{{").replace("}", "}}")
+
+    groups: dict[object, list[int]] = {}
+    for i, s in enumerate(specs):
+        groups.setdefault(s.model if s.bad or s.value else i, []).append(i)
+    refs, parts = {}, []
+    for g, idx in enumerate(groups.values()):
+        s = specs[idx[0]]
+        refs[f"r{g}"] = relations[s.model] if s.bad or s.value else s.build(relations)
+        rows = ", ".join(map(row, idx))
+        parts.append(f"SELECT stack({len(idx)}, {rows}) AS ({names}) FROM {{r{g}}}")
+    excess = " + ".join(["count_if(bad)", *(
+        f"count(v{k}) - count(DISTINCT v{k})" for k in range(len(types))
+    )])
+    return (
+        f"SELECT test_id, {excess} AS excess FROM ({' UNION ALL '.join(parts)}) "
+        "GROUP BY test_id HAVING excess <> 0"
+    ), refs
 
 
 def run_suite(
@@ -83,40 +109,27 @@ def run_suite(
 ) -> list[TestResult]:
     """Run (a selection of) the suite; results come back in spec order.
 
-    Specs with an ``aggregate`` are grouped by model, and each group is
-    checked with one ``agg(...).first()`` over the model — one scan
-    instead of one query per test. Specs without one (relationships,
-    singular tests) run their own ``isEmpty()`` query. The per-model
-    checks and those queries share a pool of ``config.THREADS`` driver
-    threads, each batch with a copy of the caller's Spark local
-    properties (its job group, …); Spark jobs from separate driver
-    threads run concurrently on the cluster."""
+    One statement, one action decides every selected spec (module
+    docstring); its jobs carry the description ``dbt test: <n> specs``,
+    and the caller's description is restored afterwards."""
     selected = [s for s in specs if models is None or s.model in models]
-    groups: dict[str, list[int]] = {}
-    for i, s in enumerate(selected):
-        if s.aggregate is not None:
-            groups.setdefault(s.model, []).append(i)
-    batches = list(groups.values()) + [
-        [i] for i, s in enumerate(selected) if s.aggregate is None
-    ]
-
-    def check(idx: list[int]) -> list[TestResult]:
-        batch = [selected[i] for i in idx]
-        if batch[0].aggregate is None:
-            return [run_test(batch[0], relations, store_failures_dir)]
-        return _run_model_checks(batch, relations, store_failures_dir)
-
-    results: list[TestResult] = [None] * len(selected)  # type: ignore[list-item]
+    if not selected:
+        return []
     spark = SparkSession.active()
-    with ThreadPoolExecutor(max_workers=config.THREADS) as pool:
-        futures = [
-            pool.submit(inheritable_thread_target(spark)(check), idx)
-            for idx in batches
+    sc = spark.sparkContext
+    caller = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"dbt test: {len(selected)} specs")
+    try:
+        sql, refs = _suite_sql(selected, relations)
+        failing = dict(spark.sql(sql, **refs).collect())
+        return [
+            _failed(s, s.build(relations), store_failures_dir)
+            if i in failing
+            else TestResult(s.name, True, 0)
+            for i, s in enumerate(selected)
         ]
-        for idx, future in zip(batches, futures):
-            for i, r in zip(idx, future.result()):
-                results[i] = r
-    return results
+    finally:
+        sc.setLocalProperty("spark.job.description", caller)
 
 
 def summarize(results: list[TestResult]) -> str:

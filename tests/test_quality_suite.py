@@ -14,7 +14,6 @@ from dbt_datbricks_demo_spark.testing import (
     unique,
     value_in_range,
 )
-from dbt_datbricks_demo_spark.testing.runner import run_test
 
 
 def test_54_tests_all_pass(dag):
@@ -43,6 +42,19 @@ def test_generic_tests_detect_violations(spark):
     assert len(viol) == 1 and viol[0]["occurrences"] == 2
 
 
+def test_relationships_ignores_duplicate_parent_keys(spark):
+    """The anti-join reads the parent's keys as they are: repeating them
+    leaves the violating child rows unchanged."""
+    child = spark.createDataFrame(
+        [("a",), ("b",), ("b",), ("c",), (None,)], "id string"
+    )
+    parent = spark.createDataFrame([("a",), ("c",)], "id string")
+    repeated = parent.union(parent).union(parent.filter("id = 'a'"))
+    want = sorted(relationships(child, "id", parent, "id").collect())
+    assert sorted(relationships(child, "id", repeated, "id").collect()) == want
+    assert [r.id for r in want] == ["b", "b"]
+
+
 def test_failing_suite_reports_counts(spark, dag):
     from dbt_datbricks_demo_spark.testing.runner import TestSpec
 
@@ -50,7 +62,7 @@ def test_failing_suite_reports_counts(spark, dag):
         "always_fails", "stg_devices",
         lambda rel: rel["stg_devices"].filter(F.col("is_active")),
     )
-    res = run_test(bad, dag)
+    [res] = run_suite([bad], dag)
     assert not res.passed and res.failures == 10
 
 

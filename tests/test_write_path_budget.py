@@ -26,8 +26,11 @@ from perfbench.datagen import IotSeeds
 
 from conftest import SF_SMOKE
 
-# the parent's one isEmpty() query per test fired 70 jobs here
-SUITE_JOB_BUDGET = 40
+# one statement decides the 54 tests in 4 jobs: a broadcast of the
+# devices the anti-joins read, the two exchanges of count(DISTINCT) and
+# the result. Per-model aggregates and an isEmpty() query per
+# relationships and singular test fired 38
+SUITE_JOB_BUDGET = 4
 # the three merges of one increment fire 10 jobs; the anti-join + union
 # merge, which computed the new rows twice and inferred the target's
 # schema, fired 16
@@ -47,7 +50,7 @@ _GROUP_IDS = itertools.count()
 
 def _jobs_fired(spark, fn):
     """Run fn() inside a fresh job group of the calling thread; return
-    (result, #jobs of the group). The pool threads of ``run_suite`` and
+    (result, ids of the group's jobs). The pool threads of
     ``PipelineRunner.run`` take a copy of their caller's local
     properties, so the jobs fn starts there count, and jobs that other
     threads run meanwhile (a concurrent model's) do not. The thread's
@@ -62,7 +65,21 @@ def _jobs_fired(spark, fn):
     finally:
         for k, v in saved.items():
             sc.setLocalProperty(k, v)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sql_executions(spark, jobs) -> set[int]:
+    """Ids of the SQL executions (one per action) that ran ``jobs``,
+    looked up among the 100 latest the SQL status store keeps."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    recent = store.executionsList(max(0, store.executionsCount() - 100), 100)
+    found = set()
+    for k in range(recent.size()):
+        execution = recent.apply(k)
+        ran = execution.jobs().keys().mkString(",")
+        if ran and set(jobs) & {int(j) for j in ran.split(",")}:
+            found.add(execution.executionId())
+    return found
 
 
 class _CountingCalls:
@@ -78,8 +95,8 @@ class _CountingCalls:
 
     def _counting(self, spark, method, original):
         def call(name, *args, **kwargs):
-            out, n = _jobs_fired(spark, lambda: original(name, *args, **kwargs))
-            self.jobs[method, name] = n
+            out, ids = _jobs_fired(spark, lambda: original(name, *args, **kwargs))
+            self.jobs[method, name] = len(ids)
             return out
         return call
 
@@ -116,12 +133,14 @@ def medallion(spark, tmp_path_factory):
     return runs
 
 
-def test_suite_on_full_refresh_fits_job_budget(medallion):
+def test_suite_on_full_refresh_fits_job_budget(spark, medallion):
     results, jobs = medallion[0]["suite"]
     assert len(results) == 54
     assert [r.name for r in results if not r.passed] == []
-    # above 0: the suite's pool threads run in the caller's job group
-    assert 0 < jobs <= SUITE_JOB_BUDGET
+    # above 0: the suite runs in the caller's job group
+    assert 0 < len(jobs) <= SUITE_JOB_BUDGET
+    # a passing suite is one statement with one action
+    assert len(_sql_executions(spark, jobs)) == 1
 
 
 @pytest.mark.parametrize("run", [0, 1], ids=["full_refresh", "increment"])
@@ -142,7 +161,7 @@ def test_read_fires_no_job_and_takes_the_inferred_schema(spark, medallion):
     for name in STORED:
         suffix = MODELS[name].schema_suffix
         df, jobs = _jobs_fired(spark, lambda: mat.read(name, suffix))
-        assert jobs == 0, name
+        assert jobs == [], name
         assert df.schema == spark.read.parquet(mat.path(name, suffix)).schema, name
 
 
